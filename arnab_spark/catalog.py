@@ -10,8 +10,13 @@ module records every materialized model in a JSON sidecar inside the
 warehouse directory and re-applies it on attach:
 
 - ``table`` / ``incremental`` models re-register as views over their
-  persisted Parquet (data read lazily — attach itself scans nothing),
+  persisted Parquet. No rows are read, but each entry runs one
+  schema-inference job over its Parquet footers.
 - ``view`` models re-create their (transpiled) SELECT as a temp view.
+  Its ``parquet.`path``` scans are bound to the session's scan views
+  (``spark_utils.bind_file_scans``), so the pipeline re-creating the
+  same view later infers no schema again. The catalog keeps the
+  file-query text; scan views exist in one session only.
 
 Entries keep pipeline (topological) order: a view recorded after its
 upstream table re-applies after it, so references resolve. Upserts
@@ -197,10 +202,12 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
 
                     for ref in get_sql_references(select) & set(cat):
                         select = _replace_model_ref(select, ref, prefix + ref)
-                spark.sql(
-                    f"CREATE OR REPLACE TEMPORARY VIEW {prefix + model_id} "
-                    f"AS ({select})"
-                )
+                from arnab_spark.spark_utils import bind_file_scans
+
+                spark.sql(bind_file_scans(
+                    spark,
+                    f"CREATE OR REPLACE TEMPORARY VIEW {prefix + model_id} AS ({select})",
+                ))
             attached.append(model_id)
         except Exception as exc:  # noqa: BLE001 — attach is best-effort
             print(f"warning: could not attach model '{model_id}': {exc}")

@@ -81,7 +81,7 @@ def cmd_run_file(args) -> int:
     # before dispatch — exactly when the reference applies its SET loop
     # and opens the DuckDB file (main.rs:126-155), so run-file scripts
     # see both
-    from arnab_spark.spark_utils import configure
+    from arnab_spark.spark_utils import bind_file_scans, configure
 
     configure(spark)
     for k, v in cfg.engine_settings.items():
@@ -105,7 +105,7 @@ def cmd_run_file(args) -> int:
                 stmt = transpile_statement(stmt, spark)
                 if not stmt.strip():
                     continue  # consumed by the shim (e.g. CREATE MACRO)
-                df = spark.sql(stmt)
+                df = spark.sql(bind_file_scans(spark, stmt))
                 if Node.will_produce_records(stmt):
                     # force full execution: spark.sql alone only analyzes
                     # (the reference's execute_batch runs every statement,

@@ -24,9 +24,12 @@ node.rs:158-162). ``duckdb_settings`` is accepted as an alias for
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
 import yaml
+
+from arnab_spark.errors import ArnabError
 
 CONFIG_FILE = "config.yaml"
 
@@ -75,6 +78,13 @@ def load_config(
         cfg.models_dir = os.path.join(cwd, cfg.models_dir)
     if cfg.macro_path and not os.path.isabs(cfg.macro_path):
         cfg.macro_path = os.path.join(cwd, cfg.macro_path)
+    if cfg.db_path and re.match(r"[A-Za-z][\w+.-]*://", cfg.db_path):
+        # joined with cwd below it would become a mangled local path,
+        # and warehouse I/O (os.rename, open) is local-only anyway
+        raise ArnabError(
+            f"db_path {cfg.db_path!r} is a URI; the warehouse must be a "
+            "local directory path"
+        )
     if cfg.db_path and not os.path.isabs(cfg.db_path):
         cfg.db_path = os.path.join(cwd, cfg.db_path)
     return cfg

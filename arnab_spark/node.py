@@ -22,6 +22,20 @@ The Spark materialization mapping (reference: node.rs:156-174):
   This persists across sessions like the reference's file-backed DuckDB
   catalog (reference: main.rs:126-132), and at scale gives downstream
   models a pruned columnar scan instead of a recomputation.
+
+Each parquet schema is resolved once per SparkSession:
+
+- Scan binding. Spark resolves a ``parquet.`path``` file query, with a
+  schema-inference job, every time a statement names it, directly or
+  through a chain of views. Before a statement reaches ``spark.sql``,
+  ``spark_utils.bind_file_scans`` swaps each such scan for a session
+  view over ``spark.read.parquet(path)``, valid while the path's file
+  signature (size, mtime, inode) holds. The catalog records the transpiled
+  text, never the bound one.
+- Schema-hinted registration. ``_write_table`` and
+  ``_write_incremental`` return the schema they wrote, and the model's
+  view is ``spark.read.schema(schema).parquet(dest)``: no job re-reads
+  the footers just written.
 """
 
 from __future__ import annotations
@@ -34,6 +48,11 @@ from enum import Enum
 from arnab_spark.depparse import get_sql_references
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError, StatementExecutionError
+
+#: string literal and quoted-identifier delimiters; a doubled
+#: delimiter inside the quotes is an escaped one
+_QUOTES = ("'", '"', "`")
+
 
 class NodeKind(Enum):
     """Reference: node.rs:17-22 — only Sql is implemented there; PYTHON
@@ -79,25 +98,26 @@ class Node:
     @staticmethod
     def strip_comments(src: str) -> str:
         """Drop ``--`` line comments (including trailing ones) and
-        ``/* ... */`` blocks, string-literal-aware (reference:
-        node.rs:68-77 strips whole lines only; a trailing ``-- join x``
-        comment would otherwise leak into dependency extraction and a
-        ``;`` inside a comment would split statements)."""
+        ``/* ... */`` blocks, aware of string literals and of double-
+        and back-quoted identifiers (reference: node.rs:68-77 strips whole
+        lines only; a trailing ``-- join x`` comment would otherwise leak
+        into dependency extraction and a ``;`` inside a comment would
+        split statements)."""
         out: list[str] = []
         i, n = 0, len(src)
-        in_str = False
+        quote = None
         while i < n:
             ch = src[i]
-            if in_str:
+            if quote:
                 out.append(ch)
-                if ch == "'":
-                    if i + 1 < n and src[i + 1] == "'":
+                if ch == quote:
+                    if i + 1 < n and src[i + 1] == quote:
                         out.append(src[i + 1])
                         i += 1
                     else:
-                        in_str = False
-            elif ch == "'":
-                in_str = True
+                        quote = None
+            elif ch in _QUOTES:
+                quote = ch
                 out.append(ch)
             elif ch == "-" and i + 1 < n and src[i + 1] == "-":
                 while i < n and src[i] != "\n":
@@ -133,23 +153,24 @@ class Node:
 
     @staticmethod
     def split_statements(src: str) -> list[str]:
-        """Split on ``;`` outside string literals (improves on the
-        reference's naive split, node.rs:127-131, which breaks on ';'
-        inside strings — SURVEY.md §7 risk register)."""
-        stmts, buf, in_str = [], [], False
+        """Split on ``;`` outside string literals and quoted
+        identifiers (improves on the reference's naive split,
+        node.rs:127-131, which breaks on ';' inside strings — SURVEY.md
+        §7 risk register)."""
+        stmts, buf, quote = [], [], None
         i, n = 0, len(src)
         while i < n:
             ch = src[i]
-            if in_str:
+            if quote:
                 buf.append(ch)
-                if ch == "'":
-                    if i + 1 < n and src[i + 1] == "'":
+                if ch == quote:
+                    if i + 1 < n and src[i + 1] == quote:
                         buf.append(src[i + 1])
                         i += 1
                     else:
-                        in_str = False
-            elif ch == "'":
-                in_str = True
+                        quote = None
+            elif ch in _QUOTES:
+                quote = ch
                 buf.append(ch)
             elif ch == ";":
                 stmts.append("".join(buf))
@@ -232,16 +253,21 @@ class Node:
             df = df.sortWithinPartitions(*(pcols + ccols))
         return df, pcols
 
-    def _write_table(self, df, dest: str) -> None:
+    def _write_table(self, df, dest: str):
         """Layout-applying overwrite write shared by the table path and
-        both incremental write sites."""
+        both incremental write sites. Returns the schema written to the
+        parquet files: the output's, less the partition columns, which
+        live in the directory names."""
+        from pyspark.sql.types import StructType
+
         df, pcols = self._layout(df)
         writer = df.write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(dest)
+        return StructType([f for f in df.schema.fields if f.name not in pcols])
 
-    def _write_incremental(self, spark, df, dest: str) -> None:
+    def _write_incremental(self, spark, df, dest: str):
         """Incremental materialization — the reference's explicitly
         deferred roadmap item (reference: README.md:54-58), essential at
         100 TB where full recomputation is unaffordable.
@@ -255,7 +281,7 @@ class Node:
         crash at any point leaves either the old or the new
         materialization intact, never neither. At warehouse scale the
         same merge runs per partition (or via MERGE INTO on a lakehouse
-        table format).
+        table format). Returns the schema written, as ``_write_table``.
         """
         import os
         import shutil
@@ -266,8 +292,7 @@ class Node:
             # materialization (that merge is lost, history is not)
             os.rename(old, dest)
         if not os.path.isdir(dest):
-            self._write_table(df, dest)
-            return
+            return self._write_table(df, dest)
         existing = spark.read.parquet(dest)
         if self.unique_key:
             keys = [k.strip() for k in self.unique_key.split(",")]
@@ -281,19 +306,26 @@ class Node:
         else:
             merged = existing.unionByName(df)
         staging = f"{dest}__staging"
-        self._write_table(merged, staging)
+        schema = self._write_table(merged, staging)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(dest, old)
         os.rename(staging, dest)
         shutil.rmtree(old, ignore_errors=True)
+        return schema
 
-    def _record_backing(self, spark, parquet_path: str) -> None:
-        """Register the table's parquet dir so dialect-level DML
-        (INSERT/DELETE/UPDATE through the node.rs:176 passthrough)
-        persists through a staged swap of this dir."""
+    def _register_table(self, spark, schema, dest: str) -> None:
+        """Expose the just-written parquet dir as the model's view,
+        typed by the ``schema`` just written: a plain
+        ``spark.read.parquet`` would run a job to re-infer it from the
+        footers. Partition columns are discovered from the directory
+        names, as a plain read discovers them. The dir is also recorded
+        as the table's backing, so dialect-level DML (INSERT/DELETE/
+        UPDATE through the node.rs:176 passthrough) persists through a
+        staged swap of it."""
         from arnab_spark.dialect import table_backing_for
 
-        table_backing_for(spark)[self.id.lower()] = parquet_path
+        spark.read.schema(schema).parquet(dest).createOrReplaceTempView(self.id)
+        table_backing_for(spark)[self.id.lower()] = dest
 
     def execute(self, spark, db_path: str | None) -> NodeExecutionResult:
         """Run the model (reference: node.rs:125-207). Non-record
@@ -301,6 +333,8 @@ class Node:
         statement is materialized."""
         if self.kind is NodeKind.PYTHON:
             return self._execute_python(spark, db_path)
+        from arnab_spark.spark_utils import bind_file_scans
+
         statements = self.split_statements(self.rendered_src)
         record_stmts = [s for s in statements if self.will_produce_records(s)]
         if len(record_stmts) != 1:  # reference: node.rs:133-144
@@ -320,15 +354,14 @@ class Node:
                 if self.will_produce_records(stmt):
                     wrapped, parquet_path = self.materialization_sql(stmt, db_path)
                     if parquet_path is None:
-                        spark.sql(wrapped)
-                    elif self.materialize == "incremental":
-                        self._write_incremental(spark, spark.sql(stmt), parquet_path)
-                        spark.read.parquet(parquet_path).createOrReplaceTempView(self.id)
-                        self._record_backing(spark, parquet_path)
+                        spark.sql(bind_file_scans(spark, wrapped))
                     else:
-                        self._write_table(spark.sql(stmt), parquet_path)
-                        spark.read.parquet(parquet_path).createOrReplaceTempView(self.id)
-                        self._record_backing(spark, parquet_path)
+                        df = spark.sql(bind_file_scans(spark, stmt))
+                        if self.materialize == "incremental":
+                            schema = self._write_incremental(spark, df, parquet_path)
+                        else:
+                            schema = self._write_table(df, parquet_path)
+                        self._register_table(spark, schema, parquet_path)
                     if db_path:
                         # persist the model in the warehouse catalog so
                         # later sessions reattach it — parity with the
@@ -343,7 +376,7 @@ class Node:
                             stmt if parquet_path is None else None,
                         )
                 else:
-                    spark.sql(stmt)
+                    spark.sql(bind_file_scans(spark, stmt))
             except ArnabError:
                 raise
             except Exception as exc:
@@ -378,11 +411,10 @@ class Node:
                 )
             dest = f"{db_path}/{self.id}"
             if self.materialize == "incremental":
-                self._write_incremental(spark, df, dest)
+                schema = self._write_incremental(spark, df, dest)
             else:
-                self._write_table(df, dest)
-            spark.read.parquet(dest).createOrReplaceTempView(self.id)
-            self._record_backing(spark, dest)
+                schema = self._write_table(df, dest)
+            self._register_table(spark, schema, dest)
             from arnab_spark.catalog import record_model
 
             record_model(db_path, self.id, self.materialize)

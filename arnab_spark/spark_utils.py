@@ -19,10 +19,14 @@ the same code runs on a real cluster:
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
+import re
+import stat
 import weakref
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 #: Every fixture table the driver materializes (TESTDATA.md).
@@ -142,6 +146,102 @@ def _session_cache(spark: SparkSession) -> dict[tuple[str, str], DataFrame]:
         cache = {}
         _table_cache[spark] = cache
     return cache
+
+
+#: A ``parquet.`path``` file query (group 1: the path). String
+#: literals, comments and other backquoted identifiers are matched
+#: first, as wholes, so a file query inside them is never seen.
+_FILE_SCAN = re.compile(
+    r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|--[^\n]*|/\*.*?\*/"
+    r"|(?<![\w.`])parquet\.`([^`]+)`|`[^`]*`",
+    re.IGNORECASE | re.DOTALL,
+)
+#: DDL that may not reference a temp view: a permanent or global view
+_PERSISTENT_VIEW = re.compile(
+    r"(?is)^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+TEMP(?:ORARY)?\s+)?VIEW|ALTER\s+VIEW)\b"
+)
+
+
+def _file_signature(path: str) -> tuple | None:
+    """(size, mtime_ns, inode) of a local parquet file, or of every file
+    under a local directory. ``None`` for what cannot be signed here:
+    URIs, globs, relative or missing paths, and directories without a
+    data file (names starting ``_`` or ``.`` are not data)."""
+    if not os.path.isabs(path) or any(c in path for c in "*?[]{}"):
+        return None
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns, st.st_ino)
+        sig, has_data = [], False
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                s = os.stat(os.path.join(root, f))
+                sig.append((os.path.join(root, f), s.st_size, s.st_mtime_ns, s.st_ino))
+                has_data = has_data or not f.startswith(("_", "."))
+    except OSError:
+        return None
+    return tuple(sig) if has_data else None
+
+
+def _register_scan(spark: SparkSession, view: str, path: str) -> bool:
+    try:
+        spark.read.parquet(path).createOrReplaceTempView(view)
+        return True
+    except PySparkException:  # the file query then raises Spark's own error
+        return False
+
+
+def bind_file_scans(spark: SparkSession, sql: str) -> str:
+    """Rewrite each ``parquet.`path``` in ``sql``, which is about to be
+    passed to ``spark.sql``, into a per-session temp view over
+    ``spark.read.parquet(path)``.
+
+    Spark resolves a file query every time a statement names it,
+    directly or through a chain of SQL views, and each resolution runs
+    a schema-inference job over the parquet footers. A view made from a
+    DataFrame keeps its resolved relation, so the schema is inferred
+    once per session and path.
+
+    The view is named after the path; the path's local file signature
+    decides whether it is still valid. Every call first re-signs every
+    path bound in the session: a changed path is re-read under the same
+    view name, so statements that reach it through older views also
+    see the new files, and a vanished one is unbound. Paths that cannot
+    be signed locally (see :func:`_file_signature`) stay file queries,
+    as does every scan in DDL that may not reference a temp view.
+
+    Apply this only to text that goes straight to ``spark.sql``, never
+    to text that is recorded (the warehouse catalog): the view names
+    exist in this session only."""
+    cache = _session_cache(spark)
+    for key in [k for k in cache if k[0] == "#scan"]:
+        sig, view = cache[key]
+        now = _file_signature(key[1])
+        if now != sig:
+            if now is not None and _register_scan(spark, view, key[1]):
+                cache[key] = (now, view)
+            else:
+                spark.catalog.dropTempView(view)
+                del cache[key]
+    if "`" not in sql or _PERSISTENT_VIEW.match(sql):
+        return sql
+
+    def bind(m: re.Match) -> str:
+        path = m.group(1)
+        if path is None:
+            return m.group(0)
+        key = ("#scan", path)
+        if key not in cache:
+            sig = _file_signature(path)
+            view = "_arnab_scan_" + hashlib.md5(path.encode()).hexdigest()[:12]
+            if sig is None or not _register_scan(spark, view, path):
+                return m.group(0)
+            cache[key] = (sig, view)
+        return cache[key][1]
+
+    return _FILE_SCAN.sub(bind, sql)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -66,6 +66,14 @@ def test_split_statements_drops_empty():
     assert Node.split_statements(";;SELECT 1;;") == ["SELECT 1"]
 
 
+def test_split_statements_skips_quoted_identifiers():
+    assert Node.split_statements('SELECT "a;b" AS x FROM t') == ['SELECT "a;b" AS x FROM t']
+    assert Node.split_statements("SELECT `a;b` FROM t; SELECT 2") == [
+        "SELECT `a;b` FROM t",
+        "SELECT 2",
+    ]
+
+
 # --- record classifier (reference: node.rs:112-123) ------------------
 
 def test_will_produce_records():
@@ -175,6 +183,26 @@ def test_strip_comments_trailing_inline():
 def test_strip_comments_preserves_strings():
     src = "SELECT '--not a comment' AS a, '/*still*/' AS b FROM t"
     assert Node.strip_comments(src) == src
+
+
+def test_strip_comments_skips_quoted_identifiers():
+    assert Node.strip_comments('SELECT "x--y" FROM t') == 'SELECT "x--y" FROM t'
+    assert Node.strip_comments("SELECT `a/*b` FROM t") == "SELECT `a/*b` FROM t"
+    # doubled delimiters stay inside the identifier
+    src = 'SELECT "a""--b" AS c -- gone'
+    assert Node.strip_comments(src) == 'SELECT "a""--b" AS c '
+
+
+def test_load_config_rejects_uri_db_path(tmp_path):
+    from arnab_spark.config import load_config
+
+    for uri in ("s3a://bucket/wh", "file:///tmp/wh", "hdfs://nn:8020/wh"):
+        with pytest.raises(ArnabError, match="URI"):
+            load_config(str(tmp_path), None, uri)
+    (tmp_path / "config.yaml").write_text("db_path: s3a://bucket/wh\n")
+    with pytest.raises(ArnabError, match="s3a://bucket/wh"):
+        load_config(str(tmp_path))
+    assert load_config(str(tmp_path), None, "wh").db_path == str(tmp_path / "wh")
 
 
 def test_strip_comments_semicolon_in_comment():

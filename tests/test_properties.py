@@ -41,12 +41,12 @@ def test_depparse_ignores_names_inside_strings(table):
     assert refs == {"real_t"} or table == "real_t"
 
 
-@given(st.lists(st.text(alphabet=st.characters(exclude_characters=";'"), max_size=30), min_size=1, max_size=5))
+@given(st.lists(st.text(alphabet=st.characters(exclude_characters=";'\"`"), max_size=30), min_size=1, max_size=5))
 @settings(max_examples=200, deadline=None)
 def test_split_statements_roundtrip(parts):
     """Joining statements with ';' and re-splitting yields the non-empty
-    trimmed originals, regardless of content (quotes excluded here;
-    quote-handling has its own unit tests)."""
+    trimmed originals, regardless of content (string and identifier
+    quotes excluded here; quote-handling has its own tests)."""
     joined = ";".join(parts)
     expected = [p.strip() for p in parts if p.strip()]
     assert Node.split_statements(joined) == expected
@@ -58,6 +58,15 @@ def test_split_statements_preserves_quoted_semicolons(payload):
     payload = payload.replace("'", "")
     stmt = f"SELECT '{payload};{payload}' AS x"
     assert Node.split_statements(stmt) == [stmt]
+
+
+@given(st.text(max_size=60), st.sampled_from(['"', "`"]))
+@settings(max_examples=100, deadline=None)
+def test_split_and_strip_keep_quoted_identifiers(payload, quote):
+    payload = payload.replace(quote, "")
+    stmt = f"SELECT {quote}{payload};--/*{payload}{quote} AS x"
+    assert Node.split_statements(stmt) == [stmt.strip()]
+    assert Node.strip_comments(stmt) == stmt
 
 
 @given(st.floats(min_value=0, max_value=86400, allow_nan=False))
