@@ -56,11 +56,7 @@ def table_backing_for(spark) -> dict:
     the reference's DuckDB-file persistence."""
     if spark is None:
         return _BACKING_FALLBACK
-    reg = _BACKING_BY_SESSION.get(spark)
-    if reg is None:
-        reg = {}
-        _BACKING_BY_SESSION[spark] = reg
-    return reg
+    return _BACKING_BY_SESSION.setdefault(spark, {})
 
 
 # weak keys so a discarded session's registry is collectable
@@ -97,11 +93,7 @@ def session_tables_for(spark) -> set:
     DML against views, and so does this shim."""
     if spark is None:
         return set()
-    reg = _SESSION_TABLES_BY_SESSION.get(spark)
-    if reg is None:
-        reg = set()
-        _SESSION_TABLES_BY_SESSION[spark] = reg
-    return reg
+    return _SESSION_TABLES_BY_SESSION.setdefault(spark, set())
 
 
 _DML_IDENT = r'(?:"[^"]+"|[A-Za-z_]\w*)'

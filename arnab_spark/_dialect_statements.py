@@ -17,6 +17,7 @@ core re-export runs, at which point they are all defined.
 from __future__ import annotations
 
 import re
+from weakref import WeakKeyDictionary
 
 from arnab_spark.dialect import (
     _comment_spans,
@@ -47,30 +48,19 @@ _CREATE_MACRO = re.compile(
 )
 _MACRO_FALLBACK: dict[str, tuple[list[str], str, bool]] = {}
 
-try:  # WeakKeyDictionary so a closed session's macros are collectable
-    from weakref import WeakKeyDictionary
-
-    _MACRO_BY_SESSION: "WeakKeyDictionary" = WeakKeyDictionary()
-except Exception:  # pragma: no cover
-    _MACRO_BY_SESSION = {}
+# weak keys so a closed session's registries are collectable
+_MACRO_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def _macros_for(spark) -> dict[str, tuple[list[str], str, bool, bool]]:
     if spark is None:
         return _MACRO_FALLBACK
-    reg = _MACRO_BY_SESSION.get(spark)
-    if reg is None:
-        reg = {}
-        _MACRO_BY_SESSION[spark] = reg
-    return reg
+    return _MACRO_BY_SESSION.setdefault(spark, {})
 
 
 _DROPPED_FALLBACK: set = set()
 
-try:
-    _DROPPED_BY_SESSION: "WeakKeyDictionary" = WeakKeyDictionary()
-except Exception:  # pragma: no cover
-    _DROPPED_BY_SESSION = {}
+_DROPPED_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def dropped_macros_for(spark) -> set:
@@ -81,11 +71,7 @@ def dropped_macros_for(spark) -> set:
     resurrected on the next attach)."""
     if spark is None:
         return _DROPPED_FALLBACK
-    reg = _DROPPED_BY_SESSION.get(spark)
-    if reg is None:
-        reg = set()
-        _DROPPED_BY_SESSION[spark] = reg
-    return reg
+    return _DROPPED_BY_SESSION.setdefault(spark, set())
 
 
 def reset_macros(spark=None) -> None:
@@ -113,30 +99,20 @@ _DETACH_STMT = re.compile(
     r"(?is)^\s*DETACH\s+(?:DATABASE\s+)?([A-Za-z_]\w*)\s*;?\s*$"
 )
 _ATTACH_FALLBACK: dict[str, set[str]] = {}
-try:
-    _ATTACHED_BY_SESSION: "WeakKeyDictionary" = WeakKeyDictionary()
-except Exception:  # pragma: no cover
-    _ATTACHED_BY_SESSION = {}
+_ATTACHED_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def _attached_for(spark) -> dict[str, set[str]]:
     if spark is None:
         return _ATTACH_FALLBACK
-    reg = _ATTACHED_BY_SESSION.get(spark)
-    if reg is None:
-        reg = {}
-        _ATTACHED_BY_SESSION[spark] = reg
-    return reg
+    return _ATTACHED_BY_SESSION.setdefault(spark, {})
 
 
 def reset_attached(spark=None) -> None:
     _attached_for(spark).clear()
 
 
-try:
-    _TEMP_DDL_BY_SESSION: "WeakKeyDictionary" = WeakKeyDictionary()
-except Exception:  # pragma: no cover
-    _TEMP_DDL_BY_SESSION = {}
+_TEMP_DDL_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 _TEMP_DDL_FALLBACK: set = set()
 
 
@@ -150,11 +126,7 @@ def _temp_ddl_for(spark) -> set:
     recorded at DDL time (statement parity for node.rs:176 run-files)."""
     if spark is None:
         return _TEMP_DDL_FALLBACK
-    reg = _TEMP_DDL_BY_SESSION.get(spark)
-    if reg is None:
-        reg = set()
-        _TEMP_DDL_BY_SESSION[spark] = reg
-    return reg
+    return _TEMP_DDL_BY_SESSION.setdefault(spark, set())
 
 
 _TEMP_VIEW_DDL = re.compile(
@@ -859,10 +831,7 @@ def _rewrite_attached_refs(sql: str, attached: dict[str, set[str]]) -> str:
     return "".join(out)
 
 
-try:
-    _USE_BY_SESSION: "WeakKeyDictionary" = WeakKeyDictionary()
-except Exception:  # pragma: no cover
-    _USE_BY_SESSION = {}
+_USE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 
 _USE_STMT = re.compile(r'(?is)^\s*USE\s+("?)([A-Za-z_]\w*)\1\s*;?\s*$')
 

@@ -14,6 +14,7 @@ re-export imports this module, at which point they are all defined.
 from __future__ import annotations
 
 import re
+from weakref import WeakKeyDictionary
 
 from arnab_spark.dialect import (
     _BARE_PATH,
@@ -650,12 +651,7 @@ _UNNEST_FLAG = re.compile(r"(?is)^\s*(recursive|max_depth)\s*:=\s*(.+?)\s*$")
 _TRUE_SPELLINGS = frozenset({"true", "1", "'t'"})
 _FALSE_SPELLINGS = frozenset({"false", "0", "'f'"})
 
-try:
-    from weakref import WeakKeyDictionary as _WKD
-
-    _PROBE_BY_SESSION: "_WKD" = _WKD()
-except Exception:  # pragma: no cover
-    _PROBE_BY_SESSION = {}
+_PROBE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def _probe_schema(head: str, probe_prefix: str, tail: str, spark):

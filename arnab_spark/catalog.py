@@ -30,8 +30,12 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 CATALOG_FILE = "_arnab_catalog.json"
+#: held around every read-modify-write of the catalog and macro files:
+#: models of one run may finish, and record themselves, concurrently
+_FILE_LOCK = threading.Lock()
 
 
 def _catalog_path(db_path: str) -> str:
@@ -51,30 +55,32 @@ def record_model(
 ) -> None:
     """Upsert one model's catalog entry (atomic temp-file + rename, so a
     crash mid-write leaves the previous catalog intact)."""
-    os.makedirs(db_path, exist_ok=True)
-    cat = load_catalog(db_path)
     entry = {"materialize": materialize}
     if select_sql is not None:
         entry["select"] = select_sql
-    # dict assignment keeps an existing key's insertion position —
-    # exactly the in-place upsert the ordering contract needs
-    cat[model_id] = entry
-    tmp = _catalog_path(db_path) + ".tmp"
+    with _FILE_LOCK:
+        os.makedirs(db_path, exist_ok=True)
+        cat = load_catalog(db_path)
+        # dict assignment keeps an existing key's insertion position —
+        # exactly the in-place upsert the ordering contract needs
+        cat[model_id] = entry
+        _write_json(_catalog_path(db_path), cat)
+
+
+def _write_json(path: str, obj: dict) -> None:
+    tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(cat, f, indent=1)
-    os.replace(tmp, _catalog_path(db_path))
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
 
 
 def remove_model(db_path: str, model_id: str) -> None:
     """Delete one model/table's catalog entry (script-level DROP TABLE;
     same atomic temp-file + rename discipline as record_model)."""
-    cat = load_catalog(db_path)
-    if cat.pop(model_id, None) is None:
-        return
-    tmp = _catalog_path(db_path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(cat, f, indent=1)
-    os.replace(tmp, _catalog_path(db_path))
+    with _FILE_LOCK:
+        cat = load_catalog(db_path)
+        if cat.pop(model_id, None) is not None:
+            _write_json(_catalog_path(db_path), cat)
 
 
 MACROS_FILE = "_arnab_macros.json"
@@ -97,20 +103,18 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
     if not persistent and not dropped:
         return
     path = os.path.join(db_path, MACROS_FILE)
-    existing = {}
-    if os.path.isfile(path):
-        with open(path, encoding="utf-8") as f:
-            existing = json.load(f)
-    for name in dropped:
-        existing.pop(name, None)
-    existing.update(persistent)
-    if not existing and not os.path.isfile(path):
-        return  # nothing persisted and nothing to erase
-    os.makedirs(db_path, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(existing, f, indent=1)
-    os.replace(tmp, path)
+    with _FILE_LOCK:
+        existing = {}
+        if os.path.isfile(path):
+            with open(path, encoding="utf-8") as f:
+                existing = json.load(f)
+        for name in dropped:
+            existing.pop(name, None)
+        existing.update(persistent)
+        if not existing and not os.path.isfile(path):
+            return  # nothing persisted and nothing to erase
+        os.makedirs(db_path, exist_ok=True)
+        _write_json(path, existing)
 
 
 def _attach_macros(spark, db_path: str) -> list[str]:

@@ -12,7 +12,8 @@ Without sqlglot in the environment we use a conservative scanner with
 the same contract: over-collect candidate relation identifiers after
 FROM/JOIN keywords (including comma-joined FROM lists and identifiers
 inside subqueries/CTE bodies, which are found by their own inner FROMs),
-and rely on the known-models intersection. The reference's two unit
+plus the relation a DuckDB ``DESCRIBE``/``SUMMARIZE`` inspects, and rely
+on the known-models intersection. The reference's two unit
 tests (node.rs:280-294) pass against this extractor.
 """
 
@@ -22,6 +23,13 @@ import re
 
 _IDENT_RE = re.compile(r'[A-Za-z_][A-Za-z0-9_.$]*|"[^"]+"')
 _FROM_OR_JOIN = re.compile(r"\b(from|join)\b", re.IGNORECASE)
+#: DuckDB's inspection statements name a relation too, as a statement
+#: (``SUMMARIZE t``) or as a table expression (``FROM (DESCRIBE t)``).
+#: Only at a statement or subquery head: elsewhere ``DESC`` is a sort
+#: direction.
+_INSPECT = re.compile(
+    r"(?:^|[(;])\s*(?:describe|desc|summarize)\s+(?:table\s+)?", re.IGNORECASE
+)
 _CLAUSE_KEYWORDS = {
     "select",
     "where",
@@ -159,4 +167,6 @@ def get_sql_references(sql: str) -> set[str]:
     for m in _FROM_OR_JOIN.finditer(cleaned):
         allow_comma = m.group(1).lower() == "from"
         _read_relation_item(cleaned, m.end(), refs, allow_comma)
+    for m in _INSPECT.finditer(cleaned):
+        _read_relation_item(cleaned, m.end(), refs, False)
     return refs

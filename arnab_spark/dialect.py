@@ -59,10 +59,25 @@ rewrite is worse than a clear error.
 from __future__ import annotations
 
 import re
+import threading
 
 # DuckDB allows zero-argument count() (used by the reference's example
 # model, reference: examples/basic/orders_per_product.sql:2).
 _COUNT_ZERO_ARG = re.compile(r"\bcount\s*\(\s*\)", re.IGNORECASE)
+
+
+def _rewrite_count_zero_arg(sql: str) -> str:
+    """``count()`` → ``count(*)`` outside string literals and quoted
+    identifiers: ``'count()'`` is a value and ``"count()"`` a name."""
+    spans = _quoted_spans(sql)
+
+    def _sub(m: re.Match) -> str:
+        if any(s <= m.start() <= e for s, e in spans):
+            return m.group(0)
+        return "count(*)"
+
+    return _COUNT_ZERO_ARG.sub(_sub, sql)
+
 
 # read_parquet('path') / read_csv_auto('path') / read_json_auto('path')
 # → Spark's direct-file-query syntax: parquet.`path` / csv.`path` / ...
@@ -603,6 +618,8 @@ _COLUMNS_LAMBDA = re.compile(r"(?s)^([A-Za-z_]\w*)\s*->\s*(.+)$")
 
 
 _LAMBDA_EVAL_CON = None
+#: one DuckDB connection serves every thread, one statement at a time
+_LAMBDA_EVAL_LOCK = threading.Lock()
 
 
 def _lambda_eval_con():
@@ -641,9 +658,10 @@ def _columns_lambda_filter(var: str, body: str, cols: list[str]) -> list[str]:
 
     names = ", ".join("'" + c.replace("'", "''") + "'" for c in cols)
     try:
-        got = _lambda_eval_con().execute(
-            f"SELECT list_filter([{names}], ({var} -> ({body})))"
-        ).fetchone()[0]
+        with _LAMBDA_EVAL_LOCK:
+            got = _lambda_eval_con().execute(
+                f"SELECT list_filter([{names}], ({var} -> ({body})))"
+            ).fetchone()[0]
     except Exception as exc:  # noqa: BLE001 — re-raised targeted
         raise ArnabError(
             f"COLUMNS({var} -> …): DuckDB rejects this lambda body "
@@ -3620,7 +3638,7 @@ def transpile_statement(sql: str, spark=None) -> str:
     sql = _rewrite_describe_subqueries(sql, spark)
     sql = _rewrite_show_tables(sql, spark)
     sql = _rewrite_show_all_tables(sql, spark)
-    sql = _COUNT_ZERO_ARG.sub("count(*)", sql)
+    sql = _rewrite_count_zero_arg(sql)
     sql = _STAR_EXCLUDE.sub(r"\1EXCEPT\2", sql)
     sql = _rewrite_from_first_arms(sql)
     # before the list-literal pass, which would otherwise turn the

@@ -191,6 +191,16 @@ class Node:
         head = stmt[:50].upper().lstrip()
         return head.startswith(("SELECT", "WITH", "FROM", "VALUES"))
 
+    def runs_alone(self) -> bool:
+        """Whether the model may change session state other models see.
+        Only a SQL model whose source is one statement, its SELECT, may
+        overlap other models; Python models and scripts (SET, CREATE
+        MACRO, DML, ATTACH/USE, temp tables, …) run alone."""
+        if self.kind is not NodeKind.SQL:
+            return True
+        stmts = self.split_statements(self.rendered_src)
+        return len(stmts) != 1 or not self.will_produce_records(stmts[0])
+
     def materialization_sql(self, select_stmt: str, db_path: str | None) -> tuple[str, str | None]:
         """Wrap the record-returning statement per the materialization
         (reference: node.rs:156-174). Returns (ddl_or_select, parquet_path):

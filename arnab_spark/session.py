@@ -11,17 +11,52 @@ in SURVEY.md §1.3/§7:
 - sibling order is lexicographic, so run order is deterministic (the
   reference inherits HashMap iteration order);
 - model execution errors are collected and reported without aborting the
-  run (parity with session.rs:234-277) but ``strict`` mode exits nonzero.
+  run (parity with session.rs:234-277) but ``strict`` mode exits nonzero;
+  the models downstream of a failed one are not run but reported
+  ``SKIPPED (upstream <id> failed)``, naming the failed model, so none
+  of them reads a stale copy of its upstream;
+- independent models run concurrently on the one SparkSession (the
+  reference runs them one at a time, session.rs:189-279, and leaves the
+  cores to DuckDB's intra-query parallelism). Most models are tiny
+  Spark jobs of one task per stage, so the cores would idle. The
+  concurrent run gives the same results and side effects as the
+  sequential one:
+
+  - a SQL model whose source is exactly one statement, its SELECT, may
+    overlap others. It waits for its ``prevs`` and for every model
+    earlier in the topological order whose id it mentions as a whole
+    word outside string literals, a safety net for references the
+    dependency parser misses (these waits point backwards, so they
+    cannot deadlock);
+  - every other model (Python models; scripts with SET, CREATE MACRO,
+    DML, ATTACH/USE, temp tables, …) runs alone: it starts once every
+    model before it in topological order has finished, and no later
+    model starts before it finishes, so session side effects keep
+    their sequential order;
+  - models run on a pool of ``defaultParallelism`` threads, at most one
+    per model, each model's Spark jobs in job group ``arnab:<id>``
+    (thread-local under PySpark's pinned-thread mode);
+  - shared state is locked at three points: the catalog and macro file
+    writes (``catalog._FILE_LOCK``), the session's scan views
+    (``spark_utils.bind_file_scans``), and the per-session registries,
+    each created atomically by ``WeakKeyDictionary.setdefault``;
+  - the main thread prints each model's status line as it finishes;
+    ``RunReport`` lists models in topological order, and each catalog
+    entry follows its upstreams.
 """
 
 from __future__ import annotations
 
 import glob as globlib
+import heapq
 import os
+import re
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
 from arnab_spark.config import Config
+from arnab_spark.depparse import _strip_strings
 from arnab_spark.errors import ArnabError, CyclicDependencyError, UnknownModelType
 from arnab_spark.node import Node, NodeExecutionResult, NodeKind, Timer, format_elapsed
 
@@ -34,6 +69,8 @@ class RunReport:
     executed: list[str] = field(default_factory=list)
     results: dict[str, NodeExecutionResult] = field(default_factory=dict)
     errors: dict[str, Exception] = field(default_factory=dict)
+    #: model id → the failed upstream model it was not run for
+    skipped: dict[str, str] = field(default_factory=dict)
     elapsed: float = 0.0
 
     @property
@@ -169,28 +206,54 @@ class Session:
 
     # -- run loop (reference: session.rs:189-279) ---------------------
 
+    def _waits(self, order: list[str]) -> dict[str, set[str]]:
+        """The earlier models each model waits for. A model that runs
+        alone waits for the previous such model and every model since,
+        hence for all models before it. Any other model waits for its
+        ``prevs``, the earlier models whose ids it mentions outside
+        string literals, and the previous model that ran alone."""
+        ids = {nid.lower(): i for i, nid in enumerate(order)}
+        waits: dict[str, set[str]] = {}
+        barrier: set[str] = set()
+        since: set[str] = set()  # models after the barrier
+        for i, nid in enumerate(order):
+            node = self.nodes[nid]
+            if node.runs_alone():
+                waits[nid] = barrier | since
+                barrier, since = {nid}, set()
+                continue
+            words = set(re.findall(r"\w+", _strip_strings(node.rendered_src).lower()))
+            mentioned = {order[ids[w]] for w in words if ids.get(w, i) < i}
+            waits[nid] = node.prevs | mentioned | barrier
+            since.add(nid)
+        return waits
+
+    def _execute(self, nid: str):
+        """Run one model on a pool thread; returns ``(outcome, seconds)``,
+        the outcome being a result or the exception raised."""
+        with Timer() as t:
+            try:
+                if self.spark is not None:
+                    self.spark.sparkContext.setJobGroup(f"arnab:{nid}", f"model {nid}")
+                outcome = self.nodes[nid].execute(self.spark, self.config.db_path)
+            except Exception as exc:  # collected, not fatal
+                outcome = exc
+        return outcome, t.elapsed
+
     def run(self, quiet: bool = False) -> RunReport:
         report = RunReport()
         with Timer() as total:
             order = self.build_graph()
+            outcomes = self._run_models(order, quiet)
             for nid in order:
-                node = self.nodes[nid]
-                with Timer() as t:
-                    try:
-                        result = node.execute(self.spark, self.config.db_path)
-                        report.results[nid] = result
-                        report.executed.append(nid)
-                        status = (
-                            "CREATE VIEW"
-                            if result.n_rows is None
-                            else f"SELECT {result.n_rows}"
-                        )
-                    except Exception as exc:  # collected, not fatal
-                        report.errors[nid] = exc
-                        status = "ERROR"
-                if not quiet:
-                    label = f"[{nid}]"
-                    print(f"{label:.<60} {status} ({format_elapsed(t.elapsed)})")
+                outcome = outcomes[nid]
+                if isinstance(outcome, NodeExecutionResult):
+                    report.executed.append(nid)
+                    report.results[nid] = outcome
+                elif isinstance(outcome, Exception):
+                    report.errors[nid] = outcome
+                else:
+                    report.skipped[nid] = outcome
         report.elapsed = total.elapsed
         # epilogue: the run loop's last RETURNING statement (if any) left
         # one frozen temp view outstanding — reap it so no
@@ -204,8 +267,68 @@ class Session:
                 print(f"\n{len(report.errors)} model(s) failed:")
                 for nid, exc in report.errors.items():
                     print(f"  {nid}: {exc}")
+            if report.skipped:
+                print(f"{len(report.skipped)} model(s) skipped")
             print(f"done in {format_elapsed(report.elapsed)}")
         return report
+
+    def _run_models(self, order: list[str], quiet: bool) -> dict[str, object]:
+        """Run every model once its waits are over, on a thread pool.
+        Returns model id → result, exception, or (skipped) the id of
+        the failed model upstream of it."""
+        waits = self._waits(order)
+        pos = {nid: i for i, nid in enumerate(order)}
+        left = {nid: len(waits[nid]) for nid in order}
+        dependents: dict[str, list[str]] = {nid: [] for nid in order}
+        for nid in order:
+            for w in waits[nid]:
+                dependents[w].append(nid)
+        ready = [pos[nid] for nid in order if not left[nid]]  # a heap
+        outcomes: dict[str, object] = {}
+        failed: dict[str, str] = {}  # failed or skipped model → failed root
+        running: dict = {}
+
+        def finish(nid: str, text: str) -> None:
+            if not quiet:
+                label = f"[{nid}]"
+                print(f"{label:.<60} {text}")
+            for d in dependents[nid]:
+                left[d] -= 1
+                if not left[d]:
+                    heapq.heappush(ready, pos[d])
+
+        workers = 1 if self.spark is None else self.spark.sparkContext.defaultParallelism
+        with ThreadPoolExecutor(max(1, min(workers, len(order)))) as pool:
+            try:
+                while ready or running:
+                    while ready:
+                        nid = order[heapq.heappop(ready)]
+                        bad = sorted(self.nodes[nid].prevs & failed.keys(), key=pos.get)
+                        if bad:
+                            failed[nid] = outcomes[nid] = failed[bad[0]]
+                            finish(nid, f"SKIPPED (upstream {failed[nid]} failed)")
+                        else:
+                            running[pool.submit(self._execute, nid)] = nid
+                    if not running:
+                        continue
+                    done, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for fut in sorted(done, key=lambda f: pos[running[f]]):
+                        nid = running.pop(fut)
+                        outcome, elapsed = fut.result()
+                        outcomes[nid] = outcome
+                        if isinstance(outcome, Exception):
+                            failed[nid] = nid
+                            text = "ERROR"
+                        elif outcome.n_rows is None:
+                            text = "CREATE VIEW"
+                        else:
+                            text = f"SELECT {outcome.n_rows}"
+                        finish(nid, f"{text} ({format_elapsed(elapsed)})")
+            except BaseException:
+                # an interrupt: let running models finish, start no more
+                pool.shutdown(cancel_futures=True)
+                raise
+        return outcomes
 
     # -- visualization (reference: session.rs:183-187) ----------------
 

@@ -24,6 +24,7 @@ import math
 import os
 import re
 import stat
+import threading
 import weakref
 
 from pyspark.errors import PySparkException
@@ -141,11 +142,8 @@ _table_cache: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], Dat
 
 
 def _session_cache(spark: SparkSession) -> dict[tuple[str, str], DataFrame]:
-    cache = _table_cache.get(spark)
-    if cache is None:
-        cache = {}
-        _table_cache[spark] = cache
-    return cache
+    # setdefault: two threads can never create two caches for a session
+    return _table_cache.setdefault(spark, {})
 
 
 #: A ``parquet.`path``` file query (group 1: the path). String
@@ -193,6 +191,11 @@ def _register_scan(spark: SparkSession, view: str, path: str) -> bool:
         return False
 
 
+#: held by :func:`bind_file_scans`, which iterates and mutates the
+#: session's scan entries; models of one run bind concurrently
+_SCAN_LOCK = threading.Lock()
+
+
 def bind_file_scans(spark: SparkSession, sql: str) -> str:
     """Rewrite each ``parquet.`path``` in ``sql``, which is about to be
     passed to ``spark.sql``, into a per-session temp view over
@@ -215,6 +218,11 @@ def bind_file_scans(spark: SparkSession, sql: str) -> str:
     Apply this only to text that goes straight to ``spark.sql``, never
     to text that is recorded (the warehouse catalog): the view names
     exist in this session only."""
+    with _SCAN_LOCK:
+        return _bind_file_scans(spark, sql)
+
+
+def _bind_file_scans(spark: SparkSession, sql: str) -> str:
     cache = _session_cache(spark)
     for key in [k for k in cache if k[0] == "#scan"]:
         sig, view = cache[key]

@@ -46,6 +46,18 @@ def test_get_ref_alias_not_collected():
     assert refs == {"real_table", "second"}
 
 
+def test_get_ref_describe_and_summarize():
+    # DuckDB's inspection statements name the relation they inspect
+    assert get_sql_references("SELECT column_name FROM (DESCRIBE series_stats)") == {
+        "series_stats"
+    }
+    assert get_sql_references("SUMMARIZE series_stats") == {"series_stats"}
+    assert get_sql_references("SELECT 1;\nDESC t1") == {"t1"}
+    assert get_sql_references("SUMMARIZE (SELECT * FROM t2)") == {"t2"}
+    # elsewhere DESC is a sort direction, not a relation head
+    assert get_sql_references("SELECT * FROM t ORDER BY x DESC limit_model") == {"t"}
+
+
 # --- comment stripping (reference: node.rs:68-77) --------------------
 
 def test_strip_comments():
@@ -114,6 +126,22 @@ def test_transpile_count_zero_arg():
         transpile_statement("SELECT product_name, count() AS c FROM t GROUP BY 1")
         == "SELECT product_name, count(*) AS c FROM t GROUP BY 1"
     )
+
+
+def test_transpile_count_zero_arg_skips_quotes(spark):
+    # a literal is a value and a quoted alias a name: neither is a call
+    assert transpile_statement("SELECT 'count()' AS s") == "SELECT 'count()' AS s"
+    assert (
+        transpile_statement('SELECT x AS "count()" FROM t')
+        == 'SELECT x AS "count()" FROM t'
+    )
+    # a bare call beside them is still rewritten
+    assert (
+        transpile_statement("SELECT count() AS n, 'count()' AS s FROM t")
+        == "SELECT count(*) AS n, 'count()' AS s FROM t"
+    )
+    row = spark.sql(transpile_statement("SELECT 'count()' AS s, count() AS n")).collect()
+    assert [tuple(r) for r in row] == [("count()", 1)]
 
 
 def test_transpile_read_parquet():
