@@ -1,14 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Programmatic entry points over the query registry.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke query; ``queries()`` maps each registered
+name to its ``(spark, sf_dir) -> DataFrame`` callable, and
+``oracle_sql()`` maps the same names to DuckDB SQL that must return the
+same rows (row-count + schema + order-insensitive value hash, see
+:func:`arnab_spark.oracle.compare_frames`).
 
 All real content lives in :mod:`arnab_spark.queries` — one registered
 entry per operator from SURVEY.md §2 (plus the beyond-reference
-LLM-pipeline operators). This file only adapts the registry to the
-driver's function signatures.
+LLM-pipeline operators). This file only adapts the registry to these
+function signatures.
 """
 
 from __future__ import annotations

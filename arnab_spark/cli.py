@@ -75,27 +75,19 @@ def cmd_run_file(args) -> int:
     The warehouse catalog attaches first, so scripts can query models a
     previous ``run`` materialized (the reference gets this by opening
     the DuckDB file before dispatch, main.rs:126-132)."""
-    spark = _get_spark(args.master)
     cfg = load_config(".", args.models_dir, args.db_path)
+    spark = _get_spark(args.master)
     # engine settings + warehouse attach happen at "connection open",
     # before dispatch — exactly when the reference applies its SET loop
     # and opens the DuckDB file (main.rs:126-155), so run-file scripts
-    # see both
-    from arnab_spark.spark_utils import bind_file_scans, configure
+    # see both. Session opens the connection the same way for ``run``.
+    try:
+        Session(cfg, spark)
+    except ArnabError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return 1
+    from arnab_spark.spark_utils import bind_file_scans
 
-    configure(spark)
-    for k, v in cfg.engine_settings.items():
-        try:
-            spark.conf.set(k, str(v))
-        except Exception as exc:
-            print(f"error: failed to apply spark_settings {k}={v}: {exc}", file=sys.stderr)
-            return 1
-    if cfg.db_path:
-        from arnab_spark.catalog import attach_warehouse
-        from arnab_spark.dialect import set_warehouse_for
-
-        set_warehouse_for(spark, cfg.db_path)
-        attach_warehouse(spark, cfg.db_path)
     rc = 0
     for path in args.paths:
         try:

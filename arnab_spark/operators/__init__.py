@@ -19,7 +19,6 @@ from arnab_spark.operators.similarity import (
     cosine_knn,
     int_dot,
     ivf_assign,
-    ivf_assign_coarse,
     ivf_centroids,
     ivf_probe,
     ivf_refine,
@@ -58,7 +57,6 @@ __all__ = [
     "cosine_knn",
     "ivf_centroids",
     "ivf_assign",
-    "ivf_assign_coarse",
     "ivf_probe",
     "ivf_refine",
     "int_dot",

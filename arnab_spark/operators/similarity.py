@@ -320,114 +320,6 @@ def ivf_assign(
     )
 
 
-def ivf_assign_coarse(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    iv_col: str = "iv",
-    n_probe: int = 4,
-) -> DataFrame:
-    """APPROXIMATE cell assignment via a two-level (coarse) quantizer —
-    the ANN swap SemDeDup's own paper reaches for at extreme scale
-    (Abbas et al. 2023 §3: at k ∝ n the exact n·k argmax becomes the
-    asymptotic driver; the fix is approximate centroid assignment, not
-    a different plan shape).
-
-    The k fine centroids are themselves clustered into ceil(sqrt(k))
-    coarse groups (nearest-coarse by the same exact integer cosine —
-    k·sqrt(k) work, computed once in the closure). Per vector: score
-    the sqrt(k) coarse centroids, take the ``n_probe`` best coarse
-    groups, and argmax only over the fine centroids inside them —
-    O(sqrt(k) + n_probe·k/sqrt(k)) dot products per vector instead of
-    O(k). Same zero-shuffle map-side Arrow plan as :func:`ivf_assign`;
-    same tie rule (first max over cid-sorted fine centroids within the
-    probed set). Disagreements vs the exact assign are boundary
-    vectors whose true cell's coarse parent was not probed.
-
-    Measured verdict (round 12, ``SEMDEDUP_ASSIGN_r12.json``): NOT the
-    shipped default — on the fixture's near-isotropic synthetic
-    embeddings the nearest-centroid margins are noise-level, so
-    agreement collapses (0.55 at n_probe=8) for only ~2x assign
-    speedup at sf10. :func:`ivf_assign` (exact) stays the default;
-    this operator is the measured knob for corpora where the paper's
-    premise holds (trained centroids over clustered real embeddings),
-    with ``tools/semdedup_ann_assign.py`` as the re-evaluation
-    harness."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    crows = sorted(centroids.collect(), key=lambda r: r["cid"])
-    C = np.array([list(r["civ"]) for r in crows], dtype=np.int64)
-    cn = np.sqrt(np.array([r["cnrm2"] for r in crows], dtype=np.float64))
-    cids = np.array([r["cid"] for r in crows], dtype=np.int64)
-    k = len(cids)
-    kc = max(1, math.isqrt(k - 1) + 1) if k > 1 else 1
-    n_probe = min(n_probe, kc)
-    # coarse centroids: every kc-th fine centroid in cid order — the
-    # same deterministic no-RNG discipline as learned_centroids
-    coarse_idx = np.arange(0, k, max(1, k // kc))[:kc]
-    Cc = C[coarse_idx]
-    ccn = cn[coarse_idx]
-    # fine -> nearest coarse (exact integer cosine, first-max ties)
-    fine_cos = (C @ Cc.T).astype(np.float64) / (cn[:, None] * ccn[None, :])
-    parent = fine_cos.argmax(axis=1)
-    groups = [np.where(parent == g)[0] for g in range(kc)]
-
-    in_schema = corpus.schema
-    id_ddl = in_schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_ddl}, cell bigint, {iv_col} array<bigint>, "
-        f"{iv_col}_nrm2 bigint"
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(pdf[iv_col].tolist(), dtype=np.int64)
-            nm = np.sqrt(pdf[f"{iv_col}_nrm2"].to_numpy(dtype=np.float64))
-            cosc = (m @ Cc.T).astype(np.float64) / (nm[:, None] * ccn[None, :])
-            # top-n_probe coarse groups per row
-            probes = np.argpartition(-cosc, n_probe - 1, axis=1)[:, :n_probe]
-            best = np.full(len(m), -np.inf)
-            best_cell = np.zeros(len(m), dtype=np.int64)
-            for g in range(kc):
-                rows = np.nonzero((probes == g).any(axis=1))[0]
-                fidx = groups[g]
-                if not len(rows) or not len(fidx):
-                    continue
-                sub = (m[rows] @ C[fidx].T).astype(np.float64) / (
-                    nm[rows, None] * cn[None, fidx]
-                )
-                arg = sub.argmax(axis=1)
-                val = sub[np.arange(len(rows)), arg]
-                # strict > keeps the FIRST (lowest-cid) max across
-                # groups, matching ivf_assign's tie rule, because
-                # groups are scanned in ascending fine-centroid order
-                # only within a group — across groups compare cid
-                cand = cids[fidx[arg]]
-                upd = (val > best[rows]) | (
-                    (val == best[rows]) & (cand < best_cell[rows])
-                )
-                ridx = rows[upd]
-                best[ridx] = val[upd]
-                best_cell[ridx] = cand[upd]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cell": best_cell,
-                    iv_col: pdf[iv_col],
-                    f"{iv_col}_nrm2": pdf[f"{iv_col}_nrm2"].to_numpy(),
-                }
-            )
-
-    return corpus.select(id_col, iv_col, f"{iv_col}_nrm2").mapInPandas(
-        assign, out_schema
-    )
-
-
 def ivf_probe(
     queries: DataFrame,
     centroids: DataFrame,

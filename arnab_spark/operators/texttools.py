@@ -31,7 +31,7 @@ def minhash_signatures(
     pair build is map-side shingle hashing):
 
     - ``"xxhash64"`` (DEFAULT since round 13 — ADOPTED under the
-      pre-stated rule in tools/cc_hash_swap.py: signature stage 1.98x
+      pre-stated rule in measurements/r13: signature stage 1.98x
       faster at sf10 (11.05 s -> 5.57 s), full pair build 1.5x, with
       identical 1.0 true-pair recall at sf1 — CC_HASH_SWAP_r13.json):
       band b's signature = min of xxhash64(shingle, b) — Spark's

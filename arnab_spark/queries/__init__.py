@@ -3,9 +3,9 @@
 Every capability from SURVEY.md §2 gets a named query registered here:
 a PySpark callable ``(spark, sf_dir) -> DataFrame`` and, where the
 semantics are ANSI-SQL-expressible, an equivalent DuckDB oracle SQL
-string. The driver runs both sides at sf=0.01 and compares row-count +
-schema + order-insensitive value hash — so results must match the oracle
-EXACTLY, not approximately.
+string. ``tests/test_corpus.py`` runs both sides on the fixtures and
+compares row-count + schema + order-insensitive value hash — so results
+must match the oracle EXACTLY, not approximately.
 
 Float determinism contract
 --------------------------
@@ -99,269 +99,11 @@ def davg(col: Column | str, alias: str) -> Column:
     return (F.sum(c.cast(DEC)).cast("double") / F.count(F.lit(1))).alias(alias)
 
 
-#: Curated registration order for the external verification window.
-#:
-#: The round-1 correctness run showed the driver checks ``queries()`` in
-#: dict (registration) order and verifies the FIRST 50 entries only.
-#: Evidence is therefore accumulated by rotating this list each round.
-#:
-#: FRESHNESS INVARIANT (restated honestly, round 13 — r12 verdict ask
-#: #2): with 164 registry queries and 50 window slots, a full evidence
-#: cycle takes ceil(164/50) = 4 rounds, so the achievable contract is:
-#: every query's latest driver evidence is AT MOST THREE ROUNDS OLD
-#: (latest-evidence round >= current_round - 3), and any query sitting
-#: at exactly three rounds stale must (a) be hash-pinned byte-identical
-#: since its last green run (EVIDENCE.json) and (b) name a same-family
-#: sibling with <= 2-round-old evidence. The old "two-round invariant"
-#: stopped being satisfiable when the registry passed 150 queries; the
-#: ceiling is enforced by
-#: ``tests/test_registry_order.py::test_no_query_evidence_older_than_three_rounds``.
-#:
-#: ROUND-16 WINDOW: slots 1-2 are the two queries whose Spark-side
-#: source changed this round (docstring-only honesty fixes — the OHLC
-#: "zero sorts" correction, r15 verdict ask #8, and the funnel
-#: skew-threshold documentation, ask #5 — but the source-hash gate is
-#: deliberately blind to comment-only edits, so they re-verify):
-#: `events_funnel` and `time_resample_ohlc`. Slot 3 is
-#: `dedup_cluster_best`: its results flow through the
-#: `connected_components` operator this round's CC_FUSE2_r16
-#: optimization touches, so it re-verifies alongside
-#: `dedup_connected_groups` (slot 23). Slots 4-23 are the twenty
-#: `R15_DISPLACED` r12-cohort queries at the three-round staleness
-#: ceiling — mandatory, pre-announced in the r15 header. Slots 24-50
-#: are 27 of the 47-query round-13-latest-evidence cohort, chosen to
-#: cover every module and to include the queries this round's
-#: optimizations touch (`orders_retention_cohort` — RETENTION_r16
-#: rework; the dedup family around the CC operator change).
-#:
-#: DISPLACED (the twenty r13-cohort queries those slots push out; each
-#: is hash-pinned in EVIDENCE.json and names a same-family sibling
-#: with r14-or-newer evidence — or one verified in THIS round's
-#: window, giving it r16 evidence; all twenty reach the three-round
-#: ceiling after r16 and therefore take mandatory r17 slots):
-#:   - `agg_arg_minmax` (sibling `agg_collect_set_array` r15 — the
-#:     same ordered-collect/lexicographic-struct-min family),
-#:   - `agg_count_distinct_multi` (sibling `orders_retention_cohort`
-#:     windowed THIS round — the same distinct-aggregate expansion),
-#:   - `agg_filter_clause` (sibling `agg_priority_late_orders` r15 —
-#:     the same conditional-aggregate family),
-#:   - `agg_grouping_sets` (sibling `agg_cube` r14 — the same
-#:     Expand-based grouping machinery),
-#:   - `agg_rollup` (sibling `rollup_time_hierarchy` r14),
-#:   - `agg_having` + `agg_orders_per_product` (sibling
-#:     `agg_supplier_part_counts` r15 — the same grouped-HAVING /
-#:     per-key count shapes),
-#:   - `fn_datetime` (siblings `dialect_strftime_datetime` r15 +
-#:     `dialect_epoch_datediff` windowed THIS round),
-#:   - `fn_map_higher_order` (sibling `fn_array_higher_order` r14 —
-#:     the same higher-order-function corpus),
-#:   - `fn_regex` (sibling `fn_string` r14 — the same string-fn
-#:     corpus),
-#:   - `fn_struct_map` (sibling `fn_array` r15 — the same container
-#:     pack/extract corpus),
-#:   - `join_anti` + `join_semi` (sibling `in_subquery` r15 — the
-#:     same EXISTS/NOT-EXISTS rewrite machinery),
-#:   - `join_full_outer` + `join_left_outer` (sibling
-#:     `join_right_outer` r14 — the same outer-join family),
-#:   - `join_idle_rich_customers` (sibling `join_waiting_suppliers`
-#:     r14 — the same TPC-H exists-composite family),
-#:   - `join_large_orders_customers` (sibling `join_shipping_priority`
-#:     r15 — the same TPC-H composite join family),
-#:   - `join_lateral` (sibling `fn_explode_unnest` r15 — the same
-#:     lateral/generate lowering),
-#:   - `join_theta_range` (sibling `range_join_bucketed` r14 — the
-#:     same range/theta join machinery),
-#:   - `join_volume_shipping` (sibling `join_national_market_share`
-#:     r15 — the same 6-table TPC-H composite family).
-#:
-#: ROUND-15 WINDOW (historical): slot 1 was the round-15 addition —
-#: never driver-verified, so the never-run gate required it windowed:
-#: `dialect_strptime_tz` (the %z lift, r14 verdict ask #5). Slots 2-3
-#: were the two queries whose SPARK-side source changed that round
-#: (EVENTS_DECOMP_r15.json adoptions — oracles unchanged, but changed
-#: queries must re-verify): `events_funnel` (array spelling, 1.86x)
-#: and `time_resample_ohlc` (struct-agg spelling, 1.91x). Slots 4-21
-#: were the eighteen `R14_DISPLACED` r11-cohort queries at the
-#: three-round staleness ceiling — mandatory, pre-announced in the r14
-#: header. Slots 22-50 were 29 of the 49-query
-#: round-12-latest-evidence cohort.
-#:
-#: R15-DISPLACED (the twenty r12-cohort queries the r15 mandatory
-#: slots pushed out; each is hash-pinned in EVIDENCE.json and names a
-#: same-family sibling with r13-or-newer evidence — or one verified in
-#: the r15 window, giving it r15 evidence; all twenty reached the
-#: three-round ceiling after r15 and therefore take mandatory r16
-#: slots — honored above, slots 4-23):
-#:   - `agg_important_part_value`, `agg_promo_revenue_share`,
-#:     `join_bracketed_discounts`, `join_majority_part_suppliers`,
-#:     `join_product_type_profit`, `join_top_supplier_revenue` (six
-#:     TPC-H composites; siblings: the six TPC-H composites windowed
-#:     THIS round — `agg_late_shipment_priority`,
-#:     `agg_priority_late_orders`, `agg_small_quantity_revenue`,
-#:     `join_national_market_share`, `join_returned_item_revenue`,
-#:     `join_shipping_priority` — plus `agg_pricing_summary` /
-#:     `agg_forecast_revenue` / `join_waiting_suppliers` /
-#:     `join_min_cost_supplier`, all r14; the whole 23-query suite is
-#:     additionally benched end-to-end every run),
-#:   - `dialect_unnest_star_window`, `dialect_unnest_zip_star`,
-#:     `fn_posexplode_ordinality` (unnest star/zip/ordinality lowering;
-#:     siblings `dialect_unnest_zip` + `fn_explode_unnest` windowed
-#:     r15, and the three r15-windowed unnest queries
-#:     `dialect_unnest_embedded`/`_qualified_star`/`_recursive`),
-#:   - `text_boilerplate_ngrams` (siblings `dedup_substring_windows`
-#:     windowed r15 — the same n-gram windowing — and
-#:     `text_decontaminate` windowed r15),
-#:   - `text_chunk_windows` (sibling `text_pack_sequences` windowed
-#:     r15 — the same sequence-segmentation operator family),
-#:   - `text_pii_scrub` + `text_quality_gopher` (sibling
-#:     `text_quality_score` windowed r15 — the same per-doc
-#:     expression-only scoring family),
-#:   - `sample_stratified` (sibling `table_sample` windowed r15 — the
-#:     same hash-Bernoulli sampling machinery),
-#:   - `agg_approx_count_distinct` (sibling `agg_percentile_approx`
-#:     windowed r15 — the same approx-sketch family),
-#:   - `agg_pivot` (sibling `agg_unpivot` r13 — the same
-#:     pivot/unpivot dialect pass),
-#:   - `agg_stats_native` (sibling `agg_stats_exact` r14),
-#:   - `sliding_window` (sibling `tumbling_window` windowed r15),
-#:   - `window_ranking` (sibling `window_navigation` windowed r15),
-#:   - `fn_math_native` (sibling `fn_math` r14).
-#: `tests/test_registry_order.py` pins the window, the never-run gate,
-#: the staleness ceiling, the NEW rotation-capacity closure (round 15,
-#: r14 verdict ask #4), and the source-hash freshness manifest.
-#:
-#: ROUND-14 WINDOW (historical): slots 1-2 were the round-14 additions — never
-#: driver-verified, so the never-run gate requires them windowed:
-#: `dml_update_from_script` / `dml_delete_using_script` (the joined-DML
-#: forms UPDATE … FROM and DELETE … USING, closing r13 "What's missing
-#: #1", driven through the engine statement path). Slot 3 is
-#: `text_bm25_topk`, re-windowed because its source changed this round
-#: (explode-free tf/dl rewrite — sf1 wall 2.92 → 1.62 s). Slots 4-18
-#: are the fifteen `R13_DISPLACED` r10-cohort queries at the
-#: three-round staleness ceiling — mandatory, pre-announced in the r13
-#: header. Slots 19-50 are 32 of the 50-query
-#: round-11-latest-evidence cohort.
-#:
-#: DISPLACED (the eighteen r11-cohort queries the mandatory slots push
-#: out; each is hash-pinned in EVIDENCE.json and names a same-family
-#: sibling with r12-or-newer evidence — or one verified in THIS
-#: round's window, giving it r14 evidence; all eighteen reach the
-#: three-round ceiling after r14 and therefore take mandatory r15
-#: slots):
-#:   - `dialect_datediff_week` (siblings `dialect_epoch_datediff` +
-#:     `dialect_strptime_roundtrip`, both r13 — the same datetime-shim
-#:     pass family),
-#:   - `agg_collect_set_array` (siblings `agg_string_agg` windowed r14
-#:     + `agg_arg_minmax` r13 — the same ordered-collect family),
-#:   - `intersect_except_all` (sibling `intersect_except` windowed
-#:     r14 — the same set-op machinery, ALL spelling),
-#:   - `dialect_unnest_qualified_star` (siblings
-#:     `dialect_unnest_star_window` + `dialect_unnest_zip_star`, both
-#:     r12 — the same unnest star-expansion pass),
-#:   - `dialect_unnest_embedded` (siblings `dialect_unnest_zip` +
-#:     `fn_explode_unnest`, both r12),
-#:   - `dialect_unnest_recursive` (sibling `fn_posexplode_ordinality`
-#:     r12 — the same explode/unnest lowering),
-#:   - `distinct_rows` (sibling `distinct_on` windowed r14),
-#:   - `order_limit_offset` (sibling `order_nulls_first_last`
-#:     windowed r14 — the same order/limit surface),
-#:   - `filter_ilike_nullsafe` (sibling `filter_predicates` windowed
-#:     r14 — the same predicate corpus),
-#:   - `fn_array` (siblings `fn_array_higher_order` windowed r14 +
-#:     `dialect_list_scalar_parity` r13 — the same list-fn corpus),
-#:   - `tumbling_window` (siblings `sliding_window` r12 +
-#:     `stream_tumbling_counts_materialized` r13 — the same
-#:     time-bucketing operator),
-#:   - `window_navigation` (siblings `window_ranking` r12 +
-#:     `window_running_frame` r13 — the same window-function corpus),
-#:   - `dedup_substring_windows` (siblings `text_boilerplate_ngrams`
-#:     r12 — the same n-gram windowing — + `dedup_ngram_jaccard`
-#:     windowed r14),
-#:   - `stream_session_counts_materialized` (siblings
-#:     `session_window_native` windowed r14 +
-#:     `stream_dedup_exact_materialized` r12 — the same
-#:     streaming-materialization sink),
-#:   - `values_inline` (siblings `dialect_series_columns` +
-#:     `range_generator`, both windowed r14 — the same inline-relation
-#:     constructors),
-#:   - `cte_chain` (sibling `recursive_cte` windowed r14),
-#:   - `in_subquery` (sibling `scalar_subquery_correlated` windowed
-#:     r14 — the same subquery machinery),
-#:   - `fn_nondeterministic` (sibling `fn_hash` r13 — the same
-#:     hash/misc function corpus).
-#: `tests/test_registry_order.py` pins the window, the never-run gate,
-#: the staleness ceiling, and the source-hash freshness manifest so an
-#: import reorder, an unrotated rewrite, or an unwindowed NEW query
-#: fails CI, not the judge.
-CURATED_FIRST: tuple[str, ...] = (
-    # --- slots 1-2: Spark-side source changed this round (docstring
-    #     honesty fixes — r15 verdict asks #5/#8; the hash gate is
-    #     blind to comment-only edits, so they re-verify) ---
-    "events_funnel",
-    "time_resample_ohlc",
-    # --- slot 3: results flow through the connected_components
-    #     operator this round's CC_FUSE2_r16 change touches ---
-    "dedup_cluster_best",
-    # --- slots 4-23: the twenty R15_DISPLACED r12-cohort queries
-    #     (three rounds stale — mandatory per the staleness ceiling,
-    #     pre-announced in the r15 header) ---
-    "agg_approx_count_distinct",
-    "agg_important_part_value",
-    "agg_pivot",
-    "agg_promo_revenue_share",
-    "agg_stats_native",
-    "dialect_unnest_star_window",
-    "dialect_unnest_zip_star",
-    "fn_math_native",
-    "fn_posexplode_ordinality",
-    "join_bracketed_discounts",
-    "join_majority_part_suppliers",
-    "join_product_type_profit",
-    "join_top_supplier_revenue",
-    "sample_stratified",
-    "sliding_window",
-    "text_boilerplate_ngrams",
-    "text_chunk_windows",
-    "text_pii_scrub",
-    "text_quality_gopher",
-    "window_ranking",
-    # --- slots 24-50: round-13-latest-evidence cohort (27 of 47;
-    #     the 20 displaced are pinned + sibling-documented above;
-    #     includes this round's optimization targets
-    #     orders_retention_cohort + the CC-fed dedup family) ---
-    "agg_salted_skew",
-    "agg_unpivot",
-    "ann_ivf_recall",
-    "ann_ivf_refined",
-    "ann_pq_adc",
-    "asof_join",
-    "asof_join_pandas",
-    "dedup_connected_groups",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dialect_epoch_datediff",
-    "dialect_list_scalar_parity",
-    "dialect_strptime_roundtrip",
-    "fn_hash",
-    "join_customer_distribution",
-    "join_local_supplier_volume",
-    "join_salted_skew",
-    "knn_cosine_brute",
-    "multimodal_resize",
-    "orders_retention_cohort",
-    "scan_project_filter",
-    "stream_tumbling_counts_materialized",
-    "text_decontaminate_bloom",
-    "text_tfidf_top_terms",
-    "text_vocab_topk",
-    "window_running_frame",
-)
-
-
 def all_queries() -> dict[str, Query]:
     """Import every corpus module (registration side effect) and return
-    the registry, reordered so :data:`CURATED_FIRST` leads."""
+    the registry. Iteration order is registration order: the order the
+    corpus modules are first imported (the list below, unless a caller
+    imported one earlier), then each module's definition order."""
     from arnab_spark.queries import (  # noqa: F401
         aggregates,
         dedup,
@@ -377,9 +119,4 @@ def all_queries() -> dict[str, Query]:
         windows,
     )
 
-    missing = [n for n in CURATED_FIRST if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"CURATED_FIRST names not in registry: {missing}")
-    ordered = {n: REGISTRY[n] for n in CURATED_FIRST}
-    ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
-    return ordered
+    return dict(REGISTRY)

@@ -922,7 +922,7 @@ def _bloom_pos(engine: str, j: int) -> str:
     return f"CAST(('0x' || {sub}) AS BIGINT) % m_bits"
 
 
-def _bloom_sql(engine: str, final_select: str | None = None) -> str:
+def _bloom_sql(engine: str) -> str:
     spark_side = engine == "spark"
     ngram = _NGRAM_SPARK if spark_side else _NGRAM_DUCK
     split_fn = "split" if spark_side else "string_split"
@@ -974,26 +974,10 @@ gram_hits AS (
   GROUP BY p.doc_id, p.ngram
   HAVING COUNT(*) = {_BLOOM_K}
 )
-{final_select or '''SELECT doc_id, COUNT(*) AS n_flagged_ngrams
+SELECT doc_id, COUNT(*) AS n_flagged_ngrams
 FROM gram_hits
-GROUP BY doc_id'''}
+GROUP BY doc_id
 """
-
-
-def _bloom_diag_sql(engine: str) -> str:
-    """Saturation diagnostics over the SAME filter the query builds:
-    m_bits, filter word count, bits set, fill fraction (tools/
-    bloom_scale.py records these per decade — the r12 failure mode was
-    fill -> 1 at sf10 under the old fixed m)."""
-    return _bloom_sql(
-        engine,
-        final_select="""SELECT
-  (SELECT m_bits FROM msize) AS m_bits,
-  COUNT(*) AS filter_words,
-  SUM(bit_count(word)) AS bits_set,
-  CAST(SUM(bit_count(word)) AS DOUBLE) / (SELECT m_bits FROM msize) AS fill_fraction
-FROM bloom""",
-    )
 
 
 @query(

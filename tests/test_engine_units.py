@@ -347,6 +347,28 @@ def test_run_file_applies_engine_settings(tmp_path, monkeypatch, spark):
     spark.conf.set("spark.sql.shuffle.partitions", "32")  # restore
 
 
+@pytest.mark.parametrize("command", [["run"], ["run-file", "script.sql"]])
+def test_unsettable_spark_setting_fails_cli(tmp_path, monkeypatch, capsys, spark, command):
+    """A static conf in spark_settings cannot be set on a live session;
+    both subcommands that open a connection must exit 1 with the
+    setting named, before running anything (main.rs:135-155 is fatal)."""
+    import arnab_spark.cli as cli
+
+    (tmp_path / "config.yaml").write_text(
+        "models_dir: models\nspark_settings:\n"
+        f"  spark.sql.warehouse.dir: '{tmp_path / 'elsewhere'}'\n"
+    )
+    (tmp_path / "models").mkdir()
+    (tmp_path / "models" / "one.sql").write_text("SELECT 1 AS x")
+    (tmp_path / "script.sql").write_text("SELECT 1 AS one")
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(cli, "_get_spark", lambda master: spark)
+    assert cli.main(command) == 1
+    captured = capsys.readouterr()
+    assert "error: failed to apply spark_settings spark.sql.warehouse.dir=" in captured.err
+    assert "OK" not in captured.out
+
+
 def test_transpile_bare_path_table(spark, tmp_path):
     """DuckDB's bare-string table shorthand — FROM 'x.parquet' — must
     rewrite to Spark's file-query syntax and actually scan."""

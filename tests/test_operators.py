@@ -635,73 +635,6 @@ def test_asof_bucketed_matches_plain_across_widths(spark):
             assert got == base, f"remap={remap} width={width}"
 
 
-def test_ivf_assign_coarse_full_probe_equals_exact(spark):
-    """Round-12 ANN assignment swap (r11 verdict ask #5): with EVERY
-    coarse group probed the two-level assign must reproduce the exact
-    n·k argmax bit-for-bit (same integer cosines, same lowest-cid tie
-    rule) — the approximation comes ONLY from unprobed groups."""
-    from arnab_spark.operators import (
-        ivf_assign,
-        ivf_assign_coarse,
-        ivf_centroids,
-        quantize_embeddings,
-    )
-    from arnab_spark.spark_utils import load_table
-
-    e = quantize_embeddings(load_table(spark, SF, "embeddings"), "embedding", 64)
-    cents = ivf_centroids(e, k=16)
-    exact = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign(e, cents).select("vec_id", "cell").collect()
-    }
-    # kc = ceil(sqrt(16)) = 4; n_probe=4 probes every coarse group
-    full = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign_coarse(e, cents, n_probe=4)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert full == exact
-
-
-def test_ivf_assign_coarse_low_probe_agreement(spark):
-    """n_probe=1 is the cheapest (most approximate) setting — the
-    fixture's agreement must stay high (cells are well-separated at
-    this scale) and every assigned cell must be a real centroid id."""
-    from arnab_spark.operators import (
-        ivf_assign,
-        ivf_assign_coarse,
-        ivf_centroids,
-        quantize_embeddings,
-    )
-    from arnab_spark.spark_utils import load_table
-
-    e = quantize_embeddings(load_table(spark, SF, "embeddings"), "embedding", 64)
-    cents = ivf_centroids(e, k=16)
-    cids = {r["cid"] for r in cents.collect()}
-    exact = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign(e, cents).select("vec_id", "cell").collect()
-    }
-    approx = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign_coarse(e, cents, n_probe=1)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert set(approx) == set(exact)
-    assert set(approx.values()) <= cids
-    agree = sum(approx[v] == exact[v] for v in exact) / len(exact)
-    # structural bound only: the sf0.001 fixture's embeddings are
-    # near-isotropic (random directions), the regime where a 1-probe
-    # coarse quantizer is at its WORST (measured 0.556 here) — the
-    # real quality claim is measured at sf10 with k=1600 by
-    # tools/semdedup_ann_assign.py, not pinned by this unit test.
-    # Chance level is 1/16; anything structurally broken (wrong group
-    # routing, wrong tie rule) lands near it.
-    assert agree >= 0.3, f"n_probe=1 agreement at chance level: {agree}"
-
-
 def test_events_funnel_adversarial_single_user_skew(spark):
     """Funnel skew guard (round 16, r15 verdict "What's wrong #2" /
     "Next round #5"): the r15 array spelling's per-user state is

@@ -1,37 +1,21 @@
-"""Guards for the driver-facing registration contract (round-2 fixes).
+"""Guards for the registry contract that ``__spark_entry__.py`` exposes.
 
-Round 1 showed the driver (a) verifies only the FIRST 50 entries of
-``queries()`` in dict order and (b) crashes canonicalizing top-level
-array/map/struct output columns. These tests pin the fixes: the curated
-window must span every operator family with oracled queries only, the
-headline bench set must stay stable across reorderings, and no oracled
-query may emit a non-atomic top-level column.
+The headline set (the queries the benchmark times) must stay the same
+whatever the registration order, every query must carry a DuckDB oracle,
+and no oracled query may emit a non-atomic top-level column: a consumer
+that canonicalizes results with pandas ``sort_values`` throws on
+unhashable cells.
 """
 
 import os
 
 import pytest
 
-from arnab_spark.queries import CURATED_FIRST, all_queries
+from arnab_spark.queries import all_queries
 
 TEST_SF_DIR = os.environ.get("ARNAB_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 _REGISTRY = all_queries()
-
-ALL_MODULES = {
-    "aggregates",
-    "dedup",
-    "dialect_parity",
-    "functions_corpus",
-    "joins",
-    "llm_text",
-    "multimodal",
-    "relational",
-    "similarity",
-    "timeseries",
-    "tpch_suite",
-    "windows",
-}
 
 HEADLINE = {
     "agg_pricing_summary",
@@ -43,30 +27,6 @@ HEADLINE = {
     "sessionize_gaps",
     "text_token_count",
 }
-
-
-def _module(q):
-    return q.fn.__module__.rsplit(".", 1)[-1]
-
-
-def test_curated_window_is_50_unique_registered_names():
-    assert len(CURATED_FIRST) == 50
-    assert len(set(CURATED_FIRST)) == 50
-    assert set(CURATED_FIRST) <= set(_REGISTRY)
-
-
-def test_registry_iteration_order_starts_with_curated_window():
-    assert list(_REGISTRY)[:50] == list(CURATED_FIRST)
-
-
-def test_curated_window_spans_every_module():
-    seen = {_module(_REGISTRY[name]) for name in CURATED_FIRST}
-    assert seen == ALL_MODULES
-
-
-def test_curated_window_is_fully_oracled():
-    unoracled = [n for n in CURATED_FIRST if not _REGISTRY[n].oracle]
-    assert not unoracled, f"rows-only queries waste verification slots: {unoracled}"
 
 
 def test_headline_set_stable_under_reordering():
@@ -81,369 +41,12 @@ def test_every_query_is_oracled():
     assert rows_only == []
 
 
-#: The eighteen round-11-cohort queries the round-14 mandatory slots
-#: (two NEW joined-DML queries + the changed-source BM25 re-slot + the
-#: fifteen R13_DISPLACED ceiling queries) displace. Each is hash-pinned
-#: in EVIDENCE.json and names a same-family sibling with r12-or-newer
-#: evidence or one verified in the r14 window itself (full sibling
-#: table: the CURATED_FIRST header in arnab_spark/queries/__init__.py).
-#: After r14 they sit at exactly three rounds stale — the ceiling — so
-#: ALL EIGHTEEN take mandatory r15 slots.
-R14_DISPLACED = {
-    "dialect_datediff_week",
-    "agg_collect_set_array",
-    "intersect_except_all",
-    "dialect_unnest_qualified_star",
-    "dialect_unnest_embedded",
-    "dialect_unnest_recursive",
-    "distinct_rows",
-    "order_limit_offset",
-    "filter_ilike_nullsafe",
-    "fn_array",
-    "tumbling_window",
-    "window_navigation",
-    "dedup_substring_windows",
-    "stream_session_counts_materialized",
-    "values_inline",
-    "cte_chain",
-    "in_subquery",
-    "fn_nondeterministic",
-}
-
-
-#: The twenty round-12-cohort queries the round-15 mandatory slots (one
-#: NEW %z query + the two changed-source events adoptions + the
-#: eighteen R14_DISPLACED ceiling queries) displace. Each is
-#: hash-pinned in EVIDENCE.json and names a same-family sibling with
-#: r13-or-newer evidence or one verified in the r15 window itself (full
-#: sibling table: the CURATED_FIRST header in
-#: arnab_spark/queries/__init__.py). After r15 they sit at exactly
-#: three rounds stale — the ceiling — so ALL TWENTY take mandatory r16
-#: slots.
-R15_DISPLACED = {
-    "agg_important_part_value",
-    "agg_promo_revenue_share",
-    "join_bracketed_discounts",
-    "join_majority_part_suppliers",
-    "join_product_type_profit",
-    "join_top_supplier_revenue",
-    "dialect_unnest_star_window",
-    "dialect_unnest_zip_star",
-    "fn_posexplode_ordinality",
-    "text_boilerplate_ngrams",
-    "text_chunk_windows",
-    "text_pii_scrub",
-    "text_quality_gopher",
-    "sample_stratified",
-    "agg_approx_count_distinct",
-    "agg_pivot",
-    "agg_stats_native",
-    "sliding_window",
-    "window_ranking",
-    "fn_math_native",
-}
-
-
-def _latest_evidence(max_round: int | None = None) -> dict[str, int]:
-    """Latest green driver-evidence round per query, computed from the
-    committed CORRECTNESS_r*.json union — never hand-maintained."""
-    latest: dict[str, int] = {}
-    for f in sorted(os.listdir(REPO)):
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json"):
-            rnd = int(f[len("CORRECTNESS_r"):-len(".json")])
-            if max_round is not None and rnd > max_round:
-                continue
-            with open(os.path.join(REPO, f)) as fh:
-                for name, row in json.load(fh).items():
-                    if (
-                        row.get("rows_match")
-                        and row.get("schema_match", True)
-                        and row.get("hash_match", True)
-                    ):
-                        latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-#: The twenty round-13-cohort queries the round-16 mandatory slots (two
-#: changed-source docstring re-slots + the CC-operator consumer
-#: dedup_cluster_best + the twenty R15_DISPLACED ceiling queries)
-#: displace. Each is hash-pinned in EVIDENCE.json and names a
-#: same-family sibling with r14-or-newer evidence or one verified in
-#: the r16 window itself (full sibling table: the CURATED_FIRST header
-#: in arnab_spark/queries/__init__.py). After r16 they sit at exactly
-#: three rounds stale — the ceiling — so ALL TWENTY take mandatory r17
-#: slots.
-R16_DISPLACED = {
-    "agg_arg_minmax",
-    "agg_count_distinct_multi",
-    "agg_filter_clause",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_orders_per_product",
-    "agg_rollup",
-    "fn_datetime",
-    "fn_map_higher_order",
-    "fn_regex",
-    "fn_struct_map",
-    "join_anti",
-    "join_full_outer",
-    "join_idle_rich_customers",
-    "join_large_orders_customers",
-    "join_lateral",
-    "join_left_outer",
-    "join_semi",
-    "join_theta_range",
-    "join_volume_shipping",
-}
-
-
-def test_r16_window_covers_stale_evidence_queries():
-    """The r16 window holds every query whose latest driver evidence is
-    r12 or older — computed from the committed CORRECTNESS_r{01..15}.json
-    union — so after the r16 run no registry query's driver evidence
-    predates r13 (the staleness ceiling holds at round 16). Slots 1-2
-    are the changed-source docstring re-slots (r15 verdict asks #5/#8);
-    slot 3 is dedup_cluster_best (CC-operator consumer); slots 4-23 are
-    the twenty R15_DISPLACED ceiling queries (mandatory, pre-announced
-    in the r15 header); the twenty r13-cohort queries displaced this
-    round (R16_DISPLACED) are pinned + sibling-documented and take
-    mandatory r17 slots."""
-    latest = _latest_evidence(max_round=15)  # r16 rotation input
-    if not latest:
-        pytest.skip("no correctness snapshot yet")
-    stale = {n for n, r in latest.items() if r <= 12}
-    assert stale <= set(CURATED_FIRST), sorted(stale - set(CURATED_FIRST))
-    displaced = {
-        n for n, r in latest.items()
-        if r == 13 and n in _REGISTRY and n not in CURATED_FIRST
-    }
-    assert displaced == R16_DISPLACED, (
-        sorted(displaced ^ R16_DISPLACED)
-    )
-    assert list(CURATED_FIRST[:3]) == [
-        "events_funnel",
-        "time_resample_ohlc",
-        "dedup_cluster_best",
-    ]
-    assert set(CURATED_FIRST[3:23]) == R15_DISPLACED
-
-
-def test_rotation_capacity_is_closed():
-    """Registry-sustainability rule (round 15, r14 verdict ask #4,
-    option b — a formal pin budget instead of a retire-to-add freeze):
-
-    1. HARD REGISTRY CAP 185. The 3-round staleness ceiling gives a
-       4-round evidence cycle over a 50-slot window = 200 query-slots;
-       each round also spends slots on never-run additions and
-       changed-source re-slots (3 this round, 3 in r14), so 185 leaves
-       ~15 slots/cycle of churn headroom. Adding query #186 requires
-       retiring one FIRST (record the retirement in this docstring and
-       delete its registration) — growth past the cap without a
-       retirement is exactly the unbounded-rotation debt the r14
-       verdict flagged.
-    2. PIN BUDGET 40. The exactly-3-stale unwindowed cohort (the set
-       that must be hash-pinned now and becomes MANDATORY next round)
-       stays <= 40, so the NEXT window provably has >= 10 free slots
-       for additions and changed-source re-slots. A breach means the
-       current window took too few of the aging cohort — fix the
-       window, not the budget.
-    """
-    assert len(_REGISTRY) <= 185, (
-        f"registry has {len(_REGISTRY)} queries — past the documented "
-        "cap; retire one before adding"
-    )
-    latest = _latest_evidence()
-    if not latest:
-        pytest.skip("no correctness snapshot yet")
-    newest = max(latest.values())
-    pinned = sorted(
-        n
-        for n, r in latest.items()
-        if n in _REGISTRY and r == newest - 3 and n not in CURATED_FIRST
-    )
-    assert len(pinned) <= 40, (
-        f"{len(pinned)} queries sit at exactly-3-stale without a window "
-        f"slot (pin budget 40): {pinned}"
-    )
-
-
-def test_no_query_evidence_older_than_three_rounds():
-    """THE staleness ceiling (round 13, r12 verdict ask #2): with 164
-    registry queries and 50 window slots a full evidence cycle takes 4
-    rounds, so the honest invariant is latest-evidence >= N-3 for every
-    query (N = the newest committed snapshot round), with exactly-3-
-    stale queries hash-pinned + sibling-documented. Queries inside the
-    CURRENT window are exempt for the in-flight round (their fresh
-    evidence lands when the driver runs); a query that is BOTH past the
-    ceiling AND unwindowed is the failure this test exists to catch."""
-    latest = _latest_evidence()
-    if not latest:
-        pytest.skip("no correctness snapshot yet")
-    newest = max(latest.values())
-    too_stale = sorted(
-        n
-        for n, r in latest.items()
-        if n in _REGISTRY and r < newest - 3 and n not in CURATED_FIRST
-    )
-    assert not too_stale, (
-        f"queries with evidence older than r{newest - 3} and no window "
-        f"slot (the <=3-round ceiling is broken): {too_stale}"
-    )
-
-
-def test_never_driver_verified_queries_hold_window_slots():
-    """THE never-run gate (round-4 verdict item 4): any registry query
-    with NO green row in any committed CORRECTNESS_r*.json must hold a
-    slot in the verification window. The source-hash gate below only
-    catches *changed* queries — this catches *new* ones, the exact hole
-    the two round-4 additions fell through."""
-    evidence: set[str] = set()
-    for f in sorted(os.listdir(REPO)):
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json"):
-            with open(os.path.join(REPO, f)) as fh:
-                for name, row in json.load(fh).items():
-                    if (
-                        row.get("rows_match")
-                        and row.get("schema_match", True)
-                        and row.get("hash_match", True)
-                    ):
-                        evidence.add(name)
-    if not evidence:
-        pytest.skip("no correctness snapshot yet")
-    never_run = [
-        n for n in _REGISTRY if n not in evidence and n not in CURATED_FIRST
-    ]
-    assert not never_run, (
-        f"queries with no driver evidence in any CORRECTNESS_r*.json "
-        f"must be in CURATED_FIRST: {never_run}"
-    )
-
-
-# ---------------------------------------------------------------------
-# Evidence-freshness rule (round-3 verdict item 2): a query whose
-# implementation changed since the last driver correctness snapshot must
-# hold a slot in the verification window — otherwise it would ship on
-# stale evidence, exactly the gap slots 1-3 exist to close this round.
-
-import hashlib
-import inspect
-import json
-import subprocess
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MANIFEST = os.path.join(REPO, "EVIDENCE.json")
-
-
-def _query_src_hash(q) -> str:
-    """Hash of the query's own implementation source + oracle SQL.
-    Deliberately does NOT chase helper functions or operators the query
-    calls — the git-based module test below is the coarse safety net for
-    those; this hash pins the query body itself."""
-    src = inspect.getsource(q.fn) + "\n---\n" + (q.oracle or "")
-    return hashlib.sha256(src.encode()).hexdigest()[:16]
-
-
-def test_manifest_round_label_is_current():
-    """Round-7 review (What's wrong #3): running the manifest generator
-    without a round number wrote ``rotated_for_round: "unspecified"``,
-    silently clobbering the label. The generator now REQUIRES
-    ``--round``; this test pins that the committed label is an integer
-    no older than the newest committed correctness snapshot (the window
-    a rotation targets is snapshot_round + 1, so >= holds before and
-    after the driver writes the round's snapshot)."""
-    with open(MANIFEST) as fh:
-        label = json.load(fh)["rotated_for_round"]
-    assert isinstance(label, int), f"manifest round label is {label!r}, not an int"
-    rounds = [
-        int(f[len("CORRECTNESS_r"):-len(".json")])
-        for f in os.listdir(REPO)
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json")
-    ]
-    if rounds:
-        assert label >= max(rounds), (
-            f"EVIDENCE.json rotated_for_round={label} is older than the newest "
-            f"correctness snapshot r{max(rounds)} — the window was not rotated"
-        )
-
-
-def test_changed_queries_hold_verification_slots():
-    """Every query whose (fn source + oracle) hash differs from the
-    EVIDENCE.json manifest — written when the window was last rotated —
-    must be inside CURATED_FIRST. Updating the manifest without
-    rotating the window is a reviewable act (it shows in the diff)."""
-    with open(MANIFEST) as fh:
-        manifest = json.load(fh)["query_src_hashes"]
-    stale = [
-        name
-        for name, q in _REGISTRY.items()
-        if manifest.get(name) != _query_src_hash(q) and name not in CURATED_FIRST
-    ]
-    assert not stale, (
-        f"queries changed since EVIDENCE.json but hold no verification "
-        f"slot (add to CURATED_FIRST or regenerate the manifest "
-        f"consciously): {stale}"
-    )
-
-
-#: Which query modules exercise each operators/ module — the coarse net
-#: for changes the per-query hash cannot see (a query's behavior lives
-#: partly in the operator it calls).
-OPERATOR_DEPENDENT_MODULES = {
-    "relational.py": {"dedup", "relational", "windows"},
-    "similarity.py": {"similarity", "dedup"},
-    "texttools.py": {"llm_text"},
-    "timeops.py": {"timeseries"},
-}
-
-
-def test_touched_modules_have_window_representation():
-    """Module-level safety net: any queries/ or operators/ module with
-    commits after the newest CORRECTNESS snapshot must have at least one
-    representative query inside the window."""
-    snapshots = sorted(
-        f for f in os.listdir(REPO) if f.startswith("CORRECTNESS_r") and f.endswith(".json")
-    )
-    if not snapshots:
-        pytest.skip("no correctness snapshot yet")
-    try:
-        sha = subprocess.run(
-            ["git", "log", "-1", "--format=%H", "--", snapshots[-1]],
-            cwd=REPO, capture_output=True, text=True, check=True,
-        ).stdout.strip()
-        changed = subprocess.run(
-            ["git", "diff", "--name-only", f"{sha}..HEAD", "--", "arnab_spark/"],
-            cwd=REPO, capture_output=True, text=True, check=True,
-        ).stdout.split()
-    except (subprocess.CalledProcessError, FileNotFoundError):
-        pytest.skip("git history unavailable")
-    if not sha:
-        pytest.skip("correctness snapshot not committed yet")
-    touched_query_modules: set[str] = set()
-    for path in changed:
-        parts = path.split("/")
-        if len(parts) == 3 and parts[1] == "queries" and parts[2].endswith(".py"):
-            mod = parts[2][:-3]
-            if mod != "__init__":
-                touched_query_modules.add(mod)
-        elif len(parts) == 3 and parts[1] == "operators":
-            touched_query_modules |= OPERATOR_DEPENDENT_MODULES.get(parts[2], set())
-    windowed_modules = {_module(_REGISTRY[n]) for n in CURATED_FIRST}
-    unrepresented = sorted(
-        m for m in touched_query_modules if m in ALL_MODULES and m not in windowed_modules
-    )
-    assert not unrepresented, (
-        f"modules changed since {snapshots[-1]} with no query in the "
-        f"verification window: {unrepresented}"
-    )
-
-
 @pytest.mark.parametrize(
     "name", sorted(n for n, q in _REGISTRY.items() if q.oracle)
 )
 def test_oracled_output_columns_are_atomic(spark, name):
-    """The driver canonicalizes results via pandas sort_values, which
-    throws on unhashable cells — every oracled query must emit only
-    atomic top-level columns (round-1 finding: 4 queries crashed it)."""
+    """Every oracled query must emit only atomic top-level columns
+    (round-1 finding: 4 queries crashed a pandas-sorting consumer)."""
     schema = _REGISTRY[name].fn(spark, TEST_SF_DIR).schema
     bad = [
         f.name

@@ -2,7 +2,8 @@
 
 Round-15 deliverable support: `plans/r15/<query>_{before,after}.txt`
 must carry the physical plan of every query touched this round, so the
-plan-shape claims in OPTIMIZATION_r15.md are checkable offline.
+plan-shape claims in measurements/r15/OPTIMIZATION_r15.md are checkable
+offline.
 
 Usage: python tools/dump_plans.py OUTDIR SUFFIX QUERY [QUERY...]
        python tools/dump_plans.py OUTDIR SUFFIX --all-headline

@@ -1,12 +1,13 @@
-"""Generate 10x scale points (``sf1``, and ``sf10`` from sf1) from the
-driver's sf0.1 fixtures, for the empirical scale-slope measurement in
-bench.py (round-5 verdict item 6: a 10x datapoint turns the "per-query
-floor amortizes at scale" argument from arithmetic into measurement;
-round-6 verdict item 4 adds the third decade for the TPC-H family).
+"""Generate a 10x scale point (``.scaledata/sf1``) from the sf0.1
+fixtures, for the sf1 oracle differential in
+``tests/test_scale_correctness.py``: the quantization contract's
+overflow headroom and the plans whose fan-out grows with the data are
+checked against DuckDB at ten times the fixture size. ``perfbench``
+uses the same generator for its sf0.1-sized registry inputs.
 
-The testdata tree is read-only, so scale points land repo-local at
-``.scaledata/sf1`` / ``.scaledata/sf10`` (gitignored; regenerated on
-demand, content is a pure function of the sf0.1 inputs). Scaling is 10
+The testdata tree is read-only, so the scale point lands repo-local at
+``.scaledata/sf1`` (gitignored; regenerated on demand, content is a
+pure function of the sf0.1 inputs). Scaling is 10
 key-shifted copies — NOT 10 verbatim copies, which would distort the
 workloads being measured:
 
@@ -29,16 +30,11 @@ nation/region are dimension tables and copy verbatim.
 
 Copies are STREAMED to the parquet file one at a time (pyarrow
 ParquetWriter, one row group per copy) so peak memory is one copy of
-one table, not the whole scaled table — at sf10 the lineitem table
-alone is ~60M rows, which a pd.concat materialization would hold
-fully in RAM. One row group per copy also gives downstream engines
-clean parallel scan units.
+one table, not the whole scaled table. One row group per copy also
+gives downstream engines clean parallel scan units.
 
-``tables=`` restricts generation to a subset (the sf10 point only
-needs the TPC-H tables for the tpch8 slope; the dedup family's DuckDB
-side is already ~2 min at sf1 — projected ~20 min at sf10 — so the
-third decade deliberately covers TPC-H only, stated in-band in the
-bench artifact).
+``tables=`` restricts generation to a subset (perfbench scales the
+embeddings with fewer copies than the other tables).
 """
 
 from __future__ import annotations
@@ -55,10 +51,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC_DEFAULT = "/root/testdata/sf0.1"
 DEST_DEFAULT = os.path.join(REPO, ".scaledata", "sf1")
 COPIES = 10
-
-TPCH_TABLES = (
-    "orders", "lineitem", "customer", "supplier", "part", "nation", "region",
-)
 
 #: per-table (shift_columns_by_their_own_stride, name_suffix_columns)
 _KEYED = {
@@ -125,7 +117,7 @@ def generate(
 ) -> str:
     """Idempotent: a ``_SCALE_OK`` marker short-circuits regeneration —
     but only when the marker's recorded table subset covers the one
-    requested now (a dest generated with ``tables=TPCH_TABLES`` must
+    requested now (a dest generated with ``tables=("orders",)`` must
     not silently satisfy a later ``tables=None`` full-set request)."""
     marker = os.path.join(dest, "_SCALE_OK")
     already: set[str] = set()
@@ -139,7 +131,7 @@ def generate(
         # dest built at a different copies/src must never be widened
         # with mismatched tables (content is a pure function of the
         # inputs, so incompatible dirs regenerate from scratch rather
-        # than raising — raising would make bench.py skip the section).
+        # than raising).
         m = re.match(
             r"v=(\d+) copies=(\d+) src=(.*?) tables=(all|\(.*\))\s*$",
             recorded.strip(),
@@ -167,10 +159,9 @@ def generate(
             )
             if covered:
                 return dest
-            # a WIDER request than the recorded subset (round-9: the
-            # sf10 point gaining documents/embeddings for the dedup
-            # slope) generates only the MISSING tables — the existing
-            # files stay valid and the marker records the union.
+            # a WIDER request than the recorded subset generates only
+            # the MISSING tables — the existing files stay valid and
+            # the marker records the union.
             already = recorded_set or set()
     os.makedirs(dest, exist_ok=True)
 
@@ -252,21 +243,6 @@ def generate(
     with open(marker, "w") as fh:
         fh.write(f"v=2 copies={copies} src={src} tables={recorded_tables}\n")
     return dest
-
-
-def generate_sf10(sf1_dir: str) -> str:
-    """The third decade: 10x the sf1 point — TPC-H tables for the tpch8
-    slope, events (round-8) for the asof slope, and documents/embeddings
-    (round-9) for the SPARK side of the dedup slope. The dedup family's
-    DuckDB side stays sf1-capped (its oracles would cost ~20 min at
-    sf10); bench.py states the DuckDB sf10 number as a log-linear
-    projection instead."""
-    return generate(
-        src=sf1_dir,
-        dest=os.path.join(REPO, ".scaledata", "sf10"),
-        copies=COPIES,
-        tables=TPCH_TABLES + ("events", "documents", "embeddings"),
-    )
 
 
 if __name__ == "__main__":
