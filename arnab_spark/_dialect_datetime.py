@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import re
 
+from arnab_spark import lexer
 from arnab_spark.dialect import _ARG_CALL_REWRITES, _lit_match
 
 #: C-style (strftime) directive → Spark/Java datetime pattern. Only
@@ -200,32 +201,7 @@ def _fold_literal_concat(s: str) -> str | None:
     shape macro composition produces) closes the gap the shim can
     prove; general constant expressions stay loud. Returns the folded
     string value or None."""
-    depth = 0
-    quote = None
-    parts: list[str] = []
-    last = 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == quote:
-                if quote == "'" and i + 1 < n and s[i + 1] == "'":
-                    i += 2
-                    continue
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "|" and i + 1 < n and s[i + 1] == "|" and depth == 0:
-            parts.append(s[last:i])
-            last = i + 2
-            i += 2
-            continue
-        i += 1
-    parts.append(s[last:])
+    parts = lexer.split_top_level(s, "||")
     if len(parts) < 2:
         return None
     out: list[str] = []

@@ -18,12 +18,8 @@ from __future__ import annotations
 import re
 from weakref import WeakKeyDictionary
 
-from arnab_spark.dialect import (
-    _resolve_path,
-    _scan_top_level,
-    _split_top_level_commas,
-    transpile_statement,
-)
+from arnab_spark import lexer
+from arnab_spark.dialect import _resolve_path, transpile_statement
 from arnab_spark._dialect_statements import _attached_for
 
 # ------------------------------------------- DML: INSERT / DELETE / UPDATE
@@ -478,7 +474,7 @@ def _parse_assignments(assigns_text: str, types: dict, name: str) -> dict:
     from arnab_spark.errors import ArnabError
 
     assigns: dict[str, str] = {}
-    for a in _split_top_level_commas(assigns_text):
+    for a in lexer.split_top_level(assigns_text):
         m2 = re.match(r'(?s)^\s*("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.*?)\s*$', a)
         if m2 is None:
             raise ArnabError(f"UPDATE: cannot parse assignment {a.strip()!r}")
@@ -493,7 +489,7 @@ def _parse_assignments(assigns_text: str, types: dict, name: str) -> dict:
 
 def _split_from_where(tail: str):
     """Split the text after FROM/USING into (relation text, predicate)."""
-    widx, _ = _scan_top_level(tail, ("where",))
+    widx, _ = lexer.find_top_level(tail, ("where",))
     fromtext = (tail[:widx] if widx >= 0 else tail).strip().rstrip(";").strip()
     pred = tail[widx + len("where"):].strip().rstrip(";").strip() if widx >= 0 else None
     return fromtext, pred
@@ -557,7 +553,7 @@ def _rewrite_update_from(sql: str, ret_clause, spark, returning_select):
             "table (backed table or session temp table)."
         )
     rest = um.group("rest")
-    fidx, _ = _scan_top_level(rest, ("from",))
+    fidx, _ = lexer.find_top_level(rest, ("from",))
     if fidx < 0:
         raise ArnabError("UPDATE … FROM: cannot locate the FROM clause")
     fromtext, pred = _split_from_where(rest[fidx + len("from"):])
@@ -896,15 +892,12 @@ def _rewrite_create_table(sql: str, spark):
         return None
     schema_inner = None
     if rest.startswith("("):
-        depth, j = 0, 0
-        for j, ch in enumerate(rest):
-            depth += ch == "("
-            depth -= ch == ")"
-            if depth == 0:
-                break
-        if rest[j + 1:].strip().strip(";").strip():
+        j = lexer.group_end(rest, 0)
+        if j is None:
+            raise ArnabError("CREATE TABLE: unclosed column list")
+        if rest[j:].strip().strip(";").strip():
             return None  # "(cols) USING …" and friends: Spark-shaped
-        schema_inner = rest[1:j]
+        schema_inner = rest[1 : j - 1]
     else:
         am = re.match(r"(?is)^AS\s+(.*)$", rest)
         if am is None:
@@ -947,7 +940,7 @@ def _rewrite_create_table(sql: str, spark):
 
     if schema_inner is not None:
         casts = []
-        for d in _split_top_level_commas(schema_inner):
+        for d in lexer.split_top_level(schema_inner):
             dm = re.match(r'(?s)^\s*("[^"]+"|[A-Za-z_]\w*)\s+(.+?)\s*$', d)
             if dm is None or _COL_CONSTRAINT.search(dm.group(2)):
                 raise ArnabError(
@@ -1202,7 +1195,7 @@ def _rewrite_copy_from(sql: str, spark):
     path = _resolve_path(m.group("path"))
     fmt, header, delim = None, False, ","
     if m.group("opts"):
-        for opt in _split_top_level_commas(m.group("opts")):
+        for opt in lexer.split_top_level(m.group("opts")):
             om = re.match(
                 r"(?is)^\s*(\w+)\s*(?:\s+|\s*)?('[^']*'|\S+)?\s*$", opt.strip()
             )
@@ -1242,7 +1235,7 @@ def _rewrite_copy_from(sql: str, spark):
         )
     cols = None
     if m.group("cols"):
-        cols = [c.strip().strip('"') for c in _split_top_level_commas(m.group("cols"))]
+        cols = [c.strip().strip('"') for c in lexer.split_top_level(m.group("cols"))]
     target = spark.table(name)
     aligned = _dml_align(new, target.schema.fields, cols, by_name=False)
     if kind == "backed":
@@ -1323,7 +1316,7 @@ def _rewrite_export_import_db(sql: str, spark):
             if not _os.path.isfile(p):
                 raise ArnabError(f"IMPORT DATABASE: missing {p}")
             with open(p, encoding="utf-8") as fh:
-                for stmt in Node.split_statements(fh.read()):
+                for stmt in Node.split_statements(Node.strip_comments(fh.read())):
                     out = transpile_statement(stmt, spark)
                     if out.strip():
                         spark.sql(out)
@@ -1450,7 +1443,7 @@ def _rewrite_dml(sql: str, spark):
     # normal statement pipeline executes as this statement's records.
     ret_clause = None
     if re.match(r"(?is)^\s*(INSERT|DELETE|UPDATE)\b", sql):
-        rpos, _ = _scan_top_level(sql, ("returning",))
+        rpos, _ = lexer.find_top_level(sql, ("returning",))
         if rpos >= 0:
             tail = sql[rpos + len("returning"):].strip().rstrip(";").strip()
             # misfire guard (round 14): a column/alias literally named
@@ -1464,7 +1457,7 @@ def _rewrite_dml(sql: str, spark):
                 "values", "select", "union", "intersect", "except",
                 "limit", "offset", "window",
             )
-            if _scan_top_level(tail, _NOT_EXPR_LIST)[0] < 0:
+            if lexer.find_top_level(tail, _NOT_EXPR_LIST)[0] < 0:
                 ret_clause = tail
                 sql = sql[:rpos].rstrip()
                 if not ret_clause:
@@ -1504,9 +1497,9 @@ def _rewrite_dml(sql: str, spark):
     #   - the FROM/USING text is an arbitrary relation list (tables,
     #     subqueries, comma joins) — embedded verbatim in the probe
     #     join here, so all of DuckDB's FROM shapes work.
-    if re.match(r"(?is)^\s*UPDATE\b", sql) and _scan_top_level(sql, ("from",))[0] >= 0:
+    if re.match(r"(?is)^\s*UPDATE\b", sql) and lexer.find_top_level(sql, ("from",))[0] >= 0:
         return _rewrite_update_from(sql, ret_clause, spark, _returning_select)
-    if re.match(r"(?is)^\s*DELETE\s+FROM\b", sql) and _scan_top_level(sql, ("using",))[0] >= 0:
+    if re.match(r"(?is)^\s*DELETE\s+FROM\b", sql) and lexer.find_top_level(sql, ("using",))[0] >= 0:
         return _rewrite_delete_using(sql, ret_clause, spark, _returning_select)
 
     dm = _DELETE_DML.match(sql)
@@ -1554,7 +1547,7 @@ def _rewrite_dml(sql: str, spark):
             _require_engine_table(um.group("target"), "UPDATE")
             return None
         rest = um.group("rest")
-        widx, _ = _scan_top_level(rest, ("where",))
+        widx, _ = lexer.find_top_level(rest, ("where",))
         assigns_text = rest[:widx] if widx >= 0 else rest
         pred = rest[widx + len("where"):].strip() if widx >= 0 else None
         fields = spark.table(name).schema.fields
@@ -1659,7 +1652,7 @@ def _rewrite_dml(sql: str, spark):
                 "incremental materialization) or a row_number window."
             )
         rest = im.group("rest").lstrip()
-        if _scan_top_level(rest, ("conflict",))[0] >= 0:
+        if lexer.find_top_level(rest, ("conflict",))[0] >= 0:
             raise ArnabError(
                 "INSERT … ON CONFLICT needs key constraints, which this "
                 "engine's tables do not declare. Express the upsert as a "
@@ -1668,17 +1661,14 @@ def _rewrite_dml(sql: str, spark):
             )
         cols = None
         if rest.startswith("("):
-            depth, j = 0, 0
-            for j, ch in enumerate(rest):
-                depth += ch == "("
-                depth -= ch == ")"
-                if depth == 0:
-                    break
+            j = lexer.group_end(rest, 0)
+            if j is None:
+                raise ArnabError(f"INSERT INTO {name}: unclosed column list")
             cols = [
                 c.strip().strip('"')
-                for c in _split_top_level_commas(rest[1:j])
+                for c in lexer.split_top_level(rest[1 : j - 1])
             ]
-            rest = rest[j + 1:].lstrip()
+            rest = rest[j:].lstrip()
         by_name = False
         bn = re.match(r"(?is)^BY\s+NAME\b", rest)
         if bn is not None:

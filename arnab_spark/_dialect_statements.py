@@ -9,9 +9,10 @@ CREATE SEQUENCE rejections.
 INTERNAL — import these names via :mod:`arnab_spark.dialect`, which
 re-exports them at its bottom (importing THIS module directly in a
 fresh interpreter deadlocks the circular bootstrap on purpose: the
-public surface is ``arnab_spark.dialect``). The shared masking/scan
-helpers stay in the core module; this module imports them when the
-core re-export runs, at which point they are all defined.
+public surface is ``arnab_spark.dialect``). Quoting and the scan
+helpers come from :mod:`arnab_spark.lexer`; the core helpers this
+module uses are imported when the core re-export runs, at which point
+they are all defined.
 """
 
 from __future__ import annotations
@@ -19,14 +20,10 @@ from __future__ import annotations
 import re
 from weakref import WeakKeyDictionary
 
+from arnab_spark import lexer
 from arnab_spark.dialect import (
-    _comment_spans,
     _lit_match,
-    _quoted_spans,
     _resolve_path,
-    _scan_top_level,
-    _split_top_level_commas,
-    _strip_outer_parens,
     transpile_statement,
 )
 
@@ -436,7 +433,7 @@ def _describe_values_sql(rel: str, spark) -> str | None:
     if re.match(r"(?is)^(select|with|values|from)\b", rel):
         rel_sql = rel
     elif rel.startswith("("):
-        rel_sql = _strip_outer_parens(rel)
+        rel_sql = lexer.strip_outer_parens(rel)
     else:
         rel_sql = f"SELECT * FROM {rel}"
     try:
@@ -686,37 +683,17 @@ def _rewrite_describe_subqueries(sql: str, spark) -> str:
     is the only record-classifier-compatible way to SELECT over a
     schema in a reference model, since node.rs:112-123 classifies a
     bare DESCRIBE as non-record). Each parenthesized DESCRIBE group
-    outside quotes rewrites to the same six-column VALUES table as the
+    in code rewrites to the same six-column VALUES table as the
     statement form; an unresolvable relation leaves the group for a
     loud parse error. Back-to-front so offsets survive substitution."""
     if spark is None:
         return sql
     sites = []
-    spans = _quoted_spans(sql)
-    for m in _DESCRIBE_SUBQ.finditer(sql):
-        if any(s <= m.start() <= e for s, e in spans):
-            continue
-        depth = 0
-        quote = None
-        i = m.start()
-        n = len(sql)
-        while i < n:
-            ch = sql[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"', "`"):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if i >= n:
+    for m in _DESCRIBE_SUBQ.finditer(lexer.mask(sql)):
+        end = lexer.group_end(sql, m.start())
+        if end is None:
             continue  # unbalanced: leave loud
-        sites.append((m.start(), i + 1))
+        sites.append((m.start(), end))
     for start, end in sorted(sites, reverse=True):
         inner = sql[start + 1: end - 1].strip()
         dm = re.match(r"(?is)^DESC(?:RIBE)?\s+(.+)$", inner)
@@ -749,7 +726,7 @@ def _rewrite_summarize(sql: str, spark) -> str:
         return sql
     rel = m.group(1).strip()
     rel_sql = (
-        _strip_outer_parens(rel) if rel.startswith("(") else f"SELECT * FROM {rel}"
+        lexer.strip_outer_parens(rel) if rel.startswith("(") else f"SELECT * FROM {rel}"
     )
     try:
         fields = spark.sql(f"SELECT * FROM ({rel_sql}) __arnab_sz WHERE 1=0").schema
@@ -788,47 +765,27 @@ def _rewrite_summarize(sql: str, spark) -> str:
 
 def _rewrite_attached_refs(sql: str, attached: dict[str, set[str]]) -> str:
     """``alias.model`` → ``alias__model`` for every (alias, model) pair
-    actually attached — quote-aware, whole-word both sides, so a table
+    actually attached — in code, whole-word both sides, so a table
     alias that happens to share the name is untouched unless it
     dereferences a real attached model."""
-    out: list[str] = []
-    quote: str | None = None
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            tok = sql[i:j]
-            models = attached.get(tok.lower())
-            prev = next((c for c in reversed(out) if not c.isspace()), "")
-            if models is not None and prev != "." and j < n and sql[j] == ".":
-                k = j + 1
-                while k < n and (sql[k].isalnum() or sql[k] == "_"):
-                    k += 1
-                member = sql[j + 1: k]
-                if member.lower() in models:
-                    out.append(f"{tok}__{member}")
-                    i = k
-                    continue
-            out.append(tok)
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def sub(m: re.Match) -> str:
+        models = attached.get(m.group(1).lower())
+        member = m.group(2)
+        if (
+            models is None
+            or member is None
+            or member.lower() not in models
+            or m.string[: m.start()].rstrip().endswith(".")
+        ):
+            return m.group()
+        return f"{m.group(1)}__{member}"
+
+    return lexer.sub(_QUALIFIED_WORD, sub, sql)
+
+
+#: a word of code, with the member it qualifies if a ``.`` follows
+_QUALIFIED_WORD = re.compile(f"({lexer.WORD.pattern})" + r"(?:\.(\w*))?")
 
 
 _USE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
@@ -846,43 +803,21 @@ def _rewrite_use_fallback(sql: str, alias: str, models: set, spark) -> str:
     search path puts the USEd database first; this engine's session
     namespace is also its 'main', so true precedence is undecidable),
     and positions other than the four keywords stay unresolved-loud."""
-    out: list[str] = []
-    quote: str | None = None
     prev_tok = ""
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            tok = sql[i:j]
-            if (
-                prev_tok in ("from", "join", "into", "update")
-                and tok.lower() in models
-                and (j >= n or sql[j] != ".")
-                and not spark.catalog.tableExists(tok)
-            ):
-                out.append(f"{alias}__{tok}")
-            else:
-                out.append(tok)
-            prev_tok = tok.lower()
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def sub(m: re.Match) -> str:
+        nonlocal prev_tok
+        tok = m.group()
+        hit = (
+            prev_tok in ("from", "join", "into", "update")
+            and tok.lower() in models
+            and m.string[m.end() : m.end() + 1] != "."
+            and not spark.catalog.tableExists(tok)
+        )
+        prev_tok = tok.lower()
+        return f"{alias}__{tok}" if hit else tok
+
+    return lexer.sub(lexer.WORD, sub, sql)
 
 
 def _parse_create_macro(sql: str):
@@ -891,26 +826,13 @@ def _parse_create_macro(sql: str):
         return None
     is_temp = bool(m.group(1))
     name = m.group(2)
-    # matching close paren of the parameter list (quote-aware)
-    depth, i, quote = 1, m.end(), None
-    n = len(sql)
-    while i < n and depth:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    # matching close paren of the parameter list
+    i = lexer.group_end(sql, m.end() - 1)
+    if i is None:
         return None
     raw_params = sql[m.end(): i - 1].strip()
     params: list[tuple[str, str | None]] = []
-    for p in _split_top_level_commas(raw_params) if raw_params else []:
+    for p in lexer.split_top_level(raw_params) if raw_params else []:
         p = p.strip()
         dm = re.match(r"(?is)^([A-Za-z_]\w*)\s*:=\s*(.+)$", p)
         if dm:
@@ -926,44 +848,20 @@ def _parse_create_macro(sql: str):
 
 
 def _replace_params(body: str, values: dict[str, str]) -> str:
-    """Whole-word, quote-aware SIMULTANEOUS substitution of every
+    """Whole-word SIMULTANEOUS substitution, in code, of every
     parameter in ``values`` (lowercased name → argument text) with its
     parenthesized argument — one pass, so an argument that itself names
     another parameter is never re-substituted (classic capture), and
     qualified references (``t.param`` is a column of t) are skipped,
     exactly as DuckDB binds macro bodies."""
-    out: list[str] = []
-    quote: str | None = None
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            j = i
-            while j < n and (body[j].isalnum() or body[j] == "_"):
-                j += 1
-            tok = body[i:j]
-            prev = out[-1] if out else ""
-            arg = values.get(tok.lower())
-            if arg is not None and prev != ".":
-                out.append(f"({arg})")
-            else:
-                out.append(tok)
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def sub(m: re.Match) -> str:
+        arg = values.get(m.group().lower())
+        if arg is None or m.string[m.start() - 1 : m.start()] == ".":
+            return m.group()
+        return f"({arg})"
+
+    return lexer.sub(lexer.WORD, sub, body)
 
 
 def _bind_macro_args(
@@ -1014,39 +912,23 @@ def _expand_macros(sql: str, macros: dict) -> str:
     while guard < 50:
         guard += 1
         replaced = False
+        masked = lexer.mask(sql)
         for name, (params, body, *_rest) in macros.items():
             pat = re.compile(rf"(?is)\b{re.escape(name)}\s*\(")
             pos = 0
             while True:
-                m = pat.search(sql, pos)
+                # call sites in code only, and not qualified (x.name())
+                m = pat.search(masked, pos)
                 if not m:
                     break
-                # reject call sites inside quoted regions (span-exact,
-                # not quote-parity — '' escapes would fool parity) or
-                # qualified (x.name())
-                if any(
-                    s0 <= m.start() <= e0 for s0, e0 in _quoted_spans(sql)
-                ) or sql[: m.start()].rstrip().endswith("."):
+                if masked[: m.start()].rstrip().endswith("."):
                     pos = m.end()
                     continue
-                depth, i, quote = 1, m.end(), None
-                n = len(sql)
-                while i < n and depth:
-                    ch = sql[i]
-                    if quote:
-                        if ch == quote:
-                            quote = None
-                    elif ch in ("'", '"', "`"):
-                        quote = ch
-                    elif ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                    i += 1
-                if depth:
+                i = lexer.group_end(sql, m.end() - 1)
+                if i is None:
                     break
                 raw_args = sql[m.end(): i - 1].strip()
-                args = _split_top_level_commas(raw_args) if raw_args else []
+                args = lexer.split_top_level(raw_args) if raw_args else []
                 values = _bind_macro_args(params, args)
                 if values is None:
                     pos = m.end()
@@ -1097,7 +979,7 @@ def _rewrite_asof_join(sql: str) -> str:
     left untouched → Spark's parser rejects ``ASOF`` loudly. This is
     the compatibility path; ``operators.asof_join`` (union +
     carry-forward, one shuffle) is the 100 TB path."""
-    idx, _ = _scan_top_level(sql, ("asof",))
+    idx, _ = lexer.find_top_level(sql, ("asof",))
     if idx < 0:
         return sql
     m = re.match(
@@ -1111,11 +993,11 @@ def _rewrite_asof_join(sql: str) -> str:
     alias = alias or table
     conds_start = idx + m.end()
     rest = sql[conds_start:]
-    stop, _ = _scan_top_level(rest, _CLAUSE_AFTER_ON + _JOIN_WORDS)
+    stop, _ = lexer.find_top_level(rest, _CLAUSE_AFTER_ON + _JOIN_WORDS)
     conds_text = rest[:stop] if stop >= 0 else rest
     tail = rest[stop:] if stop >= 0 else ""
     if stop >= 0:
-        nxt, kw = _scan_top_level(tail, _JOIN_WORDS)
+        nxt, kw = lexer.find_top_level(tail, _JOIN_WORDS)
         if nxt == 0:
             return sql  # a second join follows — out of conservative reach
     conds = [c.strip() for c in re.split(r"(?is)\bAND\b", conds_text) if c.strip()]
@@ -1158,7 +1040,7 @@ def _rewrite_read_file_lists(sql: str, spark) -> str:
     def sub(m: re.Match) -> str:
         fmt = m.group(1).lower()
         paths = []
-        for item in _split_top_level_commas(m.group(2)):
+        for item in lexer.split_top_level(m.group(2)):
             lm = _lit_match(item)
             if not lm:
                 return m.group(0)  # dynamic/exotic entry: leave, loud
@@ -1192,10 +1074,7 @@ def _reject_positional_join(sql: str) -> None:
     order the source never promised, or pair rows nondeterministically
     across recomputations. Name the construct and the honest
     alternatives instead of a generic parse failure."""
-    spans = _quoted_spans(sql) + _comment_spans(sql)
-    for m in _POSITIONAL_JOIN_SITE.finditer(sql):
-        if any(s <= m.start() <= e for s, e in spans):
-            continue
+    if _POSITIONAL_JOIN_SITE.search(lexer.mask(sql)):
         from arnab_spark.errors import ArnabError
 
         raise ArnabError(
@@ -1221,13 +1100,10 @@ def _reject_sequences(sql: str) -> None:
     Rather than let Spark throw a generic parse error, name the
     construct and the alternatives so a ported model fails with a
     decision, not a mystery."""
-    # quote- AND comment-aware (round-10 advice: a comment merely
-    # MENTIONING 'nextval(' must not fail the statement), mirroring the
-    # power-operator pass
-    spans = _quoted_spans(sql) + _comment_spans(sql)
-    for m in _SEQUENCE_SITE.finditer(sql):
-        if any(s <= m.start() <= e for s, e in spans):
-            continue
+    # code only (round-10 advice: a comment merely MENTIONING
+    # 'nextval(' must not fail the statement)
+    m = _SEQUENCE_SITE.search(lexer.mask(sql))
+    if m:
         construct = (m.group(1) or m.group(2) or m.group(3)).strip()
         from arnab_spark.errors import ArnabError
 

@@ -6,9 +6,9 @@ flags, and the live-session schema/expression-type probes the deep
 shapes need.
 
 INTERNAL — import these names via :mod:`arnab_spark.dialect` (see the
-note in ``_dialect_statements.py``); the shared scan/mask helpers and
-the clause rewriters this block composes with bind when the core
-re-export imports this module, at which point they are all defined.
+note in ``_dialect_statements.py``); the clause rewriters this
+block composes with bind when the core re-export imports this module,
+at which point they are all defined.
 """
 
 from __future__ import annotations
@@ -16,20 +16,17 @@ from __future__ import annotations
 import re
 from weakref import WeakKeyDictionary
 
+from arnab_spark import lexer
 from arnab_spark.dialect import (
     _BARE_PATH,
     _FORMAT_MAP,
     _READ_FUNC,
-    _balanced_outside_quotes,
     _is_set_op_at,
-    _quoted_spans,
     _resolve_path,
     _rewrite_distinct_on,
     _rewrite_qualify,
     _rewrite_string_split,
     _rewrite_using_sample,
-    _scan_top_level,
-    _split_top_level_commas,
 )
 from arnab_spark._dialect_statements import _rewrite_asof_join
 
@@ -38,19 +35,15 @@ _UNNEST_CALL = re.compile(r"(?is)\bunnest\s*\(")
 
 def _rewrite_single_unnest(sql: str) -> str:
     """``unnest(x)`` → ``explode(x)`` — but ONLY when the statement
-    contains exactly one unnest call outside quotes. Multiple unnests
+    contains exactly one unnest call in code. Multiple unnests
     in one select ZIP positionally in DuckDB while multiple explodes
     CARTESIAN-product in Spark 4 (verified both) — a silent-wrongness
     trap, so multi-unnest select lists go through
     :func:`_rewrite_multi_unnest` (explode-of-arrays_zip) and anything
     that rewrite can't prove whole-item is left for Spark to reject as
     an unresolved routine."""
-    spans = _quoted_spans(sql)
-    sites = [
-        m
-        for m in _UNNEST_CALL.finditer(sql)
-        if not any(s <= m.start() <= e for s, e in spans)
-    ]
+    masked = lexer.mask(sql)
+    sites = list(_UNNEST_CALL.finditer(masked))
     if len(sites) != 1:
         return sql
     # Round 8: a USER-written window in the SAME select scope as the
@@ -65,25 +58,9 @@ def _rewrite_single_unnest(sql: str) -> str:
     # own DISTINCT ON marker (`… AS __arnab_rn`), whose post-explode
     # evaluation IS the DISTINCT ON semantics (probed end-to-end).
     m = sites[0]
-    overs = [
-        om
-        for om in re.finditer(r"(?is)\bover\s*\(", sql)
-        if not any(s <= om.start() <= e for s, e in spans)
-    ]
+    overs = list(re.finditer(r"(?is)\bover\s*\(", masked))
     if overs:
-        intervals: list[tuple[int, int]] = []
-        stack: list[int] = []
-        quote = None
-        for i, ch in enumerate(sql):
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"', "`"):
-                quote = ch
-            elif ch == "(":
-                stack.append(i)
-            elif ch == ")" and stack:
-                intervals.append((stack.pop(), i))
+        intervals = lexer.paren_groups(sql)
 
         def innermost(p: int) -> tuple[int, int] | None:
             best = None
@@ -125,18 +102,14 @@ def _single_relation_alias(tail: str) -> str | None:
     if m is None:
         return None
     rel = m.group(1)
-    w_idx, _ = _scan_top_level(rel, ("where",))
+    w_idx, _ = lexer.find_top_level(rel, ("where",))
     if w_idx >= 0:
         rel = rel[:w_idx]
     rel = rel.strip()
-    if not rel or not _balanced_outside_quotes(rel):
+    if not rel or not lexer.balanced(rel):
         return None
     # joins / comma lists / subqueries disqualify
-    spans = _quoted_spans(rel)
-    if any(
-        not any(s <= m2.start() <= e for s, e in spans)
-        for m2 in re.finditer(r"(?is)\b(?:join|lateral)\b|,|\(\s*select\b", rel)
-    ):
+    if re.search(r"(?is)\b(?:join|lateral)\b|,|\(\s*select\b", lexer.mask(rel)):
         return None
     am = re.match(
         rf"(?is)^(?P<ref>{_IDENT}(?:\s*\.\s*{_IDENT})*(?:\s*\([^()]*\))?)"
@@ -217,19 +190,14 @@ def _rewrite_multi_unnest(sql: str) -> str:
     subquery FROMs, alias-less table functions, and ``* REPLACE``
     stay aborted — coverage is unprovable there, so the statement is
     left whole for Spark to reject loudly."""
-    spans = _quoted_spans(sql)
-    sites = [
-        m
-        for m in _UNNEST_CALL.finditer(sql)
-        if not any(s <= m.start() <= e for s, e in spans)
-    ]
+    sites = list(_UNNEST_CALL.finditer(lexer.mask(sql)))
     if not sites:
         return sql
     if re.match(r"(?is)^\s*WITH\b", sql):
         # CTE prefix: the main SELECT is the first top-level one (CTE
         # bodies sit inside parens); CTEs stay visible inside the
         # rewrite's subqueries, so rewrite the main body and re-prefix.
-        sel_idx, _ = _scan_top_level(sql, ("select",))
+        sel_idx, _ = lexer.find_top_level(sql, ("select",))
         if sel_idx <= 0:
             return sql
         body = _rewrite_multi_unnest(sql[sel_idx:])
@@ -245,7 +213,7 @@ def _rewrite_multi_unnest(sql: str) -> str:
     # what SELECT DISTINCT over the zip subquery computes.
     distinct_kw = "DISTINCT " if head.group(1) else ""
     list_start = head.end()
-    from_idx, _ = _scan_top_level(sql, ("from",), list_start)
+    from_idx, _ = lexer.find_top_level(sql, ("from",), list_start)
     if from_idx < 0:
         select_list, tail = sql[list_start:], ""
     else:
@@ -254,7 +222,7 @@ def _rewrite_multi_unnest(sql: str) -> str:
     # select list directly in FROM-less statements); blockers abort
     suffix = ""
     seg_for_split = tail if tail else select_list
-    b_idx, b_word = _scan_top_level(
+    b_idx, b_word = lexer.find_top_level(
         seg_for_split, _UNNEST_TAIL_BLOCKERS + ("order", "limit", "offset"),
         1 if tail else 0,
     )
@@ -288,14 +256,10 @@ def _rewrite_multi_unnest(sql: str) -> str:
     # (Bare aggregates still pre-collapse in DuckDB, but the rewrite
     # turns those into a loud Spark grouping error, never a silent
     # wrong zip.)
-    items = _split_top_level_commas(select_list)
+    items = lexer.split_top_level(select_list)
 
     def _item_has_over(item: str) -> bool:
-        isp = _quoted_spans(item)
-        return any(
-            not any(s <= m.start() <= e for s, e in isp)
-            for m in re.finditer(r"(?is)\bover\s*\(", item)
-        )
+        return re.search(r"(?is)\bover\s*\(", lexer.mask(item)) is not None
 
     # aliases of every unnest-bearing item, for the reference check
     unnest_item_aliases: list[str] = []
@@ -326,16 +290,12 @@ def _rewrite_multi_unnest(sql: str) -> str:
         ``:=`` options, a sub-select inside the item (substitution
         would hoist the call out of its scope), or an aggregate
         wrapping the call."""
-        isp = _quoted_spans(item)
-
-        def _outside(m):
-            return not any(s <= m.start() <= e for s, e in isp)
-
-        if any(_outside(m) for m in re.finditer(r"(?is)\(\s*select\b", item)):
+        masked = lexer.mask(item)
+        if re.search(r"(?is)\(\s*select\b", masked):
             return None
         if _item_has_over(item):
             return None  # window OF an unnest-bearing expression
-        in_sites = [m for m in _UNNEST_CALL.finditer(item) if _outside(m)]
+        in_sites = list(_UNNEST_CALL.finditer(masked))
         parsed_sites: list[tuple[int, int, str]] = []
         for m in in_sites:
             parsed = _call_args(item, m.end() - 1)
@@ -360,18 +320,14 @@ def _rewrite_multi_unnest(sql: str) -> str:
             r"approx_\w+|percentile\w*|quantile\w*)\s*\(",
             item,
         ):
-            outer = [
-                m
-                for m in re.finditer(
-                    r"(?is)\b(?:sum|min|max|avg|count|stddev\w*|var\w*|"
-                    r"corr|covar\w*|median|mode|string_agg|array_agg|"
-                    r"list|first|last|arg_(?:min|max)|bit_\w+|"
-                    r"bool_(?:and|or)|product|approx_\w+|percentile\w*|"
-                    r"quantile\w*)\s*\(",
-                    item,
-                )
-                if _outside(m)
-            ]
+            outer = re.finditer(
+                r"(?is)\b(?:sum|min|max|avg|count|stddev\w*|var\w*|"
+                r"corr|covar\w*|median|mode|string_agg|array_agg|"
+                r"list|first|last|arg_(?:min|max)|bit_\w+|"
+                r"bool_(?:and|or)|product|approx_\w+|percentile\w*|"
+                r"quantile\w*)\s*\(",
+                masked,
+            )
             for am in outer:
                 ap = _call_args(item, am.end() - 1)
                 if ap is None:
@@ -459,11 +415,7 @@ def _rewrite_multi_unnest(sql: str) -> str:
                 )
                 out_items.append(stripped)
                 continue
-            isp = _quoted_spans(stripped)
-            if any(
-                not any(s <= m.start() <= e for s, e in isp)
-                for m in re.finditer(r"(?s)\.\s*\*(?!\w)", stripped)
-            ):
+            if re.search(r"(?s)\.\s*\*(?!\w)", lexer.mask(stripped)):
                 # qualified star buried in a modifier we don't model
                 # (t.* REPLACE …) — never pass through: with the outer
                 # re-alias it would silently leak helpers (quoted '.*'
@@ -556,14 +508,10 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
     rewrites can't prove stay verbatim: any remaining ``unnest`` is an
     unresolved routine for Spark, so unprovable shapes fail loud,
     never half-rewritten silently."""
-    spans = _quoted_spans(sql)
-    if not any(
-        not any(s <= m.start() <= e for s, e in spans)
-        for m in _UNNEST_CALL.finditer(sql)
-    ):
+    if not _UNNEST_CALL.search(lexer.mask(sql)):
         return sql
     if re.match(r"(?is)^\s*WITH\b", sql):
-        sel_idx, _ = _scan_top_level(sql, ("select",))
+        sel_idx, _ = lexer.find_top_level(sql, ("select",))
         if sel_idx <= 0:
             return sql
         body = _rewrite_unnest_set_ops(sql[sel_idx:])
@@ -571,7 +519,7 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
     ops: list[tuple[int, int]] = []
     pos = 0
     while True:
-        idx, _word = _scan_top_level(
+        idx, _word = lexer.find_top_level(
             sql, ("union", "intersect", "except"), pos
         )
         if idx < 0:
@@ -599,7 +547,7 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
         last = _e0
     tail_arm = sql[last:]
     suffix = ""
-    b_idx, _bw = _scan_top_level(tail_arm, ("order", "limit", "offset"))
+    b_idx, _bw = lexer.find_top_level(tail_arm, ("order", "limit", "offset"))
     if b_idx >= 0:
         suffix = tail_arm[b_idx:]
         tail_arm = tail_arm[:b_idx]
@@ -624,24 +572,11 @@ def _call_args(sql: str, open_paren: int) -> tuple[list[str], int] | None:
     """Top-level argument list of the call whose ``(`` sits at
     ``open_paren``; returns (args, index_after_close) or None when the
     parens never balance."""
-    depth, i, quote = 1, open_paren + 1, None
-    n = len(sql)
-    while i < n and depth:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = lexer.group_end(sql, open_paren)
+    if i is None:
         return None
     raw = sql[open_paren + 1: i - 1].strip()
-    return ([a.strip() for a in _split_top_level_commas(raw)] if raw else []), i
+    return ([a.strip() for a in lexer.split_top_level(raw)] if raw else []), i
 
 
 # ---------------------------------------------------------------------

@@ -30,7 +30,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
+
+from arnab_spark import lexer
 
 CATALOG_FILE = "_arnab_catalog.json"
 #: held around every read-modify-write of the catalog and macro files:
@@ -133,43 +136,17 @@ def _attach_macros(spark, db_path: str) -> list[str]:
 
 def _replace_model_ref(sql: str, name: str, repl: str) -> str:
     """Replace whole-word, unqualified, non-call references to model
-    ``name`` in ``sql`` with ``repl`` — quote-aware, skipping ``x.name``
+    ``name`` in the code of ``sql`` with ``repl``, skipping ``x.name``
     member access and ``name(...)`` function calls."""
-    out: list[str] = []
-    quote: str | None = None
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            tok = sql[i:j]
-            prev = next((c for c in reversed(out) if not c.isspace()), "")
-            k = j
-            while k < n and sql[k].isspace():
-                k += 1
-            nxt = sql[k] if k < n else ""
-            if tok.lower() == name.lower() and prev != "." and nxt != "(":
-                out.append(repl)
-            else:
-                out.append(tok)
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def sub(m: re.Match) -> str:
+        if m.group().lower() != name.lower():
+            return m.group()
+        before = m.string[: m.start()].rstrip()
+        after = m.string[m.end() :].lstrip()
+        return m.group() if before.endswith(".") or after.startswith("(") else repl
+
+    return lexer.sub(lexer.WORD, sub, sql)
 
 
 def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:

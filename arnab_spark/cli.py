@@ -93,7 +93,9 @@ def cmd_run_file(args) -> int:
         try:
             with open(path, encoding="utf-8") as f:
                 src = f.read()
-            for stmt in Node.split_statements(src):
+            # comments go first, as on the model path: a ';' or an
+            # apostrophe inside one must not split or merge statements
+            for stmt in Node.split_statements(Node.strip_comments(src)):
                 stmt = transpile_statement(stmt, spark)
                 if not stmt.strip():
                     continue  # consumed by the shim (e.g. CREATE MACRO)

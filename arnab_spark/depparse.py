@@ -13,15 +13,27 @@ the same contract: over-collect candidate relation identifiers after
 FROM/JOIN keywords (including comma-joined FROM lists and identifiers
 inside subqueries/CTE bodies, which are found by their own inner FROMs),
 plus the relation a DuckDB ``DESCRIBE``/``SUMMARIZE`` inspects, and rely
-on the known-models intersection. The reference's two unit
-tests (node.rs:280-294) pass against this extractor.
+on the known-models intersection. The scanner reads the
+``lexer.mask`` of the SQL, so keywords and names inside string
+literals, quoted identifiers and comments are never seen; a quoted
+identifier in relation position (``FROM "my tbl"``) is read back from
+the SQL itself. The reference's two unit tests (node.rs:280-294) pass
+against this extractor.
 """
 
 from __future__ import annotations
 
 import re
 
-_IDENT_RE = re.compile(r'[A-Za-z_][A-Za-z0-9_.$]*|"[^"]+"')
+from arnab_spark import lexer
+
+_QUOTED = r'"[^"]+"|`[^`]+`'
+#: a relation name on the mask: a qualifier chain whose parts are bare
+#: words or quoted identifiers (``main."my tbl"``)
+_IDENT_RE = re.compile(
+    rf"(?:[A-Za-z_][A-Za-z0-9_$]*|{_QUOTED})(?:\.(?:[A-Za-z0-9_$]+|{_QUOTED}))*"
+)
+_PART_RE = re.compile(rf"[A-Za-z0-9_$]+|{_QUOTED}")
 _FROM_OR_JOIN = re.compile(r"\b(from|join)\b", re.IGNORECASE)
 #: DuckDB's inspection statements name a relation too, as a statement
 #: (``SUMMARIZE t``) or as a table expression (``FROM (DESCRIBE t)``).
@@ -63,40 +75,15 @@ _CLAUSE_KEYWORDS = {
 }
 
 
-def _strip_strings(sql: str) -> str:
-    """Blank out single-quoted string literals (offset-preserving) so
-    identifiers inside them are ignored."""
-    out = list(sql)
-    i, n = 0, len(sql)
-    in_str = False
-    while i < n:
-        if in_str:
-            if sql[i] == "'" and i + 1 < n and sql[i + 1] == "'":
-                out[i] = out[i + 1] = " "
-                i += 2
-                continue
-            if sql[i] == "'":
-                in_str = False
-            else:
-                out[i] = " "
-        elif sql[i] == "'":
-            in_str = True
-        i += 1
-    return "".join(out)
-
-
-def _skip_parens(s: str, i: int) -> int:
-    """Given s[i] == '(', return index just past the matching ')'."""
-    depth = 0
-    while i < len(s):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return i
+def _name(sql: str, m: re.Match) -> str:
+    """The identifier ``m`` matched on the mask, read from ``sql``
+    with each quoted part unquoted."""
+    parts = []
+    for p in _PART_RE.finditer(m.string, m.start(), m.end()):
+        text = sql[p.start() : p.end()]
+        q = text[0]
+        parts.append(text[1:-1].replace(q + q, q) if q in "\"`" else text)
+    return ".".join(parts)
 
 
 # Words that cannot BE a relation name in relation position (right after
@@ -107,11 +94,14 @@ def _skip_parens(s: str, i: int) -> int:
 _NOT_A_RELATION = {"select", "lateral", "values", "unnest", "with"}
 
 
-def _read_relation_item(s: str, i: int, refs: set[str], allow_comma: bool) -> int:
-    """Parse one from-list item at s[i:]: either a parenthesized subquery
-    (skipped — its inner FROMs are scanned separately) or a relation
-    identifier (collected). Follows comma-separated continuations when
-    ``allow_comma`` (FROM lists, reference: node.rs:286-294 test)."""
+def _read_relation_item(
+    sql: str, s: str, i: int, refs: set[str], allow_comma: bool
+) -> int:
+    """Parse one from-list item at s[i:], ``s`` being ``sql``'s mask:
+    either a parenthesized subquery (skipped — its inner FROMs are
+    scanned separately) or a relation identifier (collected). Follows
+    comma-separated continuations when ``allow_comma`` (FROM lists,
+    reference: node.rs:286-294 test)."""
     n = len(s)
     while True:
         while i < n and s[i].isspace():
@@ -119,12 +109,12 @@ def _read_relation_item(s: str, i: int, refs: set[str], allow_comma: bool) -> in
         if i >= n:
             return i
         if s[i] == "(":
-            i = _skip_parens(s, i)
+            i = lexer.group_end(sql, i) or n
         else:
             m = _IDENT_RE.match(s, i)
             if not m:
                 return i
-            name = m.group(0).strip('"')
+            name = _name(sql, m)
             if name.lower() in _NOT_A_RELATION:
                 return i
             refs.add(name)
@@ -138,7 +128,7 @@ def _read_relation_item(s: str, i: int, refs: set[str], allow_comma: bool) -> in
             if not m:
                 i = save
                 break
-            word = m.group(0).strip('"').lower()
+            word = _name(sql, m).lower()
             if word == "as":
                 i = m.end()
                 continue
@@ -162,11 +152,11 @@ def get_sql_references(sql: str) -> set[str]:
     """All candidate relation names referenced by ``sql``
     (reference: node.rs:211-232 ``get_sql_references``). Over-approximates
     by design; callers intersect with known model ids (node.rs:94-98)."""
-    cleaned = _strip_strings(sql)
+    masked = lexer.mask(sql)
     refs: set[str] = set()
-    for m in _FROM_OR_JOIN.finditer(cleaned):
+    for m in _FROM_OR_JOIN.finditer(masked):
         allow_comma = m.group(1).lower() == "from"
-        _read_relation_item(cleaned, m.end(), refs, allow_comma)
-    for m in _INSPECT.finditer(cleaned):
-        _read_relation_item(cleaned, m.end(), refs, False)
+        _read_relation_item(sql, masked, m.end(), refs, allow_comma)
+    for m in _INSPECT.finditer(masked):
+        _read_relation_item(sql, masked, m.end(), refs, False)
     return refs

@@ -61,22 +61,17 @@ from __future__ import annotations
 import re
 import threading
 
+from arnab_spark import lexer
+
 # DuckDB allows zero-argument count() (used by the reference's example
 # model, reference: examples/basic/orders_per_product.sql:2).
 _COUNT_ZERO_ARG = re.compile(r"\bcount\s*\(\s*\)", re.IGNORECASE)
 
 
 def _rewrite_count_zero_arg(sql: str) -> str:
-    """``count()`` → ``count(*)`` outside string literals and quoted
-    identifiers: ``'count()'`` is a value and ``"count()"`` a name."""
-    spans = _quoted_spans(sql)
-
-    def _sub(m: re.Match) -> str:
-        if any(s <= m.start() <= e for s, e in spans):
-            return m.group(0)
-        return "count(*)"
-
-    return _COUNT_ZERO_ARG.sub(_sub, sql)
+    """``count()`` → ``count(*)`` in code: ``'count()'`` is a value and
+    ``"count()"`` a name."""
+    return lexer.sub(_COUNT_ZERO_ARG, lambda m: "count(*)", sql)
 
 
 # read_parquet('path') / read_csv_auto('path') / read_json_auto('path')
@@ -140,41 +135,6 @@ _BARE_PATH = re.compile(
 )
 
 
-def _scan_top_level(sql: str, words: tuple[str, ...], start: int = 0) -> tuple[int, str | None]:
-    """Find the first occurrence of any keyword in ``words`` at paren
-    depth 0 and outside quoted strings/identifiers. Returns (index,
-    matched word) or (-1, None). Case-insensitive, whole-word."""
-    lowered = sql.lower()
-    depth = 0
-    quote: str | None = None
-    i = start
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            token = lowered[i:j]
-            if token in words:
-                return i, token
-            i = j
-            continue
-        i += 1
-    return -1, None
-
-
 def _rewrite_qualify(sql: str) -> str:
     """Rewrite a top-level ``QUALIFY <pred>`` into subquery + filter:
 
@@ -188,12 +148,12 @@ def _rewrite_qualify(sql: str) -> str:
     out of reach without a full parser — that surfaces as a clear
     Spark analysis error, never a silent wrong result. QUALIFY nested
     inside subqueries is likewise left to Spark's parser to reject."""
-    idx, _ = _scan_top_level(sql, ("qualify",))
+    idx, _ = lexer.find_top_level(sql, ("qualify",))
     if idx < 0:
         return sql
     head = sql[:idx].rstrip()
     rest = sql[idx + len("qualify"):]
-    tail_idx, _ = _scan_top_level(rest, ("order", "limit", "offset"))
+    tail_idx, _ = lexer.find_top_level(rest, ("order", "limit", "offset"))
     pred = rest[:tail_idx] if tail_idx >= 0 else rest
     tail = rest[tail_idx:] if tail_idx >= 0 else ""
     return (
@@ -203,37 +163,14 @@ def _rewrite_qualify(sql: str) -> str:
     )
 
 
-def _split_top_level_commas(text: str) -> list[str]:
-    """Split on commas at paren depth 0, outside quoted strings."""
-    parts: list[str] = []
-    depth = 0
-    quote: str | None = None
-    cur = []
-    for ch in text:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-            continue
-        cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
 #: tokens after which a ``[`` opens a DuckDB LIST LITERAL rather than a
 #: subscript: operators/punctuation, or one of these SQL keywords. After
 #: an identifier, a string literal, ``)`` or ``]`` it is a subscript and
 #: must be left alone (Spark shares that syntax).
 _BEFORE_LIST_LITERAL_CHARS = frozenset("([,=<>+-*/%|&:{")
+#: a significant token of the mask: a run of word characters or one
+#: other non-space character
+_SIGNIFICANT = re.compile(r"\w+|\S")
 _BEFORE_LIST_LITERAL_WORDS = frozenset(
     "select where and or not in when then else by distinct all having "
     "case between is like ilike union intersect except on values return "
@@ -254,27 +191,20 @@ def _rewrite_list_literals(sql: str) -> str:
     identifiers are skipped here), EXCEPT after a ``.`` qualifier:
     ``x.array[2]`` is member access + subscript in DuckDB and is left
     for the subscript pass."""
+    masked = lexer.mask(sql)
     out: list[str] = []
     stack: list[str] = []  # expected closer for each open ( or [
-    quote: str | None = None
     prev = ""  # last significant token ("" = statement start)
     prev2 = ""  # significant token before `prev`
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            out.append(ch)
-            prev2, prev = prev, "'"  # a string can be subscripted: 'abc'[1]
-            i += 1
-            continue
-        if ch == "[":
+    last = 0
+    # a literal's or identifier's delimiters are tokens of the mask, so
+    # `'abc'[1]` reads as a subscript; comments are blank there
+    for m in _SIGNIFICANT.finditer(masked):
+        if m.start() > last:
+            out.append(sql[last : m.start()])
+        last = m.end()
+        tok = m.group()
+        if tok == "[":
             if prev.lower() == "array" and prev2 != ".":
                 # ARRAY[...] / ARRAY [...] constructor: keep the word
                 # (dropping any whitespace before the bracket), swap
@@ -293,40 +223,16 @@ def _rewrite_list_literals(sql: str) -> str:
             else:
                 out.append("[")
                 stack.append("]")
-            prev2, prev = prev, "["
-            i += 1
-            continue
-        if ch == "]":
+        elif tok == "]":
             out.append(stack.pop() if stack else "]")
-            prev2, prev = prev, "]"
-            i += 1
-            continue
-        if ch == "(":
-            out.append(ch)
-            stack.append(")")
-            prev2, prev = prev, "("
-            i += 1
-            continue
-        if ch == ")":
-            out.append(ch)
-            if stack:
-                stack.pop()
-            prev2, prev = prev, ")"
-            i += 1
-            continue
-        if ch.isalnum() or ch == "_":
-            j = i
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                j += 1
-            tok = sql[i:j]
+        else:
             out.append(tok)
-            prev2, prev = prev, tok
-            i = j
-            continue
-        if not ch.isspace():
-            prev2, prev = prev, ch
-        out.append(ch)
-        i += 1
+            if tok == "(":
+                stack.append(")")
+            elif tok == ")" and stack:
+                stack.pop()
+        prev2, prev = prev, tok
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -373,17 +279,12 @@ _LIST_FN = re.compile(
 
 
 def _rewrite_list_functions(sql: str) -> str:
-    # Quote-aware: function-looking text inside string literals or
-    # quoted identifiers must pass through untouched (common words like
+    # Code only: function-looking text inside string literals or quoted
+    # identifiers must pass through untouched (common words like
     # len/left/week appear in data all the time).
-    spans = _quoted_spans(sql)
-
-    def _sub(m: re.Match) -> str:
-        if any(s <= m.start() <= e for s, e in spans):
-            return m.group(0)
-        return _LIST_FN_MAP[m.group(1).lower()] + m.group(2)
-
-    return _LIST_FN.sub(_sub, sql)
+    return lexer.sub(
+        _LIST_FN, lambda m: _LIST_FN_MAP[m.group(1).lower()] + m.group(2), sql
+    )
 
 
 # ---------------------------------------------------------------------
@@ -424,14 +325,13 @@ _SERIES_SKIP_WORDS = frozenset(
 )
 
 
-def _series_is_table_position(sql: str, start: int, spans) -> bool:
-    """True when the call at ``start`` sits in relation position."""
+def _series_is_table_position(sql: str, start: int) -> bool:
+    """True when the call at ``start`` of the mask ``sql`` sits in
+    relation position. A literal or identifier directly before it ends
+    the walk on its delimiter, as an operator does: scalar-ish."""
     i = start - 1
     depth = 0
     while i >= 0:
-        hit = next((p for p in spans if p[0] <= i <= p[1]), None)
-        if hit:
-            return False  # string literal directly before: scalar-ish
         ch = sql[i]
         if ch.isspace():
             i -= 1
@@ -535,10 +435,7 @@ def _rewrite_series_functions(sql: str) -> str:
     One sweep back-to-front — the emitted text contains an inner
     ``range(`` that must not be reprocessed."""
     sites = []
-    spans = _quoted_spans(sql)
-    for m in _SERIES_CALL.finditer(sql):
-        if any(s <= m.start() <= e for s, e in spans):
-            continue
+    for m in _SERIES_CALL.finditer(lexer.mask(sql)):
         got = _call_args(sql, m.end() - 1)
         if got is None:
             continue
@@ -546,7 +443,7 @@ def _rewrite_series_functions(sql: str) -> str:
         sites.append((m.start(), end, m.group(1).lower(), args))
     out = sql
     for start, end, name, args in sorted(sites, reverse=True):
-        table_pos = _series_is_table_position(out, start, _quoted_spans(out))
+        table_pos = _series_is_table_position(lexer.mask(out), start)
         if name == "range" and table_pos:
             # values identical on Spark's range TVF; only rename the col
             inner = out[start:end]
@@ -681,7 +578,7 @@ def _columns_match(raw: str, cols: list[str]) -> list[str] | None:
     if em:
         drop = {
             c.strip().strip('"').lower()
-            for c in _split_top_level_commas(em.group(1))
+            for c in lexer.split_top_level(em.group(1))
         }
         missing = drop - {c.lower() for c in cols}
         if missing:
@@ -714,7 +611,7 @@ def _strip_trailing_alias(item: str) -> tuple[str, str | None]:
     top-level ``AS <ident | "quoted">``; (item, None) otherwise."""
     pos, last = 0, -1
     while True:
-        idx, _w = _scan_top_level(item, ("as",), pos)
+        idx, _w = lexer.find_top_level(item, ("as",), pos)
         if idx < 0:
             break
         last = idx
@@ -769,12 +666,7 @@ def _parse_columns_sites(
     columns. Returns (parsed sites, raw argument, matched columns) or
     None when the shape has no proven mapping. Raises the Binder-parity
     errors (zero match, multi-site lambda) exactly like DuckDB."""
-    ispans = _quoted_spans(text)
-    sites = [
-        m
-        for m in _COLUMNS_CALL.finditer(text)
-        if not any(s <= m.start() <= e for s, e in ispans)
-    ]
+    sites = list(_COLUMNS_CALL.finditer(lexer.mask(text)))
     if not sites:
         return None
     if re.search(r"(?is)\(\s*select\b", text):
@@ -882,22 +774,8 @@ def _rewrite_columns_in_ctes(sql: str, spark) -> str:
         if not dm:
             break
         open_idx = dm.end() - 1
-        # find the matching close, quote-aware
-        depth, j, quote = 1, open_idx + 1, None
-        n = len(out)
-        while j < n and depth:
-            ch = out[j]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"', "`"):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        j = lexer.group_end(out, open_idx)
+        if j is None:
             return out  # unbalanced: leave whole
         body = out[open_idx + 1: j - 1]
         if _COLUMNS_CALL.search(body):
@@ -926,17 +804,11 @@ def _rewrite_columns_expr(sql: str, spark, probe_prefix: str = "") -> str:
     schema of the statement's own FROM context (see the pass comment
     above). Unprovable shapes leave the statement WHOLE — partial
     expansion would half-transpile; whole statements fail loud."""
-    if spark is None or not _COLUMNS_CALL.search(sql):
-        return sql
-    spans = _quoted_spans(sql)
-    if not any(
-        not any(s <= m.start() <= e for s, e in spans)
-        for m in _COLUMNS_CALL.finditer(sql)
-    ):
-        return sql  # COLUMNS( appears only inside string literals
+    if spark is None or not _has_bare_columns_site(sql):
+        return sql  # no COLUMNS( in code
     if re.match(r"(?is)^\s*WITH\b", sql) and not probe_prefix:
         sql = _rewrite_columns_in_ctes(sql, spark)
-        sel_idx, _ = _scan_top_level(sql, ("select",))
+        sel_idx, _ = lexer.find_top_level(sql, ("select",))
         if sel_idx <= 0:
             return sql
         body = _rewrite_columns_expr(
@@ -946,11 +818,11 @@ def _rewrite_columns_expr(sql: str, spark, probe_prefix: str = "") -> str:
     # set-op arms expand independently, each against its own FROM
     scan = 0
     while True:
-        idx, w = _scan_top_level(sql, ("union", "intersect", "except"), scan)
+        idx, w = lexer.find_top_level(sql, ("union", "intersect", "except"), scan)
         if idx < 0:
             break
         if _is_set_op_at(sql, idx, w):
-            nxt, _kw = _scan_top_level(sql, ("select",), idx)
+            nxt, _kw = lexer.find_top_level(sql, ("select",), idx)
             if nxt < 0:
                 return sql  # parenthesized arm: stay whole, loud
             left = _rewrite_columns_expr(sql[:idx], spark, probe_prefix)
@@ -961,9 +833,9 @@ def _rewrite_columns_expr(sql: str, spark, probe_prefix: str = "") -> str:
     if not m or re.match(r"(?is)^\s*ON\b", sql[m.end():]):
         return sql  # not a SELECT head, or DISTINCT ON: loud
     items_start = m.end()
-    from_idx, _f = _scan_top_level(sql, ("from",), items_start)
+    from_idx, _f = lexer.find_top_level(sql, ("from",), items_start)
     items_text = sql[items_start: from_idx if from_idx >= 0 else len(sql)]
-    items = _split_top_level_commas(items_text)
+    items = lexer.split_top_level(items_text)
     rest_sql = sql[from_idx:] if from_idx >= 0 else ""
     sel_sites = any(_COLUMNS_CALL.search(it) for it in items)
     rest_sites = bool(rest_sql) and _has_bare_columns_site(rest_sql)
@@ -971,7 +843,7 @@ def _rewrite_columns_expr(sql: str, spark, probe_prefix: str = "") -> str:
         return sql
     tail = ""
     if from_idx >= 0:
-        cut, _kw = _scan_top_level(
+        cut, _kw = lexer.find_top_level(
             rest_sql,
             (
                 "where", "group", "having", "qualify", "window",
@@ -988,12 +860,7 @@ def _rewrite_columns_expr(sql: str, spark, probe_prefix: str = "") -> str:
     if sel_sites:
         new_items: list[str] = []
         for it in items:
-            ispans = _quoted_spans(it)
-            has_site = any(
-                not any(s <= mm.start() <= e for s, e in ispans)
-                for mm in _COLUMNS_CALL.finditer(it)
-            )
-            if not has_site:
+            if not _has_bare_columns_site(it):
                 new_items.append(it.strip())
                 continue
             exp = _expand_columns_item(it, cols)
@@ -1011,21 +878,17 @@ def _rewrite_columns_expr(sql: str, spark, probe_prefix: str = "") -> str:
 
 
 def _has_bare_columns_site(text: str) -> bool:
-    """True when ``text`` holds a COLUMNS( call outside quotes."""
-    spans = _quoted_spans(text)
-    return any(
-        not any(s <= m.start() <= e for s, e in spans)
-        for m in _COLUMNS_CALL.finditer(text)
-    )
+    """True when the code of ``text`` holds a COLUMNS( call."""
+    return _COLUMNS_CALL.search(lexer.mask(text)) is not None
 
 
 def _split_top_level_and(clause: str) -> list[str]:
     """Split a boolean clause on its top-level ANDs (quote- and
-    paren-aware via :func:`_scan_top_level`)."""
+    paren-aware via :func:`lexer.find_top_level`)."""
     parts: list[str] = []
     pos = 0
     while True:
-        idx, w = _scan_top_level(clause, ("and",), pos)
+        idx, w = lexer.find_top_level(clause, ("and",), pos)
         if idx < 0:
             break
         parts.append(clause[pos:idx])
@@ -1059,9 +922,9 @@ def _rewrite_columns_clauses(rest: str, cols: list[str]) -> str | None:
     not supported here", probed) — left verbatim for Spark to reject,
     loud IS parity. Returns None when a handled clause holds an
     unprovable shape (the statement stays whole)."""
-    w_idx, _w = _scan_top_level(rest, ("where",), 0)
+    w_idx, _w = lexer.find_top_level(rest, ("where",), 0)
     if w_idx >= 0:
-        end, _kw = _scan_top_level(
+        end, _kw = lexer.find_top_level(
             rest,
             ("group", "having", "qualify", "window", "order", "limit",
              "offset"),
@@ -1086,7 +949,7 @@ def _rewrite_columns_clauses(rest: str, cols: list[str]) -> str | None:
             )
     o_idx = 0
     while True:
-        o_idx, _o = _scan_top_level(rest, ("order",), o_idx)
+        o_idx, _o = lexer.find_top_level(rest, ("order",), o_idx)
         if o_idx < 0:
             return rest
         after = rest[o_idx + 5:]
@@ -1095,12 +958,12 @@ def _rewrite_columns_clauses(rest: str, cols: list[str]) -> str | None:
             break
         o_idx += 5
     by_end = o_idx + 5 + bym.end()
-    end, _kw = _scan_top_level(rest, ("limit", "offset"), by_end)
+    end, _kw = lexer.find_top_level(rest, ("limit", "offset"), by_end)
     clause = rest[by_end: end if end >= 0 else len(rest)]
     if not _has_bare_columns_site(clause):
         return rest
     out_keys: list[str] = []
-    for item in _split_top_level_commas(clause):
+    for item in lexer.split_top_level(clause):
         if not _has_bare_columns_site(item):
             out_keys.append(item.strip())
             continue
@@ -1141,16 +1004,12 @@ def _rewrite_length_on_lists(sql: str, spark, probe_prefix: str = "") -> str:
     loudly."""
     if spark is None:
         return sql
-    spans = _quoted_spans(sql)
-    sites = [
-        m
-        for m in _LENGTH_CALL.finditer(sql)
-        if not any(s <= m.start() <= e for s, e in spans)
-    ]
+    masked = lexer.mask(sql)
+    sites = list(_LENGTH_CALL.finditer(masked))
     if not sites:
         return sql
     if re.match(r"(?is)^\s*WITH\b", sql):
-        sel_idx, _ = _scan_top_level(sql, ("select",))
+        sel_idx, _ = lexer.find_top_level(sql, ("select",))
         if sel_idx <= 0:
             return sql
         body = _rewrite_length_on_lists(
@@ -1161,11 +1020,11 @@ def _rewrite_length_on_lists(sql: str, spark, probe_prefix: str = "") -> str:
     # top-level clause after the relations — types don't depend on
     # WHERE/GROUP/ORDER, and a GROUP BY inside the probe SELECT would
     # break its analysis
-    from_idx, _ = _scan_top_level(sql, ("from",))
+    from_idx, _ = lexer.find_top_level(sql, ("from",))
     tail = ""
     if from_idx >= 0:
         rest = sql[from_idx:]
-        cut, _kw = _scan_top_level(
+        cut, _kw = lexer.find_top_level(
             rest,
             (
                 "where", "group", "having", "qualify", "window",
@@ -1178,9 +1037,7 @@ def _rewrite_length_on_lists(sql: str, spark, probe_prefix: str = "") -> str:
     # a length() inside a sub-select has a DIFFERENT FROM scope than
     # the probe's — skip those sites
     sub_spans: list[tuple[int, int]] = []
-    for sm in re.finditer(r"(?is)\(\s*select\b", sql):
-        if any(s <= sm.start() <= e for s, e in spans):
-            continue
+    for sm in re.finditer(r"(?is)\(\s*select\b", masked):
         got = _call_args(sql, sm.start())
         if got is not None:
             sub_spans.append((sm.start(), got[1]))
@@ -1192,7 +1049,7 @@ def _rewrite_length_on_lists(sql: str, spark, probe_prefix: str = "") -> str:
     setop_idx = len(sql)
     scan = 0
     while True:
-        idx, w = _scan_top_level(sql, ("union", "intersect", "except"), scan)
+        idx, w = lexer.find_top_level(sql, ("union", "intersect", "except"), scan)
         if idx < 0:
             break
         if _is_set_op_at(sql, idx, w):
@@ -1305,12 +1162,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
     DuckDB rejects ORDER BY references to struct-expanded field names
     (BinderError, probed) — the rewrite accepts them, a strict
     superset on statements no working DuckDB corpus can contain."""
-    spans = _quoted_spans(sql)
-    sites = [
-        m
-        for m in _UNNEST_CALL.finditer(sql)
-        if not any(s <= m.start() <= e for s, e in spans)
-    ]
+    sites = list(_UNNEST_CALL.finditer(lexer.mask(sql)))
     if not sites or spark is None:
         return sql
     # cheap pre-check: act only when a := flag is present OR a probe
@@ -1318,7 +1170,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
     # textual so unflagged statements only pay probes on their
     # whole-item sites (cached per session).
     if re.match(r"(?is)^\s*WITH\b", sql):
-        sel_idx, _ = _scan_top_level(sql, ("select",))
+        sel_idx, _ = lexer.find_top_level(sql, ("select",))
         if sel_idx <= 0:
             return sql
         body = _rewrite_struct_recursive_unnest(
@@ -1330,7 +1182,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
     ops: list[tuple[int, int]] = []
     pos = 0
     while True:
-        idx, _w = _scan_top_level(sql, ("union", "intersect", "except"), pos)
+        idx, _w = lexer.find_top_level(sql, ("union", "intersect", "except"), pos)
         if idx < 0:
             break
         # `* EXCEPT (cols)` projections are not set operators (see
@@ -1352,7 +1204,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
             last = _e0
         tail_arm = sql[last:]
         suffix = ""
-        b_idx, _bw = _scan_top_level(tail_arm, ("order", "limit", "offset"))
+        b_idx, _bw = lexer.find_top_level(tail_arm, ("order", "limit", "offset"))
         if b_idx >= 0:
             suffix = tail_arm[b_idx:]
             tail_arm = tail_arm[:b_idx]
@@ -1374,14 +1226,14 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
         return sql
     distinct_kw = "DISTINCT " if head.group(1) else ""
     list_start = head.end()
-    from_idx, _ = _scan_top_level(sql, ("from",), list_start)
+    from_idx, _ = lexer.find_top_level(sql, ("from",), list_start)
     if from_idx < 0:
         select_list, tail = sql[list_start:], ""
     else:
         select_list, tail = sql[list_start:from_idx], sql[from_idx:]
     suffix = ""
     seg = tail if tail else select_list
-    b_idx, b_word = _scan_top_level(
+    b_idx, b_word = lexer.find_top_level(
         seg, _UNNEST_TAIL_BLOCKERS + ("order", "limit", "offset"),
         1 if tail else 0,
     )
@@ -1406,10 +1258,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
         flag_state: None = no flag, True/False = recursive value,
         'bad' = max_depth / unparseable."""
         out = []
-        tspans = _quoted_spans(text)
-        for m in _UNNEST_CALL.finditer(text):
-            if any(s <= m.start() <= e for s, e in tspans):
-                continue
+        for m in _UNNEST_CALL.finditer(lexer.mask(text)):
             got = _call_args(text, m.end() - 1)
             if got is None:
                 return None
@@ -1448,7 +1297,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
             out.append((args[0], flag, (m.start(), after)))
         return out
 
-    items = _split_top_level_commas(select_list)
+    items = lexer.split_top_level(select_list)
     # pass 1: classify every site; count list-unnest sites that will
     # REMAIN after struct expansion (the sole-site proof for the
     # depth≥2 rewrites)
@@ -1636,11 +1485,7 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
             cols = (sm.group(1) + ", " if sm.group(1) else "") + "__arnab_ru"
             new_items[i] = f"* EXCEPT ({cols})"
     for it in new_items:
-        isp = _quoted_spans(it)
-        if any(
-            not any(s <= mm.start() <= e for s, e in isp)
-            for mm in re.finditer(r"(?is)\bover\s*\(", it)
-        ):
+        if re.search(r"(?is)\bover\s*\(", lexer.mask(it)):
             return sql  # windows evaluate pre-unnest in DuckDB — the
             #             hoist machinery lives in the zip pass, not here
     inner = (
@@ -1847,15 +1692,12 @@ _POSTFIX_CAST_TYPE = re.compile(
 
 def _rewrite_postfix_cast_types(sql: str) -> str:
     """``x::VARCHAR`` → ``x::STRING`` (same mapping as CAST, same
-    quote-awareness)."""
-    spans = _quoted_spans(sql)
-
-    def sub(m: re.Match) -> str:
-        if any(s <= m.start() <= e for s, e in spans):
-            return m.group(0)
-        return "::" + _CAST_TYPE_MAP[m.group(1).lower()]
-
-    return _POSTFIX_CAST_TYPE.sub(sub, sql)
+    code-only scope)."""
+    return lexer.sub(
+        _POSTFIX_CAST_TYPE,
+        lambda m: "::" + _CAST_TYPE_MAP[m.group(1).lower()],
+        sql,
+    )
 
 # count of distinct non-null elements; NULL in → NULL, [] → 0
 # (all three cases verified against the pinned DuckDB)
@@ -1976,7 +1818,7 @@ def _rewrite_arg_transform_calls(sql: str) -> str:
     reject loudly."""
     guard = 0
     pos = 0
-    spans = _quoted_spans(sql)
+    masked = lexer.mask(sql)
     _arg_call = _arg_call_re()
     while True:
         guard += 1
@@ -1988,12 +1830,9 @@ def _rewrite_arg_transform_calls(sql: str) -> str:
                 "dialect rewrite did not converge after 2000 substitutions; "
                 "statement too pathological to transpile safely"
             )
-        m = _arg_call.search(sql, pos)
+        m = _arg_call.search(masked, pos)
         if not m:
             return sql
-        if any(s <= m.start() <= e for s, e in spans):
-            pos = m.end()  # inside a string literal / quoted identifier
-            continue
         parsed = _call_args(sql, m.end() - 1)
         if parsed is None:
             return sql
@@ -2005,57 +1844,35 @@ def _rewrite_arg_transform_calls(sql: str) -> str:
             pos = m.end()
             continue
         sql = sql[: m.start()] + repl + sql[end:]
+        # Both ends of the replaced call are code (the match is on the
+        # mask and _call_args closes the call at depth 0), so the mask
+        # outside it stands and only repl needs lexing: no full-statement
+        # rescan per substitution (round-5 advice: that made long
+        # many-call statements O(n²)).
+        masked = masked[: m.start()] + lexer.mask(repl) + masked[end:]
         pos = m.start()
-        # Incremental span maintenance instead of a full-statement
-        # rescan per substitution (round-5 advice: the rescan made long
-        # many-call statements O(n²)). The replaced region's endpoints
-        # are both outside quotes (the match start was span-checked and
-        # _call_args closes the call at quote-aware depth 0), so spans
-        # before the edit are untouched, spans inside it are replaced
-        # by repl's own (locally lexed, offset), and spans after shift
-        # by the length delta.
-        delta = len(repl) - (end - m.start())
-        repl_spans = [
-            (s + m.start(), e + m.start()) for s, e in _quoted_spans(repl)
-        ]
-        spans = (
-            [(s, e) for s, e in spans if e < m.start()]
-            + repl_spans
-            + [(s + delta, e + delta) for s, e in spans if s >= end]
-        )
 
 
 _STRUCT_PAIR = re.compile(r"^\s*'([^'\\]*)'\s*:(.*)$", re.DOTALL)
+
+
+_INNERMOST_BRACES = re.compile(r"\{[^{}]*\}")
 
 
 def _rewrite_struct_literals(sql: str) -> str:
     """DuckDB struct literals ``{'k': v, ...}`` → Spark's
     ``named_struct('k', v, ...)``. Innermost-first so nesting works;
     a brace group whose members are not all ``'key': value`` pairs
-    (e.g. a Jinja remnant) is left untouched. Quote-aware like the
+    (e.g. a Jinja remnant) is left untouched. Code only, like the
     list-literal scanner."""
     while True:
-        # find an innermost { ... } (no nested braces), outside quotes
-        quote = None
-        start = -1
-        found = None
-        for i, ch in enumerate(sql):
-            if quote:
-                if ch == quote:
-                    quote = None
-                continue
-            if ch in ("'", '"', "`"):
-                quote = ch
-            elif ch == "{":
-                start = i
-            elif ch == "}" and start >= 0:
-                found = (start, i)
-                break
+        # find an innermost { ... } (no nested braces) in code
+        found = _INNERMOST_BRACES.search(lexer.mask(sql))
         if not found:
             return sql
-        s, e = found
+        s, e = found.start(), found.end() - 1
         body = sql[s + 1: e]
-        parts = _split_top_level_commas(body)
+        parts = lexer.split_top_level(body)
         pairs = [_STRUCT_PAIR.match(p) for p in parts]
         if body.strip() and all(pairs):
             inner = ", ".join(f"'{m.group(1)}', {m.group(2).strip()}" for m in pairs)
@@ -2070,103 +1887,43 @@ def _unmask_braces(sql: str) -> str:
     return sql.replace("\x00", "{").replace("\x01", "}")
 
 
-def _quoted_spans(sql: str) -> list[tuple[int, int]]:
-    """Inclusive [start, end] index spans of quoted regions (strings,
-    double-quoted and backtick identifiers). SQL's '' escaping scans as
-    two adjacent spans, which the backward walk crosses seamlessly."""
-    spans: list[tuple[int, int]] = []
-    quote: str | None = None
-    qstart = 0
-    for i, ch in enumerate(sql):
-        if quote:
-            if ch == quote:
-                spans.append((qstart, i))
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-            qstart = i
-    if quote:  # unterminated — cover to end so the walk stays conservative
-        spans.append((qstart, len(sql) - 1))
-    return spans
-
-
-def _comment_spans(sql: str) -> list[tuple[int, int]]:
-    """Inclusive [start, end] spans of ``-- …\\n`` and ``/* … */``
-    comments, quote-aware (a ``--`` inside a string literal is data,
-    not a comment). The engine strips comments from model SQL before
-    transpiling (node.py, mirroring node.rs:68-77), but
-    ``transpile_statement`` is also a public entry point — the
-    operator-shaped passes (``//``, ``^``) consult these spans so a
-    ``/*c*//`` sequence can never have its comment terminator eaten
-    by an operator rewrite (round-6 advice)."""
-    spans: list[tuple[int, int]] = []
-    quote: str | None = None
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            i += 1
-        elif ch in ("'", '"', "`"):
-            quote = ch
-            i += 1
-        elif ch == "-" and sql.startswith("--", i):
-            j = sql.find("\n", i)
-            end = n - 1 if j < 0 else j
-            spans.append((i, end))
-            i = end + 1
-        elif ch == "/" and sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            end = n - 1 if j < 0 else j + 1
-            spans.append((i, end))
-            i = end + 1
-        else:
-            i += 1
-    return spans
-
-
 def _find_subscript(sql: str, min_idx: int) -> int:
-    """Index of the first subscript-opening ``[`` at ≥ ``min_idx``.
-    Scans from 0 so quote state and the preceding-token judgment are
-    correct even when resuming mid-statement."""
-    quote: str | None = None
+    """Index of the first subscript-opening ``[`` at ≥ ``min_idx``: a
+    ``[`` of code right after a word, ``)``, ``]``, literal or quoted
+    identifier (whitespace and comments aside). Scans from 0 so the
+    preceding-token judgment holds when resuming mid-statement."""
     prev = ""
-    for i, ch in enumerate(sql):
-        if quote:
-            if ch == quote:
-                quote = None
-                prev = "'"
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            continue
-        if ch == "[":
-            if prev and (prev.isalnum() or prev in ("_", ")", "]", "'")):
-                if i >= min_idx:
-                    return i
-            prev = "["
-            continue
-        if not ch.isspace():
-            prev = ch
+    for kind, start, end in lexer.tokens(sql):
+        if kind in (lexer.STRING, lexer.IDENT):
+            prev = "'"
+        elif kind == lexer.CODE:
+            for i in range(start, end):
+                ch = sql[i]
+                if ch == "[":
+                    if prev and (prev.isalnum() or prev in ("_", ")", "]", "'")):
+                        if i >= min_idx:
+                            return i
+                    prev = "["
+                elif not ch.isspace():
+                    prev = ch
     return -1
 
 
 def _subscript_base_start(
     sql: str, idx: int, spans: list[tuple[int, int]]
 ) -> tuple[int | None, int]:
-    """Walk back from the ``[`` at ``idx`` over the postfix chain —
-    identifier/qualifier runs, quoted literals/identifiers, balanced
-    trailing groups — returning (chain_start, base_end). Quote-correct:
-    the walk consults the forward-scanned ``spans``, so a bracket or
-    paren INSIDE a string (``split(x, '(')[1]``) cannot desynchronize
-    it. Returns (None, end) when a trailing group never closes."""
+    """Walk back from the ``[`` at ``idx`` of the mask ``sql`` over the
+    postfix chain — identifier/qualifier runs, quoted
+    literals/identifiers, balanced trailing groups — returning
+    (chain_start, base_end). ``spans`` are the text's
+    :func:`lexer.literal_spans`: the walk steps over each whole, so a
+    bracket or paren INSIDE a string (``split(x, '(')[1]``) cannot
+    desynchronize it; comments are blank in the mask, so whitespace
+    to the walk. Returns (None, end) when a trailing group never
+    closes."""
 
     def span_start_at(k: int) -> int | None:
-        for s, e in spans:
-            if s <= k <= e:
-                return s
-        return None
+        return next((s for s, e in spans if s <= k < e), None)
 
     k = idx - 1
     while k >= 0 and sql[k].isspace():  # DuckDB allows `arr [1]`
@@ -2219,17 +1976,14 @@ def _rewrite_array_type_spellings(sql: str) -> str:
     ``ARRAY<STRING>``: Spark's bare VARCHAR demands a length). The
     spelling is unambiguous: an EMPTY bracket pair is invalid as a
     subscript in both engines, so ``ident[]`` can only be a type
-    (quoted spans skipped). Without this pass the subscript rewrite
+    (code only). Without this pass the subscript rewrite
     mangled ``CAST(NULL AS INT[])`` into ``element_at(INT, )`` —
     still a loud parse error, but an incomprehensible one for a
     legitimate DuckDB idiom. Fixed-size ``T[3]`` has no Spark
     equivalent and stays loud; ``STRUCT(…)[]`` (non-numeric parens)
     is out of the token model and stays loud too."""
-    spans = _quoted_spans(sql)
 
     def sub(m: re.Match) -> str:
-        if any(s <= m.start() <= e for s, e in spans):
-            return m.group(0)
         base = m.group(1).strip()
         bare = re.match(r"(?is)^([A-Za-z_]\w*)$", base)
         if bare:
@@ -2237,7 +1991,7 @@ def _rewrite_array_type_spellings(sql: str) -> str:
         depth = m.group(2).count("[")
         return "ARRAY<" * depth + base + ">" * depth
 
-    return _ARRAY_TYPE_SPELLING.sub(sub, sql)
+    return lexer.sub(_ARRAY_TYPE_SPELLING, sub, sql)
 
 
 def _rewrite_subscripts(sql: str) -> str:
@@ -2259,8 +2013,8 @@ def _rewrite_subscripts(sql: str) -> str:
       char) or dynamic indexes are left in place → Spark analysis
       error, loud.
 
-    The base is found by a whitespace-tolerant backward walk that is
-    quote-correct via forward-scanned string spans; a base that still
+    The base is found by a whitespace-tolerant backward walk over the
+    code that steps over whole literals and identifiers; a base that still
     cannot be resolved RAISES (fail-loud doctrine — the round-3 advice
     showed the silent skip ships 0-based reads)."""
     from arnab_spark.errors import ArnabError
@@ -2277,35 +2031,25 @@ def _rewrite_subscripts(sql: str) -> str:
         idx = _find_subscript(sql, pos)
         if idx < 0:
             return sql
-        # matching ] (quote-aware)
-        depth, j, quote = 0, idx, None
-        while j < len(sql):
-            ch = sql[j]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"', "`"):
-                quote = ch
-            elif ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= len(sql):
+        close = lexer.group_end(sql, idx)
+        if close is None:
             return sql  # unterminated subscript: Spark's parser rejects it
+        j = close - 1
         content = sql[idx + 1: j]
         if not content.strip():
             pos = j + 1  # empty brackets: a type spelling the array-
             continue     # type pass didn't model — leave whole, loud
-        if content.strip().startswith("'") or _top_level_colon(content):
+        if (
+            content.strip().startswith("'")
+            or lexer.find_top_level(content, (":",))[0] >= 0
+        ):
             pos = j + 1  # string-key access / slice — preserved as-is
             continue
-        spans = _quoted_spans(sql)
-        start, end = _subscript_base_start(sql, idx, spans)
+        start, end = _subscript_base_start(
+            lexer.mask(sql), idx, lexer.literal_spans(sql)
+        )
         base = sql[start: end + 1] if start is not None else ""
-        if not base.strip() or not _balanced_outside_quotes(base):
+        if not base.strip() or not lexer.balanced(base):
             raise ArnabError(
                 "cannot resolve the base expression of a 1-based DuckDB "
                 f"subscript (refusing to ship Spark's 0-based read): "
@@ -2325,62 +2069,6 @@ def _rewrite_subscripts(sql: str) -> str:
         pos = start
 
 
-def _balanced_outside_quotes(text: str) -> bool:
-    depth, quote = 0, None
-    for ch in text:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch in ("(", "["):
-            depth += 1
-        elif ch in (")", "]"):
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0 and quote is None
-
-
-def _top_level_colon(text: str) -> bool:
-    depth, quote = 0, None
-    for ch in text:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch in ("(", "["):
-            depth += 1
-        elif ch in (")", "]"):
-            depth -= 1
-        elif ch == ":" and depth == 0:
-            return True
-    return False
-
-
-def _balanced_fwd(sql: str, i: int) -> int | None:
-    """Exclusive end index of the balanced ``(…)`` / ``[…]`` group
-    opening at ``i`` (quote-aware), or None when it never closes."""
-    depth, quote = 0, None
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch in ("(", "["):
-            depth += 1
-        elif ch in (")", "]"):
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return None
-
-
 #: words that, when they END just before a +/- sign, mark it as UNARY
 #: (operand of the sign, not a binary subtraction) — clause keywords and
 #: connectives a value expression can directly follow.
@@ -2397,17 +2085,6 @@ _POWER_RIGHT_STOP = frozenset("case not exists select interval".split())
 
 _NUM_FWD = re.compile(r"(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
 _SCI_SPLIT = re.compile(r"(?:\d+\.?\d*|\.\d+)[eE][+-]\Z")
-
-
-def _is_comment_trivia(seg: str) -> bool:
-    """True when ``seg`` is nothing but comments and whitespace."""
-    spans = _comment_spans(seg)
-    kept = "".join(
-        c
-        for i, c in enumerate(seg)
-        if not any(s <= i <= e for s, e in spans)
-    )
-    return bool(seg.strip()) and not kept.strip()
 
 
 def _sign_is_unary(sql: str, k: int) -> bool:
@@ -2432,7 +2109,7 @@ def _sign_is_unary(sql: str, k: int) -> bool:
 
 def _power_left_start(sql: str, op_idx: int, spans) -> int | None:
     """Start index of the left operand of the power operator at
-    ``op_idx`` — the tightest-binding primary (postfix chain walked by
+    ``op_idx`` of the mask ``sql`` — the tightest-binding primary (postfix chain walked by
     :func:`_subscript_base_start`), extended back over ``::type`` cast
     chains (``::`` binds tighter than ``^`` — probed: ``2::INT ^ 2``
     is 4.0 in DuckDB, so ``x::int ^ 2`` must capture ``x::int``, not
@@ -2444,23 +2121,9 @@ def _power_left_start(sql: str, op_idx: int, spans) -> int | None:
     start, end = _subscript_base_start(sql, op_idx, spans)
     if start is None or end < start or not sql[start : end + 1].strip():
         return None
-    # when the captured chunk is ONLY comment trivia (`2 /*c*/ ^ 3` —
-    # the walk breaks at the whitespace inside the chain), resume the
-    # primary walk before the comment; a REAL captured primary stops
-    # here, so a comment BEFORE the operand (`SELECT /*c*/ 2 ^ 3`)
-    # never swallows preceding keywords
-    guard = 0
-    while _is_comment_trivia(sql[start : end + 1]):
-        guard += 1
-        if guard > 20:
-            return None
-        nstart, nend = _subscript_base_start(sql, start, spans)
-        if nstart is None or nend < nstart or not sql[nstart : nend + 1].strip():
-            return None
-        start, end = nstart, nend
-    if guard and sql[start : end + 1].strip().lower() in _SIGN_UNARY_WORDS:
-        # the resume walk landed on a clause keyword (`SELECT /*c*/ ^ 3`
-        # — `^` had no real left operand): bail rather than swallow the
+    if sql[start : end + 1].strip().lower() in _SIGN_UNARY_WORDS:
+        # the walk landed on a clause keyword (`SELECT /*c*/ ^ 3` — `^`
+        # has no real left operand): bail rather than swallow the
         # keyword into power(); the malformed input stays loud in Spark
         return None
     while True:
@@ -2495,13 +2158,14 @@ def _power_left_start(sql: str, op_idx: int, spans) -> int | None:
     return start
 
 
-def _power_right_end(sql: str, pos: int) -> int | None:
+def _power_right_end(sql: str, pos: int, spans) -> int | None:
     """Exclusive end index of the power right operand starting at
-    ``pos``: optional unary signs, then one primary (number, identifier
-    chain, quoted identifier/literal, or parenthesized group) plus its
-    postfix chain (``.member``, call/subscript groups, ``::type``).
-    None when the operand is not a primary (CASE/NOT/… — the operator
-    is left alone, loud)."""
+    ``pos`` of the mask ``sql`` (``spans`` as for
+    :func:`_subscript_base_start`): optional unary signs, then one
+    primary (number, identifier chain, quoted identifier/literal, or
+    parenthesized group) plus its postfix chain (``.member``,
+    call/subscript groups, ``::type``). None when the operand is not a
+    primary (CASE/NOT/… — the operator is left alone, loud)."""
     n = len(sql)
     i = pos
     while i < n and sql[i].isspace():
@@ -2516,11 +2180,8 @@ def _power_right_end(sql: str, pos: int) -> int | None:
     if c.isdigit() or (c == "." and i + 1 < n and sql[i + 1].isdigit()):
         m = _NUM_FWD.match(sql, i)
         i = m.end()
-    elif c in ("'", '"', "`"):
-        j = sql.find(c, i + 1)
-        if j < 0:
-            return None
-        i = j + 1
+    elif any(s == i for s, _e in spans):
+        i = next(e for s, e in spans if s == i)
     elif c.isalpha() or c == "_":
         w = i
         while i < n and (sql[i].isalnum() or sql[i] == "_"):
@@ -2528,7 +2189,7 @@ def _power_right_end(sql: str, pos: int) -> int | None:
         if sql[w:i].lower() in _POWER_RIGHT_STOP:
             return None
     elif c == "(":
-        j = _balanced_fwd(sql, i)
+        j = lexer.group_end(sql, i)
         if j is None:
             return None
         i = j
@@ -2540,7 +2201,7 @@ def _power_right_end(sql: str, pos: int) -> int | None:
             while i < n and (sql[i].isalnum() or sql[i] == "_"):
                 i += 1
         elif sql[i] in ("(", "["):
-            j = _balanced_fwd(sql, i)
+            j = lexer.group_end(sql, i)
             if j is None:
                 return None
             i = j
@@ -2549,7 +2210,7 @@ def _power_right_end(sql: str, pos: int) -> int | None:
             while i < n and (sql[i].isalnum() or sql[i] == "_"):
                 i += 1
             if i < n and sql[i] == "(":
-                j = _balanced_fwd(sql, i)
+                j = lexer.group_end(sql, i)
                 if j is None:
                     return None
                 i = j
@@ -2586,23 +2247,21 @@ def _rewrite_power_ops(sql: str) -> str:
                 "power-operator rewrite did not converge (>500 sites); "
                 "statement too pathological to transpile safely"
             )
-        # comment spans ride along with quoted ones: a ^ inside a
-        # comment is never an operator site, and the operand walks
-        # treat a comment as an opaque chunk of the postfix chain
-        spans = _quoted_spans(sql) + _comment_spans(sql)
-        hat = sql.find("^", pos)
-        star = sql.find("**", pos)
+        # operators are found, and operands walked, on the mask: a ^
+        # inside a literal or comment is never an operator site, and a
+        # comment is whitespace to the operand walks
+        masked = lexer.mask(sql)
+        spans = lexer.literal_spans(sql)
+        hat = masked.find("^", pos)
+        star = masked.find("**", pos)
         if hat < 0 and star < 0:
             return sql
         idx = hat if star < 0 or (0 <= hat < star) else star
         op = "^" if idx == hat else "**"
-        if any(s <= idx <= e for s, e in spans):
-            pos = idx + len(op)
-            continue
-        if op == "^" and sql.startswith("^@", idx):
+        if op == "^" and masked.startswith("^@", idx):
             op = "^@"
-        left = _power_left_start(sql, idx, spans)
-        right = _power_right_end(sql, idx + len(op))
+        left = _power_left_start(masked, idx, spans)
+        right = _power_right_end(masked, idx + len(op), spans)
         if left is None or right is None:
             pos = idx + len(op)  # not a primary-bounded site: leave, loud
             continue
@@ -2613,6 +2272,9 @@ def _rewrite_power_ops(sql: str) -> str:
         sql = sql[:left] + repl + sql[right:]
         pos = left
     return sql
+
+
+_INTDIV = re.compile("//")
 
 
 def _rewrite_intdiv(sql: str) -> str:
@@ -2628,49 +2290,7 @@ def _rewrite_intdiv(sql: str) -> str:
     ``//`` means — the decimal case is matched only in sign, not
     fraction. (A live-session typed rewrite would close this; revisit
     if a real model trips it.)"""
-    spans = _quoted_spans(sql) + _comment_spans(sql)
-    out = []
-    i, n = 0, len(sql)
-    while i < n:
-        if (
-            sql.startswith("//", i)
-            and not any(s <= i <= e for s, e in spans)
-        ):
-            out.append(" DIV ")
-            i += 2
-        else:
-            out.append(sql[i])
-            i += 1
-    return "".join(out)
-
-
-def _top_level_keyword(text: str, word: str) -> int:
-    """Index of the first depth-0, quote-outside, word-boundary match
-    of ``word`` in ``text``, or -1."""
-    depth, quote = 0, None
-    wl = len(word)
-    low = text.lower()
-    for i, ch in enumerate(text):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch in ("(", "["):
-            depth += 1
-        elif ch in (")", "]"):
-            depth -= 1
-        elif (
-            depth == 0
-            and low.startswith(word, i)
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-            and (
-                i + wl >= len(text)
-                or not (text[i + wl].isalnum() or text[i + wl] == "_")
-            )
-        ):
-            return i
-    return -1
+    return lexer.sub(_INTDIV, lambda m: " DIV ", sql)
 
 
 def _rewrite_comprehensions(sql: str) -> str:
@@ -2689,40 +2309,34 @@ def _rewrite_comprehensions(sql: str) -> str:
     reuses the literal pass's token predicate so ``x[1]`` subscripts
     are never touched; nested comprehensions resolve via recursion on
     the extracted pieces."""
+    masked = lexer.mask(sql)
     out: list[str] = []
-    quote: str | None = None
     prev = ""
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            quote = ch
-            out.append(ch)
-            prev = "'"
-            i += 1
-            continue
-        if ch == "[" and (
+    last = pos = 0  # copied up to / scanned up to
+    while True:
+        m = _SIGNIFICANT.search(masked, pos)
+        if m is None:
+            break
+        pos = m.end()
+        if m.group() == "[" and (
             prev == ""
             or prev in _BEFORE_LIST_LITERAL_CHARS
             or prev.lower() in _BEFORE_LIST_LITERAL_WORDS
         ):
-            end = _balanced_fwd(sql, i)
-            inner = sql[i + 1 : end - 1] if end is not None else None
-            if inner is not None and _comment_spans(inner):
-                # a comment inside the brackets could hide or fake a
-                # FOR/IN/IF keyword — leave the bracket for the list-
-                # literal pass (comments stay intact, never corrupted)
+            end = lexer.group_end(sql, m.start())
+            inner = sql[m.start() + 1 : end - 1] if end is not None else None
+            if inner is not None and lexer.strip_comments(inner) != inner:
+                # the rewrite would move a comment inside the brackets
+                # (a line comment then swallows its closing paren) —
+                # leave the bracket for the list-literal pass (comments
+                # stay intact, never corrupted)
                 inner = None
             # anchor on the DEPTH-0 FOR — a nested comprehension in the
             # element expression carries its own (deeper) FOR
             fidx = (
-                _top_level_keyword(inner, "for") if inner is not None else -1
+                lexer.find_top_level(inner, ("for",))[0]
+                if inner is not None
+                else -1
             )
             if fidx > 0:
                 expr = inner[:fidx]
@@ -2731,14 +2345,13 @@ def _rewrite_comprehensions(sql: str) -> str:
                 )
                 if tm is not None:
                     var, src = tm.group(1), tm.group(2)
-                    cidx = _top_level_keyword(src, "if")
+                    cidx, _ = lexer.find_top_level(src, ("if",))
                     if cidx >= 0 and not src[:cidx].strip():
                         # the IF opens the source expression itself —
                         # it is DuckDB's if() FUNCTION (e.g. `FOR x IN
                         # if(c, a, b)`), not a filter clause; the real
                         # filter IF (if any) is a later top-level one
-                        nxt = _top_level_keyword(src[cidx + 2 :], "if")
-                        cidx = cidx + 2 + nxt if nxt >= 0 else -1
+                        cidx, _ = lexer.find_top_level(src, ("if",), cidx + 2)
                     if cidx >= 0:
                         cond = _rewrite_comprehensions(src[cidx + 2 :].strip())
                         srcx = _rewrite_comprehensions(src[:cidx].strip())
@@ -2746,22 +2359,13 @@ def _rewrite_comprehensions(sql: str) -> str:
                     else:
                         seq = _rewrite_comprehensions(src.strip())
                     body = _rewrite_comprehensions(expr.strip())
+                    out.append(sql[last : m.start()])
                     out.append(f"transform({seq}, {var} -> {body})")
                     prev = ")"
-                    i = end
+                    last = pos = end
                     continue
-        if not ch.isspace():
-            if ch.isalnum() or ch == "_":
-                j = i
-                while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                    j += 1
-                out.append(sql[i:j])
-                prev = sql[i:j]
-                i = j
-                continue
-            prev = ch
-        out.append(ch)
-        i += 1
+        prev = m.group()
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -2775,11 +2379,11 @@ def _lit_match(s: str):
     (``date_diff((u), …)`` after ``u := 'day'`` binds), and a literal
     wrapped in parens must still rewrite (round-5 composition fuzz
     finding). ``('a') || ('b')`` style expressions survive untouched:
-    _strip_outer_parens only strips when the opening paren's match is
+    lexer.strip_outer_parens only strips when the opening paren's match is
     the final character."""
     s = s.strip()
     while True:
-        stripped = _strip_outer_parens(s).strip()
+        stripped = lexer.strip_outer_parens(s).strip()
         if stripped == s:
             break
         s = stripped
@@ -2795,32 +2399,17 @@ def _rewrite_string_split(sql: str) -> str:
     plain string-literal separators are rewritten; anything dynamic is
     left under its DuckDB name so Spark rejects it loudly rather than
     silently treating it as a pattern."""
+    masked = lexer.mask(sql)
     out = []
     pos = 0
     while True:
-        m = _STRING_SPLIT.search(sql, pos)
+        m = _STRING_SPLIT.search(masked, pos)
         if not m:
             out.append(sql[pos:])
             return "".join(out)
-        # find the matching close paren of the call
-        depth = 0
-        quote = None
-        j = m.end() - 1
-        while j < len(sql):
-            ch = sql[j]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"', "`"):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        args = _split_top_level_commas(sql[m.end(): j])
+        close = lexer.group_end(sql, m.end() - 1)
+        j = len(sql) if close is None else close - 1  # the call's ")"
+        args = lexer.split_top_level(sql[m.end(): j])
         lit = _lit_match(args[1]) if len(args) == 2 else None
         if lit is None:
             out.append(sql[pos: j + 1])
@@ -2872,12 +2461,12 @@ def _rewrite_from_first(sql: str) -> str:
     clause terminator — only a genuine set-operator EXCEPT is."""
     if not _FROM_FIRST.match(sql):
         return sql
-    sel_at, _ = _scan_top_level(sql, ("select",))
+    sel_at, _ = lexer.find_top_level(sql, ("select",))
     if sel_at < 0:
         return "SELECT * " + sql
     start = sel_at + 6
     while True:
-        end, kw = _scan_top_level(sql, _CLAUSE_KEYWORDS, start=start)
+        end, kw = lexer.find_top_level(sql, _CLAUSE_KEYWORDS, start=start)
         if (
             end >= 0
             and kw in ("union", "intersect", "except")
@@ -2908,7 +2497,7 @@ def _rewrite_from_first_arms(sql: str) -> str:
     pos = 0
     arm_start = 0
     while True:
-        idx, kw = _scan_top_level(sql, ("union", "intersect", "except"), start=pos)
+        idx, kw = lexer.find_top_level(sql, ("union", "intersect", "except"), start=pos)
         if idx < 0:
             out.append(_rewrite_from_first(sql[arm_start:].strip()))
             return " ".join(p for p in out if p)
@@ -2945,30 +2534,16 @@ def _rewrite_distinct_on(sql: str) -> str:
     m = _DISTINCT_ON.match(sql)
     if not m:
         return sql
-    # find the matching close paren of the ON (…) list
-    depth, i = 1, m.end()
-    quote: str | None = None
-    n = len(sql)
-    while i < n and depth:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    # the matching close paren of the ON (…) list
+    i = lexer.group_end(sql, m.end() - 1)
+    if i is None:
         return sql  # unbalanced — let Spark report it
     keys = sql[m.end() : i - 1].strip()
     rest = sql[i:]
-    fro, _ = _scan_top_level(rest, ("from",))
+    fro, _ = lexer.find_top_level(rest, ("from",))
     if fro < 0 or not keys:
         return sql
-    ob, kw = _scan_top_level(rest, ("order", "limit", "offset"))
+    ob, kw = lexer.find_top_level(rest, ("order", "limit", "offset"))
     body = rest[:ob] if ob >= 0 else rest
     tail = rest[ob:] if ob >= 0 else ""
     order_exprs = keys
@@ -2980,11 +2555,11 @@ def _rewrite_distinct_on(sql: str) -> str:
         # projection (DuckDB resolves them from the input), so they
         # materialize as hidden __arnab_ob columns the outer sorts on.
         after = rest[ob:]
-        lim, _ = _scan_top_level(after, ("limit", "offset"))
+        lim, _ = lexer.find_top_level(after, ("limit", "offset"))
         clause = after[:lim] if lim >= 0 else after
         limit_part = after[lim:] if lim >= 0 else ""
         order_exprs = re.sub(r"(?is)^\s*ORDER\s+BY\s+", "", clause).strip()
-        for item in _split_top_level_commas(order_exprs):
+        for item in lexer.split_top_level(order_exprs):
             dm = re.match(
                 r"(?is)^(.*?)((?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$",
                 item.strip(),
@@ -3032,25 +2607,11 @@ def _rewrite_star_replace(sql: str, spark) -> str:
     if not m or spark is None:
         return sql
     # matching close paren of the REPLACE list
-    depth, i = 1, m.end()
-    quote: str | None = None
-    n = len(sql)
-    while i < n and depth:
-        ch = sql[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = lexer.group_end(sql, m.end() - 1)
+    if i is None:
         return sql
     replacements: dict[str, str] = {}
-    for item in _split_top_level_commas(sql[m.end() : i - 1]):
+    for item in lexer.split_top_level(sql[m.end() : i - 1]):
         rm = re.match(r"(?is)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", item.strip())
         if not rm:
             return sql
@@ -3064,12 +2625,12 @@ def _rewrite_star_replace(sql: str, spark) -> str:
     if not fm:
         return sql
     after_rel = rest[fm.end() :]
-    nxt, kw = _scan_top_level(after_rel, _JOIN_WORDS)
+    nxt, kw = lexer.find_top_level(after_rel, _JOIN_WORDS)
     if nxt >= 0:
         return sql  # joins — ambiguous star, bail
-    clause, _ = _scan_top_level(after_rel, _CLAUSE_AFTER_ON)
+    clause, _ = lexer.find_top_level(after_rel, _CLAUSE_AFTER_ON)
     pre_clause = after_rel[:clause] if clause >= 0 else after_rel
-    if len(_split_top_level_commas(pre_clause)) > 1:
+    if len(lexer.split_top_level(pre_clause)) > 1:
         return sql  # comma join — ambiguous star, bail
     rel = fm.group(1)
     try:
@@ -3093,28 +2654,6 @@ def _rewrite_star_replace(sql: str, spark) -> str:
 _UNION_BY_NAME = re.compile(r"(?is)^UNION\s+(?:(ALL|DISTINCT)\s+)?BY\s+NAME\b")
 
 
-def _strip_outer_parens(s: str) -> str:
-    """Strip one pair of outer parens ONLY if the opening paren's match
-    is the final character — `(A) UNION ALL (B)` must survive intact."""
-    if not (s.startswith("(") and s.endswith(")")):
-        return s
-    depth = 0
-    quote: str | None = None
-    for i, ch in enumerate(s):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"', "`"):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return s[1:-1] if i == len(s) - 1 else s
-    return s
-
-
 def _rewrite_union_by_name(sql: str, spark) -> str:
     """Rewrite one top-level DuckDB ``<left> UNION [ALL] BY NAME
     <right>`` into a standard positional union: columns are matched by
@@ -3127,7 +2666,7 @@ def _rewrite_union_by_name(sql: str, spark) -> str:
     rewrite."""
     start = 0
     while True:
-        idx, _ = _scan_top_level(sql, ("union",), start)
+        idx, _ = lexer.find_top_level(sql, ("union",), start)
         if idx < 0:
             return sql
         m = _UNION_BY_NAME.match(sql[idx:])
@@ -3140,7 +2679,7 @@ def _rewrite_union_by_name(sql: str, spark) -> str:
     rest = sql[idx + m.end():]
     nxt, kw, scan_from = -1, None, 0
     while True:
-        nxt, kw = _scan_top_level(
+        nxt, kw = lexer.find_top_level(
             rest, ("union", "intersect", "except", "order", "limit", "offset"), scan_from
         )
         # `* EXCEPT (cols)` in the right side's select list is a
@@ -3155,8 +2694,8 @@ def _rewrite_union_by_name(sql: str, spark) -> str:
             return sql  # chained set ops — out of conservative reach
         tail = " " + rest[nxt:].strip()
         rest = rest[:nxt]
-    right = _strip_outer_parens(rest.strip())
-    left = _strip_outer_parens(left)
+    right = lexer.strip_outer_parens(rest.strip())
+    left = lexer.strip_outer_parens(left)
     try:
         lcols = spark.sql(left).columns
         rcols = spark.sql(right).columns
@@ -3217,7 +2756,7 @@ def _rewrite_copy(sql: str, spark=None) -> str:
     source, path, opts_text = m.group(1).strip(), m.group(2), m.group(3) or m.group(4) or ""
     fmt = None
     options: dict[str, str] = {}
-    for raw in _split_top_level_commas(opts_text):
+    for raw in lexer.split_top_level(opts_text):
         item = raw.strip()
         if not item:
             continue
@@ -3255,7 +2794,7 @@ def _rewrite_copy(sql: str, spark=None) -> str:
         return sql
     if fmt == "csv" and "header" not in options:
         options["header"] = "true"  # DuckDB's COPY ... (FORMAT CSV) default
-    query = _strip_outer_parens(source) if source.startswith("(") else f"SELECT * FROM {source}"
+    query = lexer.strip_outer_parens(source) if source.startswith("(") else f"SELECT * FROM {source}"
     part_raw = options.pop("__partition_by", None)
     part_overwrite = options.pop("__overwrite", None)
     if part_raw is not None:
@@ -3269,7 +2808,7 @@ def _rewrite_copy(sql: str, spark=None) -> str:
             return sql  # no session: leave for Spark to reject loudly
         cols = [
             c.strip()
-            for c in _split_top_level_commas(part_raw.strip().strip("()"))
+            for c in lexer.split_top_level(part_raw.strip().strip("()"))
             if c.strip()
         ]
         if not cols or any(not re.match(r"^[A-Za-z_]\w*$", c) for c in cols):
@@ -3352,7 +2891,7 @@ def _rewrite_pivot(sql: str, spark) -> str:
     if not am:
         return sql
     fn, arg, alias = am.group(1), am.group(2), am.group(3)
-    rel_sql = _strip_outer_parens(rel) if rel.startswith("(") else f"SELECT * FROM {rel}"
+    rel_sql = lexer.strip_outer_parens(rel) if rel.startswith("(") else f"SELECT * FROM {rel}"
     if in_list is None:
         if spark is None:
             return sql
@@ -3388,7 +2927,7 @@ def _rewrite_pivot(sql: str, spark) -> str:
         # columns, matching DuckDB's group-by-all-remaining rule.
         keep_cols: list[str] | None = None
         if group_by:
-            keep_cols = [c.strip() for c in _split_top_level_commas(group_by)]
+            keep_cols = [c.strip() for c in lexer.split_top_level(group_by)]
         elif spark is not None:
             try:
                 fields = spark.sql(
@@ -3405,7 +2944,7 @@ def _rewrite_pivot(sql: str, spark) -> str:
                 keep_cols = None
         if keep_cols is not None:
             names = []
-            for v in _split_top_level_commas(in_list.strip()[1:-1]):
+            for v in lexer.split_top_level(in_list.strip()[1:-1]):
                 v = v.strip()
                 names.append(
                     v[1:-1].replace("''", "'") if v.startswith("'") else v
@@ -3446,8 +2985,8 @@ def _rewrite_unpivot(sql: str) -> str:
     if not m:
         return sql
     rel, on_cols, name_col, value_col, tail = m.groups()
-    rel_sql = f"({_strip_outer_parens(rel)})" if rel.startswith("(") else rel
-    cols = ", ".join(c.strip() for c in _split_top_level_commas(on_cols))
+    rel_sql = f"({lexer.strip_outer_parens(rel)})" if rel.startswith("(") else rel
+    cols = ", ".join(c.strip() for c in lexer.split_top_level(on_cols))
     return (
         f"SELECT * FROM {rel_sql} __arnab_up UNPIVOT ({value_col} FOR {name_col} "
         f"IN ({cols})) {tail or ''}".rstrip()

@@ -5,12 +5,15 @@ A node is one ``.sql`` model file. Life cycle (reference: node.rs:62-107
 ``render_and_populate_refs`` then node.rs:125-207
 ``execute_sql_statements``):
 
-1. strip comments → 2. concat macros + source and Jinja-render with an
-EMPTY context (only ``{% macro %}`` definitions and their calls expand —
-no vars, no ``ref()``; reference: node.rs:100-106) → 3. extract
-referenced relations and intersect with known model ids → 4. at run
-time: split statements, validate exactly one record-returning statement,
-wrap it in the materialization DDL, execute via ``spark.sql``.
+1. strip comments (``lexer.strip_comments``: ``--`` and ``/* */``
+outside literals and quoted identifiers) → 2. concat macros + source
+and Jinja-render with an EMPTY context (only ``{% macro %}``
+definitions and their calls expand — no vars, no ``ref()``; reference:
+node.rs:100-106) → 3. extract referenced relations and intersect with
+known model ids → 4. at run time: split statements at each ``;``
+outside literals and quoted identifiers (``lexer.split_statements``),
+validate exactly one record-returning statement, wrap it in the
+materialization DDL, execute via ``spark.sql``.
 
 The Spark materialization mapping (reference: node.rs:156-174):
 
@@ -45,13 +48,10 @@ import time
 from dataclasses import dataclass, field
 from enum import Enum
 
+from arnab_spark import lexer
 from arnab_spark.depparse import get_sql_references
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError, StatementExecutionError
-
-#: string literal and quoted-identifier delimiters; a doubled
-#: delimiter inside the quotes is an escaped one
-_QUOTES = ("'", '"', "`")
 
 
 class NodeKind(Enum):
@@ -95,42 +95,7 @@ class Node:
 
     # -- rendering ---------------------------------------------------
 
-    @staticmethod
-    def strip_comments(src: str) -> str:
-        """Drop ``--`` line comments (including trailing ones) and
-        ``/* ... */`` blocks, aware of string literals and of double-
-        and back-quoted identifiers (reference: node.rs:68-77 strips whole
-        lines only; a trailing ``-- join x`` comment would otherwise leak
-        into dependency extraction and a ``;`` inside a comment would
-        split statements)."""
-        out: list[str] = []
-        i, n = 0, len(src)
-        quote = None
-        while i < n:
-            ch = src[i]
-            if quote:
-                out.append(ch)
-                if ch == quote:
-                    if i + 1 < n and src[i + 1] == quote:
-                        out.append(src[i + 1])
-                        i += 1
-                    else:
-                        quote = None
-            elif ch in _QUOTES:
-                quote = ch
-                out.append(ch)
-            elif ch == "-" and i + 1 < n and src[i + 1] == "-":
-                while i < n and src[i] != "\n":
-                    i += 1
-                continue  # keep the newline itself
-            elif ch == "/" and i + 1 < n and src[i + 1] == "*":
-                end = src.find("*/", i + 2)
-                i = n if end == -1 else end + 2
-                continue
-            else:
-                out.append(ch)
-            i += 1
-        return "".join(out)
+    strip_comments = staticmethod(lexer.strip_comments)
 
     def render(self, macro_sources: dict[str, str], known_ids: set[str]) -> None:
         """Render macros and populate ``prevs``
@@ -151,35 +116,7 @@ class Node:
 
     # -- execution ---------------------------------------------------
 
-    @staticmethod
-    def split_statements(src: str) -> list[str]:
-        """Split on ``;`` outside string literals and quoted
-        identifiers (improves on the reference's naive split,
-        node.rs:127-131, which breaks on ';' inside strings — SURVEY.md
-        §7 risk register)."""
-        stmts, buf, quote = [], [], None
-        i, n = 0, len(src)
-        while i < n:
-            ch = src[i]
-            if quote:
-                buf.append(ch)
-                if ch == quote:
-                    if i + 1 < n and src[i + 1] == quote:
-                        buf.append(src[i + 1])
-                        i += 1
-                    else:
-                        quote = None
-            elif ch in _QUOTES:
-                quote = ch
-                buf.append(ch)
-            elif ch == ";":
-                stmts.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-            i += 1
-        stmts.append("".join(buf))
-        return [s.strip() for s in stmts if s.strip()]
+    split_statements = staticmethod(lexer.split_statements)
 
     @staticmethod
     def will_produce_records(stmt: str) -> bool:

@@ -55,8 +55,8 @@ from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
+from arnab_spark import lexer
 from arnab_spark.config import Config
-from arnab_spark.depparse import _strip_strings
 from arnab_spark.errors import ArnabError, CyclicDependencyError, UnknownModelType
 from arnab_spark.node import Node, NodeExecutionResult, NodeKind, Timer, format_elapsed
 
@@ -211,7 +211,8 @@ class Session:
         alone waits for the previous such model and every model since,
         hence for all models before it. Any other model waits for its
         ``prevs``, the earlier models whose ids it mentions outside
-        string literals, and the previous model that ran alone."""
+        string literals and comments, and the previous model that ran
+        alone."""
         ids = {nid.lower(): i for i, nid in enumerate(order)}
         waits: dict[str, set[str]] = {}
         barrier: set[str] = set()
@@ -222,7 +223,13 @@ class Session:
                 waits[nid] = barrier | since
                 barrier, since = {nid}, set()
                 continue
-            words = set(re.findall(r"\w+", _strip_strings(node.rendered_src).lower()))
+            src = node.rendered_src
+            said = " ".join(
+                src[s:e]
+                for kind, s, e in lexer.tokens(src)
+                if kind in (lexer.CODE, lexer.IDENT)
+            )
+            words = set(re.findall(r"\w+", said.lower()))
             mentioned = {order[ids[w]] for w in words if ids.get(w, i) < i}
             waits[nid] = node.prevs | mentioned | barrier
             since.add(nid)

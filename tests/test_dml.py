@@ -75,6 +75,24 @@ def test_insert_column_list_fills_null(spark, con, dml_table):
     assert got[-1] == (9, "z", None)
 
 
+def test_column_lists_with_paren_in_quoted_name(spark, con):
+    # CREATE TABLE's and INSERT's column lists close at the `)` of
+    # code, not at the one inside the quoted name
+    stmts = [
+        'CREATE TABLE dml_qc ("a)b" INTEGER, c INTEGER)',
+        'INSERT INTO dml_qc ("a)b", c) VALUES (3, 4)',
+        "INSERT INTO dml_qc (c) VALUES (6)",
+    ]
+    try:
+        for stmt in stmts:
+            con.execute(stmt)
+            _run(spark, stmt)
+        got, exp = _table_rows(spark, con, "dml_qc", "c")
+        assert got == exp == [(3, 4), (None, 6)]
+    finally:
+        _run(spark, "DROP TABLE IF EXISTS dml_qc")
+
+
 def test_insert_by_name_select(spark, con, dml_table):
     stmt = "INSERT INTO dml_t BY NAME SELECT 'q' AS tag, 11 AS id"
     con.execute(stmt)
@@ -1132,6 +1150,27 @@ def test_import_real_duckdb_export(spark, con, tmp_path):
         assert rows == [(1, "a"), (2, "b")]
     finally:
         _run(spark, "DROP TABLE dml_di")
+
+
+def test_import_script_comments_split_nothing(spark, con, tmp_path):
+    """IMPORT DATABASE strips the scripts' comments before splitting
+    them, so a ``;`` inside a comment ends no statement."""
+    d = str(tmp_path / "dexpc")
+    con.execute("CREATE TABLE dml_dc (n INTEGER)")
+    con.execute("INSERT INTO dml_dc VALUES (1), (2)")
+    con.execute(f"EXPORT DATABASE '{d}' (FORMAT PARQUET)")
+    for script in ("schema.sql", "load.sql"):
+        p = os.path.join(d, script)
+        with open(p) as fh:
+            body = fh.read()
+        with open(p, "w") as fh:
+            fh.write(f"-- written by hand; don't split\n/* a; b */ {body}")
+    try:
+        _run(spark, f"IMPORT DATABASE '{d}'")
+        rows = sorted(tuple(r) for r in spark.table("dml_dc").collect())
+        assert rows == [(1,), (2,)]
+    finally:
+        _run(spark, "DROP TABLE dml_dc")
 
 
 def test_export_import_roundtrip_csv(spark, tmp_path, hermetic_tables):

@@ -58,6 +58,56 @@ def test_get_ref_describe_and_summarize():
     assert get_sql_references("SELECT * FROM t ORDER BY x DESC limit_model") == {"t"}
 
 
+def test_get_ref_quoted_identifiers():
+    # an apostrophe inside a quoted identifier opens no literal, so the
+    # relation after it is still found
+    assert get_sql_references('SELECT x AS "it\'s" FROM up') == {"up"}
+    # FROM inside a quoted identifier or a comment names no relation
+    assert get_sql_references('SELECT 1 AS "from b"') == set()
+    assert get_sql_references("SELECT 1 AS x /* from b */ -- join c") == set()
+    # a quoted identifier in relation position is still collected
+    assert get_sql_references('SELECT * FROM "my tbl"') == {"my tbl"}
+    assert get_sql_references("SELECT * FROM `up`") == {"up"}
+    # each part of a qualifier chain is read back unquoted
+    assert get_sql_references('SELECT * FROM main."up"') == {"main.up"}
+    assert get_sql_references('SELECT * FROM main.up') == {"main.up"}
+
+
+def test_lexer_brackets_skip_quoted_and_commented_brackets():
+    from arnab_spark import lexer
+
+    sql = "f(a, ')', \"b(\", g(c)) /* ( */ [1]"
+    close = sql.index(") /*")
+    assert lexer.group_end(sql, 1) == close + 1
+    assert lexer.paren_groups(sql) == [(sql.index("g(") + 1, close - 1), (1, close)]
+    assert lexer.split_top_level(sql[2:close]) == ["a", " ')'", ' "b("', " g(c)"]
+    assert lexer.find_top_level(sql, ("c",)) == (-1, None)
+    assert lexer.find_top_level("(a) ')' AS b", ("as",)) == (8, "as")
+    assert lexer.balanced(sql) and not lexer.balanced(sql + ")")
+
+
+def test_quoted_identifiers_keep_dag_edges(tmp_path):
+    """No Spark needed: an apostrophe inside a quoted identifier hides
+    no edge, and FROM inside one invents none."""
+    from arnab_spark.config import load_config
+    from arnab_spark.session import Session
+
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "up.sql").write_text("SELECT 1 AS x")
+    (models / "down.sql").write_text('SELECT x AS "it\'s" FROM up')
+    (models / "a.sql").write_text('SELECT 1 AS "from b"')
+    (models / "b.sql").write_text("SELECT * FROM a")
+    session = Session(load_config(str(tmp_path)), None)
+    order = session.build_graph()  # no CyclicDependencyError a -> b -> a
+    assert session.nodes["down"].prevs == {"up"}
+    assert session.nodes["a"].prevs == set() and session.nodes["b"].prevs == {"a"}
+    assert order.index("up") < order.index("down")
+    assert order.index("a") < order.index("b")
+    waits = session._waits(order)
+    assert "up" in waits["down"] and "a" in waits["b"]
+
+
 # --- comment stripping (reference: node.rs:68-77) --------------------
 
 def test_strip_comments():
@@ -367,6 +417,26 @@ def test_unsettable_spark_setting_fails_cli(tmp_path, monkeypatch, capsys, spark
     captured = capsys.readouterr()
     assert "error: failed to apply spark_settings spark.sql.warehouse.dir=" in captured.err
     assert "OK" not in captured.out
+
+
+def test_run_file_strips_comments(tmp_path, monkeypatch, capsys, spark):
+    """run-file strips comments before splitting, as the model path
+    does: an apostrophe or a ``;`` inside a comment neither merges nor
+    splits statements (DuckDB's execute_batch runs both scripts,
+    main.rs:165)."""
+    import arnab_spark.cli as cli
+
+    (tmp_path / "config.yaml").write_text("models_dir: models\n")
+    (tmp_path / "models").mkdir()
+    (tmp_path / "apostrophe.sql").write_text(
+        "SELECT 1 AS x;\n-- don't stop here\nSELECT 2 AS y;\nSELECT 3 AS z;\n"
+    )
+    (tmp_path / "block.sql").write_text("SELECT 1 AS x; /* note; see */ SELECT 2 AS y;")
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(cli, "_get_spark", lambda master: spark)
+    assert cli.main(["--strict", "run-file", "apostrophe.sql", "block.sql"]) == 0
+    out = capsys.readouterr().out
+    assert "apostrophe.sql: OK" in out and "block.sql: OK" in out
 
 
 def test_transpile_bare_path_table(spark, tmp_path):

@@ -4,6 +4,7 @@ a testing layer the reference lacks entirely (SURVEY.md §5)."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from arnab_spark import lexer
 from arnab_spark.depparse import get_sql_references
 from arnab_spark.node import Node, format_elapsed
 
@@ -67,6 +68,92 @@ def test_split_and_strip_keep_quoted_identifiers(payload, quote):
     stmt = f"SELECT {quote}{payload};--/*{payload}{quote} AS x"
     assert Node.split_statements(stmt) == [stmt.strip()]
     assert Node.strip_comments(stmt) == stmt
+
+
+# --- the SQL lexer ----------------------------------------------------
+
+#: text rich in delimiters and statement/comment markers
+tricky = st.text(alphabet=st.sampled_from(list("ab1 ;'\"`-/*\n")), max_size=20)
+
+
+def _quoted(body: str, q: str) -> str:
+    return q + body.replace(q, q + q) + q
+
+
+literal = tricky.map(lambda b: _quoted(b, "'"))
+quoted_ident = st.tuples(tricky, st.sampled_from(['"', "`"])).map(lambda t: _quoted(*t))
+comment = st.one_of(
+    tricky.map(lambda b: "/*" + b.replace("*/", "* /") + "*/"),
+    tricky.map(lambda b: "--" + b.replace("\n", " ") + "\n"),
+)
+code_word = st.sampled_from(["SELECT", "x", "t.c", "1", "+", "(", ")", ",", "AS", "="])
+
+
+@given(st.one_of(st.text(max_size=80), tricky))
+@settings(max_examples=300, deadline=None)
+def test_lexer_tokens_tile_the_input(sql):
+    toks = lexer.tokens(sql)
+    assert "".join(sql[s:e] for _k, s, e in toks) == sql
+    assert all(a[2] == b[1] for a, b in zip(toks, toks[1:]))
+    assert all(s < e for _k, s, e in toks)
+
+
+@given(st.one_of(st.text(max_size=80), tricky))
+@settings(max_examples=300, deadline=None)
+def test_lexer_mask_keeps_length_and_code(sql):
+    masked = lexer.mask(sql)
+    assert len(masked) == len(sql)
+    for kind, s, e in lexer.tokens(sql):
+        if kind == lexer.CODE:
+            assert masked[s:e] == sql[s:e]
+        elif kind == lexer.COMMENT:
+            assert not masked[s:e].strip()
+        else:  # the delimiters stay, the inside is blank
+            inside = masked[s + 1 : e]
+            assert masked[s] == sql[s] and not inside[:-1].strip()
+            assert inside[-1:] in ("", " ", sql[s])
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.lists(
+                st.one_of(
+                    code_word,
+                    literal,
+                    quoted_ident,
+                    comment.map(lambda c: c.replace(";", ",")),
+                ),
+                max_size=6,
+            ),
+            code_word,
+        ).map(lambda t: " ".join(t[0] + [t[1]])),
+        min_size=1,
+        max_size=4,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_split_statements_roundtrip_through_quotes_and_comments(stmts):
+    """A ``;``, ``--``, ``/*`` or delimiter inside a literal or quoted
+    identifier, or a ``--``, ``/*`` or delimiter inside a comment, never
+    splits a statement. (A ``;`` inside a comment does split: callers
+    strip comments first.)"""
+    assert Node.split_statements(";".join(stmts)) == stmts
+
+
+@given(ident, st.lists(st.one_of(literal, quoted_ident, comment), max_size=3), tricky)
+@settings(max_examples=200, deadline=None)
+def test_depparse_ignores_names_in_literals_identifiers_and_comments(name, decoys, pad):
+    hidden = [
+        _quoted(f"{pad} from {name}", "'"),
+        _quoted(f"join {name}", '"'),
+        _quoted(f"from {name} {pad}", "`"),
+        "/* from " + name + " " + pad.replace("*/", "* /") + " */",
+        f"-- join {name}\n",
+    ]
+    items = ", ".join(["x"] + [f"{d} AS c{i}" for i, d in enumerate(decoys)])
+    sql = f"SELECT {items}, {hidden[0]} AS {hidden[1]}, {hidden[2]} {hidden[3]} FROM base {hidden[4]}"
+    assert get_sql_references(sql) == {"base"}
 
 
 @given(st.floats(min_value=0, max_value=86400, allow_nan=False))
