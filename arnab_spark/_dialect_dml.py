@@ -196,6 +196,30 @@ def _hive_partition_cols(dest: str) -> list[str]:
     return cols
 
 
+def _register_backed(spark, name: str, dest: str):
+    """Re-expose the backed table dir ``dest`` as ``name`` after a
+    statement (re)wrote it, and return the schema its files hold (the
+    partition columns live in the directory names). When ``dest`` is
+    a cataloged table of the session's own warehouse, the catalog's
+    recorded schema follows the rewrite: ALTER TABLE may have changed
+    it, and attach types the table by that schema without reading the
+    files."""
+    import os as _os
+
+    from pyspark.sql.types import StructType
+
+    df = spark.read.parquet(dest)
+    df.createOrReplaceTempView(name)
+    pcols = set(_hive_partition_cols(dest))
+    schema = StructType([f for f in df.schema.fields if f.name not in pcols])
+    wh = warehouse_for(spark)
+    if wh and _os.path.dirname(_os.path.normpath(dest)) == _os.path.normpath(wh):
+        from arnab_spark.catalog import record_schema
+
+        record_schema(wh, _os.path.basename(_os.path.normpath(dest)), schema)
+    return schema
+
+
 def _dml_append(spark, name: str, aligned) -> None:
     """INSERT fast path for backed tables: write ONLY the new batch and
     move its part-files into the table dir (mirroring hive partition
@@ -225,7 +249,7 @@ def _dml_append(spark, name: str, aligned) -> None:
             _os.makedirs(tgt, exist_ok=True)
             _os.rename(_os.path.join(root, f), _os.path.join(tgt, f))
     _shutil.rmtree(staging, ignore_errors=True)
-    spark.read.parquet(dest).createOrReplaceTempView(name)
+    _register_backed(spark, name, dest)
 
 
 def _dml_pruned_rewrite(
@@ -293,8 +317,10 @@ def _has_part_files(root: str) -> bool:
     )
 
 
-def _dml_persist(spark, name: str, kind: str, df) -> None:
-    """Atomically replace ``name``'s contents with ``df``."""
+def _dml_persist(spark, name: str, kind: str, df):
+    """Atomically replace ``name``'s contents with ``df``. Returns the
+    schema of a backed table's files (see ``_register_backed``), else
+    None."""
     if kind == "backed":
         import os as _os
         import shutil as _shutil
@@ -347,7 +373,7 @@ def _dml_persist(spark, name: str, kind: str, df) -> None:
         _os.rename(dest, old)
         _os.rename(staging, dest)
         _shutil.rmtree(old, ignore_errors=True)
-        spark.read.parquet(dest).createOrReplaceTempView(name)
+        return _register_backed(spark, name, dest)
     elif kind == "tempview":
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
     else:  # native catalog table without its own DELETE/UPDATE
@@ -465,7 +491,7 @@ def _overwrite_touched_partitions(
         spark.createDataFrame([], survivors.schema).write.mode(
             "overwrite"
         ).parquet(dest)
-    spark.read.parquet(dest).createOrReplaceTempView(name)
+    _register_backed(spark, name, dest)
 
 
 def _parse_assignments(assigns_text: str, types: dict, name: str) -> dict:
@@ -966,12 +992,12 @@ def _rewrite_create_table(sql: str, spark):
         dest = _os.path.join(wh, name)
         if _os.path.exists(dest):
             table_backing_for(spark)[name.lower()] = dest
-            _dml_persist(spark, name, "backed", df)
+            schema = _dml_persist(spark, name, "backed", df)
         else:
             df.write.mode("overwrite").parquet(dest)
-            spark.read.parquet(dest).createOrReplaceTempView(name)
+            schema = _register_backed(spark, name, dest)
             table_backing_for(spark)[name.lower()] = dest
-        record_model(wh, name, "table")
+        record_model(wh, name, "table", schema=schema)
     return ""
 
 
@@ -1059,13 +1085,13 @@ def _rewrite_alter_table(sql: str, spark):
             _os.rename(dest, new_dest)
             backing[new.lower()] = new_dest
             spark.catalog.dropTempView(name)
-            spark.read.parquet(new_dest).createOrReplaceTempView(new)
+            schema = _register_backed(spark, new, new_dest)
             wh = warehouse_for(spark)
             if wh and _os.path.dirname(new_dest) == _os.path.normpath(wh):
                 from arnab_spark.catalog import record_model, remove_model
 
                 remove_model(wh, name)
-                record_model(wh, new, "table")
+                record_model(wh, new, "table", schema=schema)
         else:
             df = spark.table(name)
             spark.catalog.dropTempView(name)
@@ -1633,7 +1659,7 @@ def _rewrite_dml(sql: str, spark):
                         .partitionBy(*pcols)
                         .parquet(dest)
                     )
-                    spark.read.parquet(dest).createOrReplaceTempView(name)
+                    _register_backed(spark, name, dest)
                     return _returning_select(ret_view) if ret_view else ""
         _dml_persist(spark, name, kind, raw.select(*sel))
         return _returning_select(ret_view) if ret_view else ""

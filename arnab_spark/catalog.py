@@ -10,8 +10,13 @@ module records every materialized model in a JSON sidecar inside the
 warehouse directory and re-applies it on attach:
 
 - ``table`` / ``incremental`` models re-register as views over their
-  persisted Parquet. No rows are read, but each entry runs one
-  schema-inference job over its Parquet footers.
+  persisted Parquet, typed by the schema the write recorded in the
+  entry (``StructType.jsonValue()``, partition columns excluded: they
+  are discovered from the directory names). Attaching them reads no
+  rows and runs no Spark job. A statement that rewrites a cataloged
+  table's dir (DML, ALTER TABLE) records the schema it leaves.
+  Entries without a schema, written by older versions, are inferred
+  from the Parquet footers, one job each.
 - ``view`` models re-create their (transpiled) SELECT as a temp view.
   Its ``parquet.`path``` scans are bound to the session's scan views
   (``spark_utils.bind_file_scans``), so the pipeline re-creating the
@@ -24,6 +29,9 @@ update in place — re-running one model must not move it past a
 downstream view in the order. A view whose upstream vanished re-raises
 only on *query*, like a DuckDB view over a dropped table; attach warns
 and skips it.
+
+The catalog and macro files are rewritten only when their content
+changes, so a warm rerun of an unchanged project writes neither.
 """
 
 from __future__ import annotations
@@ -54,20 +62,63 @@ def load_catalog(db_path: str) -> dict[str, dict]:
 
 
 def record_model(
-    db_path: str, model_id: str, materialize: str, select_sql: str | None = None
+    db_path: str,
+    model_id: str,
+    materialize: str,
+    select_sql: str | None = None,
+    schema=None,
 ) -> None:
     """Upsert one model's catalog entry (atomic temp-file + rename, so a
-    crash mid-write leaves the previous catalog intact)."""
+    crash mid-write leaves the previous catalog intact). ``schema`` is
+    the StructType a table or incremental write put in its Parquet
+    files. An entry equal to the stored one is not rewritten."""
     entry = {"materialize": materialize}
     if select_sql is not None:
         entry["select"] = select_sql
+    if schema is not None:
+        entry["schema"] = schema.jsonValue()
     with _FILE_LOCK:
-        os.makedirs(db_path, exist_ok=True)
         cat = load_catalog(db_path)
+        if cat.get(model_id) == entry:
+            return
+        os.makedirs(db_path, exist_ok=True)
         # dict assignment keeps an existing key's insertion position —
         # exactly the in-place upsert the ordering contract needs
         cat[model_id] = entry
         _write_json(_catalog_path(db_path), cat)
+
+
+def record_schema(db_path: str, model_id: str, schema) -> None:
+    """Set the recorded schema of table entry ``model_id`` after a
+    statement rewrote its Parquet dir outside the model write (DML;
+    ALTER TABLE may change the schema). No-op if there is no such
+    table entry or its schema is unchanged."""
+    with _FILE_LOCK:
+        cat = load_catalog(db_path)
+        entry = cat.get(model_id)
+        if entry is None or entry["materialize"] == "view":
+            return
+        if entry.get("schema") == schema.jsonValue():
+            return
+        entry["schema"] = schema.jsonValue()
+        _write_json(_catalog_path(db_path), cat)
+
+
+def recorded_schema(entry: dict | None):
+    """The StructType a table entry recorded, or None (no entry, a view,
+    or a catalog written before schemas were recorded)."""
+    if not entry or "schema" not in entry:
+        return None
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(entry["schema"])
+
+
+def read_table(spark, dest: str, schema=None):
+    """DataFrame over a table's Parquet dir: typed by ``schema`` when it
+    is known (no job), inferred from the footers otherwise."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(dest)
 
 
 def _write_json(path: str, obj: dict) -> None:
@@ -95,13 +146,15 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
     visible to every later process, while CREATE TEMP MACRO dies with
     the connection). ``dropped`` names are REMOVED from the persisted
     file — DROP MACRO must be durable like DuckDB's, not resurrect on
-    the next session (round-5 advice). Snapshot-write is idempotent;
-    atomic rename."""
-    persistent = {
+    the next session (round-5 advice). The file is rewritten (atomic
+    rename) only when the merged set differs from what it holds."""
+    # in the form the file holds (tuples read back as lists), so an
+    # unchanged set compares equal to what is stored
+    persistent = json.loads(json.dumps({
         name: {"params": params, "body": body, "is_table": is_table}
         for name, (params, body, is_table, is_temp) in macros.items()
         if not is_temp
-    }
+    }))
     dropped = dropped or set()
     if not persistent and not dropped:
         return
@@ -111,13 +164,12 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
         if os.path.isfile(path):
             with open(path, encoding="utf-8") as f:
                 existing = json.load(f)
-        for name in dropped:
-            existing.pop(name, None)
-        existing.update(persistent)
-        if not existing and not os.path.isfile(path):
-            return  # nothing persisted and nothing to erase
+        merged = {k: v for k, v in existing.items() if k not in dropped}
+        merged.update(persistent)
+        if merged == existing:
+            return  # unchanged, or nothing persisted and nothing to erase
         os.makedirs(db_path, exist_ok=True)
-        _write_json(path, existing)
+        _write_json(path, merged)
 
 
 def _attach_macros(spark, db_path: str) -> list[str]:
@@ -168,7 +220,9 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
         try:
             if entry["materialize"] in ("table", "incremental"):
                 dest = os.path.join(db_path, model_id)
-                spark.read.parquet(dest).createOrReplaceTempView(prefix + model_id)
+                read_table(spark, dest, recorded_schema(entry)).createOrReplaceTempView(
+                    prefix + model_id
+                )
                 if not prefix:
                     # the session's OWN warehouse is writable: record the
                     # backing dir so dialect-level DML persists through a

@@ -38,7 +38,13 @@ Each parquet schema is resolved once per SparkSession:
 - Schema-hinted registration. ``_write_table`` and
   ``_write_incremental`` return the schema they wrote, and the model's
   view is ``spark.read.schema(schema).parquet(dest)``: no job re-reads
-  the footers just written.
+  the footers just written. The schema goes into the model's catalog
+  entry, so a later session's attach and the next incremental merge
+  read the existing rows without inferring it either.
+
+A table or incremental model's row count (the reference reads it back
+after its ``CREATE TABLE``, node.rs:179-189) comes from an
+``Observation`` on the write itself; no job reads the table back.
 """
 
 from __future__ import annotations
@@ -49,6 +55,13 @@ from dataclasses import dataclass, field
 from enum import Enum
 
 from arnab_spark import lexer
+from arnab_spark.catalog import (
+    load_catalog,
+    read_table,
+    record_macros,
+    record_model,
+    recorded_schema,
+)
 from arnab_spark.depparse import get_sql_references
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError, StatementExecutionError
@@ -202,19 +215,25 @@ class Node:
 
     def _write_table(self, df, dest: str):
         """Layout-applying overwrite write shared by the table path and
-        both incremental write sites. Returns the schema written to the
-        parquet files: the output's, less the partition columns, which
-        live in the directory names."""
+        both incremental write sites. Returns ``(schema, n_rows)``: the
+        schema written to the parquet files (the output's, less the
+        partition columns, which live in the directory names) and the
+        rows written, counted by an ``Observation`` on the write's own
+        job rather than by reading the table back."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
         df, pcols = self._layout(df)
-        writer = df.write.mode("overwrite")
+        written = Observation()
+        writer = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(dest)
-        return StructType([f for f in df.schema.fields if f.name not in pcols])
+        schema = StructType([f for f in df.schema.fields if f.name not in pcols])
+        return schema, written.get["n"]
 
-    def _write_incremental(self, spark, df, dest: str):
+    def _write_incremental(self, spark, df, dest: str, schema=None):
         """Incremental materialization — the reference's explicitly
         deferred roadmap item (reference: README.md:54-58), essential at
         100 TB where full recomputation is unaffordable.
@@ -228,7 +247,10 @@ class Node:
         crash at any point leaves either the old or the new
         materialization intact, never neither. At warehouse scale the
         same merge runs per partition (or via MERGE INTO on a lakehouse
-        table format). Returns the schema written, as ``_write_table``.
+        table format). ``schema`` is the one the catalog recorded for
+        ``dest``, so reading the existing rows infers nothing (None:
+        infer). Returns ``(schema, n_rows)`` as ``_write_table``; on a
+        merge, the rows of the merged table.
         """
         import os
         import shutil
@@ -240,7 +262,7 @@ class Node:
             os.rename(old, dest)
         if not os.path.isdir(dest):
             return self._write_table(df, dest)
-        existing = spark.read.parquet(dest)
+        existing = read_table(spark, dest, schema)
         if self.unique_key:
             keys = [k.strip() for k in self.unique_key.split(",")]
             missing = [k for k in keys if k not in df.columns]
@@ -253,12 +275,26 @@ class Node:
         else:
             merged = existing.unionByName(df)
         staging = f"{dest}__staging"
-        schema = self._write_table(merged, staging)
+        written = self._write_table(merged, staging)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(dest, old)
         os.rename(staging, dest)
         shutil.rmtree(old, ignore_errors=True)
-        return schema
+        return written
+
+    def _materialize(self, spark, df, db_path: str) -> int:
+        """Write ``df`` as the model's parquet dir under ``db_path``,
+        register it as the model's view and record it, with its
+        schema, in the warehouse catalog. Returns the rows written."""
+        dest = f"{db_path}/{self.id}"
+        if self.materialize == "incremental":
+            recorded = recorded_schema(load_catalog(db_path).get(self.id))
+            schema, n_rows = self._write_incremental(spark, df, dest, recorded)
+        else:
+            schema, n_rows = self._write_table(df, dest)
+        self._register_table(spark, schema, dest)
+        record_model(db_path, self.id, self.materialize, schema=schema)
+        return n_rows
 
     def _register_table(self, spark, schema, dest: str) -> None:
         """Expose the just-written parquet dir as the model's view,
@@ -271,7 +307,7 @@ class Node:
         staged swap of it."""
         from arnab_spark.dialect import table_backing_for
 
-        spark.read.schema(schema).parquet(dest).createOrReplaceTempView(self.id)
+        read_table(spark, dest, schema).createOrReplaceTempView(self.id)
         table_backing_for(spark)[self.id.lower()] = dest
 
     def execute(self, spark, db_path: str | None) -> NodeExecutionResult:
@@ -289,6 +325,7 @@ class Node:
                 f"model {self.id} must contain exactly one record-returning "
                 f"statement, found {len(record_stmts)}"
             )
+        n_rows = None
         for stmt in statements:
             if stmt in ("", ";"):
                 continue  # reference skips "No statement to prepare" (node.rs:193-198)
@@ -300,28 +337,17 @@ class Node:
                     continue  # consumed by the shim (e.g. CREATE MACRO)
                 if self.will_produce_records(stmt):
                     wrapped, parquet_path = self.materialization_sql(stmt, db_path)
-                    if parquet_path is None:
-                        spark.sql(bind_file_scans(spark, wrapped))
-                    else:
+                    if parquet_path is not None:
                         df = spark.sql(bind_file_scans(spark, stmt))
-                        if self.materialize == "incremental":
-                            schema = self._write_incremental(spark, df, parquet_path)
-                        else:
-                            schema = self._write_table(df, parquet_path)
-                        self._register_table(spark, schema, parquet_path)
-                    if db_path:
-                        # persist the model in the warehouse catalog so
-                        # later sessions reattach it — parity with the
-                        # reference's DuckDB-file persistence
-                        # (node.rs:156-174, main.rs:126-132)
-                        from arnab_spark.catalog import record_model
-
-                        record_model(
-                            db_path,
-                            self.id,
-                            self.materialize,
-                            stmt if parquet_path is None else None,
-                        )
+                        n_rows = self._materialize(spark, df, db_path)
+                    else:
+                        spark.sql(bind_file_scans(spark, wrapped))
+                        if db_path:
+                            # persist the model in the warehouse catalog
+                            # so later sessions reattach it — parity with
+                            # the reference's DuckDB-file persistence
+                            # (node.rs:156-174, main.rs:126-132)
+                            record_model(db_path, self.id, "view", stmt)
                 else:
                     spark.sql(bind_file_scans(spark, stmt))
             except ArnabError:
@@ -331,14 +357,12 @@ class Node:
         if db_path:
             # non-TEMP CREATE MACROs persist in the warehouse like the
             # reference's macros persist in the DuckDB file
-            from arnab_spark.catalog import record_macros
             from arnab_spark.dialect import _macros_for, dropped_macros_for
 
             record_macros(db_path, _macros_for(spark), dropped_macros_for(spark))
-        if self.materialize in ("table", "incremental"):
-            # row-count readback (reference: node.rs:179-189)
-            return NodeExecutionResult(spark.table(self.id).count(), self.materialize)
-        return NodeExecutionResult(None, "view")
+        # a table's row count is the one the reference reads back right
+        # after its CREATE TABLE (node.rs:179-189), taken from the write
+        return NodeExecutionResult(n_rows, self.materialize)
 
     def _execute_python(self, spark, db_path: str | None) -> NodeExecutionResult:
         """PYTHON model kind: the function returns a DataFrame which is
@@ -356,16 +380,7 @@ class Node:
                     f"model {self.id}: materialize={self.materialize} requires "
                     f"db_path (warehouse dir)"
                 )
-            dest = f"{db_path}/{self.id}"
-            if self.materialize == "incremental":
-                schema = self._write_incremental(spark, df, dest)
-            else:
-                schema = self._write_table(df, dest)
-            self._register_table(spark, schema, dest)
-            from arnab_spark.catalog import record_model
-
-            record_model(db_path, self.id, self.materialize)
-            return NodeExecutionResult(spark.table(self.id).count(), self.materialize)
+            return NodeExecutionResult(self._materialize(spark, df, db_path), self.materialize)
         df.createOrReplaceTempView(self.id)
         return NodeExecutionResult(None, "view")
 

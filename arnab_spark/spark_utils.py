@@ -84,6 +84,14 @@ def get_spark(
         # annotation on error messages is lost).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # Spark's cache of compiled generated classes is an LRU of 100
+        # entries by default. A warm pass over the four examples/
+        # projects needs 155 classes and a registry pass 102, so every
+        # pass recompiled them (2-3 s of a ~9 s dag pass); one sweep
+        # of all 167 corpus queries at sf0.001 compiles ~1,530, so even
+        # 1000 would thrash there. The conf is static: a session built
+        # outside get_spark keeps Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -432,3 +432,48 @@ def test_use_attached_catalog_resolves_bare_names(spark, tmp_path):
         for v in list(spark.catalog.listTables()):
             if v.name.startswith("ext__"):
                 spark.catalog.dropTempView(v.name)
+
+
+def test_attach_catalog_without_schema(spark, tmp_path):
+    """A catalog written before entries carried their schema still
+    attaches: its tables are inferred from the Parquet footers and its
+    models query exactly as in the run that wrote them."""
+    proj = _write_models(tmp_path)
+    cfg = load_config(str(proj), None, None)
+    run = spark.newSession()
+    assert Session(cfg, run).run(quiet=True).ok
+    want = {m: sorted(map(tuple, run.table(m).collect())) for m in ("base", "doubled")}
+    assert "schema" in load_catalog(cfg.db_path)["base"]
+    old_format = {
+        "base": {"materialize": "table"},
+        "doubled": {"materialize": "view", "select": "SELECT id * 2 AS id2, tag FROM base"},
+    }
+    with open(os.path.join(cfg.db_path, CATALOG_FILE), "w", encoding="utf-8") as f:
+        json.dump(old_format, f)
+    fresh = spark.newSession()
+    assert attach_warehouse(fresh, cfg.db_path) == ["base", "doubled"]
+    for model, rows in want.items():
+        assert sorted(map(tuple, fresh.table(model).collect())) == rows, model
+        assert fresh.table(model).schema == run.table(model).schema, model
+
+
+def test_alter_table_keeps_recorded_schema_current(spark, tmp_path):
+    """A statement that changes a cataloged table's columns records the
+    new schema: attach types tables by the recorded schema without
+    reading the files, so a stale one would hide the added column."""
+    from arnab_spark.dialect import transpile_statement
+
+    proj = _write_models(tmp_path)
+    cfg = load_config(str(proj), None, None)
+    s = spark.newSession()
+    assert Session(cfg, s).run(quiet=True).ok
+    for stmt in (
+        "ALTER TABLE base ADD COLUMN score INTEGER",
+        "UPDATE base SET score = id * 5",
+    ):
+        assert transpile_statement(stmt, s) == ""
+    fresh = spark.newSession()
+    assert "base" in attach_warehouse(fresh, cfg.db_path)
+    assert fresh.table("base").schema == fresh.read.parquet(os.path.join(cfg.db_path, "base")).schema
+    assert sorted(map(tuple, fresh.table("base").collect())) == [(1, "a", 5), (2, "b", 10)]
+

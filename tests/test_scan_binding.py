@@ -14,7 +14,7 @@ import textwrap
 import duckdb
 import pytest
 
-from arnab_spark.catalog import CATALOG_FILE
+from arnab_spark.catalog import CATALOG_FILE, attach_warehouse, load_catalog
 from arnab_spark.config import load_config
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.session import Session
@@ -200,7 +200,26 @@ def test_registered_schema_matches_inferred(spark, wide_project, runs):
     for model in ("wide", "tbl", "inc", "part"):
         inferred = s.read.parquet(os.path.join(cfg.db_path, model)).schema
         assert s.table(model).schema == inferred, model
+        # the count observed on the write equals a readback
+        assert report.results[model].n_rows == s.table(model).count(), model
     # the partition columns come from the directory names, typed as a
     # plain read types them (region '0'/'1' reads back as an integer)
     assert s.table("part").schema.names[-2:] == ["region", "bucket"]
     assert s.table("part").schema["region"].dataType.typeName() == "integer"
+
+
+def test_attach_with_recorded_schemas_runs_no_job(spark, wide_project):
+    """Table entries carry the schema their write recorded, so a fresh
+    session attaches them without a Spark job, typed as a plain read
+    of the files would type them."""
+    cfg = load_config(wide_project)
+    assert Session(cfg, spark.newSession()).run(quiet=True).ok
+    cat = load_catalog(cfg.db_path)
+    assert all("schema" in e for e in cat.values())
+    fresh = spark.newSession()
+    before = _max_job_id(spark)
+    assert attach_warehouse(fresh, cfg.db_path) == list(cat)
+    assert _max_job_id(spark) == before
+    for model in cat:
+        inferred = fresh.read.parquet(os.path.join(cfg.db_path, model)).schema
+        assert fresh.table(model).schema == inferred, model
