@@ -196,28 +196,21 @@ def _hive_partition_cols(dest: str) -> list[str]:
     return cols
 
 
-def _register_backed(spark, name: str, dest: str):
-    """Re-expose the backed table dir ``dest`` as ``name`` after a
-    statement (re)wrote it, and return the schema its files hold (the
-    partition columns live in the directory names). When ``dest`` is
-    a cataloged table of the session's own warehouse, the catalog's
-    recorded schema follows the rewrite: ALTER TABLE may have changed
-    it, and attach types the table by that schema without reading the
-    files."""
+def _register_backed(spark, name: str, dest: str, schema) -> None:
+    """Re-expose the backed table dir ``dest`` as ``name``, typed by
+    ``schema`` (partition columns included), after a statement (re)wrote
+    it. When ``dest`` is a cataloged table of the session's own
+    warehouse, the catalog's recorded schema follows the rewrite: ALTER
+    TABLE may have changed it, and attach types the table by that
+    schema without reading the files."""
     import os as _os
 
-    from pyspark.sql.types import StructType
+    from arnab_spark.catalog import read_table, record_schema
 
-    df = spark.read.parquet(dest)
-    df.createOrReplaceTempView(name)
-    pcols = set(_hive_partition_cols(dest))
-    schema = StructType([f for f in df.schema.fields if f.name not in pcols])
+    read_table(spark, dest, schema).createOrReplaceTempView(name)
     wh = warehouse_for(spark)
     if wh and _os.path.dirname(_os.path.normpath(dest)) == _os.path.normpath(wh):
-        from arnab_spark.catalog import record_schema
-
         record_schema(wh, _os.path.basename(_os.path.normpath(dest)), schema)
-    return schema
 
 
 def _dml_append(spark, name: str, aligned) -> None:
@@ -249,7 +242,7 @@ def _dml_append(spark, name: str, aligned) -> None:
             _os.makedirs(tgt, exist_ok=True)
             _os.rename(_os.path.join(root, f), _os.path.join(tgt, f))
     _shutil.rmtree(staging, ignore_errors=True)
-    _register_backed(spark, name, dest)
+    _register_backed(spark, name, dest, spark.table(name).schema)
 
 
 def _dml_pruned_rewrite(
@@ -304,76 +297,26 @@ def _dml_pruned_rewrite(
     return True
 
 
-def _has_part_files(root: str) -> bool:
-    """True when ``root`` holds at least one ``.parquet`` part file
-    (``_SUCCESS`` and friends don't count) — the readability invariant
-    every DML write must leave behind."""
-    import os as _os
-
-    return any(
-        f.endswith(".parquet")
-        for _r, _d, files in _os.walk(root)
-        for f in files
-    )
-
-
 def _dml_persist(spark, name: str, kind: str, df):
     """Atomically replace ``name``'s contents with ``df``. Returns the
-    schema of a backed table's files (see ``_register_backed``), else
-    None."""
+    schema a backed table is now read with, else None."""
     if kind == "backed":
-        import os as _os
-        import shutil as _shutil
+        from arnab_spark.catalog import replace_dir
 
         dest = table_backing_for(spark)[name.lower()]
-        staging, old = f"{dest}__dml_staging", f"{dest}__dml_old"
-        # the write triggers the lazy read of dest; dest stays intact
-        # until the rename pair below (same staged-swap discipline as
-        # node._write_incremental). A hive-partitioned table keeps its
-        # layout through the swap — a plain rewrite would silently
-        # flatten the dirs and disable every later pruned fast path
-        # (found by the DML scale harness)
-        # intersect the on-disk layout with the NEW relation's columns:
-        # ALTER TABLE DROP/RENAME of a partition column hands us a frame
-        # without that column, and partitionBy on a missing name errors
-        # (dest intact, but the statement fails where DuckDB succeeds) —
-        # such a table degrades to a flat layout instead
+        # a hive-partitioned table keeps its layout through the swap (a
+        # flat rewrite would disable every later pruned fast path); a
+        # partition column the new relation lacks (ALTER TABLE DROP/
+        # RENAME COLUMN) degrades to the flat layout
         have = {c.lower(): c for c in df.columns}
         pcols = [
             have[c.lower()]
             for c in _hive_partition_cols(dest)
             if c.lower() in have
         ]
-        w = df.write.mode("overwrite")
-        if pcols:
-            w = w.partitionBy(*pcols)
-        w.parquet(staging)
-        if not _has_part_files(staging):
-            # an EMPTY relation written with partitionBy produces no
-            # parquet files (only _SUCCESS), and swapping that in would
-            # leave the table unreadable (UNABLE_TO_INFER_SCHEMA on the
-            # next read) — DuckDB leaves an empty table with its schema
-            # intact, so write the schema-bearing empty part file flat
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(staging)
-        elif pcols:
-            # hive dirs carry partition values as TEXT and the re-read
-            # re-infers their type — an ALTER COLUMN p TYPE VARCHAR
-            # would silently read back as INT. Self-validate: if the
-            # staged read-back disagrees with the frame's type for any
-            # partition column, type fidelity beats layout — rewrite
-            # flat so the parquet file carries the real type (footer
-            # read only; the full swap already paid the table rewrite)
-            back = dict(spark.read.parquet(staging).dtypes)
-            want = dict(df.dtypes)
-            if any(back.get(c) != want[c] for c in pcols):
-                df.write.mode("overwrite").parquet(staging)
-        _shutil.rmtree(old, ignore_errors=True)
-        _os.rename(dest, old)
-        _os.rename(staging, dest)
-        _shutil.rmtree(old, ignore_errors=True)
-        return _register_backed(spark, name, dest)
+        schema, _ = replace_dir(df, dest, pcols)
+        _register_backed(spark, name, dest, schema)
+        return schema
     elif kind == "tempview":
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
     else:  # native catalog table without its own DELETE/UPDATE
@@ -473,6 +416,8 @@ def _overwrite_touched_partitions(
     import os as _os
     import shutil as _shutil
 
+    from arnab_spark.catalog import has_part_files, replace_dir
+
     (
         survivors.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -487,11 +432,9 @@ def _overwrite_touched_partitions(
         if key not in alive:
             sub = _os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
             _shutil.rmtree(sub, ignore_errors=True)
-    if not _has_part_files(dest):
-        spark.createDataFrame([], survivors.schema).write.mode(
-            "overwrite"
-        ).parquet(dest)
-    _register_backed(spark, name, dest)
+    if not has_part_files(dest):
+        replace_dir(spark.createDataFrame([], survivors.schema), dest)
+    _register_backed(spark, name, dest, spark.table(name).schema)
 
 
 def _parse_assignments(assigns_text: str, types: dict, name: str) -> dict:
@@ -987,15 +930,15 @@ def _rewrite_create_table(sql: str, spark):
     else:
         import os as _os
 
-        from arnab_spark.catalog import record_model
+        from arnab_spark.catalog import record_model, replace_dir
 
         dest = _os.path.join(wh, name)
         if _os.path.exists(dest):
             table_backing_for(spark)[name.lower()] = dest
             schema = _dml_persist(spark, name, "backed", df)
         else:
-            df.write.mode("overwrite").parquet(dest)
-            schema = _register_backed(spark, name, dest)
+            schema, _ = replace_dir(df, dest)
+            _register_backed(spark, name, dest, schema)
             table_backing_for(spark)[name.lower()] = dest
         record_model(wh, name, "table", schema=schema)
     return ""
@@ -1084,8 +1027,9 @@ def _rewrite_alter_table(sql: str, spark):
             new_dest = _os.path.join(_os.path.dirname(dest), new)
             _os.rename(dest, new_dest)
             backing[new.lower()] = new_dest
+            schema = spark.table(name).schema
             spark.catalog.dropTempView(name)
-            schema = _register_backed(spark, new, new_dest)
+            _register_backed(spark, new, new_dest, schema)
             wh = warehouse_for(spark)
             if wh and _os.path.dirname(new_dest) == _os.path.normpath(wh):
                 from arnab_spark.catalog import record_model, remove_model
@@ -1659,7 +1603,7 @@ def _rewrite_dml(sql: str, spark):
                         .partitionBy(*pcols)
                         .parquet(dest)
                     )
-                    _register_backed(spark, name, dest)
+                    _register_backed(spark, name, dest, spark.table(name).schema)
                     return _returning_select(ret_view) if ret_view else ""
         _dml_persist(spark, name, kind, raw.select(*sel))
         return _returning_select(ret_view) if ret_view else ""

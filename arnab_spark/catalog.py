@@ -11,12 +11,12 @@ warehouse directory and re-applies it on attach:
 
 - ``table`` / ``incremental`` models re-register as views over their
   persisted Parquet, typed by the schema the write recorded in the
-  entry (``StructType.jsonValue()``, partition columns excluded: they
-  are discovered from the directory names). Attaching them reads no
-  rows and runs no Spark job. A statement that rewrites a cataloged
-  table's dir (DML, ALTER TABLE) records the schema it leaves.
-  Entries without a schema, written by older versions, are inferred
-  from the Parquet footers, one job each.
+  entry (``StructType.jsonValue()``, partition columns included: a
+  string partition value ``'01'`` must not read back as the int 1).
+  Attaching them reads no rows and runs no Spark job. A statement that
+  rewrites a cataloged table's dir (DML, ALTER TABLE) records the
+  schema it leaves. Entries without a schema, written by older
+  versions, are inferred from the Parquet footers, one job each.
 - ``view`` models re-create their (transpiled) SELECT as a temp view.
   Its ``parquet.`path``` scans are bound to the session's scan views
   (``spark_utils.bind_file_scans``), so the pipeline re-creating the
@@ -32,21 +32,34 @@ and skips it.
 
 The catalog and macro files are rewritten only when their content
 changes, so a warm rerun of an unchanged project writes neither.
+
+Every table dir is replaced through ``replace_dir``, so a failed or
+interrupted rebuild leaves the old table or the new one, never neither.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import re
-import threading
+import shutil
+from contextlib import contextmanager
 
 from arnab_spark import lexer
 
 CATALOG_FILE = "_arnab_catalog.json"
-#: held around every read-modify-write of the catalog and macro files:
-#: models of one run may finish, and record themselves, concurrently
-_FILE_LOCK = threading.Lock()
+LOCK_FILE = "_arnab_catalog.lock"
+
+
+@contextmanager
+def _locked(db_path: str):
+    """Hold the warehouse's catalog lock. Each acquisition opens its own
+    descriptor, so the ``flock`` serializes threads and processes."""
+    os.makedirs(db_path, exist_ok=True)
+    with open(os.path.join(db_path, LOCK_FILE), "a") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        yield  # closing the descriptor releases the lock
 
 
 def _catalog_path(db_path: str) -> str:
@@ -77,11 +90,10 @@ def record_model(
         entry["select"] = select_sql
     if schema is not None:
         entry["schema"] = schema.jsonValue()
-    with _FILE_LOCK:
+    with _locked(db_path):
         cat = load_catalog(db_path)
         if cat.get(model_id) == entry:
             return
-        os.makedirs(db_path, exist_ok=True)
         # dict assignment keeps an existing key's insertion position —
         # exactly the in-place upsert the ordering contract needs
         cat[model_id] = entry
@@ -93,7 +105,7 @@ def record_schema(db_path: str, model_id: str, schema) -> None:
     statement rewrote its Parquet dir outside the model write (DML;
     ALTER TABLE may change the schema). No-op if there is no such
     table entry or its schema is unchanged."""
-    with _FILE_LOCK:
+    with _locked(db_path):
         cat = load_catalog(db_path)
         entry = cat.get(model_id)
         if entry is None or entry["materialize"] == "view":
@@ -121,6 +133,65 @@ def read_table(spark, dest: str, schema=None):
     return reader.parquet(dest)
 
 
+_STAGE, _ASIDE = "__staging", "__old"
+
+
+def recover_dir(dest: str) -> bool:
+    """Undo a swap of ``dest`` cut short: restore (or, if ``dest`` is
+    there, drop) the copy renamed aside, remove a stale stage. Returns
+    whether ``dest`` exists."""
+    aside = dest + _ASIDE
+    if os.path.isdir(aside):
+        if os.path.isdir(dest):
+            shutil.rmtree(aside, ignore_errors=True)
+        else:
+            os.rename(aside, dest)
+    shutil.rmtree(dest + _STAGE, ignore_errors=True)
+    return os.path.isdir(dest)
+
+
+def has_part_files(root: str) -> bool:
+    """Whether ``root`` holds a ``.parquet`` part file (``_SUCCESS``
+    does not count): a dir without one cannot be read."""
+    return any(
+        f.endswith(".parquet") for _r, _d, files in os.walk(root) for f in files
+    )
+
+
+def replace_dir(df, dest: str, pcols=()):
+    """Replace the table dir ``dest`` with ``df``, hive-partitioned by
+    ``pcols``. Returns ``(schema, n_rows)``: ``df``'s schema, partition
+    columns included, and the rows an ``Observation`` counted on the
+    write. ``df`` goes to a stage; then ``dest`` is renamed aside, the
+    stage takes its place and the old copy is dropped. A failed write
+    leaves ``dest`` untouched (``df`` may read it); a crash between the
+    renames is undone by ``recover_dir``. An empty partitioned write
+    leaves no part file and could not be read, so it is written flat."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    recover_dir(dest)
+    stage = dest + _STAGE
+    written = Observation()
+    writer = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
+    try:
+        writer.parquet(stage)
+        if not has_part_files(stage):
+            df.sparkSession.createDataFrame([], df.schema).write.mode(
+                "overwrite"
+            ).parquet(stage)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    if os.path.isdir(dest):
+        os.rename(dest, dest + _ASIDE)
+    os.rename(stage, dest)
+    shutil.rmtree(dest + _ASIDE, ignore_errors=True)
+    return df.schema, written.get["n"]
+
+
 def _write_json(path: str, obj: dict) -> None:
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
@@ -131,7 +202,7 @@ def _write_json(path: str, obj: dict) -> None:
 def remove_model(db_path: str, model_id: str) -> None:
     """Delete one model/table's catalog entry (script-level DROP TABLE;
     same atomic temp-file + rename discipline as record_model)."""
-    with _FILE_LOCK:
+    with _locked(db_path):
         cat = load_catalog(db_path)
         if cat.pop(model_id, None) is not None:
             _write_json(_catalog_path(db_path), cat)
@@ -159,7 +230,7 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
     if not persistent and not dropped:
         return
     path = os.path.join(db_path, MACROS_FILE)
-    with _FILE_LOCK:
+    with _locked(db_path):
         existing = {}
         if os.path.isfile(path):
             with open(path, encoding="utf-8") as f:
@@ -168,7 +239,6 @@ def record_macros(db_path: str, macros: dict, dropped: set | None = None) -> Non
         merged.update(persistent)
         if merged == existing:
             return  # unchanged, or nothing persisted and nothing to erase
-        os.makedirs(db_path, exist_ok=True)
         _write_json(path, merged)
 
 
@@ -220,6 +290,8 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
         try:
             if entry["materialize"] in ("table", "incremental"):
                 dest = os.path.join(db_path, model_id)
+                if not prefix:
+                    recover_dir(dest)
                 read_table(spark, dest, recorded_schema(entry)).createOrReplaceTempView(
                     prefix + model_id
                 )

@@ -86,5 +86,7 @@ def load_config(
             "local directory path"
         )
     if cfg.db_path and not os.path.isabs(cfg.db_path):
-        cfg.db_path = os.path.join(cwd, cfg.db_path)
+        # absolute, so the JVM (which resolves a relative path against
+        # its own start dir) and Python's renames name the same dir
+        cfg.db_path = os.path.abspath(os.path.join(cwd, cfg.db_path))
     return cfg

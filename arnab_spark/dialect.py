@@ -3404,7 +3404,6 @@ from arnab_spark._dialect_dml import (  # noqa: E402,F401
     _hive_partition_cols,
     _dml_append,
     _dml_pruned_rewrite,
-    _has_part_files,
     _dml_persist,
     _INTEGRAL_TYPES,
     _cast_like_duck,

@@ -21,10 +21,12 @@ The Spark materialization mapping (reference: node.rs:156-174):
   plan; chained views collapse into one Catalyst plan, so filters cross
   model boundaries (the reference gets this via DuckDB view inlining).
 - ``table`` → execute the SELECT and write Parquet under
-  ``{db_path}/{id}`` (overwrite), then register a view over the Parquet.
-  This persists across sessions like the reference's file-backed DuckDB
+  ``{db_path}/{id}``, then register a view over the Parquet. This
+  persists across sessions like the reference's file-backed DuckDB
   catalog (reference: main.rs:126-132), and at scale gives downstream
-  models a pruned columnar scan instead of a recomputation.
+  models a pruned columnar scan instead of a recomputation. Like the
+  reference's transactional ``CREATE OR REPLACE TABLE``, the swap
+  (``catalog.replace_dir``) leaves the old table or the new, never neither.
 
 Each parquet schema is resolved once per SparkSession:
 
@@ -36,11 +38,13 @@ Each parquet schema is resolved once per SparkSession:
   signature (size, mtime, inode) holds. The catalog records the transpiled
   text, never the bound one.
 - Schema-hinted registration. ``_write_table`` and
-  ``_write_incremental`` return the schema they wrote, and the model's
-  view is ``spark.read.schema(schema).parquet(dest)``: no job re-reads
-  the footers just written. The schema goes into the model's catalog
-  entry, so a later session's attach and the next incremental merge
-  read the existing rows without inferring it either.
+  ``_write_incremental`` return the schema they wrote, partition
+  columns included, and the model's view is
+  ``spark.read.schema(schema).parquet(dest)``: no job re-reads the
+  footers just written, and partition columns keep their types. The
+  schema goes into the model's catalog entry, so a later session's
+  attach and the next incremental merge read the existing rows
+  without inferring it either.
 
 A table or incremental model's row count (the reference reads it back
 after its ``CREATE TABLE``, node.rs:179-189) comes from an
@@ -61,6 +65,8 @@ from arnab_spark.catalog import (
     record_macros,
     record_model,
     recorded_schema,
+    recover_dir,
+    replace_dir,
 )
 from arnab_spark.depparse import get_sql_references
 from arnab_spark.dialect import transpile_statement
@@ -214,24 +220,11 @@ class Node:
         return df, pcols
 
     def _write_table(self, df, dest: str):
-        """Layout-applying overwrite write shared by the table path and
-        both incremental write sites. Returns ``(schema, n_rows)``: the
-        schema written to the parquet files (the output's, less the
-        partition columns, which live in the directory names) and the
-        rows written, counted by an ``Observation`` on the write's own
-        job rather than by reading the table back."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
+        """Replace the dir ``dest`` with ``df`` laid out by the model's
+        hints (``catalog.replace_dir``); shared by the table path and
+        both incremental write sites. Returns ``(schema, n_rows)``."""
         df, pcols = self._layout(df)
-        written = Observation()
-        writer = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(dest)
-        schema = StructType([f for f in df.schema.fields if f.name not in pcols])
-        return schema, written.get["n"]
+        return replace_dir(df, dest, pcols)
 
     def _write_incremental(self, spark, df, dest: str, schema=None):
         """Incremental materialization — the reference's explicitly
@@ -241,26 +234,16 @@ class Node:
         Semantics: first run writes the full result. Later runs merge
         into the existing Parquet: with ``unique_key``, new rows win per
         key and untouched keys are preserved (delete+insert upsert);
-        without it, the run's rows are appended. The swap sequence is
-        staging-write → rename dest aside → promote staging → drop the
-        old copy, with recovery of a crashed swap on the next run — a
-        crash at any point leaves either the old or the new
-        materialization intact, never neither. At warehouse scale the
-        same merge runs per partition (or via MERGE INTO on a lakehouse
-        table format). ``schema`` is the one the catalog recorded for
-        ``dest``, so reading the existing rows infers nothing (None:
-        infer). Returns ``(schema, n_rows)`` as ``_write_table``; on a
-        merge, the rows of the merged table.
+        without it, the run's rows are appended. The merged rows go
+        through ``_write_table``'s staged swap (old or new, never
+        neither), after a swap cut short is undone. At warehouse scale
+        the same merge runs per partition (or via MERGE INTO on a
+        lakehouse table format). ``schema`` is the one the catalog
+        recorded for ``dest``, so reading the existing rows infers
+        nothing (None: infer). Returns ``(schema, n_rows)`` as
+        ``_write_table``; on a merge, the rows of the merged table.
         """
-        import os
-        import shutil
-
-        old = f"{dest}__old"
-        if not os.path.isdir(dest) and os.path.isdir(old):
-            # a previous run crashed between renames — restore the old
-            # materialization (that merge is lost, history is not)
-            os.rename(old, dest)
-        if not os.path.isdir(dest):
+        if not recover_dir(dest):
             return self._write_table(df, dest)
         existing = read_table(spark, dest, schema)
         if self.unique_key:
@@ -274,13 +257,7 @@ class Node:
             merged = df.unionByName(survivors)
         else:
             merged = existing.unionByName(df)
-        staging = f"{dest}__staging"
-        written = self._write_table(merged, staging)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(dest, old)
-        os.rename(staging, dest)
-        shutil.rmtree(old, ignore_errors=True)
-        return written
+        return self._write_table(merged, dest)
 
     def _materialize(self, spark, df, db_path: str) -> int:
         """Write ``df`` as the model's parquet dir under ``db_path``,
@@ -298,13 +275,13 @@ class Node:
 
     def _register_table(self, spark, schema, dest: str) -> None:
         """Expose the just-written parquet dir as the model's view,
-        typed by the ``schema`` just written: a plain
-        ``spark.read.parquet`` would run a job to re-infer it from the
-        footers. Partition columns are discovered from the directory
-        names, as a plain read discovers them. The dir is also recorded
-        as the table's backing, so dialect-level DML (INSERT/DELETE/
-        UPDATE through the node.rs:176 passthrough) persists through a
-        staged swap of it."""
+        typed by the ``schema`` just written, partition columns
+        included: a plain ``spark.read.parquet`` would run a job to
+        re-infer it from the footers, and would type each partition
+        column by what its directory names look like. The dir is also
+        recorded as the table's backing, so dialect-level DML (INSERT/
+        DELETE/UPDATE through the node.rs:176 passthrough) persists
+        through a staged swap of it."""
         from arnab_spark.dialect import table_backing_for
 
         read_table(spark, dest, schema).createOrReplaceTempView(self.id)

@@ -37,7 +37,8 @@ in SURVEY.md §1.3/§7:
     per model, each model's Spark jobs in job group ``arnab:<id>``
     (thread-local under PySpark's pinned-thread mode);
   - shared state is locked at three points: the catalog and macro file
-    writes (``catalog._FILE_LOCK``), the session's scan views
+    writes (``catalog._locked``, a file lock that also serializes
+    processes sharing the warehouse), the session's scan views
     (``spark_utils.bind_file_scans``), and the per-session registries,
     each created atomically by ``WeakKeyDictionary.setdefault``;
   - the main thread prints each model's status line as it finishes;

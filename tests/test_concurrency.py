@@ -300,6 +300,48 @@ def test_catalog_records_survive_concurrent_writers(tmp_path):
         assert ids == [f"m{t}_{i}" for i in range(25)]
 
 
+def test_catalog_records_survive_concurrent_processes(tmp_path):
+    """Two processes upserting disjoint entries into one warehouse's
+    catalog at once lose none of them: the catalog lock is a file lock,
+    held across processes."""
+    import subprocess
+    import sys
+
+    db_path = str(tmp_path / "wh")
+    worker = textwrap.dedent(
+        """
+        import os, sys, time
+        from arnab_spark.catalog import record_model
+        db_path, tag, tmp = sys.argv[1:]
+        open(os.path.join(tmp, "ready_" + tag), "w").close()
+        while not os.path.exists(os.path.join(tmp, "go")):
+            time.sleep(0.001)
+        for i in range(150):
+            record_model(db_path, f"{tag}_{i}", "view", f"SELECT {i}")
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [
+        subprocess.Popen([sys.executable, "-c", worker, db_path, tag, str(tmp_path)], cwd=repo)
+        for tag in ("a", "b")
+    ]
+    try:
+        deadline = time.monotonic() + 60
+        while not all((tmp_path / f"ready_{tag}").exists() for tag in ("a", "b")):
+            assert time.monotonic() < deadline, "workers did not start"
+            time.sleep(0.01)
+        (tmp_path / "go").touch()
+        assert [p.wait(timeout=120) for p in procs] == [0, 0]
+    finally:
+        for p in procs:
+            p.kill()
+    catalog = load_catalog(db_path)
+    for tag in ("a", "b"):
+        assert [mid for mid in catalog if mid.startswith(tag + "_")] == [
+            f"{tag}_{i}" for i in range(150)
+        ]
+
+
 def test_waits_cover_mentions_and_scripts(tmp_path):
     """A model waits for earlier models it names in a way the dependency
     parser misses (``TABLE a_more``), never for a word in a literal;

@@ -189,6 +189,22 @@ def wide_project(tmp_path):
     return root
 
 
+def _inferred_as_written(spark, db_path, model):
+    """The schema a plain read of ``model``'s dir infers, except that a
+    partition column keeps the type the model wrote: ``part``'s string
+    ``region`` ('0'/'1') is one a plain read infers as an integer from
+    the directory names."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    inferred = spark.read.parquet(os.path.join(db_path, model)).schema
+    if model != "part":
+        return inferred
+    return StructType([
+        StructField(f.name, StringType(), f.nullable) if f.name == "region" else f
+        for f in inferred
+    ])
+
+
 @pytest.mark.parametrize("runs", [1, 2], ids=["first_write", "merge"])
 def test_registered_schema_matches_inferred(spark, wide_project, runs):
     cfg = load_config(wide_project)
@@ -198,20 +214,20 @@ def test_registered_schema_matches_inferred(spark, wide_project, runs):
         assert report.ok, report.errors
     assert report.results["inc"].n_rows == 4
     for model in ("wide", "tbl", "inc", "part"):
-        inferred = s.read.parquet(os.path.join(cfg.db_path, model)).schema
-        assert s.table(model).schema == inferred, model
+        assert s.table(model).schema == _inferred_as_written(s, cfg.db_path, model), model
         # the count observed on the write equals a readback
         assert report.results[model].n_rows == s.table(model).count(), model
-    # the partition columns come from the directory names, typed as a
-    # plain read types them (region '0'/'1' reads back as an integer)
+    # the partition columns come last, as a plain read orders them, and
+    # keep the written type (region '0'/'1' reads back as a string)
     assert s.table("part").schema.names[-2:] == ["region", "bucket"]
-    assert s.table("part").schema["region"].dataType.typeName() == "integer"
+    assert s.table("part").schema["region"].dataType.typeName() == "string"
 
 
 def test_attach_with_recorded_schemas_runs_no_job(spark, wide_project):
     """Table entries carry the schema their write recorded, so a fresh
     session attaches them without a Spark job, typed as a plain read
-    of the files would type them."""
+    of the files would type them except for partition columns, which
+    keep their written type."""
     cfg = load_config(wide_project)
     assert Session(cfg, spark.newSession()).run(quiet=True).ok
     cat = load_catalog(cfg.db_path)
@@ -221,5 +237,4 @@ def test_attach_with_recorded_schemas_runs_no_job(spark, wide_project):
     assert attach_warehouse(fresh, cfg.db_path) == list(cat)
     assert _max_job_id(spark) == before
     for model in cat:
-        inferred = fresh.read.parquet(os.path.join(cfg.db_path, model)).schema
-        assert fresh.table(model).schema == inferred, model
+        assert fresh.table(model).schema == _inferred_as_written(fresh, cfg.db_path, model), model
