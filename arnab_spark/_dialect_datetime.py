@@ -5,12 +5,8 @@ Java-pattern translation where an exact twin exists, SQL-expression
 compilation for the directives with none — %U/%W/%V/%G/%u/%w/…), the
 conservative constant-expression evaluator (``_FoldEval``) that folds
 CASE/concat-built format strings the way DuckDB's binder does, and the
-scalar-call registrations they feed into ``_ARG_CALL_REWRITES``.
-
-INTERNAL — import these names via :mod:`arnab_spark.dialect` (see the
-note in ``_dialect_statements.py``). The registrations at the bottom
-mutate the core module's ``_ARG_CALL_REWRITES`` dict when the core
-re-export imports this module.
+call builders :func:`_strf_rewrite` and :func:`_strp_rewrite`, which
+:mod:`arnab_spark.dialect` lists in its ``_ARG_CALL_REWRITES`` table.
 """
 
 from __future__ import annotations
@@ -18,7 +14,7 @@ from __future__ import annotations
 import re
 
 from arnab_spark import lexer
-from arnab_spark.dialect import _ARG_CALL_REWRITES, _lit_match
+from arnab_spark._dialect_base import _lit_match
 
 #: C-style (strftime) directive → Spark/Java datetime pattern. Only
 #: directives with an exact Java twin are mapped; any other % code makes
@@ -940,8 +936,3 @@ def _strp_rewrite(try_variant: bool):
         return _c_parse_to_sql_expr(fmt, a[0], fail)
 
     return build
-
-
-_ARG_CALL_REWRITES["strftime"] = (2, _strf_rewrite("date_format"))
-_ARG_CALL_REWRITES["strptime"] = (2, _strp_rewrite(False))
-_ARG_CALL_REWRITES["try_strptime"] = (2, _strp_rewrite(True))

@@ -1,26 +1,32 @@
 """Mutable-table statement surface split out of
 :mod:`arnab_spark.dialect` (round 12, maintainability split): the DML
 lift (INSERT / DELETE / UPDATE / TRUNCATE with the copy-on-write fast
-paths), table DDL (CREATE / DROP / ALTER TABLE), COPY <table> FROM,
-EXPORT / IMPORT DATABASE, and the warehouse/session table registries.
+paths), table DDL (CREATE / DROP / ALTER TABLE), COPY <table> FROM and
+EXPORT / IMPORT DATABASE.
 
 The reference executes these natively through its embedded DuckDB
 (reference: node.rs:176); here tables are parquet dirs re-exposed as
 temp views and DML is a read-transform-persist (staged swap / O(batch)
-part-file append / partition-pruned dynamic overwrite).
-
-INTERNAL — import these names via :mod:`arnab_spark.dialect` (see the
-note in ``_dialect_statements.py``).
+part-file append / partition-pruned dynamic overwrite). Which views are
+tables, which dirs back them and where the warehouse is are read from
+the session's :class:`~arnab_spark._dialect_base.DialectState`.
 """
 
 from __future__ import annotations
 
 import re
-from weakref import WeakKeyDictionary
 
 from arnab_spark import lexer
-from arnab_spark.dialect import _resolve_path, transpile_statement
-from arnab_spark._dialect_statements import _attached_for
+from arnab_spark._dialect_base import _resolve_path, state_for
+
+
+def _transpile(sql: str, spark) -> str:
+    """:func:`arnab_spark.dialect.transpile_statement`, for the lifts
+    that transpile a statement's body or the relation they write."""
+    from arnab_spark.dialect import transpile_statement
+
+    return transpile_statement(sql, spark)
+
 
 # ------------------------------------------- DML: INSERT / DELETE / UPDATE
 #
@@ -34,63 +40,6 @@ from arnab_spark._dialect_statements import _attached_for
 # view. Spark-native catalog tables keep their native paths where one
 # exists (INSERT INTO, TRUNCATE) and get the overwrite lift where
 # Spark has none (DELETE/UPDATE on v1 tables).
-
-_BACKING_FALLBACK: dict = {}
-
-# weak keys so a discarded session's registry is collectable
-# (round 15: the name is now imported at module level — the old
-# try/except silently fell back to a strong dict on NameError)
-_BACKING_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def table_backing_for(spark) -> dict:
-    """Lowered view name → parquet dir backing it (written by
-    ``node.py`` on table/incremental materialization and by
-    ``catalog.attach_warehouse`` for the session's own warehouse).
-    DML statements against these names persist through a staged
-    parquet swap, so the mutation survives the session — parity with
-    the reference's DuckDB-file persistence."""
-    if spark is None:
-        return _BACKING_FALLBACK
-    return _BACKING_BY_SESSION.setdefault(spark, {})
-
-
-# weak keys so a discarded session's registry is collectable
-# (round 15: the name is now imported at module level — the old
-# try/except silently fell back to a strong dict on NameError)
-_WAREHOUSE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def set_warehouse_for(spark, db_path: str | None) -> None:
-    """Record the session's warehouse dir (A2 connection open) so
-    script-level ``CREATE [OR REPLACE] TABLE`` persists there — the
-    Spark twin of DuckDB tables living in the opened database file."""
-    if spark is not None and db_path:
-        _WAREHOUSE_BY_SESSION[spark] = db_path
-
-
-def warehouse_for(spark) -> str | None:
-    if spark is None:
-        return None
-    return _WAREHOUSE_BY_SESSION.get(spark)
-
-
-# weak keys so a discarded session's registry is collectable
-# (round 15: the name is now imported at module level — the old
-# try/except silently fell back to a strong dict on NameError)
-_SESSION_TABLES_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def session_tables_for(spark) -> set:
-    """Lowered names created by the script-level CREATE TABLE lift
-    WITHOUT a warehouse backing (DuckDB temp / in-memory-DB tables).
-    They live as eagerly-checkpointed temp views; membership here is
-    what distinguishes a mutable TABLE from a view — DuckDB rejects
-    DML against views, and so does this shim."""
-    if spark is None:
-        return set()
-    return _SESSION_TABLES_BY_SESSION.setdefault(spark, set())
-
 
 _DML_IDENT = r'(?:"[^"]+"|[A-Za-z_]\w*)'
 _DML_QUAL = rf"{_DML_IDENT}(?:\s*\.\s*{_DML_IDENT})*"
@@ -138,7 +87,7 @@ def _dml_resolve(spark, raw_target: str, on_view: str = "raise"):
         parts.pop(0)
     if len(parts) > 1:
         alias = parts[0].lower()
-        attached = _attached_for(spark)
+        attached = state_for(spark).attached
         if alias in attached:
             raise ArnabError(
                 f"DML against attached catalog '{alias}' is not supported: "
@@ -148,10 +97,10 @@ def _dml_resolve(spark, raw_target: str, on_view: str = "raise"):
             )
         return None, None  # qualified non-attached name: Spark's problem
     name = parts[0]
-    backing = table_backing_for(spark)
+    backing = state_for(spark).backing
     if name.lower() in backing:
         return name, "backed"
-    if name.lower() in session_tables_for(spark):
+    if name.lower() in state_for(spark).session_tables:
         return name, "tempview"
     try:
         tbl = spark.catalog.getTable(name)
@@ -208,7 +157,7 @@ def _register_backed(spark, name: str, dest: str, schema) -> None:
     from arnab_spark.catalog import read_table, record_schema
 
     read_table(spark, dest, schema).createOrReplaceTempView(name)
-    wh = warehouse_for(spark)
+    wh = state_for(spark).warehouse
     if wh and _os.path.dirname(_os.path.normpath(dest)) == _os.path.normpath(wh):
         record_schema(wh, _os.path.basename(_os.path.normpath(dest)), schema)
 
@@ -226,7 +175,7 @@ def _dml_append(spark, name: str, aligned) -> None:
     import os as _os
     import shutil as _shutil
 
-    dest = table_backing_for(spark)[name.lower()]
+    dest = state_for(spark).backing[name.lower()]
     pcols = _hive_partition_cols(dest)
     staging = f"{dest}__dml_append"
     w = aligned.write.mode("overwrite")
@@ -257,12 +206,12 @@ def _dml_pruned_rewrite(
     The touched-partition list is a ``collect`` bounded by the table's
     partition count — a layout choice, not a data-sized set (the same
     bound the layout hint's one-file-per-partition write relies on)."""
-    dest = table_backing_for(spark)[name.lower()]
+    dest = state_for(spark).backing[name.lower()]
     rel = rel or f"`{name}`"
     kill = f"coalesce(({pred}), false)" if pred else "true"
     touched = (
         spark.sql(
-            transpile_statement(
+            _transpile(
                 f"SELECT DISTINCT {', '.join(f'`{c}`' for c in pcols)} "
                 f"FROM {rel} WHERE {kill}",
                 spark,
@@ -281,7 +230,7 @@ def _dml_pruned_rewrite(
         return False
     survivors = (
         spark.sql(
-            transpile_statement(f"SELECT * FROM {rel} WHERE NOT {kill}", spark)
+            _transpile(f"SELECT * FROM {rel} WHERE NOT {kill}", spark)
         )
         .filter(_touched_filter(touched, pcols))
         .localCheckpoint(eager=True)  # break lineage off the files being replaced
@@ -303,7 +252,7 @@ def _dml_persist(spark, name: str, kind: str, df):
     if kind == "backed":
         from arnab_spark.catalog import replace_dir
 
-        dest = table_backing_for(spark)[name.lower()]
+        dest = state_for(spark).backing[name.lower()]
         # a hive-partitioned table keeps its layout through the swap (a
         # flat rewrite would disable every later pruned fast path); a
         # partition column the new relation lacks (ALTER TABLE DROP/
@@ -329,13 +278,6 @@ def _dml_persist(spark, name: str, kind: str, df):
             spark.catalog.dropTempView(tmp)
 
 
-#: session -> (view_name, checkpointed DataFrame) for the ONE outstanding
-#: RETURNING result. Weak keys so a discarded SparkSession (plus its
-#: checkpoint) stays collectable (round 15, advice: the name was
-#: previously unimported, so this silently fell back to a strong dict).
-_RETURNING_VIEWS_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
 def _freeze_returning_rows(spark, rows_df) -> str:
     """Freeze a RETURNING row set (eager localCheckpoint) under a temp
     view BEFORE the mutation lands, reaping the PREVIOUS statement's
@@ -350,8 +292,8 @@ def _freeze_returning_rows(spark, rows_df) -> str:
     The reap drops only the TEMP VIEW; the checkpoint itself is NOT
     eagerly unpersisted (round 15, advice): a caller may still hold the
     prior RETURNING DataFrame un-collected (``spark.sql`` is lazy), and
-    yanking its blocks would fail that later action. Dropping our
-    registry reference is enough — once the caller's own reference goes,
+    yanking its blocks would fail that later action. Dropping the
+    state's reference is enough — once the caller's own reference goes,
     Python GC releases the py4j handle and Spark's ContextCleaner
     reclaims the checkpoint blocks. Session teardown
     (:meth:`arnab_spark.session.Session.run` epilogue) reaps the final
@@ -362,17 +304,18 @@ def _freeze_returning_rows(spark, rows_df) -> str:
     view = f"__arnab_returning_{uuid.uuid4().hex[:10]}"
     ckpt = rows_df.localCheckpoint(eager=True)
     ckpt.createOrReplaceTempView(view)
-    _RETURNING_VIEWS_BY_SESSION[spark] = (view, ckpt)
+    state_for(spark).returning_view = (view, ckpt)
     return view
 
 
 def reap_returning_view(spark) -> None:
     """Drop the session's outstanding RETURNING temp view (if any) and
-    release the registry's checkpoint reference. Safe to call when none
+    release the state's checkpoint reference. Safe to call when none
     is outstanding. Called between RETURNING statements and from the
     run-loop epilogue so no ``__arnab_returning_*`` view survives a
     completed run."""
-    prev = _RETURNING_VIEWS_BY_SESSION.pop(spark, None)
+    state = state_for(spark)
+    prev, state.returning_view = state.returning_view, None
     if prev is not None:
         view_name, _ckpt = prev
         try:
@@ -409,10 +352,13 @@ def _overwrite_touched_partitions(
 ) -> None:
     """Dynamic-overwrite the touched hive partitions with ``survivors``
     (the post-statement rows of those partitions, already
-    checkpointed), drop the dirs of partitions left empty (dynamic
-    overwrite only replaces partitions PRESENT in the frame), and keep
-    the table readable when every partition died — DuckDB parity:
-    empty table, schema intact."""
+    checkpointed). ``touched_keys`` are the partitions a DELETE may
+    have emptied: their dirs are dropped when no survivor lands there
+    (dynamic overwrite only replaces partitions PRESENT in the frame),
+    and the table stays readable when every partition died — DuckDB
+    parity: empty table, schema intact. An UPDATE moves no row between
+    partitions, so it passes no keys and skips the job that finds the
+    live ones."""
     import os as _os
     import shutil as _shutil
 
@@ -424,16 +370,17 @@ def _overwrite_touched_partitions(
         .partitionBy(*pcols)
         .parquet(dest)
     )
-    alive = {
-        tuple(r[c] for c in pcols)
-        for r in survivors.select(*pcols).distinct().collect()
-    }
-    for key in touched_keys:
-        if key not in alive:
-            sub = _os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
-            _shutil.rmtree(sub, ignore_errors=True)
-    if not has_part_files(dest):
-        replace_dir(spark.createDataFrame([], survivors.schema), dest)
+    if touched_keys:
+        alive = {
+            tuple(r[c] for c in pcols)
+            for r in survivors.select(*pcols).distinct().collect()
+        }
+        for key in touched_keys:
+            if key not in alive:
+                sub = _os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
+                _shutil.rmtree(sub, ignore_errors=True)
+        if not has_part_files(dest):
+            replace_dir(spark.createDataFrame([], survivors.schema), dest)
     _register_backed(spark, name, dest, spark.table(name).schema)
 
 
@@ -545,7 +492,7 @@ def _rewrite_update_from(sql: str, ret_clause, spark, returning_select):
             + [f"`{tgt}`.`{f.name}` AS `{f.name}`" for f in fields]
         )
         pairs = spark.sql(
-            transpile_statement(
+            _transpile(
                 f"SELECT {', '.join(items)} FROM `{rid_view}` AS `{tgt}`, "
                 f"{fromtext} WHERE {cond}",
                 spark,
@@ -600,7 +547,7 @@ def _rewrite_update_from(sql: str, ret_clause, spark, returning_select):
             else:
                 sel.append(F.col(f.name))
         if kind == "backed":
-            dest = table_backing_for(spark)[name.lower()]
+            dest = state_for(spark).backing[name.lower()]
             pcols = _hive_partition_cols(dest)
             if pcols and not (set(assigns) & {c.lower() for c in pcols}):
                 touched = (
@@ -612,18 +559,13 @@ def _rewrite_update_from(sql: str, ret_clause, spark, returning_select):
                 if not touched:
                     return returning_select(ret_view) if ret_view else ""
                 if all(_plain_hive_value(r[c]) for r in touched for c in pcols):
-                    survivors = (
+                    updated = (
                         joined.filter(_touched_filter(touched, pcols))
                         .select(*sel)
                         .localCheckpoint(eager=True)
                     )
                     _overwrite_touched_partitions(
-                        spark,
-                        name,
-                        dest,
-                        pcols,
-                        [tuple(r[c] for c in pcols) for r in touched],
-                        survivors,
+                        spark, name, dest, pcols, (), updated
                     )
                     return returning_select(ret_view) if ret_view else ""
         _dml_persist(spark, name, kind, joined.select(*sel))
@@ -671,7 +613,7 @@ def _rewrite_delete_using(sql: str, ret_clause, spark, returning_select):
     try:
         cond = f"coalesce(({pred}), false)" if pred else "true"
         matches = spark.sql(
-            transpile_statement(
+            _transpile(
                 f"SELECT `{tgt}`.* FROM `{rid_view}` AS `{tgt}`, "
                 f"{fromtext} WHERE {cond}",
                 spark,
@@ -682,7 +624,7 @@ def _rewrite_delete_using(sql: str, ret_clause, spark, returning_select):
             ret_view = _freeze_returning_rows(spark, matches.drop("__arnab_rid"))
         matched_rids = matches.select("__arnab_rid").distinct()
         if kind == "backed":
-            dest = table_backing_for(spark)[name.lower()]
+            dest = state_for(spark).backing[name.lower()]
             pcols = _hive_partition_cols(dest)
             if pcols:
                 touched = matches.select(*pcols).distinct().collect()
@@ -881,7 +823,7 @@ def _rewrite_create_table(sql: str, spark):
         parts.pop(0)
     if len(parts) > 1:
         alias = parts[0].lower()
-        if alias in _attached_for(spark):
+        if alias in state_for(spark).attached:
             raise ArnabError(
                 f"CREATE TABLE in attached catalog '{alias}' is not "
                 "supported: attached catalogs are read-only in this engine."
@@ -890,8 +832,8 @@ def _rewrite_create_table(sql: str, spark):
     name = parts[0]
 
     exists = (
-        name.lower() in table_backing_for(spark)
-        or name.lower() in session_tables_for(spark)
+        name.lower() in state_for(spark).backing
+        or name.lower() in state_for(spark).session_tables
     )
     if not exists:
         try:
@@ -922,11 +864,11 @@ def _rewrite_create_table(sql: str, spark):
             casts.append(f"CAST(NULL AS {dm.group(2).strip()}) AS `{cn}`")
         body = f"SELECT {', '.join(casts)} WHERE false"
 
-    df = spark.sql(transpile_statement(body, spark))
-    wh = None if m.group("temp") else warehouse_for(spark)
+    df = spark.sql(_transpile(body, spark))
+    wh = None if m.group("temp") else state_for(spark).warehouse
     if wh is None:
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
-        session_tables_for(spark).add(name.lower())
+        state_for(spark).session_tables.add(name.lower())
     else:
         import os as _os
 
@@ -934,12 +876,12 @@ def _rewrite_create_table(sql: str, spark):
 
         dest = _os.path.join(wh, name)
         if _os.path.exists(dest):
-            table_backing_for(spark)[name.lower()] = dest
+            state_for(spark).backing[name.lower()] = dest
             schema = _dml_persist(spark, name, "backed", df)
         else:
             schema, _ = replace_dir(df, dest)
             _register_backed(spark, name, dest, schema)
-            table_backing_for(spark)[name.lower()] = dest
+            state_for(spark).backing[name.lower()] = dest
         record_model(wh, name, "table", schema=schema)
     return ""
 
@@ -968,17 +910,17 @@ def _rewrite_drop_table(sql: str, spark):
         import os as _os
         import shutil as _shutil
 
-        dest = table_backing_for(spark).pop(name.lower())
+        dest = state_for(spark).backing.pop(name.lower())
         spark.catalog.dropTempView(name)
         _shutil.rmtree(dest, ignore_errors=True)
-        wh = warehouse_for(spark)
+        wh = state_for(spark).warehouse
         if wh and _os.path.dirname(dest) == _os.path.normpath(wh):
             from arnab_spark.catalog import remove_model
 
             remove_model(wh, name)
         return ""
     if kind == "tempview":
-        session_tables_for(spark).discard(name.lower())
+        state_for(spark).session_tables.discard(name.lower())
         spark.catalog.dropTempView(name)
         return ""
     return None
@@ -1022,7 +964,7 @@ def _rewrite_alter_table(sql: str, spark):
         if kind == "backed":
             import os as _os
 
-            backing = table_backing_for(spark)
+            backing = state_for(spark).backing
             dest = backing.pop(name.lower())
             new_dest = _os.path.join(_os.path.dirname(dest), new)
             _os.rename(dest, new_dest)
@@ -1030,7 +972,7 @@ def _rewrite_alter_table(sql: str, spark):
             schema = spark.table(name).schema
             spark.catalog.dropTempView(name)
             _register_backed(spark, new, new_dest, schema)
-            wh = warehouse_for(spark)
+            wh = state_for(spark).warehouse
             if wh and _os.path.dirname(new_dest) == _os.path.normpath(wh):
                 from arnab_spark.catalog import record_model, remove_model
 
@@ -1040,8 +982,8 @@ def _rewrite_alter_table(sql: str, spark):
             df = spark.table(name)
             spark.catalog.dropTempView(name)
             df.createOrReplaceTempView(new)
-            session_tables_for(spark).discard(name.lower())
-            session_tables_for(spark).add(new.lower())
+            state_for(spark).session_tables.discard(name.lower())
+            state_for(spark).session_tables.add(new.lower())
         return ""
 
     rc = re.match(
@@ -1078,7 +1020,7 @@ def _rewrite_alter_table(sql: str, spark):
                 return ""
             raise ArnabError(f"ALTER TABLE {name}: column '{col}' already exists")
         add = spark.sql(
-            transpile_statement(
+            _transpile(
                 f"SELECT *, CAST(NULL AS {ctype}) AS `{col}` FROM `{name}`", spark
             )
         )
@@ -1123,7 +1065,7 @@ def _rewrite_alter_table(sql: str, spark):
             for c in t.columns
         ]
         altered = spark.sql(
-            transpile_statement(
+            _transpile(
                 f"SELECT {', '.join(sel)} FROM `{name}`", spark
             )
         )
@@ -1287,7 +1229,7 @@ def _rewrite_export_import_db(sql: str, spark):
                 raise ArnabError(f"IMPORT DATABASE: missing {p}")
             with open(p, encoding="utf-8") as fh:
                 for stmt in Node.split_statements(Node.strip_comments(fh.read())):
-                    out = transpile_statement(stmt, spark)
+                    out = _transpile(stmt, spark)
                     if out.strip():
                         spark.sql(out)
         return ""
@@ -1306,13 +1248,12 @@ def _rewrite_export_import_db(sql: str, spark):
     if fmt not in ("parquet", "csv"):
         raise ArnabError(f"EXPORT DATABASE: unsupported FORMAT '{fmt}'")
     _os.makedirs(d, exist_ok=True)
-    tables = sorted(
-        set(table_backing_for(spark)) | session_tables_for(spark)
-    )
+    state = state_for(spark)
+    backing = state.backing
+    tables = sorted(set(backing) | state.session_tables)
     schema_lines, load_lines = [], []
-    backing = table_backing_for(spark)
     for t in tables:
-        # a registry entry can outlive its view or backing dir (a
+        # a backing entry can outlive its view or backing dir (a
         # previous pipeline's since-deleted warehouse); a dead entry
         # is not a table this session can read, so skip it loudly
         # rather than crash the export of the live ones
@@ -1347,7 +1288,7 @@ def _rewrite_export_import_db(sql: str, spark):
             load_lines.append(
                 f"COPY {t} FROM '{data}/*.csv' (FORMAT 'csv', HEADER 1);"
             )
-    wh = warehouse_for(spark)
+    wh = state_for(spark).warehouse
     if wh is not None:
         from arnab_spark.catalog import load_catalog
 
@@ -1437,7 +1378,7 @@ def _rewrite_dml(sql: str, spark):
         return _freeze_returning_rows(spark, rows_df)
 
     def _returning_select(view: str) -> str:
-        return transpile_statement(f"SELECT {ret_clause} FROM {view}", spark)
+        return _transpile(f"SELECT {ret_clause} FROM {view}", spark)
 
     def _require_engine_table(raw_target: str, verb: str):
         # round 14 (advice): once RETURNING is stripped, a None-kind
@@ -1490,7 +1431,7 @@ def _rewrite_dml(sql: str, spark):
             dcond = f"coalesce(({pred}), false)" if pred else "true"
             ret_view = _freeze_rows(
                 spark.sql(
-                    transpile_statement(
+                    _transpile(
                         f"SELECT * FROM {rel} WHERE {dcond}", spark
                     )
                 )
@@ -1499,13 +1440,13 @@ def _rewrite_dml(sql: str, spark):
             # copy-on-write fast path: rewrite only the hive partitions
             # the predicate touches (falls through on flat layouts /
             # NULL partition values)
-            pcols = _hive_partition_cols(table_backing_for(spark)[name.lower()])
+            pcols = _hive_partition_cols(state_for(spark).backing[name.lower()])
             if pcols and _dml_pruned_rewrite(spark, name, pcols, pred, rel):
                 return _returning_select(ret_view) if ret_view else ""
         # DuckDB deletes rows where the predicate is TRUE; NULL keeps
         cond = f"NOT coalesce(({pred}), false)" if pred else "false"
         kept = spark.sql(
-            transpile_statement(f"SELECT * FROM {rel} WHERE {cond}", spark)
+            _transpile(f"SELECT * FROM {rel} WHERE {cond}", spark)
         )
         _dml_persist(spark, name, kind, kept)
         return _returning_select(ret_view) if ret_view else ""
@@ -1540,7 +1481,7 @@ def _rewrite_dml(sql: str, spark):
             f" AS `{um.group('alias').strip(chr(34))}`" if um.group("alias") else ""
         )
         raw = spark.sql(
-            transpile_statement(
+            _transpile(
                 f"SELECT {', '.join(helper_items)}, * FROM {rel}", spark
             )
         )
@@ -1571,7 +1512,7 @@ def _rewrite_dml(sql: str, spark):
             # targets a partition column (rows would move between
             # partitions, stranding stale copies under dynamic
             # overwrite: that shape takes the full swap)
-            dest = table_backing_for(spark)[name.lower()]
+            dest = state_for(spark).backing[name.lower()]
             pcols = _hive_partition_cols(dest)
             if pcols and not (set(assigns) & {c.lower() for c in pcols}):
                 touched = (
@@ -1585,25 +1526,14 @@ def _rewrite_dml(sql: str, spark):
                     # no-op yields the frozen empty set)
                     return _returning_select(ret_view) if ret_view else ""
                 if not any(r[c] is None for r in touched for c in pcols):
-                    tfilter = None
-                    for r in touched:
-                        c_and = None
-                        for c in pcols:
-                            eq = F.col(c) == F.lit(r[c])
-                            c_and = eq if c_and is None else (c_and & eq)
-                        tfilter = c_and if tfilter is None else (tfilter | c_and)
                     updated = (
-                        raw.filter(tfilter)
+                        raw.filter(_touched_filter(touched, pcols))
                         .select(*sel)
                         .localCheckpoint(eager=True)
                     )
-                    (
-                        updated.write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy(*pcols)
-                        .parquet(dest)
+                    _overwrite_touched_partitions(
+                        spark, name, dest, pcols, (), updated
                     )
-                    _register_backed(spark, name, dest, spark.table(name).schema)
                     return _returning_select(ret_view) if ret_view else ""
         _dml_persist(spark, name, kind, raw.select(*sel))
         return _returning_select(ret_view) if ret_view else ""
@@ -1659,7 +1589,7 @@ def _rewrite_dml(sql: str, spark):
                 "expected VALUES, SELECT, WITH, or FROM"
             )
         target = spark.table(name)
-        new = spark.sql(transpile_statement(body_sql, spark))
+        new = spark.sql(_transpile(body_sql, spark))
         aligned = _dml_align(new, target.schema.fields, cols, by_name)
         ret_view = None
         if ret_clause is not None:

@@ -6,25 +6,21 @@ transactions, INSTALL/LOAD + VACUUM/ANALYZE, USE, the ASOF JOIN
 rewrite, read-function file lists, and the loud POSITIONAL JOIN /
 CREATE SEQUENCE rejections.
 
-INTERNAL — import these names via :mod:`arnab_spark.dialect`, which
-re-exports them at its bottom (importing THIS module directly in a
-fresh interpreter deadlocks the circular bootstrap on purpose: the
-public surface is ``arnab_spark.dialect``). Quoting and the scan
-helpers come from :mod:`arnab_spark.lexer`; the core helpers this
-module uses are imported when the core re-export runs, at which point
-they are all defined.
+The macros, attached catalogs, ``USE`` alias and temp-view names these
+rewrites register live in the session's
+:class:`~arnab_spark._dialect_base.DialectState`.
 """
 
 from __future__ import annotations
 
 import re
-from weakref import WeakKeyDictionary
 
 from arnab_spark import lexer
-from arnab_spark.dialect import (
+from arnab_spark._dialect_base import (
     _lit_match,
     _resolve_path,
-    transpile_statement,
+    _user_cache_base,
+    state_for,
 )
 
 # ------------------------------------------------------- DuckDB macros
@@ -43,40 +39,6 @@ _CREATE_MACRO = re.compile(
     r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?MACRO\s+"
     r"([A-Za-z_]\w*)\s*\("
 )
-_MACRO_FALLBACK: dict[str, tuple[list[str], str, bool]] = {}
-
-# weak keys so a closed session's registries are collectable
-_MACRO_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def _macros_for(spark) -> dict[str, tuple[list[str], str, bool, bool]]:
-    if spark is None:
-        return _MACRO_FALLBACK
-    return _MACRO_BY_SESSION.setdefault(spark, {})
-
-
-_DROPPED_FALLBACK: set = set()
-
-_DROPPED_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def dropped_macros_for(spark) -> set:
-    """Names DROP MACRO removed this session. ``record_macros`` deletes
-    these from the persisted warehouse file so a drop of a persisted
-    macro is durable (DuckDB parity: DROP MACRO persists in the
-    database file — round-5 advice; previously the dropped macro
-    resurrected on the next attach)."""
-    if spark is None:
-        return _DROPPED_FALLBACK
-    return _DROPPED_BY_SESSION.setdefault(spark, set())
-
-
-def reset_macros(spark=None) -> None:
-    """Drop registered macros (the ``spark=None`` fallback registry is
-    process-global — tests exercising sessionless transpile reset it)."""
-    _macros_for(spark).clear()
-    dropped_macros_for(spark).clear()
-
 
 # ---------------------------------------------------- ATTACH / DETACH
 #
@@ -95,36 +57,6 @@ _ATTACH_STMT = re.compile(
 _DETACH_STMT = re.compile(
     r"(?is)^\s*DETACH\s+(?:DATABASE\s+)?([A-Za-z_]\w*)\s*;?\s*$"
 )
-_ATTACH_FALLBACK: dict[str, set[str]] = {}
-_ATTACHED_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def _attached_for(spark) -> dict[str, set[str]]:
-    if spark is None:
-        return _ATTACH_FALLBACK
-    return _ATTACHED_BY_SESSION.setdefault(spark, {})
-
-
-def reset_attached(spark=None) -> None:
-    _attached_for(spark).clear()
-
-
-_TEMP_DDL_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-_TEMP_DDL_FALLBACK: set = set()
-
-
-def _temp_ddl_for(spark) -> set:
-    """Names created via an EXPLICIT ``CREATE TEMP[ORARY] VIEW`` DDL in
-    this session. In DuckDB those live in the ``temp`` database
-    (``temporary = true`` in SHOW ALL TABLES), while warehouse models —
-    which this engine also registers as Spark temp views — are tables/
-    views of the CURRENT database (``memory``, ``temporary = false``).
-    The Spark catalog cannot tell the two apart, so the distinction is
-    recorded at DDL time (statement parity for node.rs:176 run-files)."""
-    if spark is None:
-        return _TEMP_DDL_FALLBACK
-    return _TEMP_DDL_BY_SESSION.setdefault(spark, set())
-
 
 _TEMP_VIEW_DDL = re.compile(
     r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+VIEW\s+"
@@ -140,37 +72,6 @@ _PERM_VIEW_DDL = re.compile(
     r'(?P<ine>IF\s+NOT\s+EXISTS\s+)?("?)(?P<name>[A-Za-z_]\w*)\3\s+AS\s+'
     r"(?P<body>.*?)\s*;?\s*$"
 )
-
-
-def _user_cache_base(kind: str) -> str:
-    """Per-user cache directory (``$TMPDIR/arnab_spark_<kind>_<uid>``),
-    created 0700 and ownership-verified before reuse. If a same-named
-    path exists but is a symlink or owned by someone else (a squatting
-    attack on multi-user hosts), fall back to a fresh ``mkdtemp`` —
-    correctness over cache reuse. Shared by the ATTACH export cache and
-    the https ``read_parquet`` fetch cache (round-5 advice: the scheme
-    was applied to ATTACH only, leaving the remote fetch cache on a
-    world-shared predictable path)."""
-    import os as _os
-    import tempfile as _tf
-
-    uid = _os.getuid() if hasattr(_os, "getuid") else 0
-    base = _os.path.join(_tf.gettempdir(), f"arnab_spark_{kind}_{uid}")
-    try:
-        _os.makedirs(base, mode=0o700, exist_ok=True)
-        stb = _os.lstat(base)
-        import stat as _stat
-
-        if (
-            _stat.S_ISDIR(stb.st_mode)
-            and not _stat.S_ISLNK(stb.st_mode)
-            and (not hasattr(_os, "getuid") or stb.st_uid == uid)
-        ):
-            _os.chmod(base, 0o700)
-            return base
-    except OSError:
-        pass
-    return _tf.mkdtemp(prefix=f"arnab_spark_{kind}_")
 
 
 def _attach_cache_base() -> str:
@@ -254,7 +155,7 @@ def _attach_duckdb_file(spark, path: str, alias: str) -> list[str] | None:
             re.match(r"^[A-Za-z_]\w*$", p) for p in (params or [])
         ):
             continue  # operator-named / exotic-param macros: loud at use
-        if mname.lower() in _macros_for(spark):
+        if mname.lower() in state_for(spark).macros:
             # DuckDB resolves unqualified macro calls from the CURRENT
             # database before any attached catalog (probed) — a
             # session-defined macro must therefore win over a
@@ -264,6 +165,8 @@ def _attach_duckdb_file(spark, path: str, alias: str) -> list[str] | None:
         head = f"CREATE OR REPLACE MACRO {mname}({', '.join(params or [])}) AS "
         stmt = head + ("TABLE " + body if mtype == "table_macro" else body)
         try:
+            from arnab_spark.dialect import transpile_statement
+
             transpile_statement(stmt, spark)
         except Exception:
             continue  # unregistrable body: call sites stay loud
@@ -282,7 +185,7 @@ def _visible_catalog_names(spark) -> tuple[list[str], dict[str, tuple[str, str]]
     name to its (alias, model) pair. Internal helper views
     (``_arnab_*`` source caches / probe scratch) are never shown —
     DuckDB has no catalog object for a ``read_csv_auto`` call."""
-    attached = _attached_for(spark)
+    attached = state_for(spark).attached
     local: list[str] = []
     attach_map: dict[str, tuple[str, str]] = {}
     for t in spark.catalog.listTables():
@@ -330,7 +233,7 @@ def _rewrite_show_all_tables(sql: str, spark) -> str:
     from the live Spark catalog: ATTACHed models under their alias
     (``ext/main/<model>``), explicit ``CREATE TEMP VIEW`` DDL names
     under ``temp/main`` with ``temporary = true`` (the
-    :func:`_temp_ddl_for` record), and every other session entry —
+    ``DialectState.temp_ddl`` record), and every other session entry —
     warehouse models, which the reference keeps as tables/views of the
     current database — under ``memory/main`` with ``temporary =
     false``. Types in DuckDB spellings via :func:`_duck_type_name`;
@@ -341,7 +244,7 @@ def _rewrite_show_all_tables(sql: str, spark) -> str:
         local, attach_map = _visible_catalog_names(spark)
     except Exception:
         return sql
-    temp_ddl = _temp_ddl_for(spark)
+    temp_ddl = state_for(spark).temp_ddl
     rows: list[tuple[str, str, str, list[str], list[str], bool]] = []
 
     def _schema_of(view: str):
@@ -787,8 +690,6 @@ def _rewrite_attached_refs(sql: str, attached: dict[str, set[str]]) -> str:
 #: a word of code, with the member it qualifies if a ``.`` follows
 _QUALIFIED_WORD = re.compile(f"({lexer.WORD.pattern})" + r"(?:\.(\w*))?")
 
-
-_USE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
 
 _USE_STMT = re.compile(r'(?is)^\s*USE\s+("?)([A-Za-z_]\w*)\1\s*;?\s*$')
 

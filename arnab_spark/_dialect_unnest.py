@@ -3,30 +3,23 @@
 multi-unnest level-wise zip (posexplode + arrays_zip with alias
 routing), unnest under set-operation arms, ``recursive``/``max_depth``
 flags, and the live-session schema/expression-type probes the deep
-shapes need.
-
-INTERNAL — import these names via :mod:`arnab_spark.dialect` (see the
-note in ``_dialect_statements.py``); the clause rewriters this
-block composes with bind when the core re-export imports this module,
-at which point they are all defined.
+shapes need, memoized in the session's
+:class:`~arnab_spark._dialect_base.DialectState`.
 """
 
 from __future__ import annotations
 
 import re
-from weakref import WeakKeyDictionary
 
 from arnab_spark import lexer
-from arnab_spark.dialect import (
-    _BARE_PATH,
-    _FORMAT_MAP,
-    _READ_FUNC,
+from arnab_spark._dialect_base import (
     _is_set_op_at,
-    _resolve_path,
     _rewrite_distinct_on,
+    _rewrite_file_relations,
     _rewrite_qualify,
     _rewrite_string_split,
     _rewrite_using_sample,
+    state_for,
 )
 from arnab_spark._dialect_statements import _rewrite_asof_join
 
@@ -586,9 +579,6 @@ _UNNEST_FLAG = re.compile(r"(?is)^\s*(recursive|max_depth)\s*:=\s*(.+?)\s*$")
 _TRUE_SPELLINGS = frozenset({"true", "1", "'t'"})
 _FALSE_SPELLINGS = frozenset({"false", "0", "'f'"})
 
-_PROBE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
-
-
 def _probe_schema(head: str, probe_prefix: str, tail: str, spark):
     """ANALYZE (never execute) ``{prefix}SELECT {head} {tail}`` and
     return its Spark schema; ``None`` when unprovable. The probe text
@@ -613,19 +603,8 @@ def _probe_schema(head: str, probe_prefix: str, tail: str, spark):
     probe = _rewrite_qualify(probe)
     probe = _rewrite_distinct_on(probe)
     probe = _rewrite_asof_join(probe)
-    probe = _READ_FUNC.sub(
-        lambda m: f"{_FORMAT_MAP[m.group(1).lower()]}.`{_resolve_path(m.group(2))}`",
-        probe,
-    )
-
-    def _bare(m: re.Match) -> str:
-        path = _resolve_path(m.group(2))
-        low = path.lower()
-        fmt = "parquet" if ".parquet" in low else "csv" if ".csv" in low else "json"
-        return f"{m.group(1)} {fmt}.`{path}`"
-
-    probe = _BARE_PATH.sub(_bare, probe)
-    cache = _PROBE_BY_SESSION.setdefault(spark, {})
+    probe = _rewrite_file_relations(probe)
+    cache = state_for(spark).probe_cache
     if probe in cache:
         return cache[probe]
     try:

@@ -47,6 +47,7 @@ import shutil
 from contextlib import contextmanager
 
 from arnab_spark import lexer
+from arnab_spark._dialect_base import state_for
 
 CATALOG_FILE = "_arnab_catalog.json"
 LOCK_FILE = "_arnab_catalog.lock"
@@ -246,11 +247,9 @@ def _attach_macros(spark, db_path: str) -> list[str]:
     path = os.path.join(db_path, MACROS_FILE)
     if not os.path.isfile(path):
         return []
-    from arnab_spark.dialect import _macros_for
-
     with open(path, encoding="utf-8") as f:
         stored = json.load(f)
-    reg = _macros_for(spark)
+    reg = state_for(spark).macros
     for name, e in stored.items():
         reg.setdefault(name, (e["params"], e["body"], e["is_table"], False))
     return sorted(stored)
@@ -299,9 +298,7 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
                     # the session's OWN warehouse is writable: record the
                     # backing dir so dialect-level DML persists through a
                     # staged swap (ATTACH-aliased catalogs stay read-only)
-                    from arnab_spark.dialect import table_backing_for
-
-                    table_backing_for(spark)[model_id.lower()] = dest
+                    state_for(spark).backing[model_id.lower()] = dest
             else:
                 select = entry["select"]
                 if prefix:

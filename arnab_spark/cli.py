@@ -17,6 +17,7 @@ from __future__ import annotations
 import argparse
 import sys
 
+from arnab_spark._dialect_base import state_for
 from arnab_spark.config import load_config
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError
@@ -112,9 +113,8 @@ def cmd_run_file(args) -> int:
             rc = 1 if args.strict else rc
     if cfg.db_path:
         from arnab_spark.catalog import record_macros
-        from arnab_spark.dialect import _macros_for, dropped_macros_for
-
-        record_macros(cfg.db_path, _macros_for(spark), dropped_macros_for(spark))
+        state = state_for(spark)
+        record_macros(cfg.db_path, state.macros, state.dropped_macros)
     # CLI exit path: reap the final RETURNING view so a completed
     # run-file leaves no __arnab_returning_* temp view behind (round 15)
     from arnab_spark._dialect_dml import reap_returning_view

@@ -62,6 +62,64 @@ import re
 import threading
 
 from arnab_spark import lexer
+from arnab_spark._dialect_base import (
+    _BARE_PATH,
+    _READ_FUNC,
+    _file_relation,
+    _is_set_op_at,
+    _lit_match,
+    _resolve_path,
+    _rewrite_distinct_on,
+    _rewrite_qualify,
+    _rewrite_string_split,
+    _rewrite_using_sample,
+    state_for,
+)
+from arnab_spark._dialect_datetime import _strf_rewrite, _strp_rewrite
+from arnab_spark._dialect_dml import _rewrite_dml
+from arnab_spark._dialect_statements import (
+    _ATTACH_STMT,
+    _CLAUSE_AFTER_ON,
+    _DETACH_STMT,
+    _DROP_VIEW_DDL,
+    _JOIN_WORDS,
+    _PERM_VIEW_DDL,
+    _TEMP_VIEW_DDL,
+    _USE_STMT,
+    _attach_duckdb_file,
+    _expand_macros,
+    _parse_create_macro,
+    _reject_positional_join,
+    _reject_sequences,
+    _rewrite_asof_join,
+    _rewrite_attached_refs,
+    _rewrite_describe,
+    _rewrite_describe_subqueries,
+    _rewrite_extensions,
+    _rewrite_pragmas,
+    _rewrite_read_file_lists,
+    _rewrite_set,
+    _rewrite_show_all_tables,
+    _rewrite_show_tables,
+    _rewrite_summarize,
+    _rewrite_txn,
+    _rewrite_use_fallback,
+)
+from arnab_spark._dialect_unnest import (
+    _FALSE_SPELLINGS,
+    _IDENT,
+    _TRUE_SPELLINGS,
+    _UNNEST_CALL,
+    _UNNEST_FLAG,
+    _UNNEST_TAIL_BLOCKERS,
+    _call_args,
+    _flatten_wrap,
+    _probe_expr_type,
+    _probe_schema,
+    _rewrite_multi_unnest,
+    _rewrite_single_unnest,
+    _rewrite_unnest_set_ops,
+)
 
 # DuckDB allows zero-argument count() (used by the reference's example
 # model, reference: examples/basic/orders_per_product.sql:2).
@@ -74,93 +132,9 @@ def _rewrite_count_zero_arg(sql: str) -> str:
     return lexer.sub(_COUNT_ZERO_ARG, lambda m: "count(*)", sql)
 
 
-# read_parquet('path') / read_csv_auto('path') / read_json_auto('path')
-# → Spark's direct-file-query syntax: parquet.`path` / csv.`path` / ...
-_READ_FUNC = re.compile(
-    r"\bread_(parquet|csv|csv_auto|json|json_auto)\s*\(\s*'([^']+)'\s*\)",
-    re.IGNORECASE,
-)
-
-_FORMAT_MAP = {
-    "parquet": "parquet",
-    "csv": "csv",
-    "csv_auto": "csv",
-    "json": "json",
-    "json_auto": "json",
-}
-
-def _remote_cache_base() -> str:
-    """Per-user 0700 ownership-verified fetch cache for https
-    ``read_parquet`` sources — see :func:`_user_cache_base`."""
-    return _user_cache_base("remote")
-
-
-def _resolve_path(path: str) -> str:
-    """DuckDB's read_parquet accepts plain http(s) URLs (the reference's
-    demo model does exactly this, reference:
-    examples/basic/source_orders.sql:2). An https URL is not a Hadoop
-    filesystem, so fetch it once into a content-addressed local cache
-    and scan the cached file. At warehouse scale remote data should land
-    in object storage (s3a://…, which Spark scans natively) — this shim
-    exists for reference-compatibility, not as a data-transfer path."""
-    if not path.lower().startswith(("http://", "https://")):
-        return path
-    import hashlib
-    import os
-    import urllib.request
-
-    cache = _remote_cache_base()
-    suffix = os.path.splitext(path.split("?")[0])[1] or ".bin"
-    dest = os.path.join(
-        cache, hashlib.sha256(path.encode()).hexdigest()[:24] + suffix
-    )
-    if not os.path.exists(dest):
-        tmp = dest + ".part"
-        urllib.request.urlretrieve(path, tmp)
-        os.replace(tmp, dest)
-    return dest
-
-
 # `* EXCLUDE (a, b)` directly after a star is unambiguous; Spark spells
 # the same projection `* EXCEPT (a, b)`.
 _STAR_EXCLUDE = re.compile(r"(\*\s+)EXCLUDE(\s*\()", re.IGNORECASE)
-
-# DuckDB's bare-string table: FROM 'data.parquet' (a shorthand for
-# read_parquet and friends). Only rewritten when the extension names a
-# format Spark's file-query syntax can scan without option sniffing —
-# anything else is left for Spark to reject with a clear parse error.
-_BARE_PATH = re.compile(
-    r"\b(FROM|JOIN)\s+'([^']+\.(?:parquet|csv|json)(?:\.gz)?)'",
-    re.IGNORECASE,
-)
-
-
-def _rewrite_qualify(sql: str) -> str:
-    """Rewrite a top-level ``QUALIFY <pred>`` into subquery + filter:
-
-        SELECT * EXCEPT (__arnab_qualify) FROM (
-          SELECT *, (<pred>) AS __arnab_qualify FROM ( <head> ) q
-        ) qq WHERE __arnab_qualify [ORDER BY …/LIMIT …]
-
-    The predicate may reference select-list aliases or inline window
-    functions over columns present in the select output (the common
-    DuckDB shapes). A window over a column NOT in the select output is
-    out of reach without a full parser — that surfaces as a clear
-    Spark analysis error, never a silent wrong result. QUALIFY nested
-    inside subqueries is likewise left to Spark's parser to reject."""
-    idx, _ = lexer.find_top_level(sql, ("qualify",))
-    if idx < 0:
-        return sql
-    head = sql[:idx].rstrip()
-    rest = sql[idx + len("qualify"):]
-    tail_idx, _ = lexer.find_top_level(rest, ("order", "limit", "offset"))
-    pred = rest[:tail_idx] if tail_idx >= 0 else rest
-    tail = rest[tail_idx:] if tail_idx >= 0 else ""
-    return (
-        "SELECT * EXCEPT (__arnab_qualify) FROM ("
-        f"SELECT *, ({pred.strip()}) AS __arnab_qualify FROM ({head}) __arnab_q"
-        f") __arnab_qq WHERE __arnab_qualify {tail}"
-    )
 
 
 #: tokens after which a ``[`` opens a DuckDB LIST LITERAL rather than a
@@ -1554,6 +1528,10 @@ _ARG_CALL_REWRITES = {
             f"{a[0]})) = 0 END"
         ),
     ),
+    # C-style format strings (see _dialect_datetime)
+    "strftime": (2, _strf_rewrite("date_format")),
+    "strptime": (2, _strp_rewrite(False)),
+    "try_strptime": (2, _strp_rewrite(True)),
 }
 
 
@@ -1793,22 +1771,10 @@ _ARG_CALL_REWRITES["xor"] = (
     lambda a: f"(({a[0].strip()}) ^ ({a[1].strip()}))",
 )
 
-_ARG_CALL_CACHE: list = [None, -1]
-
-
-def _arg_call_re():
-    """The dispatch regex over :data:`_ARG_CALL_REWRITES`' keys, rebuilt
-    whenever the registry grows — ``_dialect_datetime`` registers the
-    strftime/strptime/substr/… entries when the core module's bottom
-    re-export imports it, AFTER this point in the file (round-12 split:
-    a snapshot regex here silently stopped dispatching every
-    late-registered rewrite)."""
-    if _ARG_CALL_CACHE[1] != len(_ARG_CALL_REWRITES):
-        _ARG_CALL_CACHE[0] = re.compile(
-            r"\b(" + "|".join(_ARG_CALL_REWRITES) + r")\s*\(", re.IGNORECASE
-        )
-        _ARG_CALL_CACHE[1] = len(_ARG_CALL_REWRITES)
-    return _ARG_CALL_CACHE[0]
+#: the dispatch regex over every name registered above
+_ARG_CALL = re.compile(
+    r"\b(" + "|".join(_ARG_CALL_REWRITES) + r")\s*\(", re.IGNORECASE
+)
 
 
 def _rewrite_arg_transform_calls(sql: str) -> str:
@@ -1819,7 +1785,6 @@ def _rewrite_arg_transform_calls(sql: str) -> str:
     guard = 0
     pos = 0
     masked = lexer.mask(sql)
-    _arg_call = _arg_call_re()
     while True:
         guard += 1
         if guard > 2000:
@@ -1830,7 +1795,7 @@ def _rewrite_arg_transform_calls(sql: str) -> str:
                 "dialect rewrite did not converge after 2000 substitutions; "
                 "statement too pathological to transpile safely"
             )
-        m = _arg_call.search(masked, pos)
+        m = _ARG_CALL.search(masked, pos)
         if not m:
             return sql
         parsed = _call_args(sql, m.end() - 1)
@@ -2369,56 +2334,6 @@ def _rewrite_comprehensions(sql: str) -> str:
     return "".join(out)
 
 
-_STRING_SPLIT = re.compile(r"\b(string_split|str_split|string_to_array)\s*\(", re.IGNORECASE)
-_PLAIN_STR_LIT = re.compile(r"^\s*'([^'\\]*)'\s*$")
-
-
-def _lit_match(s: str):
-    """Match a plain string literal, seeing through redundant FULL-COVER
-    outer parens — macro expansion parenthesizes every spliced argument
-    (``date_diff((u), …)`` after ``u := 'day'`` binds), and a literal
-    wrapped in parens must still rewrite (round-5 composition fuzz
-    finding). ``('a') || ('b')`` style expressions survive untouched:
-    lexer.strip_outer_parens only strips when the opening paren's match is
-    the final character."""
-    s = s.strip()
-    while True:
-        stripped = lexer.strip_outer_parens(s).strip()
-        if stripped == s:
-            break
-        s = stripped
-    return _PLAIN_STR_LIT.match(s)
-
-
-def _rewrite_string_split(sql: str) -> str:
-    """``string_split(x, 'sep')`` → ``split(x, '<regex-escaped sep>')``.
-
-    DuckDB's separator is a LITERAL string while Spark's ``split`` takes
-    a Java regex, so the separator is regex-escaped during the rewrite
-    (then backslash-doubled for Spark's C-style string literals). Only
-    plain string-literal separators are rewritten; anything dynamic is
-    left under its DuckDB name so Spark rejects it loudly rather than
-    silently treating it as a pattern."""
-    masked = lexer.mask(sql)
-    out = []
-    pos = 0
-    while True:
-        m = _STRING_SPLIT.search(masked, pos)
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        close = lexer.group_end(sql, m.end() - 1)
-        j = len(sql) if close is None else close - 1  # the call's ")"
-        args = lexer.split_top_level(sql[m.end(): j])
-        lit = _lit_match(args[1]) if len(args) == 2 else None
-        if lit is None:
-            out.append(sql[pos: j + 1])
-        else:
-            sep = re.escape(lit.group(1)).replace("\\", "\\\\")
-            out.append(sql[pos: m.start()] + f"split({args[0].strip()}, '{sep}')")
-        pos = j + 1
-
-
 _FROM_FIRST = re.compile(r"^\s*FROM\b", re.IGNORECASE)
 #: clause keywords that terminate a FROM-first SELECT list
 _CLAUSE_KEYWORDS = (
@@ -2434,20 +2349,6 @@ _CLAUSE_KEYWORDS = (
     "intersect",
     "except",
 )
-
-
-def _is_set_op_at(sql: str, idx: int, word: str) -> bool:
-    """Distinguish a set-operator UNION/INTERSECT/EXCEPT at ``idx`` from
-    Spark's projection ``* EXCEPT (cols)`` (already produced from
-    DuckDB's EXCLUDE by the time these scans run): a set operator is
-    followed by optional ALL/DISTINCT/BY NAME and then a query head
-    (SELECT/FROM/WITH/VALUES/TABLE, possibly parenthesized)."""
-    rest = sql[idx + len(word):]
-    m = re.match(r"(?is)^\s*(?:ALL\b|DISTINCT\b)?\s*(?:BY\s+NAME\b)?\s*", rest)
-    after = rest[m.end():]
-    if re.match(r"(?is)^(select|from|with|values|table)\b", after):
-        return True
-    return bool(re.match(r"(?is)^\(\s*(select|from|with|values|table)\b", after))
 
 
 def _rewrite_from_first(sql: str) -> str:
@@ -2508,89 +2409,6 @@ def _rewrite_from_first_arms(sql: str) -> str:
         out.append(_rewrite_from_first(sql[arm_start:idx].strip()))
         out.append(sql[idx: idx + m.end()].strip())
         arm_start = pos = idx + m.end()
-
-
-_DISTINCT_ON = re.compile(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
-
-
-def _rewrite_distinct_on(sql: str) -> str:
-    """Rewrite a statement-level ``SELECT DISTINCT ON (keys) … [ORDER
-    BY …] [LIMIT …]`` into the standard window idiom:
-
-        SELECT * EXCEPT (__arnab_rn) FROM (
-          SELECT <select-list>, row_number() OVER (
-            PARTITION BY <keys> ORDER BY <order-exprs or keys>
-          ) AS __arnab_rn FROM …
-        ) WHERE __arnab_rn = 1 [ORDER BY …] [LIMIT …]
-
-    With an ORDER BY, DuckDB keeps the first row of each key group in
-    that order — exactly row_number() = 1 over the same order. Without
-    one, DuckDB's pick is arbitrary, and so is the window's (ordered by
-    the keys alone): both engines say "some row per group". ORDER BY
-    terms that name select-list aliases rather than source columns are
-    out of reach without a full parser — Spark raises a clear analysis
-    error rather than silently mis-sorting. Nested DISTINCT ON (in
-    subqueries/CTEs) is left alone → clear Spark parse error."""
-    m = _DISTINCT_ON.match(sql)
-    if not m:
-        return sql
-    # the matching close paren of the ON (…) list
-    i = lexer.group_end(sql, m.end() - 1)
-    if i is None:
-        return sql  # unbalanced — let Spark report it
-    keys = sql[m.end() : i - 1].strip()
-    rest = sql[i:]
-    fro, _ = lexer.find_top_level(rest, ("from",))
-    if fro < 0 or not keys:
-        return sql
-    ob, kw = lexer.find_top_level(rest, ("order", "limit", "offset"))
-    body = rest[:ob] if ob >= 0 else rest
-    tail = rest[ob:] if ob >= 0 else ""
-    order_exprs = keys
-    limit_part = ""
-    hidden: list[tuple[str, str]] = []  # (expr, direction-suffix)
-    if kw == "order":
-        # ORDER BY both picks each group's winner (window order) and
-        # orders the final output. Its expressions may not survive the
-        # projection (DuckDB resolves them from the input), so they
-        # materialize as hidden __arnab_ob columns the outer sorts on.
-        after = rest[ob:]
-        lim, _ = lexer.find_top_level(after, ("limit", "offset"))
-        clause = after[:lim] if lim >= 0 else after
-        limit_part = after[lim:] if lim >= 0 else ""
-        order_exprs = re.sub(r"(?is)^\s*ORDER\s+BY\s+", "", clause).strip()
-        for item in lexer.split_top_level(order_exprs):
-            dm = re.match(
-                r"(?is)^(.*?)((?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$",
-                item.strip(),
-            )
-            hidden.append((dm.group(1).strip(), dm.group(2).strip()))
-    elif kw in ("limit", "offset"):
-        limit_part = tail
-        tail = ""
-    select_list = body[:fro].strip()
-    from_part = body[fro:]
-    ob_cols = "".join(
-        f", ({expr}) AS __arnab_ob{i}" for i, (expr, _) in enumerate(hidden)
-    )
-    inner = (
-        f"SELECT {select_list}{ob_cols}, row_number() OVER ("
-        f"PARTITION BY {keys} ORDER BY {order_exprs}) AS __arnab_rn {from_part}"
-    )
-    drop = ", ".join(["__arnab_rn"] + [f"__arnab_ob{i}" for i in range(len(hidden))])
-    outer_order = (
-        " ORDER BY "
-        + ", ".join(
-            f"__arnab_ob{i}" + (f" {suffix}" if suffix else "")
-            for i, (_, suffix) in enumerate(hidden)
-        )
-        if hidden
-        else ""
-    )
-    return (
-        f"SELECT * EXCEPT ({drop}) FROM ({inner}) __arnab_d "
-        f"WHERE __arnab_rn = 1{outer_order} {limit_part}".rstrip()
-    )
 
 
 _STAR_REPLACE = re.compile(r"(?is)^(\s*SELECT\s+)\*\s+REPLACE\s*\(")
@@ -2993,42 +2811,6 @@ def _rewrite_unpivot(sql: str) -> str:
     )
 
 
-# DuckDB sampling clause → Spark TABLESAMPLE. Forms covered:
-#   USING SAMPLE 10%   | 10 PERCENT | 1000 | 1000 ROWS
-#   USING SAMPLE 10% (bernoulli[, 42])     -- method + optional seed
-#   USING SAMPLE bernoulli(10%) [REPEATABLE (42)]
-_USING_SAMPLE = re.compile(
-    r"(?is)\bUSING\s+SAMPLE\s+"
-    r"(?:(?P<m1>[A-Za-z_]+)\s*\(\s*)?"
-    r"(?P<n>\d+(?:\.\d+)?)\s*(?P<unit>%|PERCENT\b|ROWS\b)?"
-    r"(?(m1)\s*\))"
-    r"(?:\s*\(\s*(?P<m2>[A-Za-z_]+)\s*(?:,\s*(?P<seed>\d+)\s*)?\))?"
-    r"(?:\s+REPEATABLE\s*\(\s*(?P<seed2>\d+)\s*\))?"
-)
-
-
-def _rewrite_using_sample(sql: str) -> str:
-    """DuckDB ``USING SAMPLE`` → Spark ``TABLESAMPLE``. Percentage
-    samples map to Bernoulli percent sampling; bare numbers / ROWS map
-    to row-count sampling (DuckDB's reservoir default — both are "give
-    me ~n"). A seed (either spelling) maps to REPEATABLE. The method
-    name itself (bernoulli/system/reservoir) is advisory in DuckDB and
-    dropped here: Spark's sampler is Bernoulli per split."""
-
-    def sub(m: re.Match) -> str:
-        unit = (m.group("unit") or "").rstrip()
-        spec = (
-            f"{m.group('n')} PERCENT"
-            if unit in ("%",) or unit.upper() == "PERCENT"
-            else f"{m.group('n')} ROWS"
-        )
-        seed = m.group("seed") or m.group("seed2")
-        return f"TABLESAMPLE ({spec})" + (f" REPEATABLE ({seed})" if seed else "")
-
-    return _USING_SAMPLE.sub(sub, sql)
-
-
-
 def transpile_statement(sql: str, spark=None) -> str:
     """Apply the DuckDB→Spark rewrites to one statement.
 
@@ -3040,15 +2822,21 @@ def transpile_statement(sql: str, spark=None) -> str:
     temp views); without one they raise instead of silently degrading
     to headerless-string semantics (round-2 fix — the silent fallback
     produced wrong column names/types with no signal).
+
+    What a statement registers (macros, attached catalogs, ``USE``,
+    tables) lands in the session's ``state_for(spark)``; a statement
+    transpiled without a session starts from, and leaves behind, an
+    empty state.
     """
     _reject_sequences(sql)
     _reject_positional_join(sql)
-    macros = _macros_for(spark)
+    state = state_for(spark)
+    macros = state.macros
     created = _parse_create_macro(sql)
     if created is not None:
         name, params, body, is_table, is_temp = created
         macros[name.lower()] = (params, body, is_table, is_temp)
-        dropped_macros_for(spark).discard(name.lower())  # re-created
+        state.dropped_macros.discard(name.lower())  # re-created
         return ""  # statement fully consumed — callers skip empties
     dropped = re.match(
         r"(?is)^\s*DROP\s+MACRO\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$",
@@ -3056,7 +2844,7 @@ def transpile_statement(sql: str, spark=None) -> str:
     )
     if dropped is not None:
         macros.pop(dropped.group(1).lower(), None)
-        dropped_macros_for(spark).add(dropped.group(1).lower())
+        state.dropped_macros.add(dropped.group(1).lower())
         return ""
     am = _ATTACH_STMT.match(sql)
     if am is not None and spark is not None:
@@ -3067,12 +2855,12 @@ def transpile_statement(sql: str, spark=None) -> str:
         path, alias = am.group(1), am.group(2)
         if _os.path.isfile(_os.path.join(path, CATALOG_FILE)):
             ids = attach_warehouse(spark, path, prefix=f"{alias}__")
-            _attached_for(spark)[alias.lower()] = {i.lower() for i in ids}
+            state.attached[alias.lower()] = {i.lower() for i in ids}
             return ""
         if _os.path.isfile(path):
             ids = _attach_duckdb_file(spark, path, alias)
             if ids is not None:
-                _attached_for(spark)[alias.lower()] = {i.lower() for i in ids}
+                state.attached[alias.lower()] = {i.lower() for i in ids}
                 return ""
         # neither a warehouse nor a readable DuckDB file: leave the
         # statement → Spark rejects ATTACH loudly
@@ -3080,9 +2868,9 @@ def transpile_statement(sql: str, spark=None) -> str:
     dm = _DETACH_STMT.match(sql)
     if dm is not None and spark is not None:
         alias = dm.group(1).lower()
-        if _USE_BY_SESSION.get(spark) == alias:
-            _USE_BY_SESSION.pop(spark, None)
-        for model in _attached_for(spark).pop(alias, set()):
+        if state.use == alias:
+            state.use = None
+        for model in state.attached.pop(alias, set()):
             try:
                 spark.catalog.dropTempView(f"{alias}__{model}")
             except Exception:
@@ -3092,10 +2880,10 @@ def transpile_statement(sql: str, spark=None) -> str:
     if um is not None and spark is not None:
         use_alias = um.group(2).lower()
         if use_alias in ("memory", "main"):
-            _USE_BY_SESSION.pop(spark, None)  # back to the session namespace
+            state.use = None  # back to the session namespace
             return ""
-        if use_alias in _attached_for(spark):
-            _USE_BY_SESSION[spark] = use_alias
+        if use_alias in state.attached:
+            state.use = use_alias
             return ""
         from arnab_spark.errors import ArnabError
 
@@ -3111,21 +2899,19 @@ def transpile_statement(sql: str, spark=None) -> str:
     if tm is not None:
         # record the name (DuckDB: temp database) and pass the DDL
         # through — Spark accepts CREATE TEMP VIEW natively
-        _temp_ddl_for(spark).add(tm.group(2).lower())
+        state.temp_ddl.add(tm.group(2).lower())
     dvm = _DROP_VIEW_DDL.match(sql)
     if dvm is not None:
         dv_name = dvm.group(2).lower()
-        if dv_name in table_backing_for(spark) or dv_name in session_tables_for(
-            spark
-        ):
+        if dv_name in state.backing or dv_name in state.session_tables:
             from arnab_spark.errors import ArnabError
 
             raise ArnabError(
                 f"'{dvm.group(2)}' is a table, not a view — DuckDB "
                 "rejects DROP VIEW against tables; use DROP TABLE."
             )
-        _temp_ddl_for(spark).discard(dv_name)
-        wh = warehouse_for(spark)
+        state.temp_ddl.discard(dv_name)
+        wh = state.warehouse
         if wh is not None:
             # a warehouse-persisted view: drop is durable (DuckDB
             # parity — DROP VIEW persists in the database file)
@@ -3152,16 +2938,16 @@ def transpile_statement(sql: str, spark=None) -> str:
             )
         v_body = transpile_statement(pvm.group("body"), spark)
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {v_name} AS ({v_body})")
-        wh = warehouse_for(spark)
+        wh = state.warehouse
         if wh is not None:
             from arnab_spark.catalog import record_model
 
             record_model(wh, v_name, "view", v_body)
         return ""
-    attached = _attached_for(spark)
+    attached = state.attached
     if attached:
         sql = _rewrite_attached_refs(sql, attached)
-        used = _USE_BY_SESSION.get(spark) if spark is not None else None
+        used = state.use
         if used in attached:
             sql = _rewrite_use_fallback(sql, used, attached[used], spark)
     if macros:
@@ -3208,27 +2994,17 @@ def transpile_statement(sql: str, spark=None) -> str:
     sql = _rewrite_copy(sql, spark)
     sql = _rewrite_unpivot(sql)
     sql = _rewrite_using_sample(sql)
-
-    def bare_path(m: re.Match) -> str:
-        path = _resolve_path(m.group(2))
-        low = path.lower()
-        fmt = (
-            "parquet"
-            if ".parquet" in low
-            else "csv" if ".csv" in low else "json"
-        )
-        return f"{m.group(1)} {fmt}.`{path}`"
-
-    sql = _BARE_PATH.sub(bare_path, sql)
+    sql = _BARE_PATH.sub(_file_relation, sql)
     sql = _rewrite_qualify(sql)
     sql = _rewrite_distinct_on(sql)
     sql = _rewrite_asof_join(sql)
 
     def rewrite(m: re.Match) -> str:
         kind = m.group(1).lower()
+        if kind not in ("csv_auto", "json_auto"):
+            return _file_relation(m)
         path = _resolve_path(m.group(2))
-        fmt = _FORMAT_MAP[kind]
-        if kind in ("csv_auto", "json_auto") and spark is None:
+        if spark is None:
             from arnab_spark.errors import ArnabError
 
             raise ArnabError(
@@ -3237,18 +3013,15 @@ def transpile_statement(sql: str, spark=None) -> str:
                 "pass one to transpile_statement, or use read_csv/read_json for "
                 "the optionless file scan."
             )
-        if spark is not None and kind in ("csv_auto", "json_auto"):
-            import hashlib
+        import hashlib
 
-            view = "_arnab_src_" + hashlib.md5(f"{kind}|{path}".encode()).hexdigest()[:12]
-            reader = spark.read
-            if fmt == "csv":
-                df = reader.csv(path, header=True, inferSchema=True)
-            else:
-                df = reader.json(path)
-            df.createOrReplaceTempView(view)
-            return view
-        return f"{fmt}.`{path}`"
+        view = "_arnab_src_" + hashlib.md5(f"{kind}|{path}".encode()).hexdigest()[:12]
+        if kind == "csv_auto":
+            df = spark.read.csv(path, header=True, inferSchema=True)
+        else:
+            df = spark.read.json(path)
+        df.createOrReplaceTempView(view)
+        return view
 
     sql = _READ_FUNC.sub(rewrite, sql)
     # after the read rewrite so file-queries resolve as relations (the
@@ -3256,172 +3029,3 @@ def transpile_statement(sql: str, spark=None) -> str:
     sql = _rewrite_pivot(sql, spark)
     sql = _rewrite_star_replace(sql, spark)
     return _rewrite_union_by_name(sql, spark)
-
-
-# ---------------------------------------------------------------------
-# Statement-surface submodules (round-12 maintainability split — the
-# r11 verdict's ask #7: this file carried ~35% of the engine and every
-# new pass raised collision risk with the masking invariants). The
-# public surface is unchanged: every name is re-imported here, and the
-# submodules bind the shared helpers from THIS module at this point,
-# when everything above is defined. Order matters: _dialect_dml
-# imports _attached_for from _dialect_statements.
-from arnab_spark._dialect_unnest import (  # noqa: E402,F401
-    _UNNEST_CALL,
-    _rewrite_single_unnest,
-    _UNNEST_TAIL_BLOCKERS,
-    _UNNEST_ALIAS,
-    _IDENT,
-    _single_relation_alias,
-    _rewrite_multi_unnest,
-    _rewrite_unnest_set_ops,
-    _call_args,
-    _UNNEST_FLAG,
-    _TRUE_SPELLINGS,
-    _FALSE_SPELLINGS,
-    _probe_schema,
-    _probe_expr_type,
-    _flatten_wrap,
-)
-from arnab_spark._dialect_datetime import (  # noqa: E402,F401
-    _STRF_MAP,
-    _STRF_EXPR,
-    _c_format_to_sql_expr,
-    _c_format_to_java,
-    _fold_literal_concat,
-    _ConstNull,
-    _CONST_NULL,
-    _NotConst,
-    _FOLD_TOKEN,
-    _FOLD_KEYWORDS,
-    _fold_tokenize,
-    _FoldEval,
-    _fold_const_expr,
-    _strf_rewrite,
-    _const_format,
-    _STRP_NUM,
-    _STRP_MONTHS,
-    _STRP_MONTHS_FULL,
-    _STRP_DAYS,
-    _STRP_DAYS_FULL,
-    _STRP_NAME,
-    _STRP_COMPOSITE,
-    _strp_tokens,
-    _sql_str,
-    _strp_name_pos,
-    _c_parse_to_sql_expr,
-    _strp_last_year_role,
-    _strp_rewrite,
-)
-from arnab_spark._dialect_statements import (  # noqa: E402,F401
-    _CREATE_MACRO,
-    _MACRO_FALLBACK,
-    _MACRO_BY_SESSION,
-    _macros_for,
-    _DROPPED_FALLBACK,
-    _DROPPED_BY_SESSION,
-    dropped_macros_for,
-    reset_macros,
-    _ATTACH_STMT,
-    _DETACH_STMT,
-    _ATTACH_FALLBACK,
-    _ATTACHED_BY_SESSION,
-    _attached_for,
-    reset_attached,
-    _TEMP_DDL_BY_SESSION,
-    _TEMP_DDL_FALLBACK,
-    _temp_ddl_for,
-    _TEMP_VIEW_DDL,
-    _DROP_VIEW_DDL,
-    _PERM_VIEW_DDL,
-    _user_cache_base,
-    _attach_cache_base,
-    _attach_duckdb_file,
-    _SHOW_TABLES_STMT,
-    _SHOW_ALL_TABLES_STMT,
-    _visible_catalog_names,
-    _rewrite_show_tables,
-    _rewrite_show_all_tables,
-    _DESCRIBE_STMT,
-    _duck_type_name,
-    _describe_values_sql,
-    _PRAGMA_TABLE_INFO,
-    _PRAGMA_SHOW_TABLES,
-    _CHECKPOINT_STMT,
-    _TXN_STMT,
-    _rewrite_txn,
-    _EXT_STMT,
-    _BUILTIN_EXTS,
-    _MAINT_STMT,
-    _rewrite_extensions,
-    _SET_STMT,
-    _DUCK_HINT_SETTINGS,
-    _DUCK_RESULT_SETTINGS,
-    _rewrite_set,
-    _rewrite_pragmas,
-    _rewrite_describe,
-    _DESCRIBE_SUBQ,
-    _rewrite_describe_subqueries,
-    _SUMMARIZE_STMT,
-    _NUMERIC_PREFIXES,
-    _rewrite_summarize,
-    _rewrite_attached_refs,
-    _USE_BY_SESSION,
-    _USE_STMT,
-    _rewrite_use_fallback,
-    _parse_create_macro,
-    _replace_params,
-    _bind_macro_args,
-    _expand_macros,
-    _CLAUSE_AFTER_ON,
-    _JOIN_WORDS,
-    _INEQ,
-    _EQ_SPLIT,
-    _rewrite_asof_join,
-    _READ_LIST,
-    _rewrite_read_file_lists,
-    _SEQUENCE_SITE,
-    _POSITIONAL_JOIN_SITE,
-    _reject_positional_join,
-    _reject_sequences,
-)
-from arnab_spark._dialect_dml import (  # noqa: E402,F401
-    _BACKING_FALLBACK,
-    _BACKING_BY_SESSION,
-    table_backing_for,
-    _WAREHOUSE_BY_SESSION,
-    set_warehouse_for,
-    warehouse_for,
-    _SESSION_TABLES_BY_SESSION,
-    session_tables_for,
-    _DML_IDENT,
-    _DML_QUAL,
-    _INSERT_DML,
-    _DELETE_DML,
-    _UPDATE_DML,
-    _TRUNCATE_DML,
-    _dml_resolve,
-    _hive_partition_cols,
-    _dml_append,
-    _dml_pruned_rewrite,
-    _dml_persist,
-    _INTEGRAL_TYPES,
-    _cast_like_duck,
-    _dml_align,
-    _CREATE_TABLE_DDL,
-    _DROP_TABLE_DDL,
-    _SPARK_DDL_WORDS,
-    _COL_CONSTRAINT,
-    _rewrite_create_table,
-    _rewrite_drop_table,
-    _ALTER_TABLE_DDL,
-    _rewrite_alter_table,
-    _COPY_FROM_DML,
-    _rewrite_copy_from,
-    _EXPORT_DB_DML,
-    _IMPORT_DB_DML,
-    _EXPORT_TYPES,
-    _export_type,
-    _rewrite_export_import_db,
-    _rewrite_dml,
-)

@@ -59,6 +59,7 @@ from dataclasses import dataclass, field
 from enum import Enum
 
 from arnab_spark import lexer
+from arnab_spark._dialect_base import state_for
 from arnab_spark.catalog import (
     load_catalog,
     read_table,
@@ -282,10 +283,8 @@ class Node:
         recorded as the table's backing, so dialect-level DML (INSERT/
         DELETE/UPDATE through the node.rs:176 passthrough) persists
         through a staged swap of it."""
-        from arnab_spark.dialect import table_backing_for
-
         read_table(spark, dest, schema).createOrReplaceTempView(self.id)
-        table_backing_for(spark)[self.id.lower()] = dest
+        state_for(spark).backing[self.id.lower()] = dest
 
     def execute(self, spark, db_path: str | None) -> NodeExecutionResult:
         """Run the model (reference: node.rs:125-207). Non-record
@@ -334,9 +333,8 @@ class Node:
         if db_path:
             # non-TEMP CREATE MACROs persist in the warehouse like the
             # reference's macros persist in the DuckDB file
-            from arnab_spark.dialect import _macros_for, dropped_macros_for
-
-            record_macros(db_path, _macros_for(spark), dropped_macros_for(spark))
+            state = state_for(spark)
+            record_macros(db_path, state.macros, state.dropped_macros)
         # a table's row count is the one the reference reads back right
         # after its CREATE TABLE (node.rs:179-189), taken from the write
         return NodeExecutionResult(n_rows, self.materialize)

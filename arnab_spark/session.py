@@ -39,8 +39,10 @@ in SURVEY.md §1.3/§7:
   - shared state is locked at three points: the catalog and macro file
     writes (``catalog._locked``, a file lock that also serializes
     processes sharing the warehouse), the session's scan views
-    (``spark_utils.bind_file_scans``), and the per-session registries,
-    each created atomically by ``WeakKeyDictionary.setdefault``;
+    (``spark_utils.bind_file_scans``), and the session's one
+    ``DialectState`` (macros, attached catalogs, table backings, …),
+    created atomically by ``WeakKeyDictionary.setdefault`` in
+    ``_dialect_base.state_for``;
   - the main thread prints each model's status line as it finishes;
     ``RunReport`` lists models in topological order, and each catalog
     entry follows its upstreams.
@@ -57,6 +59,7 @@ from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
 from arnab_spark import lexer
+from arnab_spark._dialect_base import state_for
 from arnab_spark.config import Config
 from arnab_spark.errors import ArnabError, CyclicDependencyError, UnknownModelType
 from arnab_spark.node import Node, NodeExecutionResult, NodeKind, Timer, format_elapsed
@@ -112,9 +115,7 @@ class Session:
                 # (main.rs:126-132): a session sees the warehouse's
                 # models before (or without) running the pipeline
                 from arnab_spark.catalog import attach_warehouse
-                from arnab_spark.dialect import set_warehouse_for
-
-                set_warehouse_for(spark, config.db_path)
+                state_for(spark).warehouse = config.db_path
                 attach_warehouse(spark, config.db_path)
 
     # -- graph build (reference: session.rs:56-181) -------------------

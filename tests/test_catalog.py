@@ -7,9 +7,18 @@ namespace, i.e. a genuine fresh-session simulation in one JVM."""
 import json
 import os
 
+from arnab_spark._dialect_base import state_for
 from arnab_spark.catalog import CATALOG_FILE, attach_warehouse, load_catalog
 from arnab_spark.config import load_config
 from arnab_spark.session import Session
+
+
+def _forget_macros(spark):
+    """Clear the session's macros and macro drops, as a fresh session
+    would have them."""
+    state = state_for(spark)
+    state.macros.clear()
+    state.dropped_macros.clear()
 
 
 def _write_models(tmp_path):
@@ -89,19 +98,19 @@ def test_macros_persist_across_sessions_via_warehouse(spark, tmp_path):
     from arnab_spark.catalog import attach_warehouse, record_macros
 
     db = str(tmp_path / "wh")
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     try:
         assert dialect.transpile_statement("CREATE MACRO keep(x) AS x * 10", spark) == ""
         assert dialect.transpile_statement("CREATE TEMP MACRO gone(x) AS x", spark) == ""
-        record_macros(db, dialect._macros_for(spark))
+        record_macros(db, state_for(spark).macros)
         # simulate a fresh session: clear the registry, re-attach
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
         attach_warehouse(spark, db)
         out = dialect.transpile_statement("SELECT keep(4) AS v", spark)
         assert out == "SELECT ((4) * 10) AS v"
         assert "gone(" in dialect.transpile_statement("SELECT gone(1) AS v", spark)
     finally:
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 def test_attach_statement_namespaces_warehouse_models(spark, tmp_path):
@@ -133,8 +142,8 @@ def test_attach_statement_namespaces_warehouse_models(spark, tmp_path):
     assert not report.errors, report.errors
     for v in ("base_orders", "status_counts"):
         spark.catalog.dropTempView(v)
-    dialect.reset_macros(spark)
-    dialect.reset_attached(spark)
+    _forget_macros(spark)
+    state_for(spark).attached.clear()
     try:
         assert dialect.transpile_statement(f"ATTACH '{cfg.db_path}' AS prev", spark) == ""
         rows = spark.sql(
@@ -156,8 +165,8 @@ def test_attach_statement_namespaces_warehouse_models(spark, tmp_path):
         )
         assert out.upper().startswith("ATTACH")
     finally:
-        dialect.reset_attached(spark)
-        dialect.reset_macros(spark)
+        state_for(spark).attached.clear()
+        _forget_macros(spark)
 
 
 def test_attach_real_duckdb_file(spark, tmp_path):
@@ -174,7 +183,7 @@ def test_attach_real_duckdb_file(spark, tmp_path):
     con.execute("CREATE TABLE items AS SELECT * FROM (VALUES (1, 'a'), (2, 'b')) t(id, name)")
     con.execute("CREATE VIEW big_items AS SELECT * FROM items WHERE id > 1")
     con.close()
-    dialect.reset_attached(spark)
+    state_for(spark).attached.clear()
     try:
         assert dialect.transpile_statement(f"ATTACH '{db}' AS legacy", spark) == ""
         rows = spark.sql(
@@ -189,7 +198,7 @@ def test_attach_real_duckdb_file(spark, tmp_path):
         assert [r.name for r in view_rows] == ["b"]
         assert dialect.transpile_statement("DETACH legacy", spark) == ""
     finally:
-        dialect.reset_attached(spark)
+        state_for(spark).attached.clear()
 
 
 def test_attach_real_duckdb_file_loads_macros(spark, tmp_path):
@@ -214,8 +223,8 @@ def test_attach_real_duckdb_file_loads_macros(spark, tmp_path):
     con.execute('CREATE MACRO "&&&"(a, b) AS a + b')  # exotic name: skipped
     con.execute("CREATE TABLE t AS SELECT 4 AS v")
     con.close()
-    dialect.reset_attached(spark)
-    dialect.reset_macros(spark)
+    state_for(spark).attached.clear()
+    _forget_macros(spark)
     try:
         assert dialect.transpile_statement(f"ATTACH '{db}' AS mm", spark) == ""
         # DuckDB stores the body pre-parenthesized ('(x * 10)'), so the
@@ -236,10 +245,10 @@ def test_attach_real_duckdb_file_loads_macros(spark, tmp_path):
         ).collect()
         assert [r.i for r in trows] == [0, 1, 2]
         # the exotic-named macro did NOT register
-        assert "&&&" not in str(dialect._macros_for(spark))
+        assert "&&&" not in str(state_for(spark).macros)
     finally:
-        dialect.reset_attached(spark)
-        dialect.reset_macros(spark)
+        state_for(spark).attached.clear()
+        _forget_macros(spark)
 
 
 def test_drop_macro_durable_across_sessions(spark, tmp_path):
@@ -252,18 +261,18 @@ def test_drop_macro_durable_across_sessions(spark, tmp_path):
     from arnab_spark.catalog import attach_warehouse, record_macros
 
     db = str(tmp_path / "wh")
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     try:
         assert dialect.transpile_statement("CREATE MACRO ten(x) AS x * 10", spark) == ""
         assert dialect.transpile_statement("CREATE MACRO two(x) AS x * 2", spark) == ""
-        record_macros(db, dialect._macros_for(spark), dialect.dropped_macros_for(spark))
+        record_macros(db, state_for(spark).macros, state_for(spark).dropped_macros)
         # session 2: drop one persisted macro, persist again
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
         attach_warehouse(spark, db)
         assert dialect.transpile_statement("DROP MACRO ten", spark) == ""
-        record_macros(db, dialect._macros_for(spark), dialect.dropped_macros_for(spark))
+        record_macros(db, state_for(spark).macros, state_for(spark).dropped_macros)
         # session 3: the drop must have stuck; the survivor still works
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
         attach_warehouse(spark, db)
         assert "ten(" in dialect.transpile_statement("SELECT ten(4) AS v", spark)
         assert dialect.transpile_statement("SELECT two(4) AS v", spark) == (
@@ -272,14 +281,14 @@ def test_drop_macro_durable_across_sessions(spark, tmp_path):
         # drop-then-recreate in one session persists the NEW definition
         assert dialect.transpile_statement("DROP MACRO two", spark) == ""
         assert dialect.transpile_statement("CREATE MACRO two(x) AS x * 222", spark) == ""
-        record_macros(db, dialect._macros_for(spark), dialect.dropped_macros_for(spark))
-        dialect.reset_macros(spark)
+        record_macros(db, state_for(spark).macros, state_for(spark).dropped_macros)
+        _forget_macros(spark)
         attach_warehouse(spark, db)
         assert dialect.transpile_statement("SELECT two(1) AS v", spark) == (
             "SELECT ((1) * 222) AS v"
         )
     finally:
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 def test_attach_duckdb_cache_invalidation_on_source_change(spark, tmp_path):
@@ -296,7 +305,7 @@ def test_attach_duckdb_cache_invalidation_on_source_change(spark, tmp_path):
     con = duckdb.connect(db)
     con.execute("CREATE TABLE t AS SELECT 1 AS v")
     con.close()
-    dialect.reset_attached(spark)
+    state_for(spark).attached.clear()
     try:
         assert dialect.transpile_statement(f"ATTACH '{db}' AS m", spark) == ""
         assert spark.sql(
@@ -316,7 +325,7 @@ def test_attach_duckdb_cache_invalidation_on_source_change(spark, tmp_path):
         ).collect()[0][0] == 2
         assert dialect.transpile_statement("DETACH m", spark) == ""
     finally:
-        dialect.reset_attached(spark)
+        state_for(spark).attached.clear()
 
 
 def test_attach_cache_base_is_per_user_and_private():
@@ -327,7 +336,7 @@ def test_attach_cache_base_is_per_user_and_private():
     import os
     import stat
 
-    from arnab_spark.dialect import _attach_cache_base
+    from arnab_spark._dialect_statements import _attach_cache_base
 
     base = _attach_cache_base()
     st = os.lstat(base)
@@ -354,8 +363,8 @@ def test_attach_macro_does_not_shadow_session_macro(spark, tmp_path):
     con.execute("CREATE MACRO greet(x) AS 'attached:' || x")
     con.execute("CREATE MACRO fresh(x) AS x + 100")
     con.close()
-    dialect.reset_attached(spark)
-    dialect.reset_macros(spark)
+    state_for(spark).attached.clear()
+    _forget_macros(spark)
     try:
         assert (
             dialect.transpile_statement(
@@ -372,8 +381,8 @@ def test_attach_macro_does_not_shadow_session_macro(spark, tmp_path):
             dialect.transpile_statement("SELECT fresh(1) AS f", spark)
         ).collect()[0][0] == 101
     finally:
-        dialect.reset_attached(spark)
-        dialect.reset_macros(spark)
+        state_for(spark).attached.clear()
+        _forget_macros(spark)
 
 
 def test_use_attached_catalog_resolves_bare_names(spark, tmp_path):
@@ -427,8 +436,8 @@ def test_use_attached_catalog_resolves_bare_names(spark, tmp_path):
         with _pytest.raises(Exception):
             run("SELECT count(*) FROM use_orders")
     finally:
-        dialect._attached_for(spark).pop("ext", None)
-        dialect._USE_BY_SESSION.pop(spark, None)
+        state_for(spark).attached.pop("ext", None)
+        state_for(spark).use = None
         for v in list(spark.catalog.listTables()):
             if v.name.startswith("ext__"):
                 spark.catalog.dropTempView(v.name)

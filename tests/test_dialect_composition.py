@@ -17,11 +17,19 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from arnab_spark import dialect
+from arnab_spark._dialect_base import state_for
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.spark_utils import register_views
 
 SF = "/root/testdata/sf0.001"
+
+
+def _forget_macros(spark):
+    """Clear the session's macros and macro drops, as a fresh session
+    would have them."""
+    state = state_for(spark)
+    state.macros.clear()
+    state.dropped_macros.clear()
 
 
 @pytest.fixture(scope="module")
@@ -47,8 +55,8 @@ def engines(spark, tmp_path_factory):
 def _run_pair(spark, con, stmts):
     """Execute the statement list on both engines; return the final
     statement's sorted row tuples from each."""
-    dialect.reset_macros(spark)
-    dialect.reset_attached(spark)
+    _forget_macros(spark)
+    state_for(spark).attached.clear()
     fresh = duckdb.connect()
     fresh.execute(
         f"CREATE VIEW orders AS SELECT * FROM read_parquet('{SF}/orders.parquet')"
@@ -67,8 +75,8 @@ def _run_pair(spark, con, stmts):
         assert got == exp, f"{stmts}\nspark={got[:5]}\nduck={exp[:5]}"
     finally:
         fresh.close()
-        dialect.reset_macros(spark)
-        dialect.reset_attached(spark)
+        _forget_macros(spark)
+        state_for(spark).attached.clear()
 
 
 @given(
@@ -488,7 +496,7 @@ def test_unnest_zip_through_macro_and_cte(engines):
     inside a CTE — the zip rewrite runs after the expander and must
     find the main SELECT past the WITH prefix."""
     spark, con, _ = engines
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     fresh = duckdb.connect()
     fresh.execute(
         f"CREATE VIEW orders AS SELECT * FROM read_parquet('{SF}/orders.parquet')"
@@ -508,7 +516,7 @@ def test_unnest_zip_through_macro_and_cte(engines):
         assert got == exp
     finally:
         fresh.close()
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 def test_unnest_zip_guards_stay_loud(engines):
@@ -563,7 +571,7 @@ def test_summarize_of_macro_projection(engines):
     """SUMMARIZE over a subquery whose projection is a macro call —
     the summarize rewrite must run AFTER macro expansion."""
     spark, con, _ = engines
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     fresh = duckdb.connect()
     fresh.execute(
         f"CREATE VIEW orders AS SELECT * FROM read_parquet('{SF}/orders.parquet')"
@@ -586,7 +594,7 @@ def test_summarize_of_macro_projection(engines):
             assert str(got.loc["c", field]) == str(exp.loc["c", field]), field
     finally:
         fresh.close()
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 # ---------------------------------------------------------------------
@@ -957,7 +965,7 @@ def test_unnest_recursive_through_macro_and_cte(engines):
     inside a CTE — the WITH prefix must ride along as the type-probe's
     prefix so the CTE-sourced argument types."""
     spark, con, _ = engines
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     fresh = duckdb.connect()
     fresh.execute(
         f"CREATE VIEW orders AS SELECT * FROM read_parquet('{SF}/orders.parquet')"
@@ -982,7 +990,7 @@ def test_unnest_recursive_through_macro_and_cte(engines):
         assert got == exp
     finally:
         fresh.close()
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 # ---------------------------------------------------------------------

@@ -10,6 +10,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from arnab_spark._dialect_base import state_for
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.spark_utils import register_views
 
@@ -19,6 +20,14 @@ SF = "/root/testdata/sf0.001"
 KEYS = ("o_custkey", "o_orderstatus", "o_orderpriority")
 ORDER_COLS = ("o_totalprice", "o_orderdate", "o_orderkey")
 DIRS = ("", " DESC", " ASC")
+
+
+def _forget_macros(spark):
+    """Clear the session's macros and macro drops, as a fresh session
+    would have them."""
+    state = state_for(spark)
+    state.macros.clear()
+    state.dropped_macros.clear()
 
 
 @pytest.fixture(scope="module")
@@ -368,8 +377,6 @@ def test_macro_expansion_fuzz_matches_duckdb(engines, op, nest, arg1, arg2, temp
     calls, TEMP/OR REPLACE variants, spacing) executed by DuckDB
     natively and by Spark through register-and-expand — scalar results
     must agree exactly."""
-    from arnab_spark import dialect
-
     spark, con = engines
     ws = "  " if spaced else ""
     script = [
@@ -382,7 +389,7 @@ def test_macro_expansion_fuzz_matches_duckdb(engines, op, nest, arg1, arg2, temp
         ),
     ]
     lcon = duckdb.connect()  # fresh: macro DDL must not leak across examples
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     try:
         got = None
         for stmt in script:
@@ -394,5 +401,5 @@ def test_macro_expansion_fuzz_matches_duckdb(engines, op, nest, arg1, arg2, temp
         exp = lcon.execute(script[-1]).fetchone()[0]
         assert got == exp, script
     finally:
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
         lcon.close()

@@ -1,38 +1,40 @@
-"""Guards for the round-12 dialect module split.
+"""Guards for the dialect module split.
 
-The split moves ~3.9 kLoC out of dialect.py behind unchanged public
-names, with the submodules binding shared helpers when the core
-module's bottom re-export imports them. Two failure modes are cheap to
-pin statically:
+`dialect.py` imports its submodules, and each submodule imports the
+leaf `_dialect_base` (per-session state and shared text helpers), never
+`dialect` at module level. Three failure modes are cheap to pin:
 
 1. a moved function referencing a name that neither its own module nor
    its import list defines (caught at CALL time only — the round-12
    extraction itself shipped one: `_rewrite_asof_join` missing from
    `_dialect_unnest`, a NameError only the deep-unnest probe path hit);
-2. a late registration pattern whose dispatch structure was snapshot
-   before the registration ran (`_ARG_CALL` was a module-load regex
-   over `_ARG_CALL_REWRITES`' keys; `_dialect_datetime` registers
-   strftime/substr/... AFTER that point).
+2. an import cycle: a submodule that needs `dialect` to have run first
+   fails to import on its own;
+3. a dispatch structure that misses an entry of `_ARG_CALL_REWRITES`
+   (`_ARG_CALL` was once a snapshot regex taken before `strftime`,
+   `substr`, … were registered).
 """
 
 import ast
 import builtins
 import os
+import subprocess
+import sys
 
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SUBMODULES = (
+    "_dialect_base",
     "_dialect_statements",
     "_dialect_dml",
     "_dialect_datetime",
     "_dialect_unnest",
 )
 
-#: names intentionally resolved inside try/except NameError (the
-#: WeakKeyDictionary-with-plain-dict-fallback pattern)
-ALLOWED_UNDEFINED = {"WeakKeyDictionary"}
+#: names a module may use without binding them
+ALLOWED_UNDEFINED: set = set()
 
 
 @pytest.mark.parametrize("mod", SUBMODULES)
@@ -62,35 +64,29 @@ def test_submodule_has_no_unbound_names(mod):
     assert not unbound, f"{mod}: names with no binding anywhere: {unbound}"
 
 
-def test_public_names_still_importable_from_dialect():
-    """Every name a sibling module or test imports from
-    arnab_spark.dialect must survive the split."""
-    from arnab_spark import dialect
-
-    for name in (
-        "transpile_statement",
-        "table_backing_for",
-        "set_warehouse_for",
-        "warehouse_for",
-        "session_tables_for",
-        "dropped_macros_for",
-        "reset_macros",
-        "reset_attached",
-        "_macros_for",
-        "_attached_for",
-        "_attach_cache_base",
-        "_USE_BY_SESSION",
-        "_WAREHOUSE_BY_SESSION",
-        "_remote_cache_base",
-        "_rewrite_power_ops",
-    ):
-        assert hasattr(dialect, name), name
+def test_each_dialect_module_imports_alone():
+    """Every submodule imports in a fresh interpreter, before and
+    without `arnab_spark.dialect`: the modules import in one direction."""
+    for mod in SUBMODULES:
+        proc = subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                f"import sys, arnab_spark.{mod}; "
+                "assert 'arnab_spark.dialect' not in sys.modules",
+            ],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+        )
+        assert proc.returncode == 0, f"{mod}: {proc.stderr}"
 
 
 def test_late_registrations_dispatch():
-    """The arg-call dispatch regex must cover entries registered by
-    _dialect_datetime AFTER the core module body ran (the snapshot-
-    regex bug the split exposed: strftime silently passed through)."""
+    """The arg-call dispatch regex must cover every entry of the table,
+    including the ones built by _dialect_datetime and the ones added
+    after the table literal (the snapshot-regex bug the split exposed:
+    strftime silently passed through)."""
     from arnab_spark.dialect import _ARG_CALL_REWRITES, transpile_statement
 
     for late in ("strftime", "strptime", "substr", "left", "dayofweek"):

@@ -16,10 +16,19 @@ import duckdb
 import pandas as pd
 import pytest
 
+from arnab_spark._dialect_base import state_for
 from arnab_spark.dialect import transpile_statement
 from arnab_spark.oracle import compare_frames
 
 SF = "/root/testdata/sf0.001"
+
+
+def _forget_macros(spark):
+    """Clear the session's macros and macro drops, as a fresh session
+    would have them."""
+    state = state_for(spark)
+    state.macros.clear()
+    state.dropped_macros.clear()
 
 
 @pytest.fixture()
@@ -413,8 +422,6 @@ def test_create_macro_scalar_and_table(spark, con):
     parenthesized expressions, TABLE macros as derived tables, macros
     calling macros. Differential: DuckDB executes the same script
     natively."""
-    from arnab_spark import dialect
-
     _views(spark)
     script = [
         "CREATE MACRO add_tax(p) AS p * 1.1",
@@ -424,7 +431,7 @@ def test_create_macro_scalar_and_table(spark, con):
         "SELECT o_orderkey, taxed_total(o_totalprice, 2) AS t "
         "FROM cheap_orders() WHERE o_orderkey <= 500",
     ]
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     try:
         spark_pdf = None
         for stmt in script:
@@ -435,38 +442,32 @@ def test_create_macro_scalar_and_table(spark, con):
             con.execute(stmt)
         _duck_spark_match("macro", spark, con, script[-1], spark_pdf)
     finally:
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 def test_create_macro_qualified_and_mismatched_calls_left_loud(spark):
     """A qualified reference (t.name) is not a macro call, and an
     argument-count mismatch is left unexpanded so Spark reports the
     unresolved function instead of running a half-bound template."""
-    from arnab_spark import dialect
-
-    dialect.reset_macros()
-    try:
-        assert transpile_statement("CREATE MACRO f(x) AS x + 1") == ""
-        assert "f(" in transpile_statement("SELECT f(1, 2) AS v")  # mismatch: untouched
-        assert transpile_statement("SELECT t.f FROM t") == "SELECT t.f FROM t"
-        # default parameters (round 4): DuckDB's binder rules exactly —
-        # named args fill defaults; positional-for-default stays loud
-        assert transpile_statement("CREATE MACRO g(a, p := 10) AS a + p") == ""
-        assert transpile_statement("SELECT g(3) AS v") == "SELECT ((3) + (10)) AS v"
-        assert transpile_statement("SELECT g(3, p := 1) AS v") == "SELECT ((3) + (1)) AS v"
-        assert "g(" in transpile_statement("SELECT g(3, 1) AS v")  # positional-for-default: loud
-        # an argument naming ANOTHER parameter must not be re-substituted
-        assert transpile_statement("CREATE MACRO h(a, b) AS a + b") == ""
-        assert transpile_statement("SELECT h(b, 2) AS v FROM t") == "SELECT ((b) + (2)) AS v FROM t"
-    finally:
-        dialect.reset_macros()
+    s = spark.newSession()  # a session with no macros yet
+    assert transpile_statement("CREATE MACRO f(x) AS x + 1", s) == ""
+    assert "f(" in transpile_statement("SELECT f(1, 2) AS v", s)  # mismatch: untouched
+    assert transpile_statement("SELECT t.f FROM t", s) == "SELECT t.f FROM t"
+    # default parameters (round 4): DuckDB's binder rules exactly —
+    # named args fill defaults; positional-for-default stays loud
+    assert transpile_statement("CREATE MACRO g(a, p := 10) AS a + p", s) == ""
+    assert transpile_statement("SELECT g(3) AS v", s) == "SELECT ((3) + (10)) AS v"
+    assert transpile_statement("SELECT g(3, p := 1) AS v", s) == "SELECT ((3) + (1)) AS v"
+    assert "g(" in transpile_statement("SELECT g(3, 1) AS v", s)  # positional-for-default: loud
+    # an argument naming ANOTHER parameter must not be re-substituted
+    assert transpile_statement("CREATE MACRO h(a, b) AS a + b", s) == ""
+    assert transpile_statement("SELECT h(b, 2) AS v FROM t", s) == "SELECT ((b) + (2)) AS v FROM t"
 
 
 def test_run_file_script_with_macro(spark, tmp_path):
     """End-to-end: a run-file script defining and using a DuckDB macro
     executes through the CLI loop (reference: main.rs:165 passes such
     scripts verbatim to DuckDB)."""
-    from arnab_spark import dialect
     from arnab_spark.cli import main
 
     script = tmp_path / "script.sql"
@@ -474,25 +475,50 @@ def test_run_file_script_with_macro(spark, tmp_path):
         "CREATE MACRO double_it(x) AS x * 2;\n"
         "SELECT double_it(21) AS v;\n"
     )
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     try:
         assert main(["run-file", str(script)]) == 0
     finally:
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
-def test_drop_macro_unregisters():
-    from arnab_spark import dialect
+def test_drop_macro_unregisters(spark):
+    s = spark.newSession()  # a session with no macros yet
+    assert transpile_statement("CREATE MACRO f(x) AS x + 1", s) == ""
+    assert transpile_statement("SELECT f(1) AS v", s) == "SELECT ((1) + 1) AS v"
+    assert transpile_statement("DROP MACRO f", s) == ""
+    assert transpile_statement("SELECT f(1) AS v", s) == "SELECT f(1) AS v"
+    assert transpile_statement("DROP MACRO IF EXISTS nothere", s) == ""
 
-    dialect.reset_macros()
-    try:
-        assert transpile_statement("CREATE MACRO f(x) AS x + 1") == ""
-        assert transpile_statement("SELECT f(1) AS v") == "SELECT ((1) + 1) AS v"
-        assert transpile_statement("DROP MACRO f") == ""
-        assert transpile_statement("SELECT f(1) AS v") == "SELECT f(1) AS v"
-        assert transpile_statement("DROP MACRO IF EXISTS nothere") == ""
-    finally:
-        dialect.reset_macros()
+
+def test_dialect_state_is_per_session(spark, tmp_path):
+    """Macros, attached catalogs and the USE alias belong to one
+    session: two sessions defining the same macro name or attaching
+    different catalogs never see each other's, and a statement
+    transpiled without a session registers nothing a later one sees."""
+    from arnab_spark.errors import ArnabError
+
+    for n in (1, 2):
+        con = duckdb.connect(str(tmp_path / f"db{n}.duckdb"))
+        con.execute(f"CREATE TABLE t AS SELECT {n} AS v")
+        con.close()
+    a, b = spark.newSession(), spark.newSession()
+    assert transpile_statement("CREATE MACRO f(x) AS x + 1", a) == ""
+    assert transpile_statement("CREATE MACRO f(x) AS x * 2", b) == ""
+    assert transpile_statement("SELECT f(3) AS v", a) == "SELECT ((3) + 1) AS v"
+    assert transpile_statement("SELECT f(3) AS v", b) == "SELECT ((3) * 2) AS v"
+    for s, alias, n in ((a, "one", 1), (b, "two", 2)):
+        assert transpile_statement(f"ATTACH '{tmp_path}/db{n}.duckdb' AS {alias}", s) == ""
+        assert transpile_statement(f"USE {alias}", s) == ""
+    assert a.sql(transpile_statement("SELECT v FROM t", a)).collect()[0].v == 1
+    assert b.sql(transpile_statement("SELECT v FROM t", b)).collect()[0].v == 2
+    with pytest.raises(ArnabError, match="no attached catalog"):
+        transpile_statement("USE two", a)
+    with pytest.raises(ArnabError, match="no attached catalog"):
+        transpile_statement("USE one", b)
+
+    assert transpile_statement("CREATE MACRO g(x) AS x+1") == ""
+    assert transpile_statement("SELECT g(1)") == "SELECT g(1)"
 
 
 def test_run_file_native_ddl_script(spark, tmp_path):
@@ -1602,8 +1628,6 @@ def test_show_all_tables_statement(spark, con, tmp_path):
     file ATTACHed on both sides (alias/main/false with the model's own
     schema). Rows, (database, name) ordering, and DuckDB type
     spellings must all match; DROP VIEW clears the temp record."""
-    from arnab_spark import dialect
-
     _views(spark)
     db = str(tmp_path / "shat.duckdb")
     filecon = duckdb.connect(db)
@@ -1616,7 +1640,7 @@ def test_show_all_tables_statement(spark, con, tmp_path):
         "CREATE OR REPLACE TEMP VIEW shat_tmp AS "
         "SELECT CAST(1 AS INTEGER) AS a, 'x' AS b"
     )
-    dialect.reset_attached(spark)
+    state_for(spark).attached.clear()
     try:
         con.execute(ddl)
         con.execute(f"ATTACH '{db}' AS shatext")
@@ -1656,7 +1680,7 @@ def test_show_all_tables_statement(spark, con, tmp_path):
         # sessionless: stays loud
         assert transpile_statement("SHOW ALL TABLES").upper().startswith("SHOW")
     finally:
-        dialect.reset_attached(spark)
+        state_for(spark).attached.clear()
         try:
             spark.catalog.dropTempView("shat_tmp")
         except Exception:

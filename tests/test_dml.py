@@ -13,8 +13,8 @@ import os
 import duckdb
 import pytest
 
-from arnab_spark import dialect
-from arnab_spark.dialect import table_backing_for, transpile_statement
+from arnab_spark._dialect_base import state_for
+from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError
 
 
@@ -486,7 +486,7 @@ def test_joined_dml_pruned_rewrite_on_backed_table(spark, con, tmp_path):
         "(3, 'p2', 30.0), (4, 'p2', 40.0)) AS t(id, part, score)"
     ).write.partitionBy("part").parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("jt")
-    table_backing_for(spark)["jt"] = dest
+    state_for(spark).backing["jt"] = dest
     con.execute(
         "CREATE TABLE jt AS SELECT * FROM (VALUES (1, 'p1', 10.0), "
         "(2, 'p1', 20.0), (3, 'p2', 30.0), (4, 'p2', 40.0)) AS t(id, part, score)"
@@ -521,7 +521,7 @@ def test_joined_dml_pruned_rewrite_on_backed_table(spark, con, tmp_path):
         # layout survived both statements
         assert glob.glob(f"{dest}/part=p1/*.parquet")
     finally:
-        table_backing_for(spark).pop("jt", None)
+        state_for(spark).backing.pop("jt", None)
         spark.catalog.dropTempView("jt")
         _run(spark, "DROP TABLE js")
 
@@ -661,7 +661,7 @@ def test_dml_persists_through_backed_table_swap(spark, tmp_path):
     dest = str(tmp_path / "backed_t")
     spark.sql(BASE.replace("SELECT * FROM", "SELECT * FROM")).write.parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("backed_t")
-    table_backing_for(spark)["backed_t"] = dest
+    state_for(spark).backing["backed_t"] = dest
     try:
         _run(spark, "INSERT INTO backed_t VALUES (4, 'd', 0.5)")
         _run(spark, "DELETE FROM backed_t WHERE id = 2")
@@ -674,21 +674,19 @@ def test_dml_persists_through_backed_table_swap(spark, tmp_path):
         # and no swap sibling (stage, old copy) was left behind
         assert not [d for d in os.listdir(tmp_path) if d.startswith("backed_t__")]
     finally:
-        table_backing_for(spark).pop("backed_t", None)
+        state_for(spark).backing.pop("backed_t", None)
         spark.catalog.dropTempView("backed_t")
 
 
 def test_dml_against_attached_catalog_is_read_only(spark, tmp_path):
-    from arnab_spark.dialect import _attached_for
-
-    _attached_for(spark)["ext"] = {"items"}
+    state_for(spark).attached["ext"] = {"items"}
     try:
         with pytest.raises(ArnabError, match="read-only"):
             _run(spark, "INSERT INTO ext.items VALUES (1)")
         with pytest.raises(ArnabError, match="read-only"):
             _run(spark, "DELETE FROM ext.items WHERE 1=1")
     finally:
-        _attached_for(spark).pop("ext", None)
+        state_for(spark).attached.pop("ext", None)
 
 
 def test_native_catalog_table_insert_still_passes_through(spark):
@@ -800,11 +798,10 @@ def test_create_table_persists_in_warehouse_and_drop_removes(spark, tmp_path):
     CREATE TABLE persists as a catalogued parquet dir a next session
     reattaches; DROP TABLE removes dir + catalog entry."""
     from arnab_spark.catalog import attach_warehouse, load_catalog
-    from arnab_spark.dialect import set_warehouse_for
 
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
-    set_warehouse_for(spark, wh)
+    state_for(spark).warehouse = wh
     try:
         _run(spark, "CREATE TABLE dml_wh AS SELECT 42 AS answer")
         dest = os.path.join(wh, "dml_wh")
@@ -812,7 +809,7 @@ def test_create_table_persists_in_warehouse_and_drop_removes(spark, tmp_path):
         assert load_catalog(wh)["dml_wh"]["materialize"] == "table"
         # a "next session" (fresh attach) sees it
         spark.catalog.dropTempView("dml_wh")
-        table_backing_for(spark).pop("dml_wh", None)
+        state_for(spark).backing.pop("dml_wh", None)
         assert "dml_wh" in attach_warehouse(spark, wh)
         assert spark.table("dml_wh").collect()[0].answer == 42
         _run(spark, "DROP TABLE dml_wh")
@@ -820,10 +817,8 @@ def test_create_table_persists_in_warehouse_and_drop_removes(spark, tmp_path):
         assert "dml_wh" not in load_catalog(wh)
         assert not spark.catalog.tableExists("dml_wh")
     finally:
-        from arnab_spark.dialect import _WAREHOUSE_BY_SESSION
-
-        _WAREHOUSE_BY_SESSION.pop(spark, None)
-        table_backing_for(spark).pop("dml_wh", None)
+        state_for(spark).warehouse = None
+        state_for(spark).backing.pop("dml_wh", None)
 
 
 def test_engine_model_pipeline_with_dml(spark, tmp_path):
@@ -879,7 +874,9 @@ def test_engine_model_pipeline_with_dml(spark, tmp_path):
                 spark.catalog.dropTempView(v)
             except Exception:
                 pass
-        dialect.reset_macros(spark)
+        state = state_for(spark)
+        state.macros.clear()
+        state.dropped_macros.clear()
 
 
 # ---------------------------------------------------------------- ALTER TABLE
@@ -935,12 +932,11 @@ def test_alter_rename_table(spark, con):
 
 
 def test_alter_rename_backed_table_moves_dir(spark, tmp_path):
-    from arnab_spark.dialect import _WAREHOUSE_BY_SESSION, set_warehouse_for
     from arnab_spark.catalog import load_catalog
 
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
-    set_warehouse_for(spark, wh)
+    state_for(spark).warehouse = wh
     try:
         _run(spark, "CREATE TABLE dml_mv AS SELECT 1 AS x")
         _run(spark, "ALTER TABLE dml_mv RENAME TO dml_mv2")
@@ -951,9 +947,9 @@ def test_alter_rename_backed_table_moves_dir(spark, tmp_path):
         assert spark.table("dml_mv2").collect()[0].x == 1
         _run(spark, "DROP TABLE dml_mv2")
     finally:
-        _WAREHOUSE_BY_SESSION.pop(spark, None)
+        state_for(spark).warehouse = None
         for n in ("dml_mv", "dml_mv2"):
-            table_backing_for(spark).pop(n, None)
+            state_for(spark).backing.pop(n, None)
 
 
 def test_alter_errors_match_duckdb_posture(spark):
@@ -1006,11 +1002,10 @@ def test_create_view_over_temp_table_works(spark):
 
 def test_create_view_persists_in_warehouse(spark, tmp_path):
     from arnab_spark.catalog import load_catalog
-    from arnab_spark.dialect import _WAREHOUSE_BY_SESSION, set_warehouse_for
 
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
-    set_warehouse_for(spark, wh)
+    state_for(spark).warehouse = wh
     try:
         _run(spark, "CREATE VIEW dml_pv AS SELECT 3 AS z")
         entry = load_catalog(wh)["dml_pv"]
@@ -1018,7 +1013,7 @@ def test_create_view_persists_in_warehouse(spark, tmp_path):
         _run(spark, "DROP VIEW dml_pv")
         assert "dml_pv" not in load_catalog(wh)
     finally:
-        _WAREHOUSE_BY_SESSION.pop(spark, None)
+        state_for(spark).warehouse = None
         try:
             spark.catalog.dropTempView("dml_pv")
         except Exception:
@@ -1076,22 +1071,15 @@ def hermetic_tables(spark):
     leaked entries would otherwise change what an export includes and
     what the re-import collides with (already-existing tables/views
     abort the import loudly, which is DuckDB's own IMPORT behavior)."""
-    from arnab_spark.dialect import (
-        _WAREHOUSE_BY_SESSION,
-        session_tables_for,
-        set_warehouse_for,
-    )
-
-    prev_wh = _WAREHOUSE_BY_SESSION.pop(spark, None)
-    backing = table_backing_for(spark)
-    stables = session_tables_for(spark)
+    state = state_for(spark)
+    prev_wh, state.warehouse = state.warehouse, None
+    backing = state.backing
+    stables = state.session_tables
     prev_backing, prev_stables = dict(backing), set(stables)
     backing.clear()
     stables.clear()
     yield
-    _WAREHOUSE_BY_SESSION.pop(spark, None)
-    if prev_wh is not None:
-        set_warehouse_for(spark, prev_wh)
+    state.warehouse = prev_wh
     backing.clear()
     backing.update(prev_backing)
     stables.clear()
@@ -1099,12 +1087,10 @@ def hermetic_tables(spark):
 
 
 def test_export_import_roundtrip(spark, tmp_path, hermetic_tables):
-    from arnab_spark.dialect import set_warehouse_for
-
     d = str(tmp_path / "exp")
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
-    set_warehouse_for(spark, wh)
+    state_for(spark).warehouse = wh
     _run(spark, "CREATE TEMP TABLE dml_exp AS SELECT 1 AS n, 'a' AS s")
     try:
         _run(spark, f"EXPORT DATABASE '{d}' (FORMAT PARQUET)")
@@ -1235,7 +1221,7 @@ def test_partitioned_backed_dml_rewrites_only_touched_partitions(
         "AS t(p, v, s)"
     ).write.partitionBy("p").parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("pt")
-    table_backing_for(spark)["pt"] = dest
+    state_for(spark).backing["pt"] = dest
     con.execute(
         "CREATE TABLE pt AS SELECT * FROM (VALUES (10, 'a', 1), (11, 'b', 1), "
         "(20, 'c', 2)) AS t(v, s, p)"
@@ -1265,7 +1251,7 @@ def test_partitioned_backed_dml_rewrites_only_touched_partitions(
         exp = sorted(con.execute("SELECT v, s, p FROM pt").fetchall())
         assert got == exp == [(10, "A", 1), (12, "D", 1), (20, "c", 2)]
     finally:
-        table_backing_for(spark).pop("pt", None)
+        state_for(spark).backing.pop("pt", None)
         spark.catalog.dropTempView("pt")
         con.execute("DROP TABLE pt")
 
@@ -1274,7 +1260,7 @@ def test_flat_backed_insert_appends_without_rewrite(spark, tmp_path):
     dest = str(tmp_path / "flat")
     spark.sql("SELECT 1 AS x").write.parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("flat_t")
-    table_backing_for(spark)["flat_t"] = dest
+    state_for(spark).backing["flat_t"] = dest
     try:
         before = _files(dest)
         _run(spark, "INSERT INTO flat_t VALUES (2)")
@@ -1284,7 +1270,7 @@ def test_flat_backed_insert_appends_without_rewrite(spark, tmp_path):
         assert len(after) > len(before)
         assert sorted(r.x for r in spark.table("flat_t").collect()) == [1, 2]
     finally:
-        table_backing_for(spark).pop("flat_t", None)
+        state_for(spark).backing.pop("flat_t", None)
         spark.catalog.dropTempView("flat_t")
 
 
@@ -1298,7 +1284,7 @@ def test_full_swap_preserves_hive_layout(spark, tmp_path):
         "SELECT * FROM (VALUES (1, 10), (2, 20)) AS t(p, v)"
     ).write.partitionBy("p").parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("pl_t")
-    table_backing_for(spark)["pl_t"] = dest
+    state_for(spark).backing["pl_t"] = dest
     try:
         _run(spark, "UPDATE pl_t SET p = 3 WHERE v = 10")  # moves partitions
         dirs = sorted(d for d in os.listdir(dest) if d.startswith("p="))
@@ -1306,7 +1292,7 @@ def test_full_swap_preserves_hive_layout(spark, tmp_path):
         got = sorted((r.v, r.p) for r in spark.table("pl_t").collect())
         assert got == [(10, 3), (20, 2)]
     finally:
-        table_backing_for(spark).pop("pl_t", None)
+        state_for(spark).backing.pop("pl_t", None)
         spark.catalog.dropTempView("pl_t")
 
 
@@ -1351,7 +1337,7 @@ def test_delete_escaped_partition_values_falls_back_correctly(spark, tmp_path):
         "SELECT * FROM (VALUES ('a b', 1), ('c:d', 2), ('plain', 3)) AS t(p, v)"
     ).write.partitionBy("p").parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("esc_t")
-    table_backing_for(spark)["esc_t"] = dest
+    state_for(spark).backing["esc_t"] = dest
     try:
         _run(spark, "DELETE FROM esc_t WHERE p = 'a b'")
         got = sorted((r.p, r.v) for r in spark.table("esc_t").collect())
@@ -1360,7 +1346,7 @@ def test_delete_escaped_partition_values_falls_back_correctly(spark, tmp_path):
         got = sorted((r.p, r.v) for r in spark.table("esc_t").collect())
         assert got == [("c:d", 2)]
     finally:
-        table_backing_for(spark).pop("esc_t", None)
+        state_for(spark).backing.pop("esc_t", None)
         spark.catalog.dropTempView("esc_t")
 
 def test_truncate_and_full_delete_keep_partitioned_table_readable(
@@ -1381,7 +1367,7 @@ def test_truncate_and_full_delete_keep_partitioned_table_readable(
             "SELECT * FROM (VALUES (1, 10, 'a'), (2, 20, 'b')) AS t(p, v, s)"
         ).write.partitionBy("p").parquet(dest)
         spark.read.parquet(dest).createOrReplaceTempView(name)
-        table_backing_for(spark)[name] = dest
+        state_for(spark).backing[name] = dest
         con.execute(
             f"CREATE TABLE {name} AS SELECT * FROM "
             "(VALUES (1, 10, 'a'), (2, 20, 'b')) AS t(p, v, s)"
@@ -1403,7 +1389,7 @@ def test_truncate_and_full_delete_keep_partitioned_table_readable(
             exp = sorted(con.execute(f"SELECT p, v, s FROM {name}").fetchall())
             assert got == exp == [(3, 30, "c")]
         finally:
-            table_backing_for(spark).pop(name, None)
+            state_for(spark).backing.pop(name, None)
             spark.catalog.dropTempView(name)
             con.execute(f"DROP TABLE {name}")
 
@@ -1417,7 +1403,7 @@ def test_copy_from_backed_appends_without_rewrite(spark, con, tmp_path):
         "SELECT * FROM (VALUES (1, 10), (2, 20)) AS t(p, v)"
     ).write.partitionBy("p").parquet(dest)
     spark.read.parquet(dest).createOrReplaceTempView("cfb_t")
-    table_backing_for(spark)["cfb_t"] = dest
+    state_for(spark).backing["cfb_t"] = dest
     # the hive-partitioned dir reads back partition-cols-LAST (v, p), so
     # the DuckDB twin and the CSV batch use that column order (same
     # convention as test_partitioned_backed_dml_rewrites_only_touched_
@@ -1438,7 +1424,7 @@ def test_copy_from_backed_appends_without_rewrite(spark, con, tmp_path):
         exp = sorted(con.execute("SELECT p, v FROM cfb_t").fetchall())
         assert got == exp == [(1, 10), (1, 11), (2, 20), (3, 30)]
     finally:
-        table_backing_for(spark).pop("cfb_t", None)
+        state_for(spark).backing.pop("cfb_t", None)
         spark.catalog.dropTempView("cfb_t")
         con.execute("DROP TABLE cfb_t")
 
@@ -1462,7 +1448,7 @@ def test_alter_partition_column_degrades_layout_instead_of_failing(
             "SELECT * FROM (VALUES (1, 10), (2, 20)) AS t(p, v)"
         ).write.partitionBy("p").parquet(dest)
         spark.read.parquet(dest).createOrReplaceTempView(name)
-        table_backing_for(spark)[name] = dest
+        state_for(spark).backing[name] = dest
         con.execute(
             f"CREATE TABLE {name} AS SELECT * FROM (VALUES (1, 10), (2, 20)) AS t(p, v)"
         )
@@ -1474,6 +1460,6 @@ def test_alter_partition_column_degrades_layout_instead_of_failing(
             exp = con.execute(q).fetchall()
             assert got == exp == expected, stmt
         finally:
-            table_backing_for(spark).pop(name, None)
+            state_for(spark).backing.pop(name, None)
             spark.catalog.dropTempView(name)
             con.execute(f"DROP TABLE {name}")

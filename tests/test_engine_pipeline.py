@@ -10,12 +10,21 @@ import textwrap
 import duckdb
 import pytest
 
+from arnab_spark._dialect_base import state_for
 from arnab_spark.config import Config, load_config
 from arnab_spark.errors import ArnabError, CyclicDependencyError, UnknownModelType
 from arnab_spark.session import Session
 from arnab_spark.viz import save_visualization
 
 SF = "/root/testdata/sf0.001"
+
+
+def _forget_macros(spark):
+    """Clear the session's macros and macro drops, as a fresh session
+    would have them."""
+    state = state_for(spark)
+    state.macros.clear()
+    state.dropped_macros.clear()
 
 
 def write(root, rel, content):
@@ -705,7 +714,6 @@ def test_duckdb_dialect_example_project(spark, tmp_path):
 
     import duckdb
 
-    from arnab_spark import dialect
     from arnab_spark.config import load_config
     from arnab_spark.session import Session
 
@@ -713,7 +721,7 @@ def test_duckdb_dialect_example_project(spark, tmp_path):
                        "examples", "duckdb_dialect")
     proj = tmp_path / "proj"
     shutil.copytree(src, proj, ignore=shutil.ignore_patterns("warehouse"))
-    dialect.reset_macros(spark)
+    _forget_macros(spark)
     try:
         cfg = load_config(str(proj))
         cfg.db_path = str(proj / "warehouse")
@@ -757,7 +765,7 @@ def test_duckdb_dialect_example_project(spark, tmp_path):
         )
         assert got_tp == exp_tp
     finally:
-        dialect.reset_macros(spark)
+        _forget_macros(spark)
 
 
 def test_columns_series_describe_model_files(spark, tmp_path):

@@ -13,7 +13,8 @@ import pytest
 import os
 import stat
 
-from arnab_spark.dialect import _remote_cache_base, transpile_statement
+from arnab_spark._dialect_base import _remote_cache_base
+from arnab_spark.dialect import transpile_statement
 
 
 @pytest.fixture()
