@@ -28,7 +28,9 @@ upstream table re-applies after it, so references resolve. Upserts
 update in place — re-running one model must not move it past a
 downstream view in the order. A view whose upstream vanished re-raises
 only on *query*, like a DuckDB view over a dropped table; attach warns
-and skips it.
+and skips it. A view over a session temp table or view (its entry's
+``temp_refs``) is skipped without a warning: DuckDB keeps such a view
+in its file, and querying it after a reopen fails the same way.
 
 The catalog and macro files are rewritten only when their content
 changes, so a warm rerun of an unchanged project writes neither.
@@ -81,14 +83,18 @@ def record_model(
     materialize: str,
     select_sql: str | None = None,
     schema=None,
+    temp_refs: list[str] | None = None,
 ) -> None:
     """Upsert one model's catalog entry (atomic temp-file + rename, so a
     crash mid-write leaves the previous catalog intact). ``schema`` is
     the StructType a table or incremental write put in its Parquet
-    files. An entry equal to the stored one is not rewritten."""
+    files; ``temp_refs`` names the session temp objects a view reads.
+    An entry equal to the stored one is not rewritten."""
     entry = {"materialize": materialize}
     if select_sql is not None:
         entry["select"] = select_sql
+    if temp_refs:
+        entry["temp_refs"] = temp_refs
     if schema is not None:
         entry["schema"] = schema.jsonValue()
     with _locked(db_path):
@@ -286,6 +292,8 @@ def attach_warehouse(spark, db_path: str, prefix: str = "") -> list[str]:
     _attach_macros(spark, db_path)
     cat = load_catalog(db_path)
     for model_id, entry in cat.items():
+        if entry.get("temp_refs"):
+            continue  # its temp upstreams died with their session
         try:
             if entry["materialize"] in ("table", "incremental"):
                 dest = os.path.join(db_path, model_id)

@@ -323,7 +323,8 @@ class Node:
                             # so later sessions reattach it — parity with
                             # the reference's DuckDB-file persistence
                             # (node.rs:156-174, main.rs:126-132)
-                            record_model(db_path, self.id, "view", stmt)
+                            record_model(db_path, self.id, "view", stmt,
+                                         temp_refs=self._temp_refs(spark, stmt))
                 else:
                     spark.sql(bind_file_scans(spark, stmt))
             except ArnabError:
@@ -338,6 +339,14 @@ class Node:
         # a table's row count is the one the reference reads back right
         # after its CREATE TABLE (node.rs:179-189), taken from the write
         return NodeExecutionResult(n_rows, self.materialize)
+
+    @staticmethod
+    def _temp_refs(spark, select: str) -> list[str]:
+        """The session temp tables and views ``select`` reads. They die
+        with the session, so a later session cannot attach the view."""
+        state = state_for(spark)
+        temp = state.session_tables | state.temp_ddl
+        return sorted({r.lower() for r in get_sql_references(select)} & temp)
 
     def _execute_python(self, spark, db_path: str | None) -> NodeExecutionResult:
         """PYTHON model kind: the function returns a DataFrame which is

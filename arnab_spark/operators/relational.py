@@ -58,7 +58,7 @@ def connected_components(
     Star contraction rewires the EDGES each round, halving component
     radius per large-star: the same graph closes in 11 operations of
     ~1.2 s each (closure 75 s -> 19.7 s measured at sf10, each op also
-    cheaper — 2 stages vs 4; see SCALE.md round-10). On a 1000-executor
+    cheaper — 2 stages vs 4; see measurements/SCALE.md round-10). On a 1000-executor
     cluster the bound matters more, not less: rounds are synchronization
     barriers, and O(log n) is the published lower-envelope for
     whole-graph closure in bulk-synchronous systems.

@@ -46,7 +46,7 @@ def minhash_signatures(
       (one-permutation-hashing style — each slice is an independent
       hash function). n_bands MIN aggregates in one pass + stack
       wide→long: no bands× row blowup and the shingle stream is hashed
-      once, not n_bands times (see SCALE.md). The oracled corpus
+      once, not n_bands times (see measurements/SCALE.md). The oracled corpus
       queries pass this explicitly so their results stay bit-identical
       to their DuckDB sha256 spellings; DuckDB has no xxhash64, so the
       fast family is operator-level only.

@@ -121,7 +121,7 @@ def asof_carry_forward_bucketed(
 ) -> DataFrame:
     """Hot-key-safe variant of :func:`asof_carry_forward` — the
     documented structural mitigation from the round-11 skew study
-    (SCALE.md): a carry-forward window partitions by the key alone, so
+    (measurements/SCALE.md): a carry-forward window partitions by the key alone, so
     one key owning task-sized data becomes a single-task sort no
     config can split. This version is the classic distributed
     segmented scan:

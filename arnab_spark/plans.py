@@ -1,5 +1,5 @@
 """Physical-plan audit helpers (the "explain and iterate" loop from
-SCALE.md, as a programmatic API).
+measurements/SCALE.md, as a programmatic API).
 
 ``audit_plan(df)`` condenses ``explain("formatted")`` into the facts
 that matter at 100 TB: per-scan read schema + pushed/partition filters,

@@ -167,7 +167,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 #    composite bands: t* = (1/4)^(1/2) = 0.50 exactly, vs the old
 #    r=1 x b=8's t* = 0.125 whose s=0.1 collision noise (57% of
 #    incidental pairs!) compounded super-linearly with corpus size —
-#    the SCALE.md finding that opened this ask.
+#    the measurements/SCALE.md finding that opened this ask.
 # 2. METRIC ALIGNMENT. The r1-r10 verify stage scored UNIGRAM word-set
 #    Jaccard against TRIGRAM-shingle signatures — two different
 #    similarities. The loose banding masked the mismatch; centering

@@ -515,7 +515,7 @@ def text_chunk_windows(spark, sf_dir):
     Python and no shuffle; the ~1.25x row/byte expansion streams
     straight to the next stage. The words array is bound ONCE in a
     subquery (not re-split per element — the lambda re-evaluation trap
-    documented in SCALE.md)."""
+    documented in measurements/SCALE.md)."""
     register_views(spark, sf_dir, ("documents",))
     return spark.sql(
         """

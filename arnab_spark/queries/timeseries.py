@@ -747,7 +747,7 @@ def time_resample_ohlc(spark, sf_dir):
     shuffle no longer carries event rows at all. min/max over a
     struct is not hash-aggregable, so the physical plan is a
     SortAggregate with an in-partition sort on each side of the
-    Exchange (see plans/r15/time_resample_ohlc_after.txt): the
+    Exchange (see measurements/r15/plans/time_resample_ohlc_after.txt): the
     map-side sort streams the scanned rows by group key (no shuffle,
     spillable), the reduce-side sort sees only the O(buckets)
     combined rows — the shuffle-volume claim is what matters at

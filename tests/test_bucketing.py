@@ -1,4 +1,4 @@
-"""Bucketed co-located join (SCALE.md "Joins"): pre-bucketing both
+"""Bucketed co-located join (measurements/SCALE.md "Joins"): pre-bucketing both
 sides on the join key removes the shuffle entirely — the physical plan
 must contain a SortMergeJoin with NO Exchange. This is the at-scale
 layout for repeatedly-joined fact/dim tables."""

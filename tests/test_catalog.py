@@ -486,3 +486,33 @@ def test_alter_table_keeps_recorded_schema_current(spark, tmp_path):
     assert fresh.table("base").schema == fresh.read.parquet(os.path.join(cfg.db_path, "base")).schema
     assert sorted(map(tuple, fresh.table("base").collect())) == [(1, "a", 5), (2, "b", 10)]
 
+
+
+def test_view_over_temp_table_is_skipped_quietly_and_fails_on_query(spark, tmp_path, capsys):
+    """A view model over a session temp table cannot outlive the session
+    that built it. Attach skips it without running or printing anything;
+    querying it in a fresh session raises, as querying DuckDB's view
+    over a temp table does after a reopen."""
+    import pytest
+
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "banded.sql").write_text(
+        "CREATE TEMP TABLE scratch_t (x INTEGER);\n"
+        "INSERT INTO scratch_t VALUES (1), (2);\n"
+        "SELECT x * 10 AS y FROM scratch_t"
+    )
+    (tmp_path / "config.yaml").write_text(
+        f"models_dir: {models}\ndb_path: {tmp_path / 'wh'}\n"
+    )
+    cfg = load_config(str(tmp_path), None, None)
+    # its own session: the temp table must not outlive this test
+    assert Session(cfg, spark.newSession()).run().ok
+    assert load_catalog(cfg.db_path)["banded"]["temp_refs"] == ["scratch_t"]
+    capsys.readouterr()
+
+    fresh = spark.newSession()
+    assert attach_warehouse(fresh, cfg.db_path) == []
+    assert "warning" not in capsys.readouterr().out
+    with pytest.raises(Exception, match="banded"):
+        fresh.sql("SELECT * FROM banded").collect()

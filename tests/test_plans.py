@@ -1,4 +1,4 @@
-"""Plan-audit regression tests: the optimizations SCALE.md claims must
+"""Plan-audit regression tests: the optimizations measurements/SCALE.md claims must
 be visible in the physical plans, permanently."""
 
 import os

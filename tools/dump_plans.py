@@ -1,6 +1,6 @@
 """Dump `.explain("formatted")` for registry queries to files.
 
-Round-15 deliverable support: `plans/r15/<query>_{before,after}.txt`
+Round-15 deliverable support: `measurements/r15/plans/<query>_{before,after}.txt`
 must carry the physical plan of every query touched this round, so the
 plan-shape claims in measurements/r15/OPTIMIZATION_r15.md are checkable
 offline.
