@@ -1,7 +1,7 @@
 """The dialect's leaf module: the per-session state and the text
-helpers that more than one dialect module needs. It imports only
-:mod:`arnab_spark.lexer`, so every other dialect module imports it
-without a cycle.
+helpers that more than one dialect module needs. At module level it
+imports only :mod:`arnab_spark.lexer`, so every other dialect module
+imports it without a cycle.
 
 A DuckDB connection keeps its macros, attached databases and temp
 objects in one place (reference: node.rs:176, main.rs:165). The Spark
@@ -59,6 +59,14 @@ class DialectState:
 
 # weak keys, so a discarded session's state is collectable
 _STATE_BY_SESSION: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def _transpile(sql: str, spark) -> str:
+    """:func:`arnab_spark.dialect.transpile_statement`, for the handlers
+    that transpile a statement's body or a script they run."""
+    from arnab_spark.dialect import transpile_statement
+
+    return transpile_statement(sql, spark)
 
 
 def state_for(spark) -> DialectState:
@@ -175,11 +183,6 @@ def _file_relation(m: re.Match) -> str:
     return f"{m.group(1)} {fmt}.`{path}`"
 
 
-def _rewrite_file_relations(sql: str) -> str:
-    """Both file-scan shapes of :func:`_file_relation`, rewritten."""
-    return _BARE_PATH.sub(_file_relation, _READ_FUNC.sub(_file_relation, sql))
-
-
 # ------------------------------------------------ shared text passes
 
 _STRING_SPLIT = re.compile(r"\b(string_split|str_split|string_to_array)\s*\(", re.IGNORECASE)
@@ -203,7 +206,7 @@ def _lit_match(s: str):
     return _PLAIN_STR_LIT.match(s)
 
 
-def _rewrite_string_split(sql: str) -> str:
+def _rewrite_string_split(sql: str, spark=None) -> str:
     """``string_split(x, 'sep')`` → ``split(x, '<regex-escaped sep>')``.
 
     DuckDB's separator is a LITERAL string while Spark's ``split`` takes
@@ -246,7 +249,7 @@ def _is_set_op_at(sql: str, idx: int, word: str) -> bool:
     return bool(re.match(r"(?is)^\(\s*(select|from|with|values|table)\b", after))
 
 
-def _rewrite_qualify(sql: str) -> str:
+def _rewrite_qualify(sql: str, spark=None) -> str:
     """Rewrite a top-level ``QUALIFY <pred>`` into subquery + filter:
 
         SELECT * EXCEPT (__arnab_qualify) FROM (
@@ -277,7 +280,7 @@ def _rewrite_qualify(sql: str) -> str:
 _DISTINCT_ON = re.compile(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
 
 
-def _rewrite_distinct_on(sql: str) -> str:
+def _rewrite_distinct_on(sql: str, spark=None) -> str:
     """Rewrite a statement-level ``SELECT DISTINCT ON (keys) … [ORDER
     BY …] [LIMIT …]`` into the standard window idiom:
 
@@ -371,7 +374,7 @@ _USING_SAMPLE = re.compile(
 )
 
 
-def _rewrite_using_sample(sql: str) -> str:
+def _rewrite_using_sample(sql: str, spark=None) -> str:
     """DuckDB ``USING SAMPLE`` → Spark ``TABLESAMPLE``. Percentage
     samples map to Bernoulli percent sampling; bare numbers / ROWS map
     to row-count sampling (DuckDB's reservoir default — both are "give

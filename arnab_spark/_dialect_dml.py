@@ -14,18 +14,13 @@ the session's :class:`~arnab_spark._dialect_base.DialectState`.
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 
 from arnab_spark import lexer
-from arnab_spark._dialect_base import _resolve_path, state_for
-
-
-def _transpile(sql: str, spark) -> str:
-    """:func:`arnab_spark.dialect.transpile_statement`, for the lifts
-    that transpile a statement's body or the relation they write."""
-    from arnab_spark.dialect import transpile_statement
-
-    return transpile_statement(sql, spark)
+from arnab_spark._dialect_base import _resolve_path, _transpile, state_for
+from arnab_spark.errors import ArnabError
 
 
 # ------------------------------------------- DML: INSERT / DELETE / UPDATE
@@ -77,8 +72,6 @@ def _dml_resolve(spark, raw_target: str, on_view: str = "raise"):
     Spark's own resolution/errors). Attached catalogs are read-only,
     matching DuckDB's ``ATTACH … (READ_ONLY)`` posture — this engine
     cannot write back into a foreign .duckdb file."""
-    from arnab_spark.errors import ArnabError
-
     parts = [
         p.strip().strip('"')
         for p in re.split(r"\.(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)", raw_target)
@@ -125,23 +118,21 @@ def _hive_partition_cols(dest: str) -> list[str]:
     """Partition columns of a hive-layout parquet dir (outermost-in),
     detected from the ``col=value`` directory names the engine's
     ``partition_by`` layout hint writes; [] for flat layouts."""
-    import os as _os
-
     cols: list[str] = []
     cur = dest
     while True:
         try:
             subs = [
                 d
-                for d in _os.listdir(cur)
-                if "=" in d and _os.path.isdir(_os.path.join(cur, d))
+                for d in os.listdir(cur)
+                if "=" in d and os.path.isdir(os.path.join(cur, d))
             ]
         except OSError:
             break
         if not subs:
             break
         cols.append(subs[0].split("=", 1)[0])
-        cur = _os.path.join(cur, subs[0])
+        cur = os.path.join(cur, subs[0])
     return cols
 
 
@@ -152,14 +143,12 @@ def _register_backed(spark, name: str, dest: str, schema) -> None:
     warehouse, the catalog's recorded schema follows the rewrite: ALTER
     TABLE may have changed it, and attach types the table by that
     schema without reading the files."""
-    import os as _os
-
     from arnab_spark.catalog import read_table, record_schema
 
     read_table(spark, dest, schema).createOrReplaceTempView(name)
     wh = state_for(spark).warehouse
-    if wh and _os.path.dirname(_os.path.normpath(dest)) == _os.path.normpath(wh):
-        record_schema(wh, _os.path.basename(_os.path.normpath(dest)), schema)
+    if wh and os.path.dirname(os.path.normpath(dest)) == os.path.normpath(wh):
+        record_schema(wh, os.path.basename(os.path.normpath(dest)), schema)
 
 
 def _dml_append(spark, name: str, aligned) -> None:
@@ -172,9 +161,6 @@ def _dml_append(spark, name: str, aligned) -> None:
     collide; a crash mid-move leaves a prefix of the batch's files
     appended (DuckDB's WAL gives all-or-nothing here — documented
     trade for not rewriting the table)."""
-    import os as _os
-    import shutil as _shutil
-
     dest = state_for(spark).backing[name.lower()]
     pcols = _hive_partition_cols(dest)
     staging = f"{dest}__dml_append"
@@ -182,15 +168,15 @@ def _dml_append(spark, name: str, aligned) -> None:
     if pcols:
         w = w.partitionBy(*pcols)
     w.parquet(staging)
-    for root, _dirs, files in _os.walk(staging):
-        rel = _os.path.relpath(root, staging)
+    for root, _dirs, files in os.walk(staging):
+        rel = os.path.relpath(root, staging)
         for f in files:
             if not f.endswith(".parquet"):
                 continue  # _SUCCESS and friends
-            tgt = dest if rel == "." else _os.path.join(dest, rel)
-            _os.makedirs(tgt, exist_ok=True)
-            _os.rename(_os.path.join(root, f), _os.path.join(tgt, f))
-    _shutil.rmtree(staging, ignore_errors=True)
+            tgt = dest if rel == "." else os.path.join(dest, rel)
+            os.makedirs(tgt, exist_ok=True)
+            os.rename(os.path.join(root, f), os.path.join(tgt, f))
+    shutil.rmtree(staging, ignore_errors=True)
     _register_backed(spark, name, dest, spark.table(name).schema)
 
 
@@ -359,9 +345,6 @@ def _overwrite_touched_partitions(
     parity: empty table, schema intact. An UPDATE moves no row between
     partitions, so it passes no keys and skips the job that finds the
     live ones."""
-    import os as _os
-    import shutil as _shutil
-
     from arnab_spark.catalog import has_part_files, replace_dir
 
     (
@@ -377,8 +360,8 @@ def _overwrite_touched_partitions(
         }
         for key in touched_keys:
             if key not in alive:
-                sub = _os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
-                _shutil.rmtree(sub, ignore_errors=True)
+                sub = os.path.join(dest, *[f"{c}={v}" for c, v in zip(pcols, key)])
+                shutil.rmtree(sub, ignore_errors=True)
         if not has_part_files(dest):
             replace_dir(spark.createDataFrame([], survivors.schema), dest)
     _register_backed(spark, name, dest, spark.table(name).schema)
@@ -387,8 +370,6 @@ def _overwrite_touched_partitions(
 def _parse_assignments(assigns_text: str, types: dict, name: str) -> dict:
     """Parse an UPDATE SET list into {lowered column: expression text},
     with DuckDB's errors for unknown / doubly-assigned columns."""
-    from arnab_spark.errors import ArnabError
-
     assigns: dict[str, str] = {}
     for a in lexer.split_top_level(assigns_text):
         m2 = re.match(r'(?s)^\s*("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.*?)\s*$', a)
@@ -455,8 +436,6 @@ def _rewrite_update_from(sql: str, ret_clause, spark, returning_select):
        assigned."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-
-    from arnab_spark.errors import ArnabError
 
     um = _UPDATE_DML.match(sql)
     if um is None:
@@ -588,8 +567,6 @@ def _rewrite_delete_using(sql: str, ret_clause, spark, returning_select):
     partition-pruned dynamic-overwrite fast path: only partitions
     holding a matched row are rewritten, and fully-emptied partition
     dirs are dropped."""
-    from arnab_spark.errors import ArnabError
-
     m = re.match(
         rf"(?is)^\s*DELETE\s+FROM\s+{_DML_TARGET}\s+USING\s+"
         rf"(?P<rest>.*?)\s*;?\s*$",
@@ -698,8 +675,6 @@ def _dml_align(new, tfields, cols, by_name: bool):
     with NULL), every value cast to the target column's type."""
     from pyspark.sql import functions as F
 
-    from arnab_spark.errors import ArnabError
-
     names = [f.name for f in tfields]
     types = {f.name.lower(): f.dataType.simpleString() for f in tfields}
     src = {
@@ -792,10 +767,8 @@ def _rewrite_create_table(sql: str, spark):
     under it, recorded in the catalog — the next session reattaches
     them, parity with tables living in the reference's .duckdb file.
     Spark-shaped DDL (USING/PARTITIONED BY/LOCATION/…) stays native."""
-    from arnab_spark.errors import ArnabError
-
     m = _CREATE_TABLE_DDL.match(sql)
-    if m is None:
+    if m is None or spark is None:
         return None
     rest = m.group("rest").lstrip()
     first = re.match(r"(?is)^([a-z_]+)", rest)
@@ -870,12 +843,10 @@ def _rewrite_create_table(sql: str, spark):
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
         state_for(spark).session_tables.add(name.lower())
     else:
-        import os as _os
-
         from arnab_spark.catalog import record_model, replace_dir
 
-        dest = _os.path.join(wh, name)
-        if _os.path.exists(dest):
+        dest = os.path.join(wh, name)
+        if os.path.exists(dest):
             state_for(spark).backing[name.lower()] = dest
             schema = _dml_persist(spark, name, "backed", df)
         else:
@@ -892,10 +863,8 @@ def _rewrite_drop_table(sql: str, spark):
     warehouse catalog entry. Native catalog tables and missing names
     stay with Spark's own DROP TABLE (loud on missing without IF
     EXISTS, no-op with it)."""
-    from arnab_spark.errors import ArnabError
-
     m = _DROP_TABLE_DDL.match(sql)
-    if m is None:
+    if m is None or spark is None:
         return None
     name, kind = _dml_resolve(spark, m.group("target"), on_view="return")
     if kind == "view":
@@ -907,14 +876,11 @@ def _rewrite_drop_table(sql: str, spark):
             "DuckDB rejects this; use DROP VIEW."
         )
     if kind == "backed":
-        import os as _os
-        import shutil as _shutil
-
         dest = state_for(spark).backing.pop(name.lower())
         spark.catalog.dropTempView(name)
-        _shutil.rmtree(dest, ignore_errors=True)
+        shutil.rmtree(dest, ignore_errors=True)
         wh = state_for(spark).warehouse
-        if wh and _os.path.dirname(dest) == _os.path.normpath(wh):
+        if wh and os.path.dirname(dest) == os.path.normpath(wh):
             from arnab_spark.catalog import remove_model
 
             remove_model(wh, name)
@@ -943,10 +909,8 @@ def _rewrite_alter_table(sql: str, spark):
     INSERTs omitting the column — this engine's tables declare no
     defaults, so accepting it would silently diverge on those INSERTs.
     Native catalog tables keep Spark's own (narrower) ALTER TABLE."""
-    from arnab_spark.errors import ArnabError
-
     m = _ALTER_TABLE_DDL.match(sql)
-    if m is None:
+    if m is None or spark is None:
         return None
     name, kind = _dml_resolve(spark, m.group("target"), on_view="return")
     if kind == "view":
@@ -962,18 +926,16 @@ def _rewrite_alter_table(sql: str, spark):
     if rt is not None:
         new = rt.group("new").strip('"')
         if kind == "backed":
-            import os as _os
-
             backing = state_for(spark).backing
             dest = backing.pop(name.lower())
-            new_dest = _os.path.join(_os.path.dirname(dest), new)
-            _os.rename(dest, new_dest)
+            new_dest = os.path.join(os.path.dirname(dest), new)
+            os.rename(dest, new_dest)
             backing[new.lower()] = new_dest
             schema = spark.table(name).schema
             spark.catalog.dropTempView(name)
             _register_backed(spark, new, new_dest, schema)
             wh = state_for(spark).warehouse
-            if wh and _os.path.dirname(new_dest) == _os.path.normpath(wh):
+            if wh and os.path.dirname(new_dest) == os.path.normpath(wh):
                 from arnab_spark.catalog import record_model, remove_model
 
                 remove_model(wh, name)
@@ -1096,10 +1058,8 @@ def _rewrite_copy_from(sql: str, spark):
     NULL-fills the rest), cast per target column type (CSV reads as
     strings and casts, DuckDB's parse-per-target-type behavior), and
     appended through the same persist path as INSERT."""
-    from arnab_spark.errors import ArnabError
-
     m = _COPY_FROM_DML.match(sql)
-    if m is None:
+    if m is None or spark is None:
         return None
     name, kind = _dml_resolve(spark, m.group("target"))
     if kind is None:
@@ -1185,8 +1145,6 @@ _EXPORT_TYPES = {
 
 
 def _export_type(dt) -> str:
-    from arnab_spark.errors import ArnabError
-
     s = dt.simpleString()
     if s in _EXPORT_TYPES:
         return _EXPORT_TYPES[s]
@@ -1214,30 +1172,24 @@ def _rewrite_export_import_db(sql: str, spark):
     load.sql through the statement pipeline, which also imports a dir
     exported by a REAL DuckDB (its CREATE TABLE / COPY FROM statements
     are exactly the lifted shapes)."""
-    from arnab_spark.errors import ArnabError
-
+    if spark is None:
+        return None
     im = _IMPORT_DB_DML.match(sql)
     if im is not None:
-        import os as _os
+        from arnab_spark.node import run_script
 
         d = _resolve_path(im.group("dir"))
-        from arnab_spark.node import Node
-
         for script in ("schema.sql", "load.sql"):
-            p = _os.path.join(d, script)
-            if not _os.path.isfile(p):
+            p = os.path.join(d, script)
+            if not os.path.isfile(p):
                 raise ArnabError(f"IMPORT DATABASE: missing {p}")
             with open(p, encoding="utf-8") as fh:
-                for stmt in Node.split_statements(Node.strip_comments(fh.read())):
-                    out = _transpile(stmt, spark)
-                    if out.strip():
-                        spark.sql(out)
+                run_script(spark, fh.read())
         return ""
 
     em = _EXPORT_DB_DML.match(sql)
     if em is None:
         return None
-    import os as _os
 
     d = _resolve_path(em.group("dir"))
     fmt = "csv"  # DuckDB's default export format
@@ -1247,7 +1199,7 @@ def _rewrite_export_import_db(sql: str, spark):
             fmt = fm.group(1).lower()
     if fmt not in ("parquet", "csv"):
         raise ArnabError(f"EXPORT DATABASE: unsupported FORMAT '{fmt}'")
-    _os.makedirs(d, exist_ok=True)
+    os.makedirs(d, exist_ok=True)
     state = state_for(spark)
     backing = state.backing
     tables = sorted(set(backing) | state.session_tables)
@@ -1257,7 +1209,7 @@ def _rewrite_export_import_db(sql: str, spark):
         # previous pipeline's since-deleted warehouse); a dead entry
         # is not a table this session can read, so skip it loudly
         # rather than crash the export of the live ones
-        dead = t in backing and not _os.path.isdir(backing[t])
+        dead = t in backing and not os.path.isdir(backing[t])
         if not dead:
             try:
                 df = spark.table(t)
@@ -1277,7 +1229,7 @@ def _rewrite_export_import_db(sql: str, spark):
             f'"{f.name}" {_export_type(f.dataType)}' for f in df.schema.fields
         )
         schema_lines.append(f"CREATE TABLE {t}({cols});")
-        data = _os.path.join(d, f"{t}.{fmt}")
+        data = os.path.join(d, f"{t}.{fmt}")
         if fmt == "parquet":
             df.write.mode("overwrite").parquet(data)
             load_lines.append(
@@ -1302,38 +1254,21 @@ def _rewrite_export_import_db(sql: str, spark):
         # CREATE VIEW lift on import (found by the round-trip test);
         # the engine-dialect caveat lives in this function's docstring
         schema_lines.extend(view_lines)
-    with open(_os.path.join(d, "schema.sql"), "w", encoding="utf-8") as fh:
+    with open(os.path.join(d, "schema.sql"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(schema_lines) + "\n")
-    with open(_os.path.join(d, "load.sql"), "w", encoding="utf-8") as fh:
+    with open(os.path.join(d, "load.sql"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(load_lines) + "\n")
     return ""
 
 
 def _rewrite_dml(sql: str, spark):
-    """Statement-shape handler for INSERT/DELETE/UPDATE/TRUNCATE and
-    the DuckDB-shaped CREATE/DROP TABLE forms Spark lacks.
-    Returns None when the statement is not DML this pass owns (the
-    normal rewrite pipeline then applies — in particular a native
-    catalog-table INSERT still gets its body's dialect rewrites), or
-    the replacement text ("" when fully consumed here)."""
-    from arnab_spark.errors import ArnabError
-
-    ct = _rewrite_create_table(sql, spark)
-    if ct is not None:
-        return ct
-    dt = _rewrite_drop_table(sql, spark)
-    if dt is not None:
-        return dt
-    at = _rewrite_alter_table(sql, spark)
-    if at is not None:
-        return at
-    cf = _rewrite_copy_from(sql, spark)
-    if cf is not None:
-        return cf
-    ei = _rewrite_export_import_db(sql, spark)
-    if ei is not None:
-        return ei
-
+    """Statement-shape handler for INSERT/DELETE/UPDATE/TRUNCATE.
+    Returns None when the statement is not DML this handler owns or
+    there is no session (the text passes then apply — in particular a
+    native catalog-table INSERT still gets its body's dialect
+    rewrites), or the replacement text ("" when fully consumed here)."""
+    if spark is None:
+        return None
     tm = _TRUNCATE_DML.match(sql)
     if tm is not None:
         name, kind = _dml_resolve(spark, tm.group("target"))

@@ -13,15 +13,18 @@ rewrites register live in the session's
 
 from __future__ import annotations
 
+import os
 import re
 
 from arnab_spark import lexer
 from arnab_spark._dialect_base import (
     _lit_match,
     _resolve_path,
+    _transpile,
     _user_cache_base,
     state_for,
 )
+from arnab_spark.errors import ArnabError
 
 # ------------------------------------------------------- DuckDB macros
 #
@@ -90,7 +93,6 @@ def _attach_duckdb_file(spark, path: str, alias: str) -> list[str] | None:
     distributed one. Returns None when the file is not a readable
     DuckDB database (caller leaves the statement loud)."""
     import hashlib as _hl
-    import os as _os
 
     try:
         import duckdb
@@ -115,16 +117,16 @@ def _attach_duckdb_file(spark, path: str, alias: str) -> list[str] | None:
     # pre-created by another local user to poison the attached data,
     # and exported table contents must not land world-readable
     # (round-5 advice).
-    st = _os.stat(path)
-    key = f"{_os.path.abspath(path)}|{st.st_mtime_ns}|{st.st_size}"
-    cache = _os.path.join(
+    st = os.stat(path)
+    key = f"{os.path.abspath(path)}|{st.st_mtime_ns}|{st.st_size}"
+    cache = os.path.join(
         _attach_cache_base(), _hl.sha256(key.encode()).hexdigest()[:20]
     )
-    _os.makedirs(cache, mode=0o700, exist_ok=True)
+    os.makedirs(cache, mode=0o700, exist_ok=True)
     out: list[str] = []
     for name in names:
-        dest = _os.path.join(cache, f"{name}.parquet")
-        if not _os.path.exists(dest):
+        dest = os.path.join(cache, f"{name}.parquet")
+        if not os.path.exists(dest):
             quoted = name.replace('"', '""')
             con.execute(
                 f'COPY (SELECT * FROM "{quoted}") TO \'{dest}\' (FORMAT PARQUET)'
@@ -165,12 +167,109 @@ def _attach_duckdb_file(spark, path: str, alias: str) -> list[str] | None:
         head = f"CREATE OR REPLACE MACRO {mname}({', '.join(params or [])}) AS "
         stmt = head + ("TABLE " + body if mtype == "table_macro" else body)
         try:
-            from arnab_spark.dialect import transpile_statement
-
-            transpile_statement(stmt, spark)
+            _transpile(stmt, spark)
         except Exception:
             continue  # unregistrable body: call sites stay loud
     return out
+
+
+def _rewrite_attach(sql: str, spark):
+    """``ATTACH '<path>' AS alias``: a warehouse dir or a DuckDB file
+    registers its models as ``alias__model`` views. A path that is
+    neither stays, so Spark rejects ATTACH loudly."""
+    am = _ATTACH_STMT.match(sql)
+    if am is None or spark is None:
+        return None
+    from arnab_spark.catalog import CATALOG_FILE, attach_warehouse
+
+    state = state_for(spark)
+    path, alias = am.group(1), am.group(2)
+    if os.path.isfile(os.path.join(path, CATALOG_FILE)):
+        ids = attach_warehouse(spark, path, prefix=f"{alias}__")
+        state.attached[alias.lower()] = {i.lower() for i in ids}
+        return ""
+    if os.path.isfile(path):
+        ids = _attach_duckdb_file(spark, path, alias)
+        if ids is not None:
+            state.attached[alias.lower()] = {i.lower() for i in ids}
+            return ""
+    return sql
+
+
+def _rewrite_detach(sql: str, spark):
+    """``DETACH alias``: drop the alias's views (and a ``USE`` of it)."""
+    dm = _DETACH_STMT.match(sql)
+    if dm is None or spark is None:
+        return None
+    state = state_for(spark)
+    alias = dm.group(1).lower()
+    if state.use == alias:
+        state.use = None
+    for model in state.attached.pop(alias, set()):
+        try:
+            spark.catalog.dropTempView(f"{alias}__{model}")
+        except Exception:
+            pass
+    return ""
+
+
+def _rewrite_temp_view(sql: str, spark):
+    """Record the name of a ``CREATE TEMP VIEW`` (DuckDB: the temp
+    database) and let the DDL through — Spark accepts it natively."""
+    tm = _TEMP_VIEW_DDL.match(sql)
+    if tm is not None:
+        state_for(spark).temp_ddl.add(tm.group(2).lower())
+    return None
+
+
+def _rewrite_drop_view(sql: str, spark):
+    """``DROP VIEW`` of a table raises, as in DuckDB; a warehouse view's
+    drop is durable (DuckDB persists views in the database file). The
+    DDL itself goes through."""
+    dvm = _DROP_VIEW_DDL.match(sql)
+    if dvm is None:
+        return None
+    state = state_for(spark)
+    dv_name = dvm.group(2).lower()
+    if dv_name in state.backing or dv_name in state.session_tables:
+        raise ArnabError(
+            f"'{dvm.group(2)}' is a table, not a view — DuckDB "
+            "rejects DROP VIEW against tables; use DROP TABLE."
+        )
+    state.temp_ddl.discard(dv_name)
+    if state.warehouse is not None:
+        from arnab_spark.catalog import remove_model
+
+        remove_model(state.warehouse, dvm.group(2))
+    return None
+
+
+def _rewrite_perm_view(sql: str, spark):
+    """Non-TEMP ``CREATE VIEW``: Spark's permanent catalog view cannot
+    reference temp views (this engine's tables), where DuckDB views can
+    reference anything — lift to a session view, and with a warehouse
+    open persist the definition in the catalog like a view living in
+    the reference's .duckdb file (without one, session-scoped IS
+    DuckDB's in-memory-database behavior)."""
+    pvm = _PERM_VIEW_DDL.match(sql)
+    if pvm is None or spark is None:
+        return None
+    v_name = pvm.group("name")
+    if not pvm.group("replace") and spark.catalog.tableExists(v_name):
+        if pvm.group("ine"):
+            return ""
+        raise ArnabError(
+            f"view '{v_name}' already exists (DuckDB parity — use "
+            "CREATE OR REPLACE VIEW or IF NOT EXISTS)"
+        )
+    v_body = _transpile(pvm.group("body"), spark)
+    spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {v_name} AS ({v_body})")
+    wh = state_for(spark).warehouse
+    if wh is not None:
+        from arnab_spark.catalog import record_model
+
+        record_model(wh, v_name, "view", v_body)
+    return ""
 
 
 _SHOW_TABLES_STMT = re.compile(r"(?is)^\s*SHOW\s+TABLES\s*;?\s*$")
@@ -391,8 +490,6 @@ def _rewrite_txn(sql: str, spark) -> str:
         return sql
     verb = m.group("verb").upper()
     if verb in ("ROLLBACK", "ABORT"):
-        from arnab_spark.errors import ArnabError
-
         raise ArnabError(
             f"{verb}: this engine is per-statement durable (staged parquet "
             "swaps), so already-executed statements cannot be undone. "
@@ -440,8 +537,6 @@ def _rewrite_extensions(sql: str, spark) -> str:
     ext = m.group("ext").lower()
     if ext in _BUILTIN_EXTS:
         return ""
-    from arnab_spark.errors import ArnabError
-
     raise ArnabError(
         f"{m.group('verb').upper()} {ext}: no engine equivalent for this "
         "DuckDB extension. Built-in capabilities cover httpfs (http(s) "
@@ -510,8 +605,6 @@ def _rewrite_set(sql: str, spark) -> str:
     if name in _DUCK_HINT_SETTINGS:
         return ""
     if name in _DUCK_RESULT_SETTINGS:
-        from arnab_spark.errors import ArnabError
-
         raise ArnabError(
             f"SET {m.group('name')}: this DuckDB setting changes query "
             "RESULTS and has no Spark equivalent — accepting it as an "
@@ -666,11 +759,16 @@ def _rewrite_summarize(sql: str, spark) -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-def _rewrite_attached_refs(sql: str, attached: dict[str, set[str]]) -> str:
+def _rewrite_attached_refs(sql: str, spark) -> str:
     """``alias.model`` → ``alias__model`` for every (alias, model) pair
     actually attached — in code, whole-word both sides, so a table
     alias that happens to share the name is untouched unless it
-    dereferences a real attached model."""
+    dereferences a real attached model. With ``USE <alias>`` active,
+    :func:`_rewrite_use_fallback` then resolves bare names."""
+    state = state_for(spark)
+    attached = state.attached
+    if not attached:
+        return sql
 
     def sub(m: re.Match) -> str:
         models = attached.get(m.group(1).lower())
@@ -684,7 +782,10 @@ def _rewrite_attached_refs(sql: str, attached: dict[str, set[str]]) -> str:
             return m.group()
         return f"{m.group(1)}__{member}"
 
-    return lexer.sub(_QUALIFIED_WORD, sub, sql)
+    sql = lexer.sub(_QUALIFIED_WORD, sub, sql)
+    if state.use in attached:
+        sql = _rewrite_use_fallback(sql, state.use, attached[state.use], spark)
+    return sql
 
 
 #: a word of code, with the member it qualifies if a ``.`` follows
@@ -692,6 +793,26 @@ _QUALIFIED_WORD = re.compile(f"({lexer.WORD.pattern})" + r"(?:\.(\w*))?")
 
 
 _USE_STMT = re.compile(r'(?is)^\s*USE\s+("?)([A-Za-z_]\w*)\1\s*;?\s*$')
+
+
+def _rewrite_use(sql: str, spark):
+    """``USE <alias>`` makes an attached catalog current; ``USE memory``
+    / ``USE main`` return to the session namespace."""
+    um = _USE_STMT.match(sql)
+    if um is None or spark is None:
+        return None
+    state = state_for(spark)
+    use_alias = um.group(2).lower()
+    if use_alias in ("memory", "main"):
+        state.use = None  # back to the session namespace
+        return ""
+    if use_alias in state.attached:
+        state.use = use_alias
+        return ""
+    raise ArnabError(
+        f"USE {um.group(2)}: no attached catalog of that name "
+        "(ATTACH it first; USE memory returns to the session namespace)"
+    )
 
 
 def _rewrite_use_fallback(sql: str, alias: str, models: set, spark) -> str:
@@ -721,7 +842,9 @@ def _rewrite_use_fallback(sql: str, alias: str, models: set, spark) -> str:
     return lexer.sub(lexer.WORD, sub, sql)
 
 
-def _parse_create_macro(sql: str):
+def _rewrite_create_macro(sql: str, spark):
+    """Register a ``CREATE [TEMP] MACRO`` in the session; the statement
+    is consumed. An exotic shape is not taken, so Spark rejects it."""
     m = _CREATE_MACRO.match(sql)
     if not m:
         return None
@@ -745,7 +868,28 @@ def _parse_create_macro(sql: str):
     am = re.match(r"(?is)^\s*AS\s+(TABLE\s+)?(.*)$", sql[i:], re.DOTALL)
     if not am:
         return None
-    return name, params, am.group(2).strip().rstrip(";").strip(), bool(am.group(1)), is_temp
+    state = state_for(spark)
+    body = am.group(2).strip().rstrip(";").strip()
+    state.macros[name.lower()] = (params, body, bool(am.group(1)), is_temp)
+    state.dropped_macros.discard(name.lower())  # re-created
+    return ""
+
+
+_DROP_MACRO = re.compile(
+    r"(?is)^\s*DROP\s+MACRO\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$"
+)
+
+
+def _rewrite_drop_macro(sql: str, spark):
+    """``DROP MACRO``: forget it here, and record the drop so the
+    warehouse's macro file forgets it too."""
+    dropped = _DROP_MACRO.match(sql)
+    if dropped is None:
+        return None
+    state = state_for(spark)
+    state.macros.pop(dropped.group(1).lower(), None)
+    state.dropped_macros.add(dropped.group(1).lower())
+    return ""
 
 
 def _replace_params(body: str, values: dict[str, str]) -> str:
@@ -805,10 +949,13 @@ def _bind_macro_args(
     return values
 
 
-def _expand_macros(sql: str, macros: dict) -> str:
+def _expand_macros(sql: str, spark) -> str:
     """Inline every registered macro call (rescanning, so macros may
     call macros; 50-round guard). A call that cannot bind its arguments
     is left in place → Spark reports an unresolved function loudly."""
+    macros = state_for(spark).macros
+    if not macros:
+        return sql
     guard = 0
     while guard < 50:
         guard += 1
@@ -860,10 +1007,9 @@ _CLAUSE_AFTER_ON = (
 )
 _JOIN_WORDS = ("join", "left", "right", "full", "inner", "cross", "asof", "semi", "anti")
 _INEQ = re.compile(r"(?s)^(.*?)(<=|>=|<|>)(.*)$")
-_EQ_SPLIT = re.compile(r"(?s)^(.*?)=(.*)$")
 
 
-def _rewrite_asof_join(sql: str) -> str:
+def _rewrite_asof_join(sql: str, spark=None) -> str:
     """Rewrite DuckDB's ``ASOF [LEFT] JOIN right [AS] r ON <conds>``
     (reachable reference surface: model SQL goes to DuckDB verbatim,
     node.rs:176) into a lateral correlated subquery:
@@ -976,8 +1122,6 @@ def _reject_positional_join(sql: str) -> None:
     across recomputations. Name the construct and the honest
     alternatives instead of a generic parse failure."""
     if _POSITIONAL_JOIN_SITE.search(lexer.mask(sql)):
-        from arnab_spark.errors import ArnabError
-
         raise ArnabError(
             "POSITIONAL JOIN: DuckDB pairs rows by physical order, which "
             "a distributed DataFrame does not have — no sound Spark "
@@ -1006,8 +1150,6 @@ def _reject_sequences(sql: str) -> None:
     m = _SEQUENCE_SITE.search(lexer.mask(sql))
     if m:
         construct = (m.group(1) or m.group(2) or m.group(3)).strip()
-        from arnab_spark.errors import ArnabError
-
         raise ArnabError(
             f"{construct.upper()}: DuckDB sequences have no sound "
             "distributed equivalent — a sequence is cross-row mutable "

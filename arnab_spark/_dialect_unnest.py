@@ -12,21 +12,12 @@ from __future__ import annotations
 import re
 
 from arnab_spark import lexer
-from arnab_spark._dialect_base import (
-    _is_set_op_at,
-    _rewrite_distinct_on,
-    _rewrite_file_relations,
-    _rewrite_qualify,
-    _rewrite_string_split,
-    _rewrite_using_sample,
-    state_for,
-)
-from arnab_spark._dialect_statements import _rewrite_asof_join
+from arnab_spark._dialect_base import _is_set_op_at, state_for
 
 _UNNEST_CALL = re.compile(r"(?is)\bunnest\s*\(")
 
 
-def _rewrite_single_unnest(sql: str) -> str:
+def _rewrite_single_unnest(sql: str, spark=None) -> str:
     """``unnest(x)`` → ``explode(x)`` — but ONLY when the statement
     contains exactly one unnest call in code. Multiple unnests
     in one select ZIP positionally in DuckDB while multiple explodes
@@ -119,7 +110,7 @@ def _single_relation_alias(tail: str) -> str | None:
     return terminal.strip('"`')
 
 
-def _rewrite_multi_unnest(sql: str) -> str:
+def _rewrite_multi_unnest(sql: str, spark=None) -> str:
     """N≥2 ``unnest(...)`` select-list items ZIP positionally in DuckDB
     (shorter lists NULL-padded to the longest; a NULL list behaves like
     an empty one and pads; all-empty yields zero rows — all probed).
@@ -484,7 +475,7 @@ def _rewrite_multi_unnest(sql: str) -> str:
     ).rstrip()
 
 
-def _rewrite_unnest_set_ops(sql: str) -> str:
+def _rewrite_unnest_set_ops(sql: str, spark=None) -> str:
     """Unnest inside set-operation arms (round 8): each arm of a
     top-level ``UNION [ALL] [BY NAME]`` / ``INTERSECT`` / ``EXCEPT``
     chain unnests INDEPENDENTLY in DuckDB (probed:
@@ -509,6 +500,21 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
             return sql
         body = _rewrite_unnest_set_ops(sql[sel_idx:])
         return sql if body == sql[sel_idx:] else sql[:sel_idx] + body
+
+    def rewrite(arm: str) -> str:
+        r = _rewrite_multi_unnest(arm)
+        return _rewrite_single_unnest(arm) if r == arm else r
+
+    out = _rewrite_set_op_arms(sql, rewrite)
+    return sql if out is None else out
+
+
+def _rewrite_set_op_arms(sql: str, rewrite) -> str | None:
+    """``rewrite`` applied to each arm of a top-level set-operation
+    chain on its own, the operators kept verbatim and a trailing
+    top-level ORDER/LIMIT/OFFSET split off first, so it stays bound to
+    the whole chain. None when ``sql`` is no such chain; ``sql`` itself
+    when no arm changed."""
     ops: list[tuple[int, int]] = []
     pos = 0
     while True:
@@ -518,7 +524,7 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
         if idx < 0:
             break
         # a projection `* EXCEPT (cols)` (the EXCLUDE pass's output,
-        # which runs BEFORE this one) is not a set operator — splitting
+        # which runs BEFORE them) is not a set operator — splitting
         # on it would detach select-list items from their FROM and, for
         # items with window functions, silently change evaluation scope
         if not _is_set_op_at(sql, idx, _word):
@@ -532,7 +538,7 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
         ops.append((idx, idx + om.end()))
         pos = idx + om.end()
     if not ops:
-        return sql
+        return None
     arms: list[str] = []
     last = 0
     for s0, _e0 in ops:
@@ -545,19 +551,12 @@ def _rewrite_unnest_set_ops(sql: str) -> str:
         suffix = tail_arm[b_idx:]
         tail_arm = tail_arm[:b_idx]
     arms.append(tail_arm)
-    new_arms = []
-    changed = False
-    for arm in arms:
-        r = _rewrite_multi_unnest(arm)
-        if r == arm:
-            r = _rewrite_single_unnest(arm)
-        changed = changed or r != arm
-        new_arms.append(r.strip())
-    if not changed:
+    new_arms = [rewrite(arm) for arm in arms]
+    if new_arms == arms:
         return sql
-    out = new_arms[0]
+    out = new_arms[0].strip()
     for (s0, e0), arm in zip(ops, new_arms[1:]):
-        out += " " + sql[s0:e0] + " " + arm
+        out += " " + sql[s0:e0] + " " + arm.strip()
     return out + (" " + suffix if suffix else "")
 
 
@@ -598,12 +597,10 @@ def _probe_schema(head: str, probe_prefix: str, tail: str, spark):
     # string_split / QUALIFY / DISTINCT ON / ASOF / SAMPLE / file
     # relations still ANALYZES (any residue that still fails simply
     # returns None — the statement then stays whole and loud)
-    probe = _rewrite_string_split(probe)
-    probe = _rewrite_using_sample(probe)
-    probe = _rewrite_qualify(probe)
-    probe = _rewrite_distinct_on(probe)
-    probe = _rewrite_asof_join(probe)
-    probe = _rewrite_file_relations(probe)
+    from arnab_spark.dialect import PROBE_PASSES
+
+    for rewrite in PROBE_PASSES:
+        probe = rewrite(probe, spark)
     cache = state_for(spark).probe_cache
     if probe in cache:
         return cache[probe]

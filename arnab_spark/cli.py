@@ -19,9 +19,8 @@ import sys
 
 from arnab_spark._dialect_base import state_for
 from arnab_spark.config import load_config
-from arnab_spark.dialect import transpile_statement
 from arnab_spark.errors import ArnabError
-from arnab_spark.node import Node
+from arnab_spark.node import run_script
 from arnab_spark.session import Session
 from arnab_spark.viz import save_visualization
 
@@ -87,26 +86,11 @@ def cmd_run_file(args) -> int:
     except ArnabError as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 1
-    from arnab_spark.spark_utils import bind_file_scans
-
     rc = 0
     for path in args.paths:
         try:
             with open(path, encoding="utf-8") as f:
-                src = f.read()
-            # comments go first, as on the model path: a ';' or an
-            # apostrophe inside one must not split or merge statements
-            for stmt in Node.split_statements(Node.strip_comments(src)):
-                stmt = transpile_statement(stmt, spark)
-                if not stmt.strip():
-                    continue  # consumed by the shim (e.g. CREATE MACRO)
-                df = spark.sql(bind_file_scans(spark, stmt))
-                if Node.will_produce_records(stmt):
-                    # force full execution: spark.sql alone only analyzes
-                    # (the reference's execute_batch runs every statement,
-                    # main.rs:165) — the noop sink executes without
-                    # collecting to the driver
-                    df.write.format("noop").mode("overwrite").save()
+                run_script(spark, f.read())
             print(f"{path}: OK")
         except Exception as exc:
             print(f"{path}: ERROR {exc}")

@@ -73,37 +73,42 @@ from arnab_spark._dialect_base import (
     _rewrite_qualify,
     _rewrite_string_split,
     _rewrite_using_sample,
-    state_for,
 )
 from arnab_spark._dialect_datetime import _strf_rewrite, _strp_rewrite
-from arnab_spark._dialect_dml import _rewrite_dml
+from arnab_spark._dialect_dml import (
+    _rewrite_alter_table,
+    _rewrite_copy_from,
+    _rewrite_create_table,
+    _rewrite_dml,
+    _rewrite_drop_table,
+    _rewrite_export_import_db,
+)
 from arnab_spark._dialect_statements import (
-    _ATTACH_STMT,
     _CLAUSE_AFTER_ON,
-    _DETACH_STMT,
-    _DROP_VIEW_DDL,
     _JOIN_WORDS,
-    _PERM_VIEW_DDL,
-    _TEMP_VIEW_DDL,
-    _USE_STMT,
-    _attach_duckdb_file,
     _expand_macros,
-    _parse_create_macro,
     _reject_positional_join,
     _reject_sequences,
     _rewrite_asof_join,
+    _rewrite_attach,
     _rewrite_attached_refs,
+    _rewrite_create_macro,
     _rewrite_describe,
     _rewrite_describe_subqueries,
+    _rewrite_detach,
+    _rewrite_drop_macro,
+    _rewrite_drop_view,
     _rewrite_extensions,
+    _rewrite_perm_view,
     _rewrite_pragmas,
     _rewrite_read_file_lists,
     _rewrite_set,
     _rewrite_show_all_tables,
     _rewrite_show_tables,
     _rewrite_summarize,
+    _rewrite_temp_view,
     _rewrite_txn,
-    _rewrite_use_fallback,
+    _rewrite_use,
 )
 from arnab_spark._dialect_unnest import (
     _FALSE_SPELLINGS,
@@ -117,16 +122,18 @@ from arnab_spark._dialect_unnest import (
     _probe_expr_type,
     _probe_schema,
     _rewrite_multi_unnest,
+    _rewrite_set_op_arms,
     _rewrite_single_unnest,
     _rewrite_unnest_set_ops,
 )
+from arnab_spark.errors import ArnabError
 
 # DuckDB allows zero-argument count() (used by the reference's example
 # model, reference: examples/basic/orders_per_product.sql:2).
 _COUNT_ZERO_ARG = re.compile(r"\bcount\s*\(\s*\)", re.IGNORECASE)
 
 
-def _rewrite_count_zero_arg(sql: str) -> str:
+def _rewrite_count_zero_arg(sql: str, spark=None) -> str:
     """``count()`` → ``count(*)`` in code: ``'count()'`` is a value and
     ``"count()"`` a name."""
     return lexer.sub(_COUNT_ZERO_ARG, lambda m: "count(*)", sql)
@@ -135,6 +142,10 @@ def _rewrite_count_zero_arg(sql: str) -> str:
 # `* EXCLUDE (a, b)` directly after a star is unambiguous; Spark spells
 # the same projection `* EXCEPT (a, b)`.
 _STAR_EXCLUDE = re.compile(r"(\*\s+)EXCLUDE(\s*\()", re.IGNORECASE)
+
+
+def _rewrite_star_exclude(sql: str, spark=None) -> str:
+    return _STAR_EXCLUDE.sub(r"\1EXCEPT\2", sql)
 
 
 #: tokens after which a ``[`` opens a DuckDB LIST LITERAL rather than a
@@ -152,7 +163,7 @@ _BEFORE_LIST_LITERAL_WORDS = frozenset(
 )
 
 
-def _rewrite_list_literals(sql: str) -> str:
+def _rewrite_list_literals(sql: str, spark=None) -> str:
     """DuckDB list literals ``[1, 2]`` / ``ARRAY[1, 2]`` → Spark's
     ``array(1, 2)``. Token-aware: a ``[`` directly after an identifier,
     string, ``)`` or ``]`` is a SUBSCRIPT (both dialects spell it the
@@ -252,7 +263,7 @@ _LIST_FN = re.compile(
 )
 
 
-def _rewrite_list_functions(sql: str) -> str:
+def _rewrite_list_functions(sql: str, spark=None) -> str:
     # Code only: function-looking text inside string literals or quoted
     # identifiers must pass through untouched (common words like
     # len/left/week appear in data all the time).
@@ -404,7 +415,7 @@ def _series_sequence_sql(
     )
 
 
-def _rewrite_series_functions(sql: str) -> str:
+def _rewrite_series_functions(sql: str, spark=None) -> str:
     """Rewrite range()/generate_series() sites per the pass comment.
     One sweep back-to-front — the emitted text contains an inner
     ``range(`` that must not be reprocessed."""
@@ -525,8 +536,6 @@ def _columns_lambda_filter(var: str, body: str, cols: list[str]) -> list[str]:
     this is a constant-fold, not a query. Raises ArnabError carrying
     DuckDB's message when DuckDB itself rejects the lambda body —
     the statement errors on DuckDB too, so loud IS parity."""
-    from arnab_spark.errors import ArnabError
-
     names = ", ".join("'" + c.replace("'", "''") + "'" for c in cols)
     try:
         with _LAMBDA_EVAL_LOCK:
@@ -556,8 +565,6 @@ def _columns_match(raw: str, cols: list[str]) -> list[str] | None:
         }
         missing = drop - {c.lower() for c in cols}
         if missing:
-            from arnab_spark.errors import ArnabError
-
             # probed: DuckDB raises 'Binder Error: Column "x" in
             # EXCLUDE list not found in FROM clause' — silently
             # ignoring the name would diverge (round-11 fixture probe)
@@ -656,8 +663,6 @@ def _parse_columns_sites(
         return None  # differing zip arguments: unprobed
     raw = parsed[0][2]
     if len(parsed) > 1 and _COLUMNS_LAMBDA.match(raw):
-        from arnab_spark.errors import ArnabError
-
         # probed: identical regex/star sites zip pairwise, but two
         # lambda sites — even textually identical — are "Multiple
         # different STAR/COLUMNS" to DuckDB's binder (lambda
@@ -670,8 +675,6 @@ def _parse_columns_sites(
     if matched is None:
         return None
     if not matched:
-        from arnab_spark.errors import ArnabError
-
         raise ArnabError(
             f"COLUMNS: no columns match {raw!r} — DuckDB raises a "
             "Binder Error on this statement too"
@@ -1153,46 +1156,11 @@ def _rewrite_struct_recursive_unnest(sql: str, spark, probe_prefix: str = "") ->
         return sql if body == sql[sel_idx:] else sql[:sel_idx] + body
     # set-op chains: arms rewrite independently (probed in the sibling
     # pass); trailing ORDER/LIMIT stays bound to the whole chain
-    ops: list[tuple[int, int]] = []
-    pos = 0
-    while True:
-        idx, _w = lexer.find_top_level(sql, ("union", "intersect", "except"), pos)
-        if idx < 0:
-            break
-        # `* EXCEPT (cols)` projections are not set operators (see
-        # _rewrite_unnest_set_ops) — skip non-set-op hits
-        if not _is_set_op_at(sql, idx, _w):
-            pos = idx + len(_w)
-            continue
-        om = re.match(
-            r"(?is)(union|intersect|except)(\s+all|\s+distinct)?(\s+by\s+name)?",
-            sql[idx:],
-        )
-        ops.append((idx, idx + om.end()))
-        pos = idx + om.end()
-    if ops:
-        arms: list[str] = []
-        last = 0
-        for s0, _e0 in ops:
-            arms.append(sql[last:s0])
-            last = _e0
-        tail_arm = sql[last:]
-        suffix = ""
-        b_idx, _bw = lexer.find_top_level(tail_arm, ("order", "limit", "offset"))
-        if b_idx >= 0:
-            suffix = tail_arm[b_idx:]
-            tail_arm = tail_arm[:b_idx]
-        arms.append(tail_arm)
-        new_arms = [
-            _rewrite_struct_recursive_unnest(a, spark, probe_prefix)
-            for a in arms
-        ]
-        if all(n == a for n, a in zip(new_arms, arms)):
-            return sql
-        out = new_arms[0].strip()
-        for (s0, e0), arm in zip(ops, new_arms[1:]):
-            out += " " + sql[s0:e0] + " " + arm.strip()
-        return out + (" " + suffix if suffix else "")
+    out = _rewrite_set_op_arms(
+        sql, lambda arm: _rewrite_struct_recursive_unnest(arm, spark, probe_prefix)
+    )
+    if out is not None:
+        return out
     if re.match(r"(?is)^\s*SELECT\s+DISTINCT\s+ON\b", sql):
         return sql
     head = re.match(r"(?is)^\s*SELECT\s+(DISTINCT\s+)?", sql)
@@ -1668,7 +1636,7 @@ _POSTFIX_CAST_TYPE = re.compile(
 )
 
 
-def _rewrite_postfix_cast_types(sql: str) -> str:
+def _rewrite_postfix_cast_types(sql: str, spark=None) -> str:
     """``x::VARCHAR`` → ``x::STRING`` (same mapping as CAST, same
     code-only scope)."""
     return lexer.sub(
@@ -1777,7 +1745,7 @@ _ARG_CALL = re.compile(
 )
 
 
-def _rewrite_arg_transform_calls(sql: str) -> str:
+def _rewrite_arg_transform_calls(sql: str, spark=None) -> str:
     """Expand the list functions in :data:`_ARG_CALL_REWRITES`
     innermost-last (rescan after each substitution so nested calls
     resolve); an arg-count mismatch leaves the call for Spark to
@@ -1824,7 +1792,7 @@ _STRUCT_PAIR = re.compile(r"^\s*'([^'\\]*)'\s*:(.*)$", re.DOTALL)
 _INNERMOST_BRACES = re.compile(r"\{[^{}]*\}")
 
 
-def _rewrite_struct_literals(sql: str) -> str:
+def _rewrite_struct_literals(sql: str, spark=None) -> str:
     """DuckDB struct literals ``{'k': v, ...}`` → Spark's
     ``named_struct('k', v, ...)``. Innermost-first so nesting works;
     a brace group whose members are not all ``'key': value`` pairs
@@ -1848,7 +1816,7 @@ def _rewrite_struct_literals(sql: str) -> str:
     return sql
 
 
-def _unmask_braces(sql: str) -> str:
+def _unmask_braces(sql: str, spark=None) -> str:
     return sql.replace("\x00", "{").replace("\x01", "}")
 
 
@@ -1933,7 +1901,7 @@ _ARRAY_TYPE_SPELLING = re.compile(
 )
 
 
-def _rewrite_array_type_spellings(sql: str) -> str:
+def _rewrite_array_type_spellings(sql: str, spark=None) -> str:
     """DuckDB's postfix array-type spelling ``T[]`` — including nested
     ``T[][]`` and parameterized ``DECIMAL(18,6)[]`` — → Spark's
     ``ARRAY<T>``, with the element name routed through the same
@@ -1959,7 +1927,7 @@ def _rewrite_array_type_spellings(sql: str) -> str:
     return lexer.sub(_ARRAY_TYPE_SPELLING, sub, sql)
 
 
-def _rewrite_subscripts(sql: str) -> str:
+def _rewrite_subscripts(sql: str, spark=None) -> str:
     """Non-string-key, non-slice subscripts → ``element_at(base, idx)``.
 
     DuckDB indexes lists 1-based (negative = from the end); Spark's
@@ -1982,8 +1950,6 @@ def _rewrite_subscripts(sql: str) -> str:
     code that steps over whole literals and identifiers; a base that still
     cannot be resolved RAISES (fail-loud doctrine — the round-3 advice
     showed the silent skip ships 0-based reads)."""
-    from arnab_spark.errors import ArnabError
-
     guard = 0
     pos = 0
     while True:
@@ -2184,7 +2150,7 @@ def _power_right_end(sql: str, pos: int, spans) -> int | None:
     return i
 
 
-def _rewrite_power_ops(sql: str) -> str:
+def _rewrite_power_ops(sql: str, spark=None) -> str:
     """DuckDB's exponent operators → Spark calls.
 
     In DuckDB ``^`` and ``**`` are POWER (always DOUBLE); in Spark
@@ -2242,7 +2208,7 @@ def _rewrite_power_ops(sql: str) -> str:
 _INTDIV = re.compile("//")
 
 
-def _rewrite_intdiv(sql: str) -> str:
+def _rewrite_intdiv(sql: str, spark=None) -> str:
     """DuckDB's ``//`` → Spark's ``DIV``.
 
     Probed parity: both truncate toward zero on integral operands
@@ -2258,7 +2224,7 @@ def _rewrite_intdiv(sql: str) -> str:
     return lexer.sub(_INTDIV, lambda m: " DIV ", sql)
 
 
-def _rewrite_comprehensions(sql: str) -> str:
+def _rewrite_comprehensions(sql: str, spark=None) -> str:
     """DuckDB list comprehensions → Spark higher-order functions.
 
     ``[expr FOR x IN src]`` → ``transform(src, x -> expr)``;
@@ -2389,7 +2355,7 @@ _SET_OP_TAIL = re.compile(
 )
 
 
-def _rewrite_from_first_arms(sql: str) -> str:
+def _rewrite_from_first_arms(sql: str, spark=None) -> str:
     """Apply the FROM-first rewrite to EVERY top-level set-operation arm
     — DuckDB accepts ``FROM a SELECT x UNION ALL FROM b SELECT y`` (and
     bare ``FROM a UNION ALL FROM b``), where each arm independently uses
@@ -2788,7 +2754,7 @@ _UNPIVOT_STMT = re.compile(
 )
 
 
-def _rewrite_unpivot(sql: str) -> str:
+def _rewrite_unpivot(sql: str, spark=None) -> str:
     """Rewrite DuckDB's statement-form
 
         UNPIVOT <rel> ON c1, c2, … INTO NAME <name> VALUE <value>
@@ -2811,193 +2777,15 @@ def _rewrite_unpivot(sql: str) -> str:
     )
 
 
-def transpile_statement(sql: str, spark=None) -> str:
-    """Apply the DuckDB→Spark rewrites to one statement.
+def _rewrite_bare_paths(sql: str, spark=None) -> str:
+    """``FROM 'x.parquet'`` → ``FROM parquet.`x.parquet```."""
+    return _BARE_PATH.sub(_file_relation, sql)
 
-    ``read_parquet``/``read_csv``/``read_json`` map to Spark's
-    file-query syntax (``parquet.`path```). The ``*_auto`` variants
-    promise DuckDB's sniffing (header detection, type inference), which
-    the bare file-query syntax cannot honor — so they require a live
-    session (loaded with header/inferSchema options and substituted as
-    temp views); without one they raise instead of silently degrading
-    to headerless-string semantics (round-2 fix — the silent fallback
-    produced wrong column names/types with no signal).
 
-    What a statement registers (macros, attached catalogs, ``USE``,
-    tables) lands in the session's ``state_for(spark)``; a statement
-    transpiled without a session starts from, and leaves behind, an
-    empty state.
-    """
-    _reject_sequences(sql)
-    _reject_positional_join(sql)
-    state = state_for(spark)
-    macros = state.macros
-    created = _parse_create_macro(sql)
-    if created is not None:
-        name, params, body, is_table, is_temp = created
-        macros[name.lower()] = (params, body, is_table, is_temp)
-        state.dropped_macros.discard(name.lower())  # re-created
-        return ""  # statement fully consumed — callers skip empties
-    dropped = re.match(
-        r"(?is)^\s*DROP\s+MACRO\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-        sql,
-    )
-    if dropped is not None:
-        macros.pop(dropped.group(1).lower(), None)
-        state.dropped_macros.add(dropped.group(1).lower())
-        return ""
-    am = _ATTACH_STMT.match(sql)
-    if am is not None and spark is not None:
-        import os as _os
-
-        from arnab_spark.catalog import CATALOG_FILE, attach_warehouse
-
-        path, alias = am.group(1), am.group(2)
-        if _os.path.isfile(_os.path.join(path, CATALOG_FILE)):
-            ids = attach_warehouse(spark, path, prefix=f"{alias}__")
-            state.attached[alias.lower()] = {i.lower() for i in ids}
-            return ""
-        if _os.path.isfile(path):
-            ids = _attach_duckdb_file(spark, path, alias)
-            if ids is not None:
-                state.attached[alias.lower()] = {i.lower() for i in ids}
-                return ""
-        # neither a warehouse nor a readable DuckDB file: leave the
-        # statement → Spark rejects ATTACH loudly
-        return sql
-    dm = _DETACH_STMT.match(sql)
-    if dm is not None and spark is not None:
-        alias = dm.group(1).lower()
-        if state.use == alias:
-            state.use = None
-        for model in state.attached.pop(alias, set()):
-            try:
-                spark.catalog.dropTempView(f"{alias}__{model}")
-            except Exception:
-                pass
-        return ""
-    um = _USE_STMT.match(sql)
-    if um is not None and spark is not None:
-        use_alias = um.group(2).lower()
-        if use_alias in ("memory", "main"):
-            state.use = None  # back to the session namespace
-            return ""
-        if use_alias in state.attached:
-            state.use = use_alias
-            return ""
-        from arnab_spark.errors import ArnabError
-
-        raise ArnabError(
-            f"USE {um.group(2)}: no attached catalog of that name "
-            "(ATTACH it first; USE memory returns to the session namespace)"
-        )
-    if spark is not None:
-        dml = _rewrite_dml(sql, spark)
-        if dml is not None:
-            return dml
-    tm = _TEMP_VIEW_DDL.match(sql)
-    if tm is not None:
-        # record the name (DuckDB: temp database) and pass the DDL
-        # through — Spark accepts CREATE TEMP VIEW natively
-        state.temp_ddl.add(tm.group(2).lower())
-    dvm = _DROP_VIEW_DDL.match(sql)
-    if dvm is not None:
-        dv_name = dvm.group(2).lower()
-        if dv_name in state.backing or dv_name in state.session_tables:
-            from arnab_spark.errors import ArnabError
-
-            raise ArnabError(
-                f"'{dvm.group(2)}' is a table, not a view — DuckDB "
-                "rejects DROP VIEW against tables; use DROP TABLE."
-            )
-        state.temp_ddl.discard(dv_name)
-        wh = state.warehouse
-        if wh is not None:
-            # a warehouse-persisted view: drop is durable (DuckDB
-            # parity — DROP VIEW persists in the database file)
-            from arnab_spark.catalog import remove_model
-
-            remove_model(wh, dvm.group(2))
-    pvm = _PERM_VIEW_DDL.match(sql)
-    if pvm is not None and spark is not None:
-        # non-TEMP CREATE VIEW: Spark's permanent catalog view cannot
-        # reference temp views (this engine's tables), where DuckDB
-        # views can reference anything — lift to a session view, and
-        # with a warehouse open persist the definition in the catalog
-        # like a view living in the reference's .duckdb file (without
-        # one, session-scoped IS DuckDB's in-memory-database behavior).
-        from arnab_spark.errors import ArnabError
-
-        v_name = pvm.group("name")
-        if not pvm.group("replace") and spark.catalog.tableExists(v_name):
-            if pvm.group("ine"):
-                return ""
-            raise ArnabError(
-                f"view '{v_name}' already exists (DuckDB parity — use "
-                "CREATE OR REPLACE VIEW or IF NOT EXISTS)"
-            )
-        v_body = transpile_statement(pvm.group("body"), spark)
-        spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {v_name} AS ({v_body})")
-        wh = state.warehouse
-        if wh is not None:
-            from arnab_spark.catalog import record_model
-
-            record_model(wh, v_name, "view", v_body)
-        return ""
-    attached = state.attached
-    if attached:
-        sql = _rewrite_attached_refs(sql, attached)
-        used = state.use
-        if used in attached:
-            sql = _rewrite_use_fallback(sql, used, attached[used], spark)
-    if macros:
-        sql = _expand_macros(sql, macros)
-    sql = _rewrite_summarize(sql, spark)
-    sql = _rewrite_txn(sql, spark)
-    sql = _rewrite_extensions(sql, spark)
-    sql = _rewrite_set(sql, spark)
-    sql = _rewrite_pragmas(sql, spark)
-    if not sql.strip():
-        return ""  # CHECKPOINT / hint-SET / BEGIN/COMMIT consumed
-    sql = _rewrite_describe(sql, spark)
-    sql = _rewrite_describe_subqueries(sql, spark)
-    sql = _rewrite_show_tables(sql, spark)
-    sql = _rewrite_show_all_tables(sql, spark)
-    sql = _rewrite_count_zero_arg(sql)
-    sql = _STAR_EXCLUDE.sub(r"\1EXCEPT\2", sql)
-    sql = _rewrite_from_first_arms(sql)
-    # before the list-literal pass, which would otherwise turn the
-    # path list into an array(...) constructor
-    sql = _rewrite_read_file_lists(sql, spark)
-    sql = _rewrite_comprehensions(sql)
-    # array-type spellings BEFORE the literal/subscript passes, which
-    # would otherwise misread the empty bracket pair
-    sql = _rewrite_array_type_spellings(sql)
-    sql = _rewrite_list_literals(sql)
-    sql = _unmask_braces(_rewrite_struct_literals(sql))
-    sql = _rewrite_subscripts(sql)
-    sql = _rewrite_intdiv(sql)
-    # power BEFORE arg-transforms: xor() expands to Spark's ^ and must
-    # not be re-read as DuckDB power
-    sql = _rewrite_power_ops(sql)
-    sql = _rewrite_arg_transform_calls(sql)
-    sql = _rewrite_postfix_cast_types(sql)
-    sql = _rewrite_list_functions(sql)
-    sql = _rewrite_series_functions(sql)
-    sql = _rewrite_columns_expr(sql, spark)
-    sql = _rewrite_length_on_lists(sql, spark)
-    sql = _rewrite_struct_recursive_unnest(sql, spark)
-    sql = _rewrite_unnest_set_ops(sql)
-    sql = _rewrite_multi_unnest(sql)
-    sql = _rewrite_single_unnest(sql)
-    sql = _rewrite_string_split(sql)
-    sql = _rewrite_copy(sql, spark)
-    sql = _rewrite_unpivot(sql)
-    sql = _rewrite_using_sample(sql)
-    sql = _BARE_PATH.sub(_file_relation, sql)
-    sql = _rewrite_qualify(sql)
-    sql = _rewrite_distinct_on(sql)
-    sql = _rewrite_asof_join(sql)
+def _rewrite_read_functions(sql: str, spark) -> str:
+    """``read_parquet('p')`` & friends → Spark's file-query relation.
+    The ``*_auto`` readers load through the session with header and
+    schema inference and become temp views."""
 
     def rewrite(m: re.Match) -> str:
         kind = m.group(1).lower()
@@ -3005,8 +2793,6 @@ def transpile_statement(sql: str, spark=None) -> str:
             return _file_relation(m)
         path = _resolve_path(m.group(2))
         if spark is None:
-            from arnab_spark.errors import ArnabError
-
             raise ArnabError(
                 f"read_{kind}('{path}') needs an active SparkSession to honor "
                 "DuckDB's sniffing semantics (header detection / type inference); "
@@ -3023,9 +2809,123 @@ def transpile_statement(sql: str, spark=None) -> str:
         df.createOrReplaceTempView(view)
         return view
 
-    sql = _READ_FUNC.sub(rewrite, sql)
-    # after the read rewrite so file-queries resolve as relations (the
-    # dynamic pivot's bind-time DISTINCT must be runnable on Spark)
-    sql = _rewrite_pivot(sql, spark)
-    sql = _rewrite_star_replace(sql, spark)
-    return _rewrite_union_by_name(sql, spark)
+    return _READ_FUNC.sub(rewrite, sql)
+
+
+#: The statement handlers, in dispatch order. Each takes ``(sql,
+#: spark)`` and returns None when the statement is not its own, or the
+#: text that replaces it ("" when it consumed the statement); the first
+#: answer ends the statement. A handler that acts on the session answers
+#: None without one. The view-DDL handlers record the name they see and
+#: answer None, so the passes still rewrite the DDL.
+HANDLERS = (
+    _rewrite_create_macro,
+    _rewrite_drop_macro,
+    _rewrite_attach,
+    _rewrite_detach,
+    _rewrite_use,
+    _rewrite_create_table,
+    _rewrite_drop_table,
+    _rewrite_alter_table,
+    _rewrite_copy_from,
+    _rewrite_export_import_db,
+    _rewrite_dml,
+    _rewrite_temp_view,
+    _rewrite_drop_view,
+    _rewrite_perm_view,
+)
+
+#: The text passes, in order. Each takes ``(sql, spark)`` and returns
+#: the rewritten text; a pass that needs no session ignores ``spark``.
+#: The ordering rules between them are pinned by
+#: ``tests/test_dialect_split.py``.
+PASSES = (
+    _rewrite_attached_refs,
+    _expand_macros,
+    _rewrite_summarize,
+    _rewrite_txn,
+    _rewrite_extensions,
+    _rewrite_set,
+    _rewrite_pragmas,
+    _rewrite_describe,
+    _rewrite_describe_subqueries,
+    _rewrite_show_tables,
+    _rewrite_show_all_tables,
+    _rewrite_count_zero_arg,
+    _rewrite_star_exclude,
+    _rewrite_from_first_arms,
+    _rewrite_read_file_lists,
+    _rewrite_comprehensions,
+    _rewrite_array_type_spellings,
+    _rewrite_list_literals,
+    _rewrite_struct_literals,
+    _unmask_braces,
+    _rewrite_subscripts,
+    _rewrite_intdiv,
+    _rewrite_power_ops,
+    _rewrite_arg_transform_calls,
+    _rewrite_postfix_cast_types,
+    _rewrite_list_functions,
+    _rewrite_series_functions,
+    _rewrite_columns_expr,
+    _rewrite_length_on_lists,
+    _rewrite_struct_recursive_unnest,
+    _rewrite_unnest_set_ops,
+    _rewrite_multi_unnest,
+    _rewrite_single_unnest,
+    _rewrite_string_split,
+    _rewrite_copy,
+    _rewrite_unpivot,
+    _rewrite_using_sample,
+    _rewrite_bare_paths,
+    _rewrite_qualify,
+    _rewrite_distinct_on,
+    _rewrite_asof_join,
+    _rewrite_read_functions,
+    _rewrite_pivot,
+    _rewrite_star_replace,
+    _rewrite_union_by_name,
+)
+
+#: What a schema probe taken mid-pipeline (``_probe_schema``, during the
+#: unnest stage) applies to its text: the passes after that stage,
+#: through the read-function rewrite.
+PROBE_PASSES = PASSES[
+    PASSES.index(_rewrite_string_split): PASSES.index(_rewrite_read_functions) + 1
+]
+
+
+def transpile_statement(sql: str, spark=None) -> str:
+    """Apply the DuckDB→Spark rewrites to one statement.
+
+    The statement goes to each of :data:`HANDLERS` in turn; the first
+    that claims it (DDL and DML the engine lifts, macros, ATTACH/USE)
+    returns its replacement. A statement no handler claims runs through
+    every pass of :data:`PASSES` in order; a pass that leaves it blank
+    (CHECKPOINT, a hint ``SET``, BEGIN/COMMIT) consumes it, and the
+    result is ``""``.
+
+    ``read_parquet``/``read_csv``/``read_json`` map to Spark's
+    file-query syntax (``parquet.`path```). The ``*_auto`` variants
+    promise DuckDB's sniffing (header detection, type inference), which
+    the bare file-query syntax cannot honor — so they require a live
+    session (loaded with header/inferSchema options and substituted as
+    temp views); without one they raise instead of silently degrading
+    to headerless-string semantics.
+
+    What a statement registers (macros, attached catalogs, ``USE``,
+    tables) lands in the session's ``state_for(spark)``; a statement
+    transpiled without a session starts from, and leaves behind, an
+    empty state.
+    """
+    _reject_sequences(sql)
+    _reject_positional_join(sql)
+    for handle in HANDLERS:
+        out = handle(sql, spark)
+        if out is not None:
+            return out
+    for rewrite in PASSES:
+        sql = rewrite(sql, spark)
+        if not sql.strip():
+            return ""
+    return sql

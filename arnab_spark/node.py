@@ -369,6 +369,24 @@ class Node:
         return NodeExecutionResult(None, "view")
 
 
+def run_script(spark, src: str) -> None:
+    """Run a SQL script, as ``run-file`` and IMPORT DATABASE do: strip
+    its comments first (a ';' or an apostrophe inside one must not split
+    or merge statements), split it, transpile each statement and run
+    what is left. A record-returning statement is executed through the
+    noop sink: ``spark.sql`` alone only analyzes it, where the
+    reference's execute_batch runs every statement (main.rs:165)."""
+    from arnab_spark.spark_utils import bind_file_scans
+
+    for stmt in lexer.split_statements(lexer.strip_comments(src)):
+        stmt = transpile_statement(stmt, spark)
+        if not stmt.strip():
+            continue  # consumed by a handler (e.g. CREATE MACRO)
+        df = spark.sql(bind_file_scans(spark, stmt))
+        if Node.will_produce_records(stmt):
+            df.write.format("noop").mode("overwrite").save()
+
+
 def format_elapsed(seconds: float) -> str:
     """Human elapsed-time formatter (reference: session.rs:294-316)."""
     if seconds < 1:

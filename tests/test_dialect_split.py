@@ -12,7 +12,8 @@ leaf `_dialect_base` (per-session state and shared text helpers), never
    fails to import on its own;
 3. a dispatch structure that misses an entry of `_ARG_CALL_REWRITES`
    (`_ARG_CALL` was once a snapshot regex taken before `strftime`,
-   `substr`, … were registered).
+   `substr`, … were registered);
+4. a reordering of `dialect.PASSES` that breaks a rule between passes.
 """
 
 import ast
@@ -95,3 +96,50 @@ def test_late_registrations_dispatch():
         "SELECT strftime(CAST('2024-02-29' AS TIMESTAMP), '%Y-%m-%d') AS x"
     )
     assert "date_format" in out, out
+
+
+#: (earlier pass, later pass, why the order matters)
+PASS_ORDER = (
+    ("_rewrite_read_file_lists", "_rewrite_list_literals",
+     "the list-literal pass would turn a read_*([...]) path list into an "
+     "array(...) constructor"),
+    ("_rewrite_array_type_spellings", "_rewrite_list_literals",
+     "the list-literal pass would misread the empty bracket pair of T[]"),
+    ("_rewrite_array_type_spellings", "_rewrite_subscripts",
+     "the subscript pass would misread the empty bracket pair of T[]"),
+    ("_rewrite_power_ops", "_rewrite_arg_transform_calls",
+     "xor() expands to Spark's ^, which must not be re-read as DuckDB power"),
+    ("_rewrite_read_functions", "_rewrite_pivot",
+     "file queries must resolve as relations for the dynamic pivot's "
+     "bind-time DISTINCT to run on Spark"),
+)
+
+
+@pytest.mark.parametrize(
+    "earlier,later,why", PASS_ORDER, ids=[f"{a}<{b}" for a, b, _ in PASS_ORDER]
+)
+def test_pass_order(earlier, later, why):
+    from arnab_spark import dialect
+
+    passes = dialect.PASSES
+    assert passes.index(getattr(dialect, earlier)) < passes.index(
+        getattr(dialect, later)
+    ), why
+
+
+def test_probe_passes_follow_every_probing_pass():
+    """A schema probe is taken during the passes that call
+    `_probe_schema`; the slice it applies to its text is the passes
+    that would run after them, up to the read rewrite."""
+    from arnab_spark import dialect
+
+    passes, probe = dialect.PASSES, dialect.PROBE_PASSES
+    first = passes.index(probe[0])
+    assert passes[first: first + len(probe)] == probe
+    assert probe[-1] is dialect._rewrite_read_functions
+    for probing in (
+        dialect._rewrite_columns_expr,
+        dialect._rewrite_length_on_lists,
+        dialect._rewrite_struct_recursive_unnest,
+    ):
+        assert passes.index(probing) < first, probing.__name__
